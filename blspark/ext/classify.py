@@ -247,12 +247,13 @@ def nb_score_mapside(docs: DataFrame, model_row: DataFrame) -> DataFrame:
     return joined.select(
         "doc_id",
         F.col("lang").alias("true_lang"),
-        # greatest(1, ...): if every score were NaN, array_position
-        # returns 0 (NaN != NaN) and element_at(langs, 0) would abort
-        # under ANSI — index 1 picks the LOWEST label, exactly what
-        # the old (score DESC, lang ASC) row_number resolved NaN-first
-        # ties to (ADVICE r16; unreachable: ratios are finite
-        # positive doubles).
+        # greatest(1, ...): should array_position ever return 0 (the
+        # max not found under whatever equality applies, e.g. on an
+        # all-NaN or all-null score array), element_at(langs, 0)
+        # would abort under ANSI — index 1 picks the LOWEST label,
+        # exactly what the old (score DESC, lang ASC) row_number
+        # resolved NaN-first ties to (ADVICE r16; unreachable: ratios
+        # are finite positive doubles).
         F.element_at(
             F.col("langs"),
             F.greatest(

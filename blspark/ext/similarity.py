@@ -868,9 +868,10 @@ def _cell_assign(
         # behavior): (a) an EMPTY centroid frame must yield zero rows
         # — the collect_list agg always emits one row, so without the
         # size filter the crossJoin would fabricate null-cell rows
-        # where the old empty crossJoin emitted none; (b) if every
-        # per-cell score is NaN, array_position(_negs, NaN) is 0
-        # (NaN != NaN) and element_at(_cells, 0) would abort under
+        # where the old empty crossJoin emitted none; (b) should
+        # array_position(_negs, array_min(_negs)) ever return 0 (the
+        # min not found under whatever equality applies, e.g. on
+        # all-NaN scores), element_at(_cells, 0) would abort under
         # ANSI — greatest(1, ...) picks the LOWEST cell_id, exactly
         # what min(struct(NaN, cell_id)) resolved to.
         cent1 = cent1.filter(F.size("_cells") > 0)

@@ -42,9 +42,17 @@ def file_manifest(spark: SparkSession, directory: str, glob: str = "*") -> DataF
 
 def listing_manifest(spark: SparkSession, entries: dict[str, str]) -> DataFrame:
     """Manifest from an in-memory `{key: checksum}` listing (the shape the
-    reference gets from `s3.list_objects_v2` — sync_and_fetch.py:84-93)."""
-    rows = [(k, v) for k, v in sorted(entries.items())]
-    return spark.createDataFrame(rows, "key string, md5 string")
+    reference gets from `s3.list_objects_v2` — sync_and_fetch.py:84-93).
+    Built from Arrow, so the plan is a JVM local relation rather than a
+    Python-RDD scan that starts a Python worker on every action."""
+    import pyarrow as pa
+
+    keys = sorted(entries)
+    table = pa.table(
+        {"key": keys, "md5": [entries[k] for k in keys]},
+        schema=pa.schema([("key", pa.string()), ("md5", pa.string())]),
+    )
+    return spark.createDataFrame(table, "key string, md5 string")
 
 
 def newest_key(df: DataFrame, prefix: str, suffix: str, key: str = "key") -> str | None:

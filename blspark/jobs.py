@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from blspark.clean import coerce_numeric, resolve_column, trim_string_columns
 from blspark.io.ingest import fetch_url_with_md5, stage_remote_distributed
-from blspark.io.manifest import file_manifest, local_listing, newest_key
+from blspark.io.manifest import file_manifest, local_listing
 from blspark.io.readers import read_json_records, read_padded_tsv
 from blspark.io.sinks import timestamped_name
 from blspark.queries.bls import best_years, combined_report_safe, population_stats
@@ -86,13 +86,18 @@ def fetch_population_job(
 def report_job(spark: SparkSession, data_dir: str) -> dict:
     """EP2 — the event-driven report (reference report_processor.py:
     284-353): discovery (S10), load (S8/S9), clean (P2-P8), Q1-Q3."""
-    from blspark.io.manifest import listing_manifest
-
     files = local_listing(data_dir)
-    manifest = listing_manifest(spark, {f: "" for f in files})
-
     bls_file = next((f for f in files if "pr.data.0.Current" in f), None)
-    pop_file = newest_key(manifest, "population_data_", ".json")
+    # newest_key's rule (lexicographic max over prefix/suffix matches)
+    # applied to the listing the driver already holds — no Spark job
+    pop_file = max(
+        (
+            f
+            for f in files
+            if f.startswith("population_data_") and f.endswith(".json")
+        ),
+        default=None,
+    )
 
     df_bls = None
     if bls_file:

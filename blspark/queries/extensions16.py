@@ -926,10 +926,10 @@ _PCA_ITERS = 8
 
 def _pca_chain_sql() -> str:
     """The PCA oracle CTE chain, mirroring ext/linalg step for step:
-    DECIMAL(18,9)-quantized exact moments (the q_regression_stats
-    device), pinned covariance arithmetic, and a recursive-CTE power
-    iteration whose matvec/norm folds run in index order from 0.0 —
-    bitwise-matching Spark's zip_with/aggregate folds."""
+    exact integer moments on the 2^-40 grid, pinned covariance
+    arithmetic, and a recursive-CTE power iteration whose matvec/norm
+    folds run in index order from 0.0 — bitwise-matching ext/linalg's
+    driver-side folds."""
     from blspark.catalog import o_d2d
 
     d = _PCA_DIM
@@ -1007,18 +1007,20 @@ FROM fin, range(0, {_PCA_DIM}) t(i)
     oracle=PCA_ORACLE,
     bench=True,
     doc="Distributed PCA over the embedding corpus — the whitening / "
-    "dominant-direction stage of an embedding pipeline, as DataFrame "
-    "plans end to end: ONE exact-decimal covariance pass (components "
-    "quantized to DECIMAL(18,9), the q_regression_stats device; "
-    "d(d+1)/2 = 2080 moment groups shuffle map-side-combined, "
-    "INDEPENDENT of corpus size) then 8 fixed power-iteration steps "
-    "on the one-row 64x64 matrix (localCheckpoint per step — the "
-    "pagerank lineage device; matvec and norm fold in index order "
-    "from 0.0, SQRT is the one correctly-rounded transcendental, so "
-    "the 64 loadings hash-compare BITWISE against the oracle's "
-    "recursive CTE). No convergence test by design — a float "
-    "comparison would be a hidden determinism hazard; x_pca_eval "
-    "prices convergence via the Rayleigh quotient. "
+    "dominant-direction stage of an embedding pipeline: ONE exact "
+    "covariance pass (components quantized to the 2^-40 integer grid; "
+    "a per-partition Arrow kernel computes the exact integer Gram "
+    "matrix and column sums, and the d(d+1)/2 + d = 2,144 partial "
+    "moment rows per map task are the only exchange, INDEPENDENT of "
+    "corpus size) whose summed moments the driver collects once; then "
+    "8 fixed power-iteration steps in plain Python on the 64x64 "
+    "matrix (matvec and norm fold in index order from 0.0, SQRT is "
+    "the one correctly-rounded transcendental, so the 64 loadings "
+    "hash-compare BITWISE against the oracle's recursive CTE). The "
+    "covariance pass is the only Spark work (two jobs); the result is "
+    "a one-row Arrow-built local relation. No convergence test by design — a float comparison "
+    "would be a hidden determinism hazard; x_pca_eval prices "
+    "convergence via the Rayleigh quotient. "
     "ext/linalg.covariance_matrix + power_top_eigen.",
 )
 def x_embed_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1088,7 +1090,10 @@ FROM ray
     "this is the whitening-decision number. norm_ok pins the iterate "
     "at unit length (measured |v.v - 1| ~ 2-4e-16). All values "
     "bitwise cross-engine (trace/eigenvalue/vnorm2 are ordered folds "
-    "over the bitwise-pinned matrix and vector).",
+    "over the bitwise-pinned matrix and vector). Plan: the contract "
+    "row is computed over the one-row local relation that "
+    "ext/linalg.power_top_eigen builds on the driver — the Spark "
+    "work is the single covariance pass.",
 )
 def x_pca_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from blspark.ext.linalg import covariance_matrix, power_top_eigen

@@ -59,18 +59,18 @@ def get_spark(
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
     )
     # Local-mode parallelism floor for the zero-shuffle map-side
-    # passes (ext/similarity._cell_assign's fold, ext/linalg's
-    # covariance moment pass): the test parquet files are
-    # single-row-group, so a pure map-side pipeline would run its
-    # whole downstream stage in the scan's one task. Locally we
-    # round-robin the compact projection across the cores first.
-    # Gated on a local master (ADVICE r16): a cluster session built
-    # through this factory must NOT silently pay the repartition
+    # pass of ext/similarity._cell_assign's fold: the test parquet
+    # files are single-row-group, so a pure map-side pipeline would
+    # run its whole downstream stage in the scan's one task. Locally
+    # we round-robin the compact projection across the cores first.
+    # Gated on a single-JVM local master ("local", "local[N]"), so
+    # neither a cluster nor a multi-JVM "local-cluster[...]" session
+    # built through this factory silently pays the repartition
     # exchange — at scale the scan's own row-group parallelism
-    # suffices and these passes perform no exchange at all, which is
+    # suffices and the pass performs no exchange at all, which is
     # the point of the fold. Cluster callers can still opt in via
     # extra_conf.
-    if master.startswith("local"):
+    if master == "local" or master.startswith("local["):
         builder = builder.config(
             "blspark.assign.localParallelism", str(shuffle_partitions)
         )

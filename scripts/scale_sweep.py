@@ -1163,9 +1163,9 @@ def bench_phrase(spark, factor: int) -> float:
 
 def bench_pca(spark, factor: int) -> float:
     """Covariance + power iteration with the corpus growing: the
-    moment shuffle carries a FIXED 2080 groups (map-side combined),
-    so the wall should track the linear scan/explode term; the
-    iteration is corpus-independent (one-row matrix)."""
+    moment shuffle carries a FIXED 2,144 partial rows per map task,
+    so the wall should track the linear scan + Gram-kernel term; the
+    iteration is corpus-independent (driver-side, 64x64 matrix)."""
     from blspark.ext.linalg import covariance_matrix, power_top_eigen
 
     emb = amplify(

@@ -94,6 +94,24 @@ def test_report_without_population_degrades(spark, tmp_path):
     assert all(r["Population"] is None for r in combined)
 
 
+def test_report_picks_newest_population_doc(spark, tmp_path):
+    """Discovery takes the lexicographic max among population_data_*.json
+    names in the listing; other names never qualify."""
+    mirror = tmp_path / "mirror"
+    mirror.mkdir()
+    (mirror / "pr.data.0.Current").write_text(BLS_TSV)
+    old = dict(POP_JSON, data=POP_JSON["data"][:2])
+    (mirror / "population_data_20230101_000000.json").write_text(json.dumps(old))
+    (mirror / "population_data_20240101_120000.json").write_text(
+        json.dumps(POP_JSON)
+    )
+    for decoy in ("population_data_20990101_000000.txt",
+                  "xpopulation_data_20990101_000000.json"):
+        (mirror / decoy).write_text(json.dumps(old))
+    reports = report_job(spark, str(mirror))
+    assert reports["population_stats"].first()["year_count"] == 6
+
+
 def test_report_on_arrival_trigger(spark, tmp_path):
     remote = _make_remote(tmp_path)
     mirror = tmp_path / "mirror"

@@ -88,6 +88,11 @@ QUERIES = [
     "x_retrieval_graph_adaptive",
     "x_similarity_range",
     "x_range_eval",
+    # PCA: exact integer moments from a per-partition kernel, summed
+    # by Spark, then ordered folds on the driver — the loadings and
+    # the contract row must not move with the partition count
+    "x_embed_pca_power",
+    "x_pca_eval",
 ]
 
 

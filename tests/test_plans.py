@@ -594,3 +594,21 @@ def test_index_refresh_apply_touches_only_move_partitions(spark):
         }
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {it}")
+
+
+def test_pca_power_job_budget(spark):
+    """PCA runs ONE corpus pass: the moment kernel's shuffle stage and
+    the collect of the 2,144 summed moments. The power loop and both
+    result frames live on the driver (Arrow local relations), so
+    building and collecting x_embed_pca_power stays within 4 Spark
+    jobs — the per-step checkpoint loop ran 13."""
+    sc = spark.sparkContext
+    group = "test-pca-job-budget"
+    sc.setJobGroup(group, "x_embed_pca_power build + collect")
+    try:
+        rows = REG["x_embed_pca_power"].spark_fn(spark, SF_ORACLE).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(rows) == 64
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 1 <= len(jobs) <= 4, sorted(jobs)

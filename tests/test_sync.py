@@ -162,6 +162,16 @@ def test_newest_key_lexicographic(spark):
     )
 
 
+def test_listing_manifest_is_local_relation(spark):
+    """Built from Arrow: a JVM LocalTableScan, not a Python-RDD scan."""
+    df = listing_manifest(spark, {"b.txt": "m2", "a.txt": "m1"})
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+    assert [tuple(r) for r in df.collect()] == [("a.txt", "m1"), ("b.txt", "m2")]
+    empty = listing_manifest(spark, {})
+    assert empty.collect() == [] and empty.columns == ["key", "md5"]
+
+
 class _FlakyFS:
     """Duck-typed pyarrow-FileSystem wrapper that raises OSError on the
     first N mutating calls per process, then delegates — simulating a
