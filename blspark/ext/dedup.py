@@ -344,16 +344,26 @@ def prefix_candidates(
         .filter(F.col("pos") <= plen)
         .select("id", "shingle", "n")
     )
-    # NO checkpoint of the prefix table, deliberately (r17 negative
-    # result): Catalyst does plan the ranking subtree (explode, df
-    # aggregation, sizes, per-document window) once per self-join
-    # side, but an eager localCheckpoint here A/B-measured +17.9%
-    # median against a FAVORABLE −8..−14% sentinel drift (3
-    # stash-flipped pairs) — the serial materialization job plus the
-    # lost scan->join pipelining cost more than the recompute, the
-    # same direction the r16 graph family measured for its blocked
-    # path's edge list. At cluster scale the recompute is one extra
-    # pass over a columnar source (the residual-IVFPQ convention).
+    # Two measured results pin WHERE this operator's input is
+    # materialized; do not retry or undo either.
+    # - REJECTED (r17): an eager localCheckpoint of the prefix table
+    #   HERE. Catalyst plans the ranking subtree (df aggregation,
+    #   sizes, per-document window) once per self-join side, but the
+    #   checkpoint A/B-measured +17.9% median against a FAVORABLE
+    #   −8..−14% sentinel drift (3 stash-flipped pairs): the serial
+    #   materialization job plus the lost scan->join pipelining cost
+    #   more than the recompute, the direction the r16 graph family
+    #   measured for its blocked path's edge list.
+    # - KEPT: one eager localCheckpoint of the caller's shingle SETS,
+    #   upstream of the df pass, with ``shingles`` their explode
+    #   (extensions16._shingled). That is the subtree every consumer
+    #   recomputed: x_dedup_prefix_join's final plan scanned the
+    #   parquet 9 times and evaluated the split/zip_with shingle
+    #   expression ~26 times over 17 jobs; now 0 scans and 0 shingle
+    #   evaluations outside the one materialization job, 10 jobs, and
+    #   the perfbench ``queries`` workload's warm CPU fell 36-49%
+    #   (medians 11.7 -> 6.0 s and 19.0 -> 12.2 s in two sets of 10
+    #   interleaved pairs, better in every pair, shared 4-vCPU VM).
     a = pre.select(
         F.col("id").alias("id_a"), "shingle", F.col("n").alias("n_a")
     )

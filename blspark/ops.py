@@ -95,7 +95,11 @@ def fan_out(df: DataFrame, min_parts: int | None = None) -> DataFrame:
     downstream. Results are unaffected: every consumer in this repo is
     partition-order independent by construction. Apply directly to the
     scan frame: the gate reads scan-level file metadata, so a frame that
-    already went through a shuffle would be re-shuffled."""
+    already went through a shuffle would be re-shuffled. A union of
+    scans (or of filters/projections over them) counts as a scan-level
+    frame — its input files are the union's — and is best fanned out
+    ONCE on top: one exchange, where fanning out each branch costs one
+    per branch and gives every branch its own shuffled subtree."""
     import os
 
     spark = df.sparkSession

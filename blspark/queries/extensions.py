@@ -57,12 +57,11 @@ sh AS (
 
 def _corpus(spark: SparkSession, sf_dir: str, wide: bool = False) -> DataFrame:
     """Doc corpus with synthetic near/exact duplicates. ``wide=True``
-    fans the scan out first — worth one small shuffle only for the
+    fans the whole three-branch union out with ONE round-robin exchange
+    (not one per branch) — worth one small shuffle only for the
     consumers doing CPU-heavy per-row work (shingling, per-shingle MD5);
     digest-only consumers keep the narrow scan."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    if wide:
-        docs = fan_out(docs)
     near = docs.filter(F.col("doc_id") % 10 == 0).select(
         (F.col("doc_id") + 100000).alias("doc_id"),
         F.concat(F.col("text"), F.lit(" extra token")).alias("text"),
@@ -70,7 +69,8 @@ def _corpus(spark: SparkSession, sf_dir: str, wide: bool = False) -> DataFrame:
     exact = docs.filter(F.col("doc_id") % 25 == 0).select(
         (F.col("doc_id") + 200000).alias("doc_id"), F.col("text")
     )
-    return docs.unionByName(near).unionByName(exact)
+    corpus = docs.unionByName(near).unionByName(exact)
+    return fan_out(corpus) if wide else corpus
 
 
 # ---------------------------------------------------------------------------

@@ -99,6 +99,27 @@ FROM truth
 """
 
 
+def _shingled(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The prefix family's two shingle views of the planted-dup corpus,
+    from ONE shingling pass: (sh, ss) = the exploded (id, shingle) frame
+    and the per-document distinct-shingle sets (id, shset).
+
+    The sets are materialized with one eager localCheckpoint and ``sh``
+    is their explode. Left lazy, each consumer (the df pass, both prefix
+    self-join sides, the sizes, both verify sides) gets different
+    filters pushed below its exchange — the ones inferred from explode
+    repeat the whole split/zip_with shingle expression — so AQE can
+    reuse none of them and every consumer re-scans and re-shingles the
+    corpus (measured result in ext/dedup.prefix_candidates). Nothing
+    outlives the call: each call re-reads the parquet."""
+    from blspark.ext.dedup import shingle_sets
+
+    ss = shingle_sets(
+        _corpus(spark, sf_dir, wide=True), "doc_id", "text"
+    ).localCheckpoint(eager=True)
+    return ss.select("id", F.explode("shset").alias("shingle")), ss
+
+
 @register(
     "x_dedup_prefix_join",
     oracle=PREFIX_JOIN_ORACLE,
@@ -116,23 +137,20 @@ FROM truth
     "integer cross-multiplication (no float compares); jaccard is one "
     "exact integer-ratio division. Complements the grid: jaccard_pairs "
     "is exact-but-full-index, MinHash banding is pruned-but-lossy — "
-    "this is pruned AND exact. ext/dedup.prefix_filter_pairs.",
+    "this is pruned AND exact. The corpus is shingled ONCE: its "
+    "distinct-shingle sets are materialized by one eager checkpoint "
+    "and the df pass, both prefix sides, the sizes and the verify all "
+    "read that frame (no parquet scan in the executed plan). "
+    "ext/dedup.prefix_filter_pairs.",
 )
 def x_dedup_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from blspark.ext.dedup import (
-        prefix_filter_pairs,
-        shingle_sets,
-        word_shingles,
-    )
+    from blspark.ext.dedup import prefix_filter_pairs
 
-    corpus = _corpus(spark, sf_dir, wide=True)
-    sh = word_shingles(corpus, "doc_id", "text")
     # sets: map-side sizes for the candidate stage + array-intersect
-    # verify (optimization r16) — same distinct-shingle sets the
-    # exploded frame is derived from, so results are identical
-    return prefix_filter_pairs(
-        sh, _PF_NUM, _PF_DEN, sets=shingle_sets(corpus, "doc_id", "text")
-    )
+    # verify (optimization r16) — the exploded frame is derived from
+    # the same distinct-shingle sets, so results are identical
+    sh, ss = _shingled(spark, sf_dir)
+    return prefix_filter_pairs(sh, _PF_NUM, _PF_DEN, sets=ss)
 
 
 # ---------------------------------------------------------------------------
@@ -230,19 +248,14 @@ SELECT
     "by the prefix theorem + exact verification, asserted per run. "
     "The reduction number is the one a 100 TB dedup budgets against: "
     "it is the ratio between the PPJoin candidate shuffle and the "
-    "full sum-of-df^2 index blowup on this corpus shape.",
+    "full sum-of-df^2 index blowup on this corpus shape. Both "
+    "pipelines read one checkpointed shingle-set frame (the corpus is "
+    "shingled once per call).",
 )
 def x_prefix_join_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from blspark.ext.dedup import (
-        prefix_candidates,
-        prefix_filter_pairs,
-        shingle_sets,
-        word_shingles,
-    )
+    from blspark.ext.dedup import prefix_candidates, prefix_filter_pairs
 
-    corpus = _corpus(spark, sf_dir, wide=True)
-    sh = word_shingles(corpus, "doc_id", "text")
-    ss = shingle_sets(corpus, "doc_id", "text")
+    sh, ss = _shingled(spark, sf_dir)
     sizes = sh.groupBy("id").agg(F.count("*").alias("n"))
 
     # brute-force truth with the same integer-exact threshold
@@ -892,18 +905,14 @@ WHERE {_PF_DEN} * i.n_common
     "prefixes and df snapshot live in the persisted index (bucketed "
     "by token), each arrival batch probes partition-pruned, and the "
     "df snapshot rebuilds on the refresh cadence as vocabulary "
-    "drifts. ext/dedup.prefix_filter_pairs_incremental.",
+    "drifts. Both sides are filtered views of one checkpointed "
+    "shingle-set frame (the corpus is shingled once per call). "
+    "ext/dedup.prefix_filter_pairs_incremental.",
 )
 def x_dedup_prefix_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from blspark.ext.dedup import (
-        prefix_filter_pairs_incremental,
-        shingle_sets,
-        word_shingles,
-    )
+    from blspark.ext.dedup import prefix_filter_pairs_incremental
 
-    corpus = _corpus(spark, sf_dir, wide=True)
-    sh = word_shingles(corpus, "doc_id", "text")
-    ss = shingle_sets(corpus, "doc_id", "text")
+    sh, ss = _shingled(spark, sf_dir)
     sh_base = sh.filter(F.col("id") % 3 == 0)
     sh_new = sh.filter(F.col("id") % 3 != 0)
     return prefix_filter_pairs_incremental(

@@ -93,6 +93,12 @@ QUERIES = [
     # the contract row must not move with the partition count
     "x_embed_pca_power",
     "x_pca_eval",
+    # prefix-filter joins: the corpus union is round-robin shuffled once
+    # and its shingle sets checkpointed, so partition layout must not
+    # move the global df order, the per-document prefixes or the counts
+    "x_dedup_prefix_join",
+    "x_prefix_join_eval",
+    "x_dedup_prefix_incremental",
 ]
 
 

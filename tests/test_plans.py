@@ -612,3 +612,28 @@ def test_pca_power_job_budget(spark):
     assert len(rows) == 64
     jobs = sc.statusTracker().getJobIdsForGroup(group)
     assert 1 <= len(jobs) <= 4, sorted(jobs)
+
+
+def test_prefix_join_shingles_once(spark):
+    """The prefix join shingles its corpus ONCE: the shingle sets are
+    materialized by one eager checkpoint at build time, and every
+    consumer (df pass, both prefix sides, sizes, both verify sides)
+    reads that frame. The final executed plan therefore holds no
+    parquet scan and no zip_with shingle expression (left lazy, each
+    consumer re-scans and re-shingles the corpus), and build + collect
+    stays within 10 Spark jobs."""
+    sc = spark.sparkContext
+    group = "test-prefix-join-shingles-once"
+    sc.setJobGroup(group, "x_dedup_prefix_join build + collect")
+    try:
+        df = REG["x_dedup_prefix_join"].spark_fn(spark, SF_ORACLE)
+        rows = df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert rows
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    assert "FileScan parquet" not in plan
+    assert "zip_with(" not in plan
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 1 <= len(jobs) <= 10, sorted(jobs)

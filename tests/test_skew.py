@@ -125,6 +125,28 @@ def test_fan_out_widens_small_scan_and_preserves_results(spark):
     assert fan_out(rng) is rng
 
 
+def test_fan_out_over_union_adds_one_exchange(spark):
+    """A union of scans of one small file is a scan-level frame:
+    fan_out over the dedup corpus's three-branch union adds exactly one
+    round-robin exchange (not one per branch) and keeps every row."""
+    from blspark.ops import fan_out
+    from blspark.queries.extensions import _corpus
+    from tests.conftest import SF_SMOKE
+
+    def n_round_robin(df):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return plan.count("RoundRobinPartitioning")
+
+    corpus = _corpus(spark, SF_SMOKE)
+    assert n_round_robin(corpus) == 0
+    wide = fan_out(corpus)
+    assert n_round_robin(wide) == 1
+    assert n_round_robin(_corpus(spark, SF_SMOKE, wide=True)) == 1
+    assert sorted(map(tuple, wide.collect())) == sorted(
+        map(tuple, corpus.collect())
+    )
+
+
 def _skew_confs(spark):
     """Test-scale AQE skew thresholds (defaults need 256MB partitions)."""
     return {
