@@ -37,6 +37,12 @@ def classify_mirror(remote: DataFrame, mirror: DataFrame) -> DataFrame:
 
     Returns (key, remote_md5, mirror_md5, action).
     """
+    # Keep the join. Measured alternative: union the two manifests and
+    # classify with one groupBy(key) aggregate. It loses the optimizer's
+    # empty-relation pruning of the join, so a sync into an empty mirror
+    # went from 1 Spark job to 2. The join's shuffle is also the barrier
+    # apply_mirror_fs relies on to finish every mirror scan before it
+    # mutates a file.
     r = remote.select(F.col("key"), F.col("md5").alias("remote_md5"))
     m = mirror.select(F.col("key"), F.col("md5").alias("mirror_md5"))
     joined = r.join(m, on="key", how="full_outer")
@@ -116,10 +122,15 @@ def apply_mirror_fs(
     ``file://``, ``s3://`` (pyarrow wheels bundle the S3 backend — no
     AWS SDK import), ``hdfs://``, ``gs://``, or an injected FileSystem.
 
+    ``plan`` is ``classify_mirror``'s output, possibly persisted or
+    coalesced by the caller: the shuffle of its join is what finishes
+    every mirror scan before the first file is mutated.
+
     ``src_root``/``dst_root``: URI string, local path, or a
     ``(FileSystem, base_path)`` pair. Copies stream chunk-wise
     (``chunk_bytes`` per read) so multi-GB objects never materialize in
-    executor memory. Only action counts return to the driver.
+    executor memory. Only action counts return to the driver, through
+    accumulators of the same single Spark action that applies the plan.
 
     Roots are resolved to ``(FileSystem, path)`` pairs ON THE DRIVER
     before the closure captures them (pyarrow filesystems pickle):
@@ -135,15 +146,19 @@ def apply_mirror_fs(
     src_pair = _resolve_fs(src_root)
     dst_pair = _resolve_fs(dst_root)
 
+    # One accumulator per action. Updates made inside an action land once
+    # per successful task, so retried or speculative attempts of a
+    # partition never double-count.
+    sc = plan.sparkSession.sparkContext
+    counters = {a: sc.accumulator(0) for a in ACTIONS}
+
     def apply_partition(rows):
-        rows = list(rows)
-        if not rows:
-            return
         src_fs, src_base = src_pair
         dst_fs, dst_base = dst_pair
         from pyarrow import fs as pafs
 
         made_dirs = set()
+        counts = dict.fromkeys(ACTIONS, 0)
 
         def copy_one(src, dst):
             parent = dst.rsplit("/", 1)[0]
@@ -160,35 +175,37 @@ def apply_mirror_fs(
                 dst_fs.delete_file(dst)
 
         for row in rows:
+            action = row["action"]
+            counts[action] += 1
             src = f"{src_base}/{row['key']}"
             dst = f"{dst_base}/{row['key']}"
-            if row["action"] in ("insert", "update"):
+            if action in ("insert", "update"):
                 with_retries(
                     lambda s=src, d=dst: copy_one(s, d),
                     backoff_s=retry_backoff_s,
                     exponential=False,
                 )
-            elif row["action"] == "delete":
+            elif action == "delete":
                 with_retries(
                     lambda d=dst: delete_one(d),
                     backoff_s=retry_backoff_s,
                     exponential=False,
                 )
+        for action, n in counts.items():
+            counters[action].add(n)
 
-    # Materialize the plan BEFORE mutating the mirror: the classification
-    # scans the very files the apply step deletes/overwrites, so lazy
-    # re-execution after apply would re-read missing files. The persisted
-    # plan is compact — (key, md5, action) only, never file bodies.
-    plan = plan.persist()
-    try:
-        counts = {
-            r["action"]: r["n"]
-            for r in plan.groupBy("action").agg(F.count("*").alias("n")).collect()
-        }
-        plan.filter(F.col("action") != "skip").foreachPartition(apply_partition)
-    finally:
-        plan.unpersist()
-    return {a: counts.get(a, 0) for a in ACTIONS}
+    # ONE action applies and counts. The classification scans the very
+    # mirror files this step overwrites or deletes, so every scan must
+    # finish before the first mutation. The barrier is the shuffle
+    # exchange of classify_mirror's full outer join: its map stage (both
+    # manifest scans) completes before any task of this result stage
+    # starts. (An empty mirror is pruned from the plan, so there is no
+    # mirror scan to order.) A lost shuffle output recomputes from lineage
+    # and would re-scan a mutated mirror, but so would a lost cache block:
+    # persisting the plan first is no stronger a barrier, and it costs a
+    # job. A plan the caller persisted stays persisted.
+    plan.select("key", "action").foreachPartition(apply_partition)
+    return {a: counters[a].value for a in ACTIONS}
 
 
 def apply_mirror_local(plan: DataFrame, src_dir: str, dst_dir: str) -> dict[str, int]:

@@ -637,3 +637,89 @@ def test_prefix_join_shingles_once(spark):
     assert "zip_with(" not in plan
     jobs = sc.statusTracker().getJobIdsForGroup(group)
     assert 1 <= len(jobs) <= 10, sorted(jobs)
+
+
+def _mirror_sources(tmp_path):
+    """Two source states and an empty mirror: the second state inserts,
+    updates and deletes against the first."""
+    src1, src2, mirror = tmp_path / "src1", tmp_path / "src2", tmp_path / "mirror"
+    for d in (src1, src2, mirror):
+        d.mkdir()
+    for i in range(12):
+        (src1 / f"f{i}.txt").write_text(f"v1-{i}")
+        if i % 4:  # 0, 4, 8 are deleted
+            (src2 / f"f{i}.txt").write_text(f"v2-{i}" if i % 3 == 0 else f"v1-{i}")
+    (src2 / "new.txt").write_text("new")
+    return str(src1), str(src2), str(mirror)
+
+
+def _jobs_in_group(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, sc.statusTracker().getJobIdsForGroup(group)
+
+
+def test_mirror_sync_job_budget(spark, tmp_path):
+    """One action applies the plan and counts its actions through
+    accumulators. A sync into an empty mirror is that one job (the
+    optimizer prunes the join with the empty manifest); a delta sync adds
+    the two manifest-scan map stages of the join's shuffle. The
+    persist-count-apply form ran 4 and 6."""
+    from blspark.jobs import sync_job
+
+    src1, src2, mirror = _mirror_sources(tmp_path)
+    counts, jobs = _jobs_in_group(
+        spark, "test-mirror-sync-full", lambda: sync_job(spark, src1, mirror)
+    )
+    assert counts == {"insert": 12, "update": 0, "skip": 0, "delete": 0}
+    assert len(jobs) == 1, sorted(jobs)
+    counts, jobs = _jobs_in_group(
+        spark, "test-mirror-sync-delta", lambda: sync_job(spark, src2, mirror)
+    )
+    assert counts == {"insert": 1, "update": 3, "skip": 6, "delete": 3}
+    assert 1 <= len(jobs) <= 3, sorted(jobs)
+
+
+def test_mirror_apply_scans_mirror_below_exchange(spark, tmp_path, monkeypatch):
+    """The apply mutates the very files the classification scans, so in
+    the plan it executes every binaryFile scan sits below a shuffle
+    exchange: the whole map stage, mirror scan included, finishes before
+    any apply task starts."""
+    from blspark.io.manifest import file_manifest
+    from blspark.sync import apply_mirror_local, classify_mirror
+
+    src1, src2, mirror = _mirror_sources(tmp_path)
+    apply_mirror_local(
+        classify_mirror(file_manifest(spark, src1), file_manifest(spark, mirror)),
+        src1,
+        mirror,
+    )
+    plan = classify_mirror(file_manifest(spark, src2), file_manifest(spark, mirror))
+    applied = []
+    run = type(plan).foreachPartition
+
+    def record(df, f):
+        applied.append(df)
+        return run(df, f)
+
+    monkeypatch.setattr(type(plan), "foreachPartition", record)
+    counts = apply_mirror_local(plan, src2, mirror)
+    assert counts == {"insert": 1, "update": 3, "skip": 6, "delete": 3}
+    (df,) = applied
+    text = df._jdf.queryExecution().executedPlan().toString()
+    final = text.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+    # Scan locations are cut to spark.sql.maxMetadataStringLength, so
+    # check both manifest scans (source and mirror) rather than match
+    # the mirror's path.
+    scans = [l for l in final.splitlines() if "Scan binaryFile" in l]
+    below = [
+        l
+        for _, sub in _subtrees(final, "Exchange hashpartitioning")
+        for l in sub.splitlines()
+        if "Scan binaryFile" in l
+    ]
+    assert len(scans) == 2 and below == scans

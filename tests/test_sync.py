@@ -334,3 +334,71 @@ def test_apply_mirror_fs_s3_compatible_endpoint(spark, tmp_path):
             s3.delete_dir_contents(prefix, missing_dir_ok=True)
         except OSError:
             pass
+
+
+def test_apply_mirror_fs_keeps_caller_cache(spark, tmp_path):
+    """A plan the caller persisted stays persisted across the apply, and
+    still answers with the classification made before the mirror moved."""
+    src = tmp_path / "remote"
+    dst = tmp_path / "mirror"
+    src.mkdir()
+    dst.mkdir()
+    (src / "a.txt").write_text("alpha")
+    (dst / "c.txt").write_text("gamma")
+
+    plan = classify_mirror(
+        file_manifest(spark, str(src)), file_manifest(spark, str(dst))
+    ).persist()
+    level = plan.storageLevel
+    try:
+        counts = apply_mirror_local(plan, str(src), str(dst))
+        assert counts == {"insert": 1, "update": 0, "skip": 0, "delete": 1}
+        assert plan.is_cached and plan.storageLevel == level
+        assert {r["key"]: r["action"] for r in plan.collect()} == {
+            "a.txt": "insert",
+            "c.txt": "delete",
+        }
+    finally:
+        plan.unpersist()
+
+
+def test_apply_mirror_delta_across_partitions(spark, tmp_path):
+    """A delta sync whose updates and deletes fall in several of the 8
+    shuffle partitions: the per-task accumulator counts add up exactly
+    and the mirror ends equal to the source."""
+    from pyspark.sql import functions as F
+
+    src = tmp_path / "remote"
+    dst = tmp_path / "mirror"
+    src.mkdir()
+    dst.mkdir()
+    for i in range(60):
+        if i % 10 != 9:  # 9, 19, ... exist only in the mirror: deletes
+            (src / f"f{i:02d}.txt").write_text(f"v2-{i}")
+        if i % 10 != 0:  # 0, 10, ... exist only in the source: inserts
+            (dst / f"f{i:02d}.txt").write_text(f"v1-{i}" if i % 3 == 0 else f"v2-{i}")
+    want = {p.name: p.read_bytes() for p in src.iterdir()}
+
+    conf = {
+        "spark.sql.shuffle.partitions": "8",
+        # keep all 8 partitions: AQE would fold this small shuffle into one
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+    }
+    old = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        plan = classify_mirror(
+            file_manifest(spark, str(src)), file_manifest(spark, str(dst))
+        )
+        where = plan.select(F.spark_partition_id().alias("p"), "action").collect()
+        for action in ("update", "delete"):
+            assert len({r["p"] for r in where if r["action"] == action}) >= 2
+        counts = apply_mirror_local(plan, str(src), str(dst))
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+    # i % 10 == 0 → insert (6); i % 10 == 9 → delete (6); of the rest,
+    # i % 3 == 0 → update (16), else skip (32).
+    assert counts == {"insert": 6, "update": 16, "skip": 32, "delete": 6}
+    assert {p.name: p.read_bytes() for p in dst.iterdir()} == want
