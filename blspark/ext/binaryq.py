@@ -38,10 +38,11 @@ the rest of the similarity grid.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from blspark.catalog import davg
+from blspark.ext.similarity import _cell_assign, _dot, _pair_fetch, _top
 
 WORD_BITS = 32  # bits packed per BIGINT word — 32, not 64, so the
 # packed value stays in [0, 2^32) and never touches the sign bit of
@@ -259,19 +260,12 @@ def _shortlist_rerank(
     scored = rerank_pairs(
         corpus, queries, pairs, id_col=id_col, vec_col=vec_col
     )
-    wk = Window.partitionBy("query_id").orderBy(
-        F.desc("score_raw"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(wk))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("score_raw", 6).alias("score"),
-            "hamming",
-            "rank",
-        )
+    return _top(scored, "score_raw", "neighbor_id", k).select(
+        "query_id",
+        "neighbor_id",
+        F.round("score_raw", 6).alias("score"),
+        "hamming",
+        "rank",
     )
 
 
@@ -315,10 +309,7 @@ def hamming_ranked(
         "neighbor_id",
         hamming(F.col("nwords"), F.col("qwords")).alias("hamming"),
     )
-    wham = Window.partitionBy("query_id").orderBy(
-        F.asc("hamming"), F.asc("neighbor_id")
-    )
-    return paired.withColumn("hrank", F.row_number().over(wham))
+    return _top(paired, "hamming", "neighbor_id", rank="hrank", asc=True)
 
 
 def rerank_pairs(
@@ -329,27 +320,18 @@ def rerank_pairs(
     vec_col: str = "vec",
 ) -> DataFrame:
     """Exact-dot rerank scoring over shortlist-many (query_id,
-    neighbor_id, ...) pairs — corpus floats fetched by broadcast
-    pair join, query floats broadcast whole (the pq_rerank_topk fetch
-    device). All of ``pairs``' columns pass through (binary_topk
-    carries ``hamming``; a caller scoring bare id pairs carries
-    nothing extra) plus ``score_raw``; the caller ranks (binary_topk)
-    or joins ground truth (the eval)."""
-    cf = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nvec")
-    )
-    qf = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
-    )
-    dot = F.aggregate(
-        F.zip_with(F.col("nvec"), F.col("qvec"), lambda x, y: x * y),
-        F.lit(0.0).cast("double"),
-        lambda acc, x: acc + x,
-    )
-    return (
-        cf.join(F.broadcast(pairs), "neighbor_id")
-        .join(F.broadcast(qf), "query_id")
-        .select(*pairs.columns, dot.alias("score_raw"))
+    neighbor_id, ...) pairs — the family's Rerank stage
+    (``similarity._pair_fetch``: corpus floats fetched by broadcast
+    pair join, query floats broadcast whole, the fetch
+    ``mrl_topk``/``pq_rerank_topk`` share). All of ``pairs``' columns
+    pass through (binary_topk carries ``hamming``; a caller scoring
+    bare id pairs carries nothing extra) plus ``score_raw``, the
+    ordered ``_dot`` fold; the caller ranks (binary_topk) or joins
+    ground truth (the eval)."""
+    return _pair_fetch(
+        corpus, queries, pairs, id_col, vec_col, cvec="nvec"
+    ).select(
+        *pairs.columns, _dot(F.col("nvec"), F.col("qvec")).alias("score_raw")
     )
 
 
@@ -379,25 +361,13 @@ def ivf_binary_topk(
     Returns (query_id, neighbor_id, score, hamming, rank); ties and
     determinism identical to ``binary_topk`` (the probed-cell
     restriction changes WHICH pairs are ranked, never how)."""
-    from blspark.ext.similarity import _cell_assign, _centroid_frame, _norm
-
-    cent = _centroid_frame(centroids)
     if thresholds is None:
         thr = binary_thresholds(corpus, vec_col=vec_col).localCheckpoint(
             eager=True
         )
     else:
         thr = _materialized(thresholds)
-    assigned = _cell_assign(
-        corpus.select(
-            F.col(id_col),
-            F.col(vec_col).alias("vec"),
-            _norm(F.col(vec_col)).alias("vnorm"),
-        ),
-        cent,
-        id_col,
-        1,
-    )
+    assigned = _cell_assign(corpus, centroids, id_col, vec_col, 1)
     c = binary_pack(
         assigned, thr, dim, id_col=id_col, vec_col="vec", keep=("cell_id",)
     ).select(
@@ -406,14 +376,7 @@ def ivf_binary_topk(
         F.col("words").alias("nwords"),
     )
     qprobe = _cell_assign(
-        queries.select(
-            F.col(id_col),
-            F.col(vec_col).alias("vec"),
-            _norm(F.col(vec_col)).alias("vnorm"),
-        ),
-        cent,
-        id_col,
-        nprobe,
+        queries, centroids, id_col, vec_col, nprobe, local_par=False
     ).select(F.col(id_col).alias("query_id"), "cell_id")
     qp = binary_pack(queries, thr, dim, id_col=id_col, vec_col=vec_col).select(
         F.col(id_col).alias("query_id"), F.col("words").alias("qwords")
@@ -428,10 +391,7 @@ def ivf_binary_topk(
             hamming(F.col("nwords"), F.col("qwords")).alias("hamming"),
         )
     )
-    wham = Window.partitionBy("query_id").orderBy(
-        F.asc("hamming"), F.asc("neighbor_id")
-    )
-    ranked = paired.withColumn("hrank", F.row_number().over(wham))
+    ranked = _top(paired, "hamming", "neighbor_id", rank="hrank", asc=True)
     return _shortlist_rerank(
         corpus, queries, ranked, k, shortlist, id_col, vec_col
     )

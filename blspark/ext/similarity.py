@@ -1,16 +1,45 @@
 """Similarity search over embedding columns (array<float>).
 
-- ``cosine_topk``: brute-force exact top-k — the correctness baseline.
-  Queries are broadcast; the corpus never shuffles; per-partition the
-  dot products stay inside Catalyst (``zip_with`` + ``aggregate`` — no
-  Python in the loop).
-- ``hyperplane_lsh_topk``: the scale path — random-hyperplane LSH.
-  Each vector gets a small bucket id from the sign pattern of dot
-  products against shared hyperplanes; search only joins within a
-  bucket, turning the O(N·Q) cross product into a bucketed equi-join.
-  Hyperplanes here are taken deterministically from the dataset itself
-  so results are reproducible and oracle-checkable; in production they
-  would be seeded Gaussian vectors broadcast to executors.
+Every search entry point here and in ``ext/binaryq.py`` is one
+prune -> refine pipeline over a swappable score, built from four
+shared stages. Each stage is written once, so a guard or tie-break fix
+reaches every rung:
+
+- **Route** (``_cell_assign``): projects a raw frame to (id, vec,
+  vnorm) (``_vecs`` — the double cast and the hoisted norm) and sends
+  each row to its nearest ``probes`` IVF cells by guarded cosine
+  (lowest cell_id on ties). Corpus sides route at probes=1 (a map-side
+  argmin), query sides at ``nprobe``. ``adaptive_probes`` is the
+  per-query adaptive probe list, ``_frozen_cells`` the streaming form
+  against a frozen centroid list; LSH routes by ``hyperplane_buckets``.
+- **Score** (``_cos``): the zero-norm-guarded cosine over ``_dot``'s
+  ordered fold — a degenerate vector scores -inf, never NaN or an ANSI
+  ``DIVIDE_BY_ZERO``. The compressed rungs swap in their own exact
+  scorers: ``_idot`` (SQ8), the ordered ADC fold (``_adc_rank``, PQ),
+  ``binaryq.hamming`` (1-bit codes), MaxSim's token maxima.
+- **Rank** (``_top``): the one per-query top-k tail — ``row_number``
+  over (score DESC, id ASC), keep rank <= k.
+- **Rerank** (``_pair_fetch``): full vectors are fetched only for a
+  shortlist of (query_id, neighbor_id) pairs, by broadcast pair join
+  against the corpus scan, then scored exactly and ranked again.
+
+Entry points by composition:
+
+- score + rank: ``cosine_topk`` (the brute-force correctness
+  baseline), ``sq8_topk``, ``maxsim_topk`` / ``maxsim_tokens_topk``,
+  ``pq_adc_topk``;
+- route + score + rank: ``ivf_topk``, ``ivf_adaptive_topk``,
+  ``ivf_sq8_topk``, ``maxsim_pruned_topk``, ``ivfpq_topk`` /
+  ``ivfpq_query``, ``ivfpq_adaptive_topk``, ``ivfpq_residual_topk``
+  (the three IVF-PQ rungs share the probed ADC scan ``_probed_adc``),
+  ``hyperplane_lsh_topk`` (LSH buckets, optionally multi-probe);
+- score + rank + rerank: ``mrl_topk`` (prefix cosine shortlist),
+  ``pq_rerank_topk`` (ADC shortlist), ``binaryq.binary_topk``
+  (Hamming shortlist), and routed first: ``binaryq.ivf_binary_topk``;
+- the graph family routes the corpus once (``assign_corpus``), pairs
+  within cells and ranks with the same score and rank stages
+  (``knn_graph``, ``knn_graph_sq8``, the beam walks of
+  ``graph_expand_topk``).
 
 Numeric determinism: embeddings are cast float->double (exact), each
 elementwise product of two floats is exactly representable in a double,
@@ -19,6 +48,8 @@ and the sequential left-to-right ``aggregate`` sum matches DuckDB's
 """
 
 from __future__ import annotations
+
+import math
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -40,25 +71,20 @@ from pyspark.sql import functions as F
 _UNROLL_DIM = 64
 
 
-def _dot_hof(a: Column, b: Column) -> Column:
-    """The original higher-order-function fold — used (a) directly
-    inside OTHER lambdas (e.g. _cell_assign's per-cell transform),
-    where the whole expression is interpreted anyway and the unrolled
-    tree's size only adds walk overhead, and (b) on METADATA-sized
-    frames inside iterative loops (per-hop beam-walk scoring, seed
-    products, subvector LUTs, MRL prefix slices): the data volume
-    there cannot amortize the 64-term tree's extra planning/codegen
-    cost, which is re-paid on every hop's plan. Bitwise identical to
-    _dot's unrolled branch (same left fold from 0.0)."""
+def _dot(a: Column, b: Column) -> Column:
+    """Ordered dot product: the higher-order-function fold (left to
+    right from 0.0). The family's default — inside OTHER lambdas
+    (e.g. _cell_assign's per-cell transform) the whole expression is
+    interpreted anyway, and on METADATA-sized frames inside iterative
+    loops (per-hop beam-walk scoring, seed products, subvector LUTs,
+    MRL prefix slices) the data volume cannot amortize the 64-term
+    tree's extra planning/codegen cost, re-paid on every hop's plan.
+    ``_dot_unrolled`` is the bitwise-identical hot-spot variant."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y),
         F.lit(0.0).cast("double"),
         lambda acc, x: acc + x,
     )
-
-
-def _dot(a: Column, b: Column) -> Column:
-    return _dot_hof(a, b)
 
 
 def _dot_unrolled(a: Column, b: Column) -> Column:
@@ -81,7 +107,7 @@ def _dot_unrolled(a: Column, b: Column) -> Column:
         unrolled = unrolled + a[i] * b[i]
     return F.when(
         (F.size(a) == _UNROLL_DIM) & (F.size(b) == _UNROLL_DIM), unrolled
-    ).otherwise(_dot_hof(a, b))
+    ).otherwise(_dot(a, b))
 
 
 def _norm(a: Column) -> Column:
@@ -90,6 +116,79 @@ def _norm(a: Column) -> Column:
 
 def with_double_vec(df: DataFrame, vec_col: str, out: str = "vec") -> DataFrame:
     return df.withColumn(out, F.col(vec_col).cast("array<double>"))
+
+
+def _vecs(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    id_out: str | None = None,
+    vec_out: str = "vec",
+    norm_out: str = "vnorm",
+) -> DataFrame:
+    """The (id, vec, norm) projection every stage reads: the vector
+    cast to array<double> (exact) and its norm hoisted — computed once
+    per row instead of once per compared pair (measured 2x on
+    ``cosine_topk``: higher-order array functions are interpreted, so
+    redundant per-pair evaluation is the hot spot). ``id_out`` renames
+    the id (None keeps ``id_col``)."""
+    idc = F.col(id_col) if id_out is None else F.col(id_col).alias(id_out)
+    return with_double_vec(df, vec_col).select(
+        idc, F.col("vec").alias(vec_out), _norm(F.col("vec")).alias(norm_out)
+    )
+
+
+def _cos(a, b, an, bn, dot=_dot) -> Column:
+    """The family's one cosine score, zero-norm guarded: a degenerate
+    zero vector has no direction, so it scores -inf (ranks LAST)
+    instead of NaN (which sorts FIRST under DESC) or an ANSI 0/0
+    ``DIVIDE_BY_ZERO`` abort. Finite sims are untouched — the division
+    only evaluates when the denominator is positive. ``a``/``b`` are
+    the vectors and ``an``/``bn`` their hoisted norms, as column names
+    or Columns; ``dot`` swaps the fold (``_dot_unrolled``)."""
+    a, b, an, bn = (F.col(c) if isinstance(c, str) else c for c in (a, b, an, bn))
+    den = an * bn
+    return F.when(den > 0, dot(a, b) / den).otherwise(F.lit(float("-inf")))
+
+
+def _top(
+    df: DataFrame,
+    score,
+    tie: str,
+    k: int | None = None,
+    by: tuple = ("query_id",),
+    rank: str = "rank",
+    asc: bool = False,
+) -> DataFrame:
+    """The family's one per-query top-k tail: ``row_number`` within
+    ``by`` over (``score`` DESC — ASC for a distance — then ``tie``
+    ASC), a total order in both engines, keeping rank <= ``k`` (every
+    row when ``k`` is None). ``score`` is a column name or Column."""
+    order = F.asc(score) if asc else F.desc(score)
+    w = Window.partitionBy(*by).orderBy(order, F.asc(tie))
+    out = df.withColumn(rank, F.row_number().over(w))
+    return out if k is None else out.filter(F.col(rank) <= k)
+
+
+def _pair_fetch(
+    corpus: DataFrame,
+    queries: DataFrame,
+    pairs: DataFrame,
+    id_col: str,
+    vec_col: str,
+    cvec: str = "cvec",
+) -> DataFrame:
+    """The rerank stage's fetch: full vectors and norms for only the
+    shortlisted (query_id, neighbor_id, ...) ``pairs`` — corpus rows by
+    a broadcast pair join against the corpus scan (at 100 TB on a
+    sorted/bucketed layout, a point lookup), query rows broadcast
+    whole. Carries every ``pairs`` column plus (``cvec``, cnorm, qvec,
+    qnorm)."""
+    cf = _vecs(corpus, id_col, vec_col, "neighbor_id", cvec, "cnorm")
+    qf = _vecs(queries, id_col, vec_col, "query_id", "qvec", "qnorm")
+    return cf.join(F.broadcast(pairs), "neighbor_id").join(
+        F.broadcast(qf), "query_id"
+    )
 
 
 def cosine_topk(
@@ -103,42 +202,15 @@ def cosine_topk(
     Returns (query_id, neighbor_id, cosine, rank); self-matches excluded.
     The queries side is broadcast — the corpus is scanned once, no
     shuffle until the final per-query top-k (tiny)."""
-    # Norms are hoisted out of the join: computed once per corpus row and
-    # once per query row instead of once per (corpus x query) pair —
-    # measured 2x on the whole query (higher-order array functions are
-    # interpreted, so redundant per-pair evaluation is the hot spot).
-    # Bit-identical: same expression, evaluated once and reused.
-    c = with_double_vec(corpus, vec_col).select(
-        F.col(id_col).alias("neighbor_id"), "vec", _norm(F.col("vec")).alias("cnorm")
-    )
-    q = with_double_vec(queries, vec_col).select(
-        F.col(id_col).alias("query_id"),
-        F.col("vec").alias("qvec"),
-        _norm(F.col("vec")).alias("qnorm"),
-    )
-    # Zero-norm guard (family-wide convention): a degenerate zero
-    # vector has no direction — rank it LAST (-inf) instead of NaN
-    # (which sorts FIRST under DESC) or an ANSI 0/0 abort.
-    denom = F.col("cnorm") * F.col("qnorm")
+    c = _vecs(corpus, id_col, vec_col, "neighbor_id", "vec", "cnorm")
+    q = _vecs(queries, id_col, vec_col, "query_id", "qvec", "qnorm")
     scored = c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id")).select(
         "query_id",
         "neighbor_id",
-        F.when(denom > 0, _dot(F.col("vec"), F.col("qvec")) / denom)
-        .otherwise(F.lit(float("-inf")))
-        .alias("cos_raw"),
+        _cos("vec", "qvec", "cnorm", "qnorm").alias("cos_raw"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_raw"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cos_raw", 6).alias("cosine"),
-            "rank",
-        )
+    return _top(scored, "cos_raw", "neighbor_id", k).select(
+        "query_id", "neighbor_id", F.round("cos_raw", 6).alias("cosine"), "rank"
     )
 
 
@@ -167,20 +239,14 @@ def mrl_prefix_ranked(
         F.col(id_col).alias("query_id"),
         F.slice(F.col("vec"), 1, prefix_dim).alias("qpvec"),
     ).withColumn("qpnorm", _norm(F.col("qpvec")))
-    pden = F.col("pnorm") * F.col("qpnorm")
     pscored = cp.join(
         F.broadcast(qp), F.col("neighbor_id") != F.col("query_id")
     ).select(
         "query_id",
         "neighbor_id",
-        F.when(pden > 0, _dot_hof(F.col("pvec"), F.col("qpvec")) / pden)
-        .otherwise(F.lit(float("-inf")))
-        .alias("pcos"),
+        _cos("pvec", "qpvec", "pnorm", "qpnorm").alias("pcos"),
     )
-    ws = Window.partitionBy("query_id").orderBy(
-        F.desc("pcos"), F.asc("neighbor_id")
-    )
-    return pscored.withColumn("prank", F.row_number().over(ws))
+    return _top(pscored, "pcos", "neighbor_id", rank="prank")
 
 
 def mrl_topk(
@@ -231,45 +297,18 @@ def mrl_topk(
         .filter(F.col("prank") <= shortlist)
         .select("query_id", "neighbor_id", "pcos")
     )
-    qd = with_double_vec(queries, vec_col)
-    # Full-vector fetch for shortlist pairs only (broadcast pair join
-    # against the corpus scan), full-dim exact rerank.
-    cf = with_double_vec(corpus, vec_col).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col("vec").alias("cvec"),
-        _norm(F.col("vec")).alias("cnorm"),
+    rescored = _pair_fetch(corpus, queries, pairs, id_col, vec_col).select(
+        "query_id",
+        "neighbor_id",
+        "pcos",
+        _cos("cvec", "qvec", "cnorm", "qnorm").alias("cos_raw"),
     )
-    qf = qd.select(
-        F.col(id_col).alias("query_id"),
-        F.col("vec").alias("qvec"),
-        _norm(F.col("vec")).alias("qnorm"),
-    )
-    den = F.col("cnorm") * F.col("qnorm")
-    rescored = (
-        cf.join(F.broadcast(pairs), "neighbor_id")
-        .join(F.broadcast(qf), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            "pcos",
-            F.when(den > 0, _dot(F.col("cvec"), F.col("qvec")) / den)
-            .otherwise(F.lit(float("-inf")))
-            .alias("cos_raw"),
-        )
-    )
-    wk = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_raw"), F.asc("neighbor_id")
-    )
-    return (
-        rescored.withColumn("rank", F.row_number().over(wk).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cos_raw", 6).alias("cosine"),
-            F.round("pcos", 6).alias("prefix_cosine"),
-            "rank",
-        )
+    return _top(rescored, "cos_raw", "neighbor_id", k).select(
+        "query_id",
+        "neighbor_id",
+        F.round("cos_raw", 6).alias("cosine"),
+        F.round("pcos", 6).alias("prefix_cosine"),
+        "rank",
     )
 
 
@@ -429,20 +468,16 @@ def _sq8_rank(
         idot(F.col("nq"), F.col("qq")).alias("iprod"),
         (F.col("nscale") * F.col("qscale")).alias("ss"),
     )
-    w = Window.partitionBy(*part_extra, "query_id").orderBy(
-        F.desc(F.col("iprod") * F.col("ss")), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            *keep,
-            F.round(F.col("iprod") * F.col("ss"), 6).alias("score"),
-            "iprod",
-            F.col("rank").cast("int").alias("rank"),
-        )
+    score = F.col("iprod") * F.col("ss")
+    return _top(
+        scored, score, "neighbor_id", k, by=(*part_extra, "query_id")
+    ).select(
+        "query_id",
+        "neighbor_id",
+        *keep,
+        F.round(score, 6).alias("score"),
+        "iprod",
+        "rank",
     )
 
 
@@ -475,16 +510,7 @@ def ivf_sq8_topk(
     IS the query cost). Scoring and ranking are ``_sq8_rank``, shared
     verbatim with ``sq8_topk``; pairs are unique by construction
     (each neighbor lives in exactly one cell)."""
-    cent = _centroid_frame(centroids)
-    c_cells = _cell_assign(
-        corpus.select(
-            F.col(id_col), F.col(vec_col).alias("vec"),
-            _norm(F.col(vec_col)).alias("vnorm"),
-        ),
-        cent,
-        id_col,
-        1,
-    )
+    c_cells = _cell_assign(corpus, centroids, id_col, vec_col, 1)
     cq = sq8_quantize(c_cells, id_col=id_col, vec_col="vec", keep=("cell_id",)).select(
         F.col(id_col).alias("neighbor_id"),
         "cell_id",
@@ -492,14 +518,7 @@ def ivf_sq8_topk(
         F.col("scale").alias("nscale"),
     )
     probes = _cell_assign(
-        queries.select(
-            F.col(id_col), F.col(vec_col).alias("vec"),
-            _norm(F.col(vec_col)).alias("vnorm"),
-        ),
-        cent,
-        id_col,
-        nprobe,
-        local_par=False,
+        queries, centroids, id_col, vec_col, nprobe, local_par=False
     ).select(F.col(id_col).alias("query_id"), "cell_id")
     qz = sq8_quantize(queries, id_col=id_col, vec_col=vec_col).select(
         F.col(id_col).alias("query_id"),
@@ -530,25 +549,11 @@ def _ivf_candidates(
     scoring frame can carry cell_id directly (``ivf_sq8_topk``,
     ``ivfpq_query``) skip the pair frame and broadcast-join their
     probe list on cell_id instead."""
-    cent = _centroid_frame(centroids)
-    c_cells = _cell_assign(
-        corpus.select(
-            F.col(id_col), F.col(vec_col).alias("vec"),
-            _norm(F.col(vec_col)).alias("vnorm"),
-        ),
-        cent,
-        id_col,
-        1,
-    ).select(F.col(id_col).alias("neighbor_id"), "cell_id")
+    c_cells = _cell_assign(corpus, centroids, id_col, vec_col, 1).select(
+        F.col(id_col).alias("neighbor_id"), "cell_id"
+    )
     probes = _cell_assign(
-        queries.select(
-            F.col(id_col), F.col(vec_col).alias("vec"),
-            _norm(F.col(vec_col)).alias("vnorm"),
-        ),
-        cent,
-        id_col,
-        nprobe,
-        local_par=False,
+        queries, centroids, id_col, vec_col, nprobe, local_par=False
     ).select(F.col(id_col).alias("query_id"), "cell_id")
     return c_cells.join(F.broadcast(probes), "cell_id").select(
         "query_id", "neighbor_id"
@@ -690,7 +695,7 @@ def maxsim_tokens_topk(
     best = (
         paired.select(
             "query_id", "neighbor_id", "qm",
-            _dot_hof(F.col("sv"), F.col("qsv")).alias("dp"),
+            _dot(F.col("sv"), F.col("qsv")).alias("dp"),
         )
         .groupBy("query_id", "neighbor_id", "qm")
         .agg(F.max("dp").alias("best"))
@@ -705,18 +710,8 @@ def maxsim_tokens_topk(
             lambda acc, x: acc + x,
         ).alias("score_raw")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score_raw"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("score_raw", 6).alias("score"),
-            F.col("rank").cast("int").alias("rank"),
-        )
+    return _top(scored, "score_raw", "neighbor_id", k).select(
+        "query_id", "neighbor_id", F.round("score_raw", 6).alias("score"), "rank"
     )
 
 
@@ -780,14 +775,23 @@ def _centroid_frame(centroids: DataFrame) -> DataFrame:
 
 
 def _cell_assign(
-    df: DataFrame, cent: DataFrame, idc: str, probes: int,
-    keep_sim: bool = False, local_par: bool = True,
+    df: DataFrame,
+    centroids: DataFrame,
+    id_col: str,
+    vec_col: str,
+    probes: int,
+    id_out: str | None = None,
+    keep_sim: bool = False,
+    local_par: bool = True,
 ) -> DataFrame:
-    """Nearest-``probes``-cells assignment by max cosine (tie-break
-    lowest cell_id) — the ONE cell-assignment rule shared by ivf_topk,
-    ivfpq_topk and ivfpq_residual_topk, so IVF and IVF-PQ can never
-    silently diverge. ``df`` must carry (idc, vec, vnorm); returns
-    (idc, vec, vnorm, cell_id). Centroids broadcast. ``keep_sim``
+    """The Route stage: nearest-``probes``-cells assignment by max
+    cosine (tie-break lowest cell_id) — the ONE cell-assignment rule
+    the whole IVF family shares, so IVF, IVF-SQ8, IVF-PQ, IVF-binary
+    and the graph builds can never silently diverge. ``df`` is a raw
+    frame carrying ``id_col`` and ``vec_col``; ``centroids`` the raw
+    (cell_id, centroid) frame. Returns (id, vec, vnorm, cell_id) —
+    the ``_vecs`` projection, id renamed to ``id_out`` when given,
+    plus the cell. Centroids broadcast. ``keep_sim``
     (probes == 1 only) appends the winning cosine as ``cell_sim``
     (cell_prototypes reads it); recovered from the argmin struct as
     ``-neg`` — IEEE negation is exact, so the value is bit-identical
@@ -812,6 +816,9 @@ def _cell_assign(
     division only evaluates when the denominator is positive)."""
     if keep_sim and probes != 1:
         raise ValueError("keep_sim requires probes == 1")
+    cent = _centroid_frame(centroids)
+    df = _vecs(df, id_col, vec_col, id_out)
+    idc = id_out or id_col
     if probes == 1:
         # MAP-SIDE argmin (optimization r16): score the |cells|
         # centroid list — collected cell_id-sorted into ONE broadcast
@@ -858,7 +865,7 @@ def _cell_assign(
             lambda c: F.when(
                 (F.col("vnorm") * c["centnorm"]) > 0,
                 -(
-                    _dot_hof(F.col("vec"), c["cvec"])
+                    _dot(F.col("vec"), c["cvec"])
                     / (F.col("vnorm") * c["centnorm"])
                 ),
             ).otherwise(F.lit(float("inf"))),
@@ -899,22 +906,16 @@ def _cell_assign(
                 best["cell_id"].alias("cell_id"), *sim_cols,
             )
         )
-    denom = F.col("vnorm") * F.col("centnorm")
     scored = df.crossJoin(F.broadcast(cent)).select(
         F.col(idc),
         "vec",
         "vnorm",
         "cell_id",
-        F.when(denom > 0, _dot(F.col("vec"), F.col("cvec")) / denom)
-        .otherwise(F.lit(float("-inf")))
-        .alias("cell_sim"),
+        _cos("vec", "cvec", "vnorm", "centnorm").alias("cell_sim"),
     )
-    w = Window.partitionBy(idc).orderBy(F.desc("cell_sim"), F.asc("cell_id"))
-    return (
-        scored.withColumn("crank", F.row_number().over(w))
-        .filter(F.col("crank") <= probes)
-        .drop("cell_sim", "crank")
-    )
+    return _top(
+        scored, "cell_sim", "cell_id", probes, by=(idc,), rank="crank"
+    ).drop("cell_sim", "crank")
 
 
 def ivf_topk(
@@ -937,23 +938,9 @@ def ivf_topk(
     equi-join on cell_id replaces the cross product — the same shuffle
     shape as the LSH variant but with learned, data-adaptive cells.
     Returns (query_id, neighbor_id, cosine, rank)."""
-    cent = _centroid_frame(centroids)
-    c = _cell_assign(
-        with_double_vec(corpus, vec_col).select(
-            F.col(id_col).alias("neighbor_id"), "vec", _norm(F.col("vec")).alias("vnorm")
-        ),
-        cent,
-        "neighbor_id",
-        1,
-    )
+    c = _cell_assign(corpus, centroids, id_col, vec_col, 1, "neighbor_id")
     q = _cell_assign(
-        with_double_vec(queries, vec_col).select(
-            F.col(id_col).alias("query_id"), "vec", _norm(F.col("vec")).alias("vnorm")
-        ),
-        cent,
-        "query_id",
-        nprobe,
-        local_par=False,
+        queries, centroids, id_col, vec_col, nprobe, "query_id", local_par=False
     ).select(
         "query_id", F.col("vec").alias("qvec"), F.col("vnorm").alias("qnorm"), "cell_id"
     )
@@ -980,7 +967,6 @@ def _ivf_float_rank(c: DataFrame, q: DataFrame, k: int, keep: tuple = ()) -> Dat
     size estimate, which otherwise plans a SortMergeJoin that
     shuffles the whole cell-assigned corpus on cell_id — at 100 TB
     that shuffle IS the query cost."""
-    denom = F.col("vnorm") * F.col("qnorm")
     scored = c.join(
         F.broadcast(q),
         (c.cell_id == q.cell_id) & (F.col("neighbor_id") != F.col("query_id")),
@@ -988,18 +974,11 @@ def _ivf_float_rank(c: DataFrame, q: DataFrame, k: int, keep: tuple = ()) -> Dat
         "query_id",
         "neighbor_id",
         *keep,
-        F.when(denom > 0, _dot(F.col("vec"), F.col("qvec")) / denom)
-        .otherwise(F.lit(float("-inf")))
-        .alias("cos_raw"),
+        _cos("vec", "qvec", "vnorm", "qnorm").alias("cos_raw"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_raw"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "neighbor_id", *keep,
-            F.round("cos_raw", 6).alias("cosine"), "rank",
-        )
+    return _top(scored, "cos_raw", "neighbor_id", k).select(
+        "query_id", "neighbor_id", *keep,
+        F.round("cos_raw", 6).alias("cosine"), "rank",
     )
 
 
@@ -1041,19 +1020,15 @@ def adaptive_probes(
         # routing paths must agree; a silent 0-probe confident query
         # would vanish from results instead of erroring
         raise ValueError("probe_lo must be >= 1")
-    denom = F.col("vnorm") * F.col("centnorm")
     scored = queries.crossJoin(F.broadcast(cent)).select(
         F.col(idc),
         "vec",
         "vnorm",
         "cell_id",
-        F.when(denom > 0, _dot(F.col("vec"), F.col("cvec")) / denom)
-        .otherwise(F.lit(float("-inf")))
-        .alias("cell_sim"),
+        _cos("vec", "cvec", "vnorm", "centnorm").alias("cell_sim"),
     )
-    w = Window.partitionBy(idc).orderBy(F.desc("cell_sim"), F.asc("cell_id"))
     wq = Window.partitionBy(idc)
-    ranked = scored.withColumn("crank", F.row_number().over(w))
+    ranked = _top(scored, "cell_sim", "cell_id", by=(idc,), rank="crank")
     s1 = F.max(F.when(F.col("crank") == 1, F.col("cell_sim"))).over(wq)
     s2 = F.max(F.when(F.col("crank") == 2, F.col("cell_sim"))).over(wq)
     neg_inf = F.lit(float("-inf"))
@@ -1084,13 +1059,9 @@ def ivf_adaptive_probe_frame(
     budgets from. With ``probe_lo == probe_hi == n`` this is exactly
     the fixed-``nprobe`` probe list (the margin branch is vacuous), so
     fixed-budget comparators come from the same single code path."""
-    cent = _centroid_frame(centroids)
     return adaptive_probes(
-        with_double_vec(queries, vec_col).select(
-            F.col(id_col).alias("query_id"), "vec",
-            _norm(F.col("vec")).alias("vnorm"),
-        ),
-        cent,
+        _vecs(queries, id_col, vec_col, "query_id"),
+        _centroid_frame(centroids),
         "query_id",
         probe_lo,
         probe_hi,
@@ -1125,22 +1096,10 @@ def ivf_adaptive_topk(
     with ``ivf_topk``, so with ``probe_lo == probe_hi == n`` results
     equal ``ivf_topk(nprobe=n)`` exactly (property-tested). Returns
     (query_id, neighbor_id, cosine, rank, nprobe_used)."""
-    cent = _centroid_frame(centroids)
-    c = _cell_assign(
-        with_double_vec(corpus, vec_col).select(
-            F.col(id_col).alias("neighbor_id"), "vec",
-            _norm(F.col("vec")).alias("vnorm"),
-        ),
-        cent,
-        "neighbor_id",
-        1,
-    )
+    c = _cell_assign(corpus, centroids, id_col, vec_col, 1, "neighbor_id")
     q = adaptive_probes(
-        with_double_vec(queries, vec_col).select(
-            F.col(id_col).alias("query_id"), "vec",
-            _norm(F.col("vec")).alias("vnorm"),
-        ),
-        cent,
+        _vecs(queries, id_col, vec_col, "query_id"),
+        _centroid_frame(centroids),
         "query_id",
         probe_lo,
         probe_hi,
@@ -1252,15 +1211,7 @@ def assign_corpus(
     serving-path cache) and passing it down via their ``assigned``
     parameter turns three-plus full argmin scans into one."""
     return _cell_assign(
-        with_double_vec(corpus, vec_col).select(
-            F.col(id_col).alias("aid"),
-            "vec",
-            _norm(F.col("vec")).alias("vnorm"),
-        ),
-        _centroid_frame(centroids),
-        "aid",
-        1,
-        keep_sim=True,
+        corpus, centroids, id_col, vec_col, 1, "aid", keep_sim=True
     )
 
 
@@ -1329,17 +1280,7 @@ def knn_graph(
             F.col("aid").alias("src_id"), "vec", "vnorm", "cell_id"
         )
         return _graph_edges_float(src, k, mutual, max_block, keep_cell)
-    cent = _centroid_frame(centroids)
-    src = _cell_assign(
-        with_double_vec(corpus, vec_col).select(
-            F.col(id_col).alias("src_id"),
-            "vec",
-            _norm(F.col("vec")).alias("vnorm"),
-        ),
-        cent,
-        "src_id",
-        1,
-    )
+    src = _cell_assign(corpus, centroids, id_col, vec_col, 1, "src_id")
     # materialize the one assignment pass for BOTH self-join sides
     # (optimization r16): the pairing reads this frame twice, and a
     # graph construction is BUILD-time work — the same
@@ -1406,11 +1347,6 @@ def _graph_edges_float(
         if max_block is None
         else _blocked_cell_join(a, b, "src_id", "dst_id", max_block)
     )
-    # zero-norm guard (the _cell_assign -inf convention): a degenerate
-    # vector must never rank, and under ANSI mode (the driver session)
-    # an unguarded 0/0 double division would abort the whole graph
-    # build instead of scoring low
-    pair_denom = F.col("anorm") * F.col("bnorm")
     # the plain path keeps cell_id on the scored pairs so the top-k
     # window can partition by (cell_id, src_id): src_id functionally
     # determines cell_id (each node lives in exactly one cell), so the
@@ -1427,27 +1363,17 @@ def _graph_edges_float(
         "src_id",
         "dst_id",
         *(["cell_id"] if (keep_cell or plain) else []),
-        F.when(
-            pair_denom > 0,
-            _dot_unrolled(F.col("avec"), F.col("bvec")) / pair_denom,
-        )
-        .otherwise(F.lit(float("-inf")))
-        .alias("cos_raw"),
+        _cos("avec", "bvec", "anorm", "bnorm", _dot_unrolled).alias("cos_raw"),
     )
-    wpart = ["cell_id", "src_id"] if plain else ["src_id"]
-    w = Window.partitionBy(*wpart).orderBy(
-        F.desc("cos_raw"), F.asc("dst_id")
-    )
-    edges = scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    wpart = ("cell_id", "src_id") if plain else ("src_id",)
+    edges = _top(scored, "cos_raw", "dst_id", k, by=wpart)
     if not mutual:
         return edges.select(
             "src_id",
             "dst_id",
             *(["cell_id"] if keep_cell else []),
             F.round("cos_raw", 6).alias("cosine"),
-            F.col("rank").cast("int").alias("rank"),
+            "rank",
         )
     # mutual flag by COUNT over the canonical (lo, hi) pair key
     # (optimization r17, guide §2.4): each (src, dst) pair appears in
@@ -1466,7 +1392,7 @@ def _graph_edges_float(
         "src_id",
         "dst_id",
         F.round("cos_raw", 6).alias("cosine"),
-        F.col("rank").cast("int").alias("rank"),
+        "rank",
         (F.count(F.lit(1)).over(wm) == 2).alias("mutual"),
     )
 
@@ -1512,19 +1438,9 @@ def split_oversized_cells(
     broadcast-join reassign. No self-join anywhere. Returns
     (src_id, vec, vnorm, cell_id) with cell_id = the REFINED id —
     the exact frame ``_graph_edges_float`` consumes."""
-    cent = _centroid_frame(centroids)
     from blspark.ext.dedup import md5_prefix_int
 
-    assigned = _cell_assign(
-        with_double_vec(corpus, vec_col).select(
-            F.col(id_col).alias("src_id"),
-            "vec",
-            _norm(F.col("vec")).alias("vnorm"),
-        ),
-        cent,
-        "src_id",
-        1,
-    )
+    assigned = _cell_assign(corpus, centroids, id_col, vec_col, 1, "src_id")
     sizes = F.broadcast(
         assigned.groupBy("cell_id")
         .agg(F.count(F.lit(1)).alias("csz"))
@@ -1563,7 +1479,6 @@ def split_oversized_cells(
     # nearest-sub-centroid reassign (argmin over the <=2 candidates of
     # the member's own cell — the _cell_assign min-struct device with
     # the same zero-norm -inf guard and lowest-sub tie-break)
-    denom = F.col("vnorm") * F.col("scnorm")
     resub = (
         tagged.filter("oversized")
         .join(subcent, "cell_id")
@@ -1571,9 +1486,7 @@ def split_oversized_cells(
             "src_id",
             "cell_id",
             "sub",
-            F.when(denom > 0, _dot(F.col("vec"), F.col("scvec")) / denom)
-            .otherwise(F.lit(float("-inf")))
-            .alias("ssim"),
+            _cos("vec", "scvec", "vnorm", "scnorm").alias("ssim"),
         )
         .groupBy("src_id", "cell_id")
         .agg(F.min(F.struct((-F.col("ssim")).alias("neg"), "sub")).alias("s"))
@@ -1730,17 +1643,7 @@ def _quantized_cells(
     ``knn_graph_sq8`` and ``cell_member_index`` so the batch graph
     and the frozen streaming index can never diverge on either
     stage."""
-    cent = _centroid_frame(centroids)
-    assigned = _cell_assign(
-        with_double_vec(corpus, vec_col).select(
-            F.col(id_col).alias("vid"),
-            "vec",
-            _norm(F.col("vec")).alias("vnorm"),
-        ),
-        cent,
-        "vid",
-        1,
-    )
+    assigned = _cell_assign(corpus, centroids, id_col, vec_col, 1, "vid")
     return sq8_quantize(assigned, id_col="vid", vec_col="vec", keep=("cell_id",))
 
 
@@ -1854,17 +1757,8 @@ def cell_prototypes(
             F.col("aid").alias("pid"), "cell_id", "cell_sim"
         )
     else:
-        cent = _centroid_frame(centroids)
         assigned = _cell_assign(
-            with_double_vec(corpus, vec_col).select(
-                F.col(id_col).alias("pid"),
-                "vec",
-                _norm(F.col("vec")).alias("vnorm"),
-            ),
-            cent,
-            "pid",
-            1,
-            keep_sim=True,
+            corpus, centroids, id_col, vec_col, 1, "pid", keep_sim=True
         )
     per_cell = assigned.groupBy("cell_id").agg(
         F.min(
@@ -1897,16 +1791,13 @@ def _nearest_other_cell(cent: DataFrame) -> DataFrame:
         F.col("cvec").alias("nvec"),
         F.col("centnorm").alias("nnorm"),
     )
-    cdenom = F.col("anorm") * F.col("nnorm")
     return F.broadcast(
         a_cent.crossJoin(b_cent)
         .filter(F.col("acell") != F.col("ncell"))
         .select(
             "acell",
             "ncell",
-            F.when(cdenom > 0, _dot(F.col("avec"), F.col("nvec")) / cdenom)
-            .otherwise(F.lit(float("-inf")))
-            .alias("csim"),
+            _cos("avec", "nvec", "anorm", "nnorm").alias("csim"),
         )
         .groupBy("acell")
         .agg(F.min(F.struct((-F.col("csim")).alias("neg"), "ncell")).alias("s"))
@@ -1942,24 +1833,14 @@ def negative_samples(
     negative_id, rank)."""
     from blspark.ext.dedup import md5_prefix_int
 
-    cent = _centroid_frame(centroids)
-    ncell_map = _nearest_other_cell(cent)
+    ncell_map = _nearest_other_cell(_centroid_frame(centroids))
     # both candidate-join sides derive from the one assignment — the
     # compact (id, cell) projection checkpoints once so the corpus
     # cell-assign scan runs ONCE per action, not per side (the
     # blocked-join lesson: recompute of the assign subtree otherwise
     # doubles the dominant cost)
     cells_of = (
-        _cell_assign(
-            with_double_vec(corpus, vec_col).select(
-                F.col(id_col).alias("aid"),
-                "vec",
-                _norm(F.col("vec")).alias("vnorm"),
-            ),
-            cent,
-            "aid",
-            1,
-        )
+        _cell_assign(corpus, centroids, id_col, vec_col, 1, "aid")
         .select("aid", "cell_id")
         .localCheckpoint(eager=True)
     )
@@ -1980,14 +1861,9 @@ def negative_samples(
             12,
         ),
     )
-    w = Window.partitionBy("anchor_id").orderBy(
-        F.asc("hkey"), F.asc("negative_id")
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("anchor_id", "negative_id", "rank")
-    )
+    return _top(
+        cand, "hkey", "negative_id", k, by=("anchor_id",), asc=True
+    ).select("anchor_id", "negative_id", "rank")
 
 
 def cell_id_members(
@@ -2002,16 +1878,7 @@ def cell_id_members(
     array — the ``cell_member_index`` convention minus the codes
     (negatives need only identities, so the index is ids, not
     vectors). Row width bounded by CELL size. (ncell, mids)."""
-    assigned = _cell_assign(
-        with_double_vec(corpus, vec_col).select(
-            F.col(id_col).alias("mid"),
-            "vec",
-            _norm(F.col("vec")).alias("vnorm"),
-        ),
-        _centroid_frame(centroids),
-        "mid",
-        1,
-    )
+    assigned = _cell_assign(corpus, centroids, id_col, vec_col, 1, "mid")
     return assigned.groupBy(F.col("cell_id").alias("ncell")).agg(
         F.array_sort(F.collect_list("mid")).alias("mids")
     )
@@ -2192,11 +2059,7 @@ def proto_cross_edges(
             F.col("vnorm").alias("nrm"),
         )
     else:
-        vecs = with_double_vec(corpus, vec_col).select(
-            F.col(id_col).alias("pid"),
-            "vec",
-            _norm(F.col("vec")).alias("nrm"),
-        )
+        vecs = _vecs(corpus, id_col, vec_col, "pid", "vec", "nrm")
     # |cells| rows used on BOTH sides of the crossJoin: materialize
     # once as a local relation or the cell_prototypes corpus
     # aggregation (and the vector fetch join) executes per branch
@@ -2214,26 +2077,18 @@ def proto_cross_edges(
         F.col("vec").alias("bvec"),
         F.col("nrm").alias("bnorm"),
     )
-    denom = F.col("anorm") * F.col("bnorm")
     scored = (
         a.crossJoin(F.broadcast(b))
         .filter(F.col("src_id") != F.col("dst_id"))
         .select(
             "src_id",
             "dst_id",
-            F.when(denom > 0, _dot(F.col("avec"), F.col("bvec")) / denom)
-            .otherwise(F.lit(float("-inf")))
-            .alias("cos_raw"),
+            _cos("avec", "bvec", "anorm", "bnorm").alias("cos_raw"),
         )
     )
-    w = Window.partitionBy("src_id").orderBy(
-        F.desc("cos_raw"), F.asc("dst_id")
-    )
-    return (
-        scored.withColumn("r", F.row_number().over(w))
-        .filter(F.col("r") <= m_cross)
-        .select("src_id", "dst_id")
-    )
+    return _top(
+        scored, "cos_raw", "dst_id", m_cross, by=("src_id",), rank="r"
+    ).select("src_id", "dst_id")
 
 
 def graph_adjacency_xcell(
@@ -2390,23 +2245,12 @@ def _proto_seeds(
         protos = cell_prototypes(corpus, centroids, id_col, vec_col)
     protos = protos.select(F.col("prototype_id").alias("cand_id"))
     pvec = F.broadcast(protos.join(vecs, "cand_id"))
-    denom = F.col("qnorm") * F.col("cnorm")
-    pw = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_raw"), F.asc("cand_id")
+    scored = q.crossJoin(pvec).select(
+        "query_id",
+        "cand_id",
+        _cos("qvec", "cvec", "qnorm", "cnorm").alias("cos_raw"),
     )
-    return (
-        q.crossJoin(pvec)
-        .select(
-            "query_id",
-            "cand_id",
-            F.when(denom > 0, _dot_hof(F.col("qvec"), F.col("cvec")) / denom)
-            .otherwise(F.lit(float("-inf")))
-            .alias("cos_raw"),
-        )
-        .withColumn("r", F.row_number().over(pw))
-        .filter(F.col("r") <= n_seeds)
-        .drop("r")
-    )
+    return _top(scored, "cos_raw", "cand_id", n_seeds, rank="r").drop("r")
 
 
 def graph_expand_topk(
@@ -2483,16 +2327,8 @@ def graph_expand_topk(
     Returns (query_id, neighbor_id, cosine, rank); the query's own
     node navigates (its out-edges are the best possible moves) but
     is never a result."""
-    vecs = with_double_vec(corpus, vec_col).select(
-        F.col(id_col).alias("cand_id"),
-        F.col("vec").alias("cvec"),
-        _norm(F.col("vec")).alias("cnorm"),
-    )
-    q = with_double_vec(queries, vec_col).select(
-        F.col(id_col).alias("query_id"),
-        F.col("vec").alias("qvec"),
-        _norm(F.col("vec")).alias("qnorm"),
-    )
+    vecs = _vecs(corpus, id_col, vec_col, "cand_id", "cvec", "cnorm")
+    q = _vecs(queries, id_col, vec_col, "query_id", "qvec", "qnorm")
     visited = _proto_seeds(
         q, vecs, corpus, centroids, id_col, vec_col, n_seeds,
         protos=protos,
@@ -2566,9 +2402,6 @@ def _beam_walk(
     expansions; max hop per query = where it stopped). Returns
     (visited, activity) instead of visited.
     """
-    bw = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_raw"), F.asc("cand_id")
-    )
     adaptive = early_exit_k is not None
     if adaptive:
         # Hop-tag the visited rows (seeds = -1): the still-active query
@@ -2584,8 +2417,10 @@ def _beam_walk(
     for i in range(hops):
         if adaptive and i > 0:
             kth_prev = (
-                visited.filter(F.col("_hop") <= i - 2)
-                .withColumn("r", F.row_number().over(bw))
+                _top(
+                    visited.filter(F.col("_hop") <= i - 2),
+                    "cos_raw", "cand_id", rank="r",
+                )
                 .filter(F.col("r") == early_exit_k)
                 .select("query_id", F.col("cos_raw").alias("_kth"))
             )
@@ -2612,10 +2447,8 @@ def _beam_walk(
             vis_f = visited.join(active, "query_id")
         else:
             vis_f = visited
-        frontier = (
-            vis_f.withColumn("r", F.row_number().over(bw))
-            .filter(F.col("r") <= beam)
-            .select("query_id", "cand_id", *extra)
+        frontier = _top(vis_f, "cos_raw", "cand_id", beam, rank="r").select(
+            "query_id", "cand_id", *extra
         )
         if with_activity:
             fa = frontier.select(
@@ -2627,7 +2460,6 @@ def _beam_walk(
             ["query_id", "cand_id"],
             "left_anti",
         )
-        hop_denom = F.col("qnorm") * F.col("cnorm")
         hop_tag = (F.lit(i).alias("_hop"),) if adaptive else ()
         # No broadcast hints here, deliberately: r15 A/B-measured
         # hinted variants (broadcast the anti-join's visited side, the
@@ -2644,12 +2476,7 @@ def _beam_walk(
             "query_id",
             "cand_id",
             *extra,
-            F.when(
-                hop_denom > 0,
-                _dot_hof(F.col("qvec"), F.col("cvec")) / hop_denom,
-            )
-            .otherwise(F.lit(float("-inf")))
-            .alias("cos_raw"),
+            _cos("qvec", "cvec", "qnorm", "cnorm").alias("cos_raw"),
             *hop_tag,
         )
         # eager=True, deliberately: r15 A/B-measured the lazy
@@ -2696,19 +2523,14 @@ def _visited_rank(
     never rank plumbing)."""
     if allowed is not None:
         visited = visited.join(allowed, "cand_id", "semi")
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_raw"), F.asc("cand_id")
-    )
-    return (
-        visited.filter(F.col("cand_id") != F.col("query_id"))
-        .withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            F.col("cand_id").alias("neighbor_id"),
-            F.round("cos_raw", 6).alias("cosine"),
-            "rank",
-        )
+    return _top(
+        visited.filter(F.col("cand_id") != F.col("query_id")),
+        "cos_raw", "cand_id", k,
+    ).select(
+        "query_id",
+        F.col("cand_id").alias("neighbor_id"),
+        F.round("cos_raw", 6).alias("cosine"),
+        "rank",
     )
 
 
@@ -2796,16 +2618,8 @@ def graph_expand_topk_indexed(
     bytes per hop."""
     from blspark.ops import local_relation
 
-    vecs = with_double_vec(corpus, vec_col).select(
-        F.col(id_col).alias("cand_id"),
-        F.col("vec").alias("cvec"),
-        _norm(F.col("vec")).alias("cnorm"),
-    )
-    q = with_double_vec(queries, vec_col).select(
-        F.col(id_col).alias("query_id"),
-        F.col("vec").alias("qvec"),
-        _norm(F.col("vec")).alias("qnorm"),
-    )
+    vecs = _vecs(corpus, id_col, vec_col, "cand_id", "cvec", "cnorm")
+    q = _vecs(queries, id_col, vec_col, "query_id", "qvec", "qnorm")
     # |cells| rows, used twice (seed scoring + seed-cell map):
     # materialize once so the prototype corpus aggregation runs once.
     # ``protos`` (a pre-materialized (cell_id, prototype_id) frame)
@@ -3101,7 +2915,7 @@ def _pq_lut(qsv: DataFrame, codebooks: DataFrame) -> DataFrame:
     every (m, code) — Q x M x ks rows, broadcast-sized. ``qsv`` must
     carry (query_id, m, sv)."""
     return qsv.join(F.broadcast(codebooks), "m").select(
-        "query_id", "m", "code", _dot_hof(F.col("sv"), F.col("cw")).alias("val")
+        "query_id", "m", "code", _dot(F.col("sv"), F.col("cw")).alias("val")
     )
 
 
@@ -3143,19 +2957,12 @@ def _adc_rank(
     per_pair = scored.groupBy("query_id", "neighbor_id").agg(
         score.alias("score_raw"), *[F.min(c).alias(c) for c in keep]
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score_raw"), F.asc("neighbor_id")
-    )
-    return (
-        per_pair.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            *keep,
-            F.round("score_raw", 6).alias("score"),
-            F.col("rank").cast("int").alias("rank"),
-        )
+    return _top(per_pair, "score_raw", "neighbor_id", k).select(
+        "query_id",
+        "neighbor_id",
+        *keep,
+        F.round("score_raw", 6).alias("score"),
+        "rank",
     )
 
 
@@ -3231,43 +3038,21 @@ def pq_rerank_topk(
     the corpus raw-vector fetch is a broadcast-hash semi-join prune of
     one scan (at 100 TB with a sorted/bucketed corpus layout this is a
     point-lookup pattern). Returns (query_id, neighbor_id, cosine,
-    rank) with exact cosines."""
+    rank) with exact cosines; a zero-norm vector's pairs score -inf
+    and rank last (the ``_cos`` guard)."""
     cand = pq_adc_topk(
         corpus_codes, queries, codebooks, n_subspaces, subdim,
         k=shortlist, id_col=id_col,
     ).select("query_id", "neighbor_id")
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("nvec"),
-        _norm(F.col(vec_col)).alias("cnorm"),
+    exact = _pair_fetch(
+        corpus, queries, cand, id_col, vec_col, cvec="nvec"
+    ).select(
+        "query_id",
+        "neighbor_id",
+        _cos("nvec", "qvec", "cnorm", "qnorm").alias("cos_raw"),
     )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qvec"),
-        _norm(F.col(vec_col)).alias("qnorm"),
-    )
-    exact = (
-        c.join(F.broadcast(cand), "neighbor_id")
-        .join(F.broadcast(q), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            (_dot(F.col("nvec"), F.col("qvec"))
-             / (F.col("cnorm") * F.col("qnorm"))).alias("cos_raw"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_raw"), F.asc("neighbor_id")
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cos_raw", 6).alias("cosine"),
-            F.col("rank").cast("int").alias("rank"),
-        )
+    return _top(exact, "cos_raw", "neighbor_id", k).select(
+        "query_id", "neighbor_id", F.round("cos_raw", 6).alias("cosine"), "rank"
     )
 
 
@@ -3336,16 +3121,7 @@ def ivfpq_build_index(
     frame IS the index a 100 TB deployment persists (partitioned by
     cell_id for probe pruning — ``x_pq_index_layout`` demonstrates);
     every query batch after that pays only ``ivfpq_query``."""
-    cent = _centroid_frame(centroids)
-    c_cells = _cell_assign(
-        corpus.select(
-            F.col(id_col), F.col(vec_col).alias("vec"),
-            _norm(F.col(vec_col)).alias("vnorm"),
-        ),
-        cent,
-        id_col,
-        1,
-    )
+    c_cells = _cell_assign(corpus, centroids, id_col, vec_col, 1)
     return pq_encode(
         corpus.select(id_col, F.col(vec_col).alias("vec")),
         codebooks, n_subspaces, subdim, id_col=id_col,
@@ -3369,16 +3145,8 @@ def ivfpq_query(
     cells, build the broadcast LUT, and run the ADC join restricted to
     (query, probed cell) pairs. No corpus vector — and no corpus-sized
     computation besides the probed-cell code scan — is touched."""
-    cent = _centroid_frame(centroids)
     q_cells = _cell_assign(
-        queries.select(
-            F.col(id_col), F.col(vec_col).alias("vec"),
-            _norm(F.col(vec_col)).alias("vnorm"),
-        ),
-        cent,
-        id_col,
-        nprobe,
-        local_par=False,
+        queries, centroids, id_col, vec_col, nprobe, local_par=False
     ).select(F.col(id_col).alias("query_id"), "vec", "cell_id")
 
     qsv = pq_subvectors(
@@ -3386,16 +3154,25 @@ def ivfpq_query(
         n_subspaces, subdim, id_col="query_id",
     )
     lut = _pq_lut(qsv, codebooks)
-    # Restrict the ADC join to (query, probed cell) pairs: codes carry
-    # cell_id, the probe list is tiny and joins broadcast.
     probes = q_cells.select("query_id", "cell_id")
-    scored = (
+    return _adc_rank(_probed_adc(codes, probes, lut, id_col), k)
+
+
+def _probed_adc(
+    codes: DataFrame, probes: DataFrame, lut: DataFrame, id_col: str
+) -> DataFrame:
+    """The IVF-PQ candidate scan: the ADC join restricted to (query,
+    probed cell) pairs — codes carry cell_id, the probe list and the
+    LUT are tiny and join broadcast. Shared by ``ivfpq_query``,
+    ``ivfpq_adaptive_query`` and ``ivfpq_residual_topk``; returns
+    (neighbor_id, query_id, m, code, val, *probe columns) rows for
+    ``_adc_rank``."""
+    return (
         codes.withColumnRenamed(id_col, "neighbor_id")
         .join(F.broadcast(probes), "cell_id")
         .join(F.broadcast(lut), ["query_id", "m", "code"])
         .filter(F.col("neighbor_id") != F.col("query_id"))
     )
-    return _adc_rank(scored, k)
 
 
 def ivfpq_adaptive_query(
@@ -3429,13 +3206,10 @@ def ivfpq_adaptive_query(
     ``nprobe_used`` rides the scoring join (``_adc_rank`` keep=) so
     the per-query decision is visible without re-running the probe
     subtree."""
-    cent = _centroid_frame(centroids)
-    q = with_double_vec(queries, vec_col).select(
-        F.col(id_col).alias("query_id"), "vec",
-        _norm(F.col("vec")).alias("vnorm"),
-    )
+    q = _vecs(queries, id_col, vec_col, "query_id")
     q_probe = adaptive_probes(
-        q, cent, "query_id", probe_lo, probe_hi, margin_threshold
+        q, _centroid_frame(centroids), "query_id", probe_lo, probe_hi,
+        margin_threshold,
     )
     qsv = pq_subvectors(
         q.select("query_id", "vec"), n_subspaces, subdim,
@@ -3443,13 +3217,9 @@ def ivfpq_adaptive_query(
     )
     lut = _pq_lut(qsv, codebooks)
     probes = q_probe.select("query_id", "cell_id", "nprobe_used")
-    scored = (
-        codes.withColumnRenamed(id_col, "neighbor_id")
-        .join(F.broadcast(probes), "cell_id")
-        .join(F.broadcast(lut), ["query_id", "m", "code"])
-        .filter(F.col("neighbor_id") != F.col("query_id"))
+    return _adc_rank(
+        _probed_adc(codes, probes, lut, id_col), k, keep=("nprobe_used",)
     )
-    return _adc_rank(scored, k, keep=("nprobe_used",))
 
 
 def ivfpq_adaptive_topk(
@@ -3535,15 +3305,7 @@ def ivfpq_residual_topk(
     # vs recompute is within host noise. Production splits this
     # function anyway (train/encode once, persist the COMPRESSED
     # codes — the ivfpq_build_index/ivfpq_query shape).
-    c_cells = _cell_assign(
-        corpus.select(
-            F.col(id_col), F.col(vec_col).alias("vec"),
-            _norm(F.col(vec_col)).alias("vnorm"),
-        ),
-        cent,
-        id_col,
-        1,
-    )
+    c_cells = _cell_assign(corpus, centroids, id_col, vec_col, 1)
     resid = c_cells.join(F.broadcast(cent), "cell_id").select(
         F.col(id_col),
         "cell_id",
@@ -3565,14 +3327,7 @@ def ivfpq_residual_topk(
     )
 
     q_cells = _cell_assign(
-        queries.select(
-            F.col(id_col), F.col(vec_col).alias("vec"),
-            _norm(F.col(vec_col)).alias("vnorm"),
-        ),
-        cent,
-        id_col,
-        nprobe,
-        local_par=False,
+        queries, centroids, id_col, vec_col, nprobe, local_par=False
     )
     # per (query, probed cell): the coarse term dot(q, centroid)
     probes = q_cells.join(F.broadcast(cent), "cell_id").select(
@@ -3585,13 +3340,9 @@ def ivfpq_residual_topk(
         n_subspaces, subdim, id_col=id_col,
     ).select(F.col(id_col).alias("query_id"), "m", "sv")
     lut = _pq_lut(qsv, cb)
-    scored = (
-        codes.withColumnRenamed(id_col, "neighbor_id")
-        .join(F.broadcast(probes), "cell_id")
-        .join(F.broadcast(lut), ["query_id", "m", "code"])
-        .filter(F.col("neighbor_id") != F.col("query_id"))
+    return _adc_rank(
+        _probed_adc(codes, probes, lut, id_col), k, base_col="cell_dot"
     )
-    return _adc_rank(scored, k, base_col="cell_dot")
 
 
 def cell_assign_stateless(
@@ -3615,35 +3366,41 @@ def cell_assign_stateless(
     with the SAME association the ``_norm`` fold uses (left-to-right
     sum, then sqrt), so the division operands match to the last ulp.
     Equality of the two paths is property-tested."""
-    import math
-
-    # the row's norm is hoisted into one materialized column and
-    # REFERENCED per centroid candidate — inlining the interpreted
-    # 64-element fold into every struct would evaluate it |cells|
-    # times per row in the streaming hot path (the cosine_topk
-    # hoisting lesson; measured 2x there)
     vn = f"__{out}_vnorm"
     with_n = df.withColumn(vn, _norm(F.col(vec_col)))
+    cands = _frozen_cells(vec_col, vn, centroid_rows)
+    return with_n.withColumn(
+        out, F.array_min(cands).getField("cell_id")
+    ).drop(vn)
+
+
+def _frozen_cells(vec_col: str, vn: str, centroid_rows) -> Column:
+    """The streaming Route stage's per-row candidate array: one
+    (neg, cell_id) struct per FROZEN centroid, inlined as literals —
+    neg is the ``_cos`` score negated (IEEE negation is exact), so an
+    ascending sort is ``_cell_assign``'s cosine-DESC, lowest-cell
+    order. Centroid norms are computed driver-side with the SAME
+    association the ``_norm`` fold uses (left-to-right sum, then
+    sqrt), so the division operands match to the last ulp. ``vn``
+    names the row's norm column, hoisted by the caller and REFERENCED
+    per candidate — inlining the interpreted 64-element fold into
+    every struct would evaluate it |cells| times per row in the
+    streaming hot path (the cosine_topk hoisting lesson; measured 2x
+    there)."""
     cands = []
     for cell_id, cvec in sorted(centroid_rows):
         c = F.array(*[F.lit(float(x)).cast("double") for x in cvec])
         acc = 0.0
         for x in cvec:  # left-to-right — _norm's fold order exactly
             acc += float(x) * float(x)
-        cnorm = math.sqrt(acc)
-        denom = F.col(vn) * F.lit(cnorm).cast("double")
-        sim = F.when(denom > 0, _dot(F.col(vec_col), c) / denom).otherwise(
-            F.lit(float("-inf"))
-        )
+        cnorm = F.lit(math.sqrt(acc)).cast("double")
         cands.append(
             F.struct(
-                (-sim).alias("neg"),
+                (-_cos(F.col(vec_col), c, vn, cnorm)).alias("neg"),
                 F.lit(int(cell_id)).cast("int").alias("cell_id"),
             )
         )
-    return with_n.withColumn(
-        out, F.array_min(F.array(*cands)).getField("cell_id")
-    ).drop(vn)
+    return F.array(*cands)
 
 
 def cell_reassign_delta(
@@ -3673,22 +3430,14 @@ def cell_reassign_delta(
     old = _centroid_frame(old_centroids).withColumn("is_new", F.lit(False))
     new = _centroid_frame(new_centroids).withColumn("is_new", F.lit(True))
     cents = old.unionByName(new)
-    denom = F.col("vnorm") * F.col("centnorm")
     scored = (
-        with_double_vec(corpus, vec_col)
-        .select(
-            F.col(id_col), "vec", _norm(F.col("vec")).alias("vnorm")
-        )
+        _vecs(corpus, id_col, vec_col)
         .crossJoin(F.broadcast(cents))
         .select(
             F.col(id_col),
             "is_new",
             F.struct(
-                (
-                    -F.when(
-                        denom > 0, _dot(F.col("vec"), F.col("cvec")) / denom
-                    ).otherwise(F.lit(float("-inf")))
-                ).alias("neg"),
+                (-_cos("vec", "cvec", "vnorm", "centnorm")).alias("neg"),
                 "cell_id",
             ).alias("s"),
         )
@@ -3734,32 +3483,13 @@ def probe_cells_stateless(
     the slice length is always >= 1 (gotcha 21: F.slice never sees a
     nonpositive length). Equality of the two paths is
     property-tested."""
-    import math
-
     if probe_lo > probe_hi:
         raise ValueError("probe_lo must be <= probe_hi")
     if probe_lo < 1:
         raise ValueError("probe_lo must be >= 1")
     vn = "__probe_vnorm"
     with_n = df.withColumn(vn, _norm(F.col(vec_col)))
-    cands = []
-    for cell_id, cvec in sorted(centroid_rows):
-        c = F.array(*[F.lit(float(x)).cast("double") for x in cvec])
-        acc = 0.0
-        for x in cvec:  # left-to-right — _norm's fold order exactly
-            acc += float(x) * float(x)
-        cnorm = math.sqrt(acc)
-        denom = F.col(vn) * F.lit(cnorm).cast("double")
-        sim = F.when(denom > 0, _dot(F.col(vec_col), c) / denom).otherwise(
-            F.lit(float("-inf"))
-        )
-        cands.append(
-            F.struct(
-                (-sim).alias("neg"),
-                F.lit(int(cell_id)).cast("int").alias("cell_id"),
-            )
-        )
-    ranked = F.array_sort(F.array(*cands))
+    ranked = F.array_sort(_frozen_cells(vec_col, vn, centroid_rows))
     neg_inf = F.lit(float("-inf"))
     s1 = -F.element_at(ranked, 1).getField("neg")
     s2 = F.when(
@@ -3878,21 +3608,10 @@ def hyperplane_lsh_topk(
     ).select(
         F.col("q.query_id").alias("query_id"),
         F.col("c.neighbor_id").alias("neighbor_id"),
-        (
-            _dot(F.col("c.vec"), F.col("q.qvec"))
-            / (F.col("c.cnorm") * F.col("q.qnorm"))
-        ).alias("cos_raw"),
+        _cos("c.vec", "q.qvec", "c.cnorm", "q.qnorm").alias("cos_raw"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_raw"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cos_raw", 6).alias("cosine"),
-            "rank",
-        )
+    return _top(scored, "cos_raw", "neighbor_id", k).select(
+        "query_id", "neighbor_id", F.round("cos_raw", 6).alias("cosine"), "rank"
     )
 
 
@@ -3952,10 +3671,7 @@ def range_search_ivf(
     cell_id) probe frame for budget accounting — (result, probes).
     """
     cent = _centroid_frame(centroids)
-    prep = with_double_vec(corpus, vec_col).select(
-        F.col(id_col), "vec", _norm(F.col("vec")).alias("vnorm")
-    )
-    assigned = _cell_assign(prep, cent, id_col, 1)
+    assigned = _cell_assign(corpus, centroids, id_col, vec_col, 1)
     rcell = cell_cover_radii(assigned, cent)
     q = with_double_vec(queries, vec_col).select(
         F.col(id_col).alias("query_id"), F.col("vec").alias("qvec")

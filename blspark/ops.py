@@ -8,8 +8,6 @@ pattern, expressed purely in DataFrame ops."""
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -55,32 +53,6 @@ def salted_join(
         "__salt", F.explode(F.array(*[F.lit(i) for i in range(salt_buckets)]))
     )
     return salted_fact.join(exploded_dim, on=[key, "__salt"]).drop("__salt")
-
-
-def repartition_for(
-    df: DataFrame, keys: list[str], target_partition_mb: int = 128,
-    approx_row_bytes: int = 100, approx_rows: int | None = None,
-) -> DataFrame:
-    """Hash-repartition sized so each partition lands near the target
-    size — the knob that keeps shuffle partitions spill-free at any SF.
-    With AQE coalescing enabled the estimate only needs to be an upper
-    bound."""
-    rows = approx_rows if approx_rows is not None else df.count()
-    bytes_total = rows * approx_row_bytes
-    n = max(1, bytes_total // (target_partition_mb * 1024 * 1024))
-    return df.repartition(int(n), *keys)
-
-
-def checked_pipeline(*stages: Callable[[DataFrame], DataFrame]):
-    """Compose DataFrame -> DataFrame stages (the reference's
-    load->clean->query chains as first-class pipelines)."""
-
-    def run(df: DataFrame) -> DataFrame:
-        for stage in stages:
-            df = stage(df)
-        return df
-
-    return run
 
 
 def fan_out(df: DataFrame, min_parts: int | None = None) -> DataFrame:

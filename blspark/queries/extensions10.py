@@ -1752,39 +1752,22 @@ def x_graph_expand_xcell_eval(
 ) -> DataFrame:
     from blspark.ext.similarity import (
         _cell_assign,
-        _centroid_frame,
-        _norm,
         _proto_seeds,
+        _vecs,
         cosine_topk,
-        with_double_vec,
     )
 
     emb, cents, queries, gx = _xcell_gx(spark, sf_dir, eval_sample=True)
     exact = cosine_topk(emb, queries, k=_GX_K).select(
         "query_id", "neighbor_id"
     )
-    vecs = with_double_vec(emb, "embedding").select(
-        F.col("vec_id").alias("cand_id"),
-        F.col("vec").alias("cvec"),
-        _norm(F.col("vec")).alias("cnorm"),
-    )
-    q = with_double_vec(queries, "embedding").select(
-        F.col("vec_id").alias("query_id"),
-        F.col("vec").alias("qvec"),
-        _norm(F.col("vec")).alias("qnorm"),
-    )
+    vecs = _vecs(emb, "vec_id", "embedding", "cand_id", "cvec", "cnorm")
+    q = _vecs(queries, "vec_id", "embedding", "query_id", "qvec", "qnorm")
     seeds = _proto_seeds(
         q, vecs, emb, cents, "vec_id", "embedding", _GX_SEEDS
     )
     assigned = _cell_assign(
-        with_double_vec(emb, "embedding").select(
-            F.col("vec_id").alias("nid"),
-            "vec",
-            _norm(F.col("vec")).alias("vnorm"),
-        ),
-        _centroid_frame(cents),
-        "nid",
-        1,
+        emb, cents, "vec_id", "embedding", 1, "nid"
     ).select("nid", "cell_id")
     seed_cells = (
         seeds.join(assigned, seeds["cand_id"] == assigned["nid"])
@@ -2606,12 +2589,7 @@ def persist_probe_prep(spark: SparkSession, sf_dir: str):
     the quantized query codes, and the literal probed-cell set.
     Independent of WHICH index table is probed — the rollback query
     computes it once and probes three versions with it."""
-    from blspark.ext.similarity import (
-        _cell_assign,
-        _centroid_frame,
-        _norm,
-        sq8_quantize,
-    )
+    from blspark.ext.similarity import _cell_assign, sq8_quantize
     from blspark.ops import local_relation
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -2620,19 +2598,13 @@ def persist_probe_prep(spark: SparkSession, sf_dir: str):
     ).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("vec")
     )
-    cent = _centroid_frame(_det_centroids(emb))
     # the probe frame is Q x nprobe <= 10 rows and is needed TWICE
     # (as the join input and as the literal partition predicate) —
     # materialize it once as a local relation so the query-side
     # cell-assign job runs once, not per consumer
     probes = local_relation(
         _cell_assign(
-            queries.select(
-                "vec_id", "vec", _norm(F.col("vec")).alias("vnorm")
-            ),
-            cent,
-            "vec_id",
-            2,
+            queries, _det_centroids(emb), "vec_id", "vec", 2
         ).select(F.col("vec_id").alias("query_id"), "cell_id"),
         "query_id bigint, cell_id int",
     )

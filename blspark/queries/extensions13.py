@@ -29,7 +29,7 @@ extensions10._recall_contract.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from blspark.catalog import load_table, register
@@ -269,6 +269,7 @@ SELECT
 )
 def x_binary_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from blspark.ext.binaryq import hamming_ranked, rerank_pairs
+    from blspark.ext.similarity import _top
 
     emb = load_table(spark, sf_dir, "embeddings").filter(
         F.col("vec_id") < _SQ8_EVAL_N
@@ -289,13 +290,8 @@ def x_binary_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         "query_id", "neighbor_id"
     )
 
-    wdot = Window.partitionBy("query_id").orderBy(
-        F.desc("score_raw"), F.asc("neighbor_id")
-    )
-    reranked = (
-        rerank_pairs(vecs, queries, short)
-        .withColumn("rank", F.row_number().over(wdot))
-        .filter(F.col("rank") <= _BQ_K)
+    reranked = _top(
+        rerank_pairs(vecs, queries, short), "score_raw", "neighbor_id", _BQ_K
     )
     # Exact ground truth under the SAME metric and tie-break as the
     # rerank (raw inner product DESC, id ASC) — this is what makes
@@ -309,12 +305,10 @@ def x_binary_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("neighbor_id") != F.col("query_id"))
     )
-    exact = (
-        rerank_pairs(vecs, queries, all_pairs)
-        .withColumn("r", F.row_number().over(wdot))
-        .filter(F.col("r") <= _BQ_K)
-        .select("query_id", "neighbor_id")
-    )
+    exact = _top(
+        rerank_pairs(vecs, queries, all_pairs), "score_raw", "neighbor_id",
+        _BQ_K, rank="r",
+    ).select("query_id", "neighbor_id")
 
     ntp_ham = (
         ham5.join(exact, ["query_id", "neighbor_id"])

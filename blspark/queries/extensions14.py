@@ -224,10 +224,10 @@ SELECT
 )
 def x_mrl_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from blspark.ext.similarity import (
-        _dot,
-        _norm,
+        _cos,
+        _pair_fetch,
+        _top,
         mrl_prefix_ranked,
-        with_double_vec,
     )
 
     emb = load_table(spark, sf_dir, "embeddings").filter(
@@ -246,40 +246,16 @@ def x_mrl_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Exact full-dim cosine scorer shared by the rerank and the ground
     # truth (same metric, same tie-break) — the all-pairs frame rides
     # it with a degenerate "shortlist" of every non-self pair.
-    cf = with_double_vec(emb, "embedding").select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("vec").alias("cvec"),
-        _norm(F.col("vec")).alias("cnorm"),
-    )
-    qf = with_double_vec(queries, "embedding").select(
-        F.col("vec_id").alias("query_id"),
-        F.col("vec").alias("qvec"),
-        _norm(F.col("vec")).alias("qnorm"),
-    )
-    den = F.col("cnorm") * F.col("qnorm")
-
     def rescore(pairs: DataFrame) -> DataFrame:
-        return (
-            cf.join(F.broadcast(pairs), "neighbor_id")
-            .join(F.broadcast(qf), "query_id")
-            .select(
-                "query_id",
-                "neighbor_id",
-                F.when(den > 0, _dot(F.col("cvec"), F.col("qvec")) / den)
-                .otherwise(F.lit(float("-inf")))
-                .alias("cos_raw"),
-            )
+        return _pair_fetch(emb, queries, pairs, "vec_id", "embedding").select(
+            "query_id",
+            "neighbor_id",
+            _cos("cvec", "qvec", "cnorm", "qnorm").alias("cos_raw"),
         )
 
-    wdot = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_raw"), F.asc("neighbor_id")
-    )
-    mrl5 = (
-        rescore(short)
-        .withColumn("r", F.row_number().over(wdot))
-        .filter(F.col("r") <= _MRL_K)
-        .select("query_id", "neighbor_id")
-    )
+    mrl5 = _top(
+        rescore(short), "cos_raw", "neighbor_id", _MRL_K, rank="r"
+    ).select("query_id", "neighbor_id")
     all_pairs = (
         emb.select(F.col("vec_id").alias("neighbor_id"))
         .crossJoin(
@@ -287,12 +263,9 @@ def x_mrl_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("neighbor_id") != F.col("query_id"))
     )
-    exact = (
-        rescore(all_pairs)
-        .withColumn("r", F.row_number().over(wdot))
-        .filter(F.col("r") <= _MRL_K)
-        .select("query_id", "neighbor_id")
-    )
+    exact = _top(
+        rescore(all_pairs), "cos_raw", "neighbor_id", _MRL_K, rank="r"
+    ).select("query_id", "neighbor_id")
 
     n_queries = queries.agg(F.count("*").cast("int").alias("n_queries"))
     n_corpus = emb.agg(F.count("*").alias("n_corpus"))

@@ -379,29 +379,12 @@ def _blend_cols(df: DataFrame) -> DataFrame:
 def _rescored_pairs(emb, queries, pairs: DataFrame) -> DataFrame:
     """Exact full-dim cosine over a broadcastable pair list (the
     pq/binary fetch device): (query_id, neighbor_id, cos_raw)."""
-    from blspark.ext.similarity import _dot, _norm, with_double_vec
+    from blspark.ext.similarity import _cos, _pair_fetch
 
-    cf = with_double_vec(emb, "embedding").select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("vec").alias("cvec"),
-        _norm(F.col("vec")).alias("cnorm"),
-    )
-    qf = with_double_vec(queries, "embedding").select(
-        F.col("vec_id").alias("query_id"),
-        F.col("vec").alias("qvec"),
-        _norm(F.col("vec")).alias("qnorm"),
-    )
-    den = F.col("cnorm") * F.col("qnorm")
-    return (
-        cf.join(F.broadcast(pairs), "neighbor_id")
-        .join(F.broadcast(qf), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.when(den > 0, _dot(F.col("cvec"), F.col("qvec")) / den)
-            .otherwise(F.lit(float("-inf")))
-            .alias("cos_raw"),
-        )
+    return _pair_fetch(emb, queries, pairs, "vec_id", "embedding").select(
+        "query_id",
+        "neighbor_id",
+        _cos("cvec", "qvec", "cnorm", "qnorm").alias("cos_raw"),
     )
 
 

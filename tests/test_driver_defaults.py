@@ -3,8 +3,9 @@ mode on and 200 shuffle partitions, while the suite's own session turns
 ANSI off and uses 8 partitions. These tests switch the shared session to
 the driver's values for the duration of each case and compare against
 the DuckDB oracle with the exact-``repr`` canon of scripts/diffcheck.py
-(a last-ulp difference is a failure). First slice: the prefix-join
-family."""
+(a last-ulp difference is a failure). Covered: the prefix-join family
+and the similarity rungs that run through the shared route, score, rank
+and rerank stages."""
 
 from __future__ import annotations
 
@@ -23,6 +24,12 @@ QUERIES = [
     "x_dedup_prefix_join",
     "x_prefix_join_eval",
     "x_dedup_prefix_incremental",
+    "x_similarity_mrl",
+    "x_similarity_ann_lsh",
+    "x_similarity_ivf_sq8",
+    "x_similarity_ivfpq_residual",
+    "x_similarity_ivf_binary",
+    "x_similarity_pq_rerank",
 ]
 
 

@@ -6,6 +6,7 @@ or some tenant's slice."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     LongType,
@@ -78,6 +79,54 @@ def test_empty_corpus_similarity(spark):
     out = cosine_topk(one, one.filter(F.col("vec_id") == 1), k=5)
     rows = out.collect()
     assert len(rows) == 1 and rows[0]["neighbor_id"] == 2
+
+
+@pytest.mark.parametrize("op", ["hyperplane_lsh_topk", "pq_rerank_topk"])
+def test_zero_vector_scores_neg_inf_under_ansi(spark, op):
+    """A zero vector has no direction: under ANSI mode (Spark 4's
+    default) the cosine rerank must not abort with DIVIDE_BY_ZERO, and
+    every pair it is part of scores -inf and ranks after every finite
+    pair (the family's zero-norm guard)."""
+    from blspark.ext.similarity import (
+        hyperplane_lsh_topk,
+        pq_encode,
+        pq_rerank_topk,
+        pq_train_codebooks,
+    )
+
+    vecs = spark.createDataFrame(
+        [(0, [0.0, 0.0, 0.0, 0.0]), (1, [1.0, 1.0, 0.5, 0.5]),
+         (2, [2.0, 1.0, 1.0, 0.5])],
+        "vec_id long, vec array<double>",
+    )
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        if op == "hyperplane_lsh_topk":
+            # every vector (the zero one included) lands in bucket 3
+            out = hyperplane_lsh_topk(
+                vecs, vecs, [[1.0, 0.0, 0.0, 0.0], [0.0, 1.0, 0.0, 0.0]],
+                vec_col="vec", k=3,
+            )
+        else:
+            cb = pq_train_codebooks(vecs, 2, 2, 2)
+            codes = pq_encode(vecs, cb, 2, 2)
+            out = pq_rerank_topk(vecs, codes, vecs, cb, 2, 2, k=3, shortlist=3)
+        rows = out.collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+    assert len(rows) == 6
+    by_query: dict[int, list] = {}
+    for r in rows:
+        by_query.setdefault(r["query_id"], []).append(r)
+        if 0 in (r["query_id"], r["neighbor_id"]):
+            assert r["cosine"] == float("-inf"), r
+        else:
+            assert 0.0 < r["cosine"] <= 1.0, r
+    for q in (1, 2):
+        ranked = sorted(by_query[q], key=lambda r: r["rank"])
+        assert [r["neighbor_id"] for r in ranked][-1] == 0, ranked
+    assert sorted(r["rank"] for r in by_query[0]) == [1, 2]
 
 
 def test_empty_corpus_text_ops(spark):

@@ -117,7 +117,6 @@ def test_cell_assign_agg_path_matches_brute_force(spark):
     from blspark.ext.similarity import (
         _cell_assign,
         _centroid_frame,
-        _norm,
         label_centroids,
     )
 
@@ -131,12 +130,7 @@ def test_cell_assign_agg_path_matches_brute_force(spark):
     cent = _centroid_frame(cents)
     got = {
         r["vec_id"]: r["cell_id"]
-        for r in _cell_assign(
-            vecs.select("vec_id", "vec", _norm(F.col("vec")).alias("vnorm")),
-            cent,
-            "vec_id",
-            1,
-        ).collect()
+        for r in _cell_assign(vecs, cents, "vec_id", "vec", 1).collect()
     }
 
     import math
@@ -165,7 +159,7 @@ def test_cell_assign_zero_norm_paths_agree(spark):
     (-sim, cell_id) structs puts NULL first), so a zero-norm CENTROID
     silently won every finite vector's cell — while the probes>1
     window (DESC, NULLS LAST) gave it to the best finite cell."""
-    from blspark.ext.similarity import _cell_assign, _centroid_frame, _norm
+    from blspark.ext.similarity import _cell_assign
 
     vecs = spark.createDataFrame(
         [
@@ -174,26 +168,25 @@ def test_cell_assign_zero_norm_paths_agree(spark):
             (2, [0.0, 1.0]),  # aligned with cell 1's centroid
         ],
         "vec_id int, vec array<double>",
-    ).select("vec_id", "vec", _norm(F.col("vec")).alias("vnorm"))
+    )
     cents = spark.createDataFrame(
         [(0, [0.0, 0.0]), (1, [0.0, 1.0]), (2, [1.0, 0.0])],
         "cell_id int, centroid array<double>",
     )
-    cent = _centroid_frame(cents)
 
     # argmin path (probes=1): the zero-norm centroid (cell 0) must
     # never win a finite vector; the zero-norm vector ties everywhere
     # at -inf and falls back to the lowest cell_id
     agg = {
         r["vec_id"]: r["cell_id"]
-        for r in _cell_assign(vecs, cent, "vec_id", 1).collect()
+        for r in _cell_assign(vecs, cents, "vec_id", "vec", 1).collect()
     }
     assert agg == {0: 0, 1: 2, 2: 1}
 
     # window path (probes=2): same ordering rule — the finite best
     # cell leads, the zero-norm centroid ranks by tie-break only
     by_id: dict[int, set[int]] = {}
-    for r in _cell_assign(vecs, cent, "vec_id", 2).collect():
+    for r in _cell_assign(vecs, cents, "vec_id", "vec", 2).collect():
         by_id.setdefault(r["vec_id"], set()).add(r["cell_id"])
     assert by_id[1] == {2, 0} or by_id[1] == {2, 1}
     assert agg[1] in by_id[1] and agg[2] in by_id[2] and agg[0] in by_id[0]
@@ -207,8 +200,6 @@ def test_cell_assign_stateless_matches_aggregate_path(spark):
     on the real embeddings AND on degenerate zero-norm input."""
     from blspark.ext.similarity import (
         _cell_assign,
-        _centroid_frame,
-        _norm,
         cell_assign_stateless,
         label_centroids,
     )
@@ -222,10 +213,7 @@ def test_cell_assign_stateless_matches_aggregate_path(spark):
     )
     agg = {
         r["vec_id"]: r["cell_id"]
-        for r in _cell_assign(
-            vecs.select("vec_id", "vec", _norm(F.col("vec")).alias("vnorm")),
-            _centroid_frame(cents), "vec_id", 1,
-        ).collect()
+        for r in _cell_assign(vecs, cents, "vec_id", "vec", 1).collect()
     }
     rows = [(r["cell_id"], list(r["centroid"])) for r in cents.collect()]
     stateless = {

@@ -239,13 +239,7 @@ def test_cell_reassign_delta_equals_two_assignments(spark):
     """The one-scan two-argmin composition must equal two separate
     _cell_assign probes=1 calls bit-for-bit — the shared-rule
     guarantee that index maintenance can never drift from serving."""
-    from blspark.ext.similarity import (
-        _cell_assign,
-        _centroid_frame,
-        _norm,
-        cell_reassign_delta,
-        with_double_vec,
-    )
+    from blspark.ext.similarity import _cell_assign, cell_reassign_delta
 
     emb, _queries, cents = _load(spark)
     old_cents = label_centroids(
@@ -255,14 +249,7 @@ def test_cell_reassign_delta_equals_two_assignments(spark):
     def assign(c):
         return {
             r["vec_id"]: r["cell_id"]
-            for r in _cell_assign(
-                with_double_vec(emb, "embedding").select(
-                    "vec_id", "vec", _norm(F.col("vec")).alias("vnorm")
-                ),
-                _centroid_frame(c),
-                "vec_id",
-                1,
-            ).collect()
+            for r in _cell_assign(emb, c, "vec_id", "embedding", 1).collect()
         }
 
     expect_old = assign(old_cents)

@@ -56,12 +56,7 @@ def test_knn_graph_k_covering_cell_is_complete_and_all_mutual(spark):
     cents = label_centroids(emb).withColumn(
         "cell_id", F.col("cell_id").cast("int")
     )
-    from blspark.ext.similarity import (
-        _cell_assign,
-        _centroid_frame,
-        _norm,
-        with_double_vec,
-    )
+    from blspark.ext.similarity import _cell_assign
 
     n = emb.count()
     edges = knn_graph(emb, cents, k=n).collect()
@@ -74,14 +69,7 @@ def test_knn_graph_k_covering_cell_is_complete_and_all_mutual(spark):
     # c - 1 edges (so a bug that symmetrically drops a cell's rows
     # cannot hide behind mutual-flag and rank-density checks)
     assigned = _cell_assign(
-        with_double_vec(emb, "embedding").select(
-            F.col("vec_id").alias("src_id"),
-            "vec",
-            _norm(F.col("vec")).alias("vnorm"),
-        ),
-        _centroid_frame(cents),
-        "src_id",
-        1,
+        emb, cents, "vec_id", "embedding", 1, "src_id"
     ).select("src_id", "cell_id").collect()
     cell_of = {r["src_id"]: r["cell_id"] for r in assigned}
     size = {}
@@ -546,11 +534,8 @@ def test_split_preserves_membership_and_bounds(spark):
     the two sub-ids of their own primary cell."""
     from blspark.ext.similarity import (
         _cell_assign,
-        _centroid_frame,
-        _norm,
         label_centroids,
         split_oversized_cells,
-        with_double_vec,
     )
 
     emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
@@ -565,14 +550,7 @@ def test_split_preserves_membership_and_bounds(spark):
     primary = {
         r["src_id"]: r["cell_id"]
         for r in _cell_assign(
-            with_double_vec(emb, "embedding").select(
-                F.col("vec_id").alias("src_id"),
-                "vec",
-                _norm(F.col("vec")).alias("vnorm"),
-            ),
-            _centroid_frame(cents),
-            "src_id",
-            1,
+            emb, cents, "vec_id", "embedding", 1, "src_id"
         ).select("src_id", "cell_id").collect()
     }
     assert set(refined) == set(primary)

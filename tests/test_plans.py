@@ -209,6 +209,37 @@ def test_pq_family_no_cartesian_and_codebook_broadcasts(spark):
         assert "BroadcastHashJoin" in plan, name
 
 
+def test_ivf_binary_query_side_assign_skips_local_repartition(spark):
+    """Only the CORPUS-side cell assign takes the local round-robin
+    repartition: the query-side probe list is metadata-sized, and at
+    nprobe=1 it routes through the same map-side argmin shape, so it
+    must skip the repartition like every other serve path. The
+    nprobe=1 plan therefore carries exactly the one exchange the
+    registered nprobe=2 plan has (the window path never repartitions)."""
+    from blspark.catalog import load_table
+    from blspark.ext.binaryq import ivf_binary_topk
+    from blspark.queries.extensions9 import _det_centroids
+
+    key = "blspark.assign.localParallelism"
+    prev = spark.conf.get(key, "")
+    spark.conf.set(key, "4")
+    try:
+        emb = load_table(spark, SF_ORACLE, "embeddings")
+        vecs = emb.select(
+            "vec_id", F.col("embedding").cast("array<double>").alias("vec")
+        )
+        queries = vecs.filter((F.col("vec_id") >= 10) & (F.col("vec_id") < 15))
+        cents = _det_centroids(emb)
+        counts = {}
+        for nprobe in (1, 2):
+            df = ivf_binary_topk(vecs, queries, cents, dim=64, nprobe=nprobe)
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            counts[nprobe] = plan.count("RoundRobinPartitioning")
+    finally:
+        spark.conf.set(key, prev)
+    assert counts == {1: 1, 2: 1}, counts
+
+
 def test_boilerplate_strip_broadcasts_manifest(spark):
     """The per-source boilerplate lists join back as a broadcast (the
     rebuild is map-side); document text never shuffles."""

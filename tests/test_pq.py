@@ -690,8 +690,6 @@ def test_maxsim_pruned_full_probe_equals_unpruned(spark):
     neighbor must live in its query's single probed cell."""
     from blspark.ext.similarity import (
         _cell_assign,
-        _centroid_frame,
-        _norm,
         label_centroids,
         maxsim_pruned_topk,
         maxsim_topk,
@@ -716,12 +714,10 @@ def test_maxsim_pruned_full_probe_equals_unpruned(spark):
     }
 
     pruned = maxsim_pruned_topk(vecs, queries, cents, 8, 8, k=3, nprobe=1)
-    cent = _centroid_frame(cents)
     cells = {
         r["vec_id"]: r["cell_id"]
         for r in _cell_assign(
-            vecs.select("vec_id", "vec", _norm(F.col("vec")).alias("vnorm")),
-            cent, "vec_id", 1,
+            vecs, cents, "vec_id", "vec", 1,
         ).select("vec_id", "cell_id").collect()
     }
     for r in pruned.collect():
@@ -734,8 +730,6 @@ def test_ivf_sq8_full_probe_equals_plain_sq8(spark):
     every neighbor must live in its query's single probed cell."""
     from blspark.ext.similarity import (
         _cell_assign,
-        _centroid_frame,
-        _norm,
         ivf_sq8_topk,
         label_centroids,
         sq8_topk,
@@ -758,12 +752,10 @@ def test_ivf_sq8_full_probe_equals_plain_sq8(spark):
     }
 
     pruned = ivf_sq8_topk(vecs, queries, cents, k=3, nprobe=1)
-    cent = _centroid_frame(cents)
     cells = {
         r["vec_id"]: r["cell_id"]
         for r in _cell_assign(
-            vecs.select("vec_id", "vec", _norm(F.col("vec")).alias("vnorm")),
-            cent, "vec_id", 1,
+            vecs, cents, "vec_id", "vec", 1,
         ).select("vec_id", "cell_id").collect()
     }
     for r in pruned.collect():
