@@ -1,58 +1,10 @@
-"""Scale utilities: skew-aware aggregation/join helpers.
-
-AQE (`spark.sql.adaptive.skewJoin.enabled`, on by default in
-blspark.session) handles most runtime skew; these helpers cover the
-cases AQE can't — a single hot GROUP BY key, or a broadcast-ineligible
-join against a skewed build side — using the classic two-phase salting
-pattern, expressed purely in DataFrame ops."""
+"""Scale utilities: ``fan_out`` widens a scan too narrow for CPU-heavy
+per-row work, and ``local_relation`` turns a metadata-sized frame into a
+JVM local relation. Skewed joins go through ``ext/skew.salted_join``."""
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
-
-
-def salted_group_sum(
-    df: DataFrame,
-    keys: list[str],
-    value: str | Column,
-    out: str,
-    salt_buckets: int = 16,
-) -> DataFrame:
-    """Two-phase SUM for skewed group keys: phase 1 aggregates on
-    (keys, salt) — spreading a hot key over ``salt_buckets`` reducers —
-    phase 2 merges the partials per key. Decimal-exact, so the result is
-    identical to the unsalted aggregation regardless of bucketing."""
-    v = F.col(value) if isinstance(value, str) else value
-    salted = df.withColumn(
-        "__salt", (F.rand(seed=42) * salt_buckets).cast("int")
-    )
-    partial = salted.groupBy(*keys, "__salt").agg(
-        F.sum(v.cast("decimal(28,4)")).alias("__part")
-    )
-    return (
-        partial.groupBy(*keys)
-        .agg(F.sum("__part").cast("double").alias(out))
-    )
-
-
-def salted_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    key: str,
-    salt_buckets: int = 16,
-) -> DataFrame:
-    """Skewed equi-join: salt the fact side's key, replicate the dim side
-    across all salt values, join on (key, salt). Use when the dim side is
-    too big to broadcast and the fact side has hot keys; cost is
-    ``salt_buckets``× duplication of the dim rows."""
-    salted_fact = fact.withColumn(
-        "__salt", (F.rand(seed=42) * salt_buckets).cast("int")
-    )
-    exploded_dim = dim.withColumn(
-        "__salt", F.explode(F.array(*[F.lit(i) for i in range(salt_buckets)]))
-    )
-    return salted_fact.join(exploded_dim, on=[key, "__salt"]).drop("__salt")
+from pyspark.sql import DataFrame
 
 
 def fan_out(df: DataFrame, min_parts: int | None = None) -> DataFrame:

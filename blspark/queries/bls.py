@@ -19,9 +19,17 @@ Semantic traps encoded here (SURVEY.md §7.2):
 
 At scale: Q2 is one hash-aggregate shuffle on (series_id, year) plus a
 second partial-aggregatable argmax agg on series_id — both partition
-cleanly by series. Q3's
-population side is tiny → broadcast hash join, no shuffle of the fact
-table.
+cleanly by series. Q3's population side is tiny → broadcast hash join,
+no shuffle of the fact table. The transforms themselves never choose a
+partitioning; the caller does. ``jobs.report_job`` coalesces the
+cleaned BLS frame to one partition when Spark scans the file as one
+split anyway (``FilePartition.maxSplitBytes``: any file up to
+``spark.sql.files.openCostInBytes``, 4 MB by default, such as the real
+``pr.data.0.Current``), and the population relation is always one
+partition. Over a single-partition child neither aggregation nor either
+sort needs an exchange, so Q1 and Q2 run in one job each and Q3 in two
+(its broadcast and its result). A BLS file that spans several splits
+keeps the distributed plan above.
 """
 
 from __future__ import annotations
@@ -29,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from blspark.clean import require_columns
+from blspark.clean import drop_null_rows, require_columns
 
 REQUIRED_BLS_COLS = ["series_id", "year", "period", "value"]
 
@@ -60,7 +68,7 @@ def best_years(bls: DataFrame) -> DataFrame:
     report_processor.py:158-169). Returns (series_id, year, value) sorted
     by series_id."""
     require_columns(bls, REQUIRED_BLS_COLS)
-    clean = bls.select(*REQUIRED_BLS_COLS).na.drop()
+    clean = drop_null_rows(bls.select(*REQUIRED_BLS_COLS))
     # dsum = exact decimal sum cast back to double: same value as a plain
     # float sum for BLS-scale data, but independent of partition order —
     # so results are reproducible run-to-run and engine-to-engine

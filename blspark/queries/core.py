@@ -21,6 +21,7 @@ from blspark.catalog import (
     o_dsum,
     register,
 )
+from blspark.clean import drop_null_rows
 
 # --------------------------------------------------------------------------
 # Q1 analog — global mean + SAMPLE stddev over a range-filtered slice
@@ -337,7 +338,7 @@ def q_null_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
         "value",
         F.get_json_object("props", "$.missing").try_cast("double").alias("m"),
     )
-    return projected.na.drop(subset=["event_id", "user_id", "value", "m"])
+    return drop_null_rows(projected, ["event_id", "user_id", "value", "m"])
 
 
 # --------------------------------------------------------------------------

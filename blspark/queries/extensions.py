@@ -961,7 +961,7 @@ WHERE {_DOT.format(a='a.vec', b='b.vec')} / (a.nrm * b.nrm) >= 0.5
     "x_similarity_ivf) so only bucket-mates are compared.",
 )
 def x_dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from blspark.ext.similarity import _dot, _norm, with_double_vec
+    from blspark.ext.similarity import _cos, _norm, with_double_vec
 
     emb = with_double_vec(load_table(spark, sf_dir, "embeddings"), "embedding")
     v = emb.select("vec_id", "vec", _norm(F.col("vec")).alias("nrm"))
@@ -971,7 +971,8 @@ def x_dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = v.select(
         F.col("vec_id").alias("id_b"), F.col("vec").alias("vb"), F.col("nrm").alias("nb")
     )
-    cos = _dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
+    # a zero vector scores -inf (no ANSI 0/0 abort); the filter drops it
+    cos = _cos("va", "vb", "na", "nb")
     return (
         a.join(b, F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b", cos.alias("cosine"))

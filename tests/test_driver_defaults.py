@@ -3,9 +3,10 @@ mode on and 200 shuffle partitions, while the suite's own session turns
 ANSI off and uses 8 partitions. These tests switch the shared session to
 the driver's values for the duration of each case and compare against
 the DuckDB oracle with the exact-``repr`` canon of scripts/diffcheck.py
-(a last-ulp difference is a failure). Covered: the prefix-join family
-and the similarity rungs that run through the shared route, score, rank
-and rerank stages."""
+(a last-ulp difference is a failure). Covered: the prefix-join family,
+the similarity rungs that run through the shared route, score, rank
+and rerank stages, and the paper's report (``report_job``) in both of
+its plans, against rows computed in plain Python."""
 
 from __future__ import annotations
 
@@ -13,7 +14,7 @@ import pytest
 
 from blspark.catalog import registry
 from scripts.diffcheck import canon
-from tests.conftest import SF_ORACLE
+from tests.conftest import MULTI_SPLIT, SF_ORACLE, session_conf
 
 DRIVER_CONF = {
     "spark.sql.ansi.enabled": "true",
@@ -35,14 +36,8 @@ QUERIES = [
 
 @pytest.fixture
 def driver_defaults(spark):
-    prev = {k: spark.conf.get(k) for k in DRIVER_CONF}
-    try:
-        for k, v in DRIVER_CONF.items():
-            spark.conf.set(k, v)
+    with session_conf(spark, DRIVER_CONF):
         yield spark
-    finally:
-        for k, v in prev.items():
-            spark.conf.set(k, v)
 
 
 def _exact_rows(columns, rows):
@@ -60,3 +55,29 @@ def test_matches_oracle_under_driver_defaults(driver_defaults, duck, name):
     assert sorted(sdf.columns) == sorted(dcols)
     assert srows
     assert _exact_rows(sdf.columns, srows) == _exact_rows(dcols, rel.fetchall())
+
+
+@pytest.mark.parametrize("splits", ["one", "multi"])
+def test_report_under_driver_defaults(driver_defaults, bls_mirror, splits):
+    """The report over the generated BLS file, in its single-partition
+    plan (the file is one split) and in its distributed plan (split
+    sizes forced small): Q1 gives the reference's golden mean and sample
+    std, and Q2/Q3 rows equal, by exact ``repr``, the rows computed in
+    plain Python."""
+    from blspark.jobs import report_job
+
+    spark = driver_defaults
+    mirror, want = bls_mirror
+    with session_conf(spark, MULTI_SPLIT if splits == "multi" else {}):
+        frames = report_job(spark, mirror)
+        out = {k: [tuple(r) for r in df.collect()] for k, df in frames.items()}
+    plan = frames["best_years"]._jdf.queryExecution().executedPlan().toString()
+    assert ("Exchange hashpartitioning" in plan) == (splits == "multi"), plan
+    (mean, std, n), = out["population_stats"]
+    (wmean, wstd, wn), = want["population_stats"]
+    assert (round(mean, 2), round(std, 2), n) == (322069808.00, 4158441.04, wn)
+    assert abs(mean - wmean) <= 1e-9 * wmean and abs(std - wstd) <= 1e-9 * wstd
+    for q in ("best_years", "combined_report"):
+        assert [tuple(map(canon, r)) for r in out[q]] == [
+            tuple(map(canon, r)) for r in want[q]
+        ], q

@@ -129,6 +129,44 @@ def test_zero_vector_scores_neg_inf_under_ansi(spark, op):
     assert sorted(r["rank"] for r in by_query[0]) == [1, 2]
 
 
+def test_dedup_embedding_cosine_zero_vector_under_ansi(spark, tmp_path):
+    """x_dedup_embedding_cosine scores through the shared zero-norm
+    guard: under ANSI mode an unguarded ``dot / (na * nb)`` aborts with
+    DIVIDE_BY_ZERO on a zero vector. Its pairs score -inf, and the
+    >= 0.5 filter drops them as it drops the null that the division
+    gives with ANSI off."""
+    import math
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from blspark.catalog import registry
+
+    vecs = {0: [0.0, 0.0, 0.0, 0.0], 1: [1.0, 1.0, 0.5, 0.5],
+            2: [2.0, 1.0, 1.0, 0.5], 3: [-1.0, 0.0, 0.0, 0.0]}
+    pq.write_table(
+        pa.table({
+            "vec_id": pa.array(list(vecs), pa.int64()),
+            "embedding": pa.array(list(vecs.values()), pa.list_(pa.float32())),
+            "label": pa.array([0] * len(vecs), pa.int32()),
+        }),
+        str(tmp_path / "embeddings.parquet"),
+    )
+    q = registry()["x_dedup_embedding_cosine"]
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        rows = q.spark_fn(spark, str(tmp_path)).collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+    a, b = vecs[1], vecs[2]
+    want = sum(x * y for x, y in zip(a, b)) / math.sqrt(
+        sum(x * x for x in a) * sum(y * y for y in b)
+    )
+    assert [(r["id_a"], r["id_b"]) for r in rows] == [(1, 2)]
+    assert math.isclose(rows[0]["cosine"], want, rel_tol=1e-12)
+
+
 def test_empty_corpus_text_ops(spark):
     from blspark.ext.text import fingerprint, lang_id, quality_score, token_stats
 

@@ -22,7 +22,6 @@ from blspark.io.sinks import (
     write_json,
     write_parquet,
 )
-from blspark.ops import salted_group_sum, salted_join
 
 INDEX_HTML = """
 <html><body><h1>Index of /pub/time.series/pr/</h1>
@@ -255,30 +254,6 @@ def test_sinks_roundtrip(spark, tmp_path):
     assert spark.read.json(str(tmp_path / "js")).count() == 5
     recs = report_records(df.orderBy("id"), limit=2)
     assert len(recs) == 2 and recs[0]["id"] == 0
-
-
-def test_salted_group_sum_matches_plain(spark):
-    df = spark.range(10000).select(
-        (F.col("id") % 3).alias("k"), (F.col("id") * 0.01).alias("v")
-    )
-    plain = {
-        r["k"]: r["s"]
-        for r in df.groupBy("k")
-        .agg(F.sum(F.col("v").cast("decimal(28,4)")).cast("double").alias("s"))
-        .collect()
-    }
-    salted = {
-        r["k"]: r["s"] for r in salted_group_sum(df, ["k"], "v", "s", 8).collect()
-    }
-    assert salted == plain
-
-
-def test_salted_join_matches_plain(spark):
-    fact = spark.range(1000).select((F.col("id") % 5).alias("k"), F.col("id").alias("x"))
-    dim = spark.createDataFrame([(i, f"d{i}") for i in range(5)], "k long, label string")
-    plain = fact.join(dim, "k").groupBy("label").count()
-    salted = salted_join(fact, dim, "k", 4).groupBy("label").count()
-    assert {tuple(r) for r in plain.collect()} == {tuple(r) for r in salted.collect()}
 
 
 def test_format_numbers_display(spark):

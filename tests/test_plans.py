@@ -7,12 +7,14 @@ walk — robust to attribute-id churn."""
 
 from __future__ import annotations
 
+import os
 import re
 
 from pyspark.sql import functions as F
 
 from blspark.catalog import registry
-from tests.conftest import SF_ORACLE
+from scripts.diffcheck import canon
+from tests.conftest import MULTI_SPLIT, SF_ORACLE, session_conf
 
 REG = registry()
 
@@ -754,3 +756,61 @@ def test_mirror_apply_scans_mirror_below_exchange(spark, tmp_path, monkeypatch):
         if "Scan binaryFile" in l
     ]
     assert len(scans) == 2 and below == scans
+
+
+def _report_run(spark, mirror, tag):
+    """(rows, build job ids, execution job ids, executed plans) of one
+    report_job over ``mirror`` with Q1-Q3 collected."""
+    from blspark.jobs import report_job
+
+    frames, build = _jobs_in_group(
+        spark, f"test-report-build-{tag}", lambda: report_job(spark, mirror)
+    )
+    rows, execution = _jobs_in_group(
+        spark,
+        f"test-report-exec-{tag}",
+        lambda: {k: [tuple(map(canon, r)) for r in df.collect()] for k, df in frames.items()},
+    )
+    plans = {
+        k: df._jdf.queryExecution().executedPlan().toString() for k, df in frames.items()
+    }
+    return rows, build, execution, plans
+
+
+def _scan_partitions(spark, path):
+    from blspark.io.readers import BLS_RAW_SCHEMA
+
+    return spark.read.schema(BLS_RAW_SCHEMA).csv(path).rdd.getNumPartitions()
+
+
+def test_report_job_budget_and_single_partition_plans(spark, bls_mirror):
+    """Building the report's frames runs no Spark job (the BLS file is
+    read with its known layout, the population document is parsed on
+    the driver). The BLS file is one split under Spark's defaults, so
+    the report coalesces it to that one partition: Q1 and Q2 hold no
+    exchange, Q3 only its broadcast, and Q1-Q3 collect in at most 4
+    jobs (a header probe, schema inference and the exchanges' jobs made
+    it 2 + 11). With split sizes small enough that the
+    file spans several splits, the distributed plan and its exchanges
+    come back and the rows stay identical. The split decision agrees
+    with the partition count of the planned scan in both settings."""
+    from blspark.io.readers import _one_split
+
+    mirror, _ = bls_mirror
+    path = os.path.join(mirror, "pr.data.0.Current")
+    assert _one_split(spark, path) and _scan_partitions(spark, path) == 1
+    rows, build, execution, plans = _report_run(spark, mirror, "one-split")
+    assert build == [], sorted(build)
+    assert 1 <= len(execution) <= 4, sorted(execution)
+    assert "Exchange" not in plans["population_stats"], plans["population_stats"]
+    assert "Exchange" not in plans["best_years"], plans["best_years"]
+    exchanges = set(re.findall(r"\w*Exchange\b", plans["combined_report"]))
+    assert exchanges == {"BroadcastExchange"}, plans["combined_report"]
+
+    with session_conf(spark, MULTI_SPLIT):
+        assert not _one_split(spark, path) and _scan_partitions(spark, path) > 1
+        multi, build, _, plans = _report_run(spark, mirror, "multi-split")
+    assert build == [], sorted(build)
+    assert "Exchange hashpartitioning" in plans["best_years"], plans["best_years"]
+    assert "Exchange rangepartitioning" in plans["combined_report"]
+    assert multi == rows
