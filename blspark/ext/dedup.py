@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from blspark.ops import checkpoint_rows
+
 
 def exact_dedup_keys(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Exact dedup: group by content MD5, keep the smallest id (stable
@@ -837,72 +839,6 @@ def simhash_hamming_pairs(
     )
 
 
-def connected_components(
-    edges: DataFrame,
-    nodes: DataFrame,
-    src_col: str = "id_a",
-    dst_col: str = "id_b",
-    id_col: str = "id",
-    max_iters: int = 25,
-) -> DataFrame:
-    """Connected components over an undirected edge list by iterative
-    min-label propagation: every node starts labeled with its own id and
-    repeatedly takes the minimum label among itself and its neighbors
-    until a fixpoint. Returns (node, component) for EVERY node in
-    ``nodes`` (singletons keep their own id as component).
-
-    This is the "dedup groups" operator: feed it near-duplicate pairs
-    (MinHash/LSH or exact-Jaccard) and each component is one duplicate
-    cluster, from which a canonical representative (min id) falls out
-    directly.
-
-    Scale: each iteration is one join keyed by node + one min
-    aggregation — all partial-aggregatable; rounds needed = graph
-    diameter, and dup clusters are shallow (diameter <= a few hops), so
-    3-5 rounds close real corpora. For adversarially long chains use the
-    large-star/small-star variant (alternating pointer-jumping) — same
-    join primitives, O(log n) rounds. The driver only ever sees one
-    convergence COUNT per round, never data."""
-    # checkpoint the symmetrized edges ONCE: they are referenced by the
-    # per-round join, and without materialization the (often expensive)
-    # upstream pair computation — e.g. a shingle self-join — would
-    # re-execute on every round of the loop
-    sym = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).unionByName(
-        edges.select(F.col(dst_col).alias("src"), F.col(src_col).alias("dst"))
-    ).localCheckpoint(eager=True)
-    # localCheckpoint per round, not just persist: persist caches the
-    # data but keeps the full logical plan, which references the prior
-    # round's labels on BOTH sides of the join — the plan tree doubles
-    # every round and planning (not execution) dies past ~15 rounds.
-    # Checkpointing truncates the lineage to the materialized result.
-    labels = nodes.select(
-        F.col(id_col).alias("node"), F.col(id_col).alias("lab")
-    ).localCheckpoint(eager=True)
-    for _ in range(max_iters):
-        nbr = (
-            sym.join(labels, sym.src == labels.node)
-            .groupBy(F.col("dst").alias("node2"))
-            .agg(F.min("lab").alias("nlab"))
-        )
-        stepped = (
-            labels.join(nbr, labels.node == nbr.node2, "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("lab"), F.coalesce(F.col("nlab"), F.col("lab"))
-                ).alias("lab"),
-                F.col("lab").alias("old_lab"),
-            )
-        ).localCheckpoint(eager=True)
-        changed = stepped.filter(F.col("lab") != F.col("old_lab")).count()
-        labels = stepped.drop("old_lab")
-        if changed == 0:
-            break
-    return labels.select("node", F.col("lab").alias("component"))
-
-
 def _star_round(e: DataFrame, large: bool, dedup: bool = True) -> DataFrame:
     """One large-star (``large=True``) or small-star round over a
     directed edge frame ``(u, v)`` viewed as an undirected graph.
@@ -949,112 +885,69 @@ def _star_round(e: DataFrame, large: bool, dedup: bool = True) -> DataFrame:
     return out.distinct() if dedup else out
 
 
-def connected_components_star(
+def connected_components(
     edges: DataFrame,
     nodes: DataFrame,
     src_col: str = "id_a",
     dst_col: str = "id_b",
     id_col: str = "id",
-    max_rounds: int | None = None,
-    converge_check: bool = True,
 ) -> DataFrame:
-    """Connected components by alternating large-star/small-star
-    contraction — the O(log n)-round variant that survives adversarially
-    long chains (spam template families), where min-label propagation
-    (``connected_components``) needs diameter rounds with a driver
-    round-trip each.
+    """Connected components over an undirected edge list by alternating
+    large-star/small-star contraction (Kiveris et al., "Connected
+    Components in MapReduce and Beyond", SoCC 2014). Returns (node,
+    component) for EVERY node in ``nodes``: the component label is the
+    smallest id connected to the node, and a node with no edge labels
+    itself. Ids may be any orderable type (doc ids, names).
 
-    Each round halves-or-better the depth of every tree: large-star
-    hooks strictly larger neighbors onto the local minimum, small-star
-    collapses the rest. At the fixpoint the edge set is a star per
-    component centered at the component's minimum id, so labels read off
-    directly. The round BUDGET is fixed up front at ceil(log2(n)) + 2
-    (one count of ``nodes``), but each round ends with an edge-set
-    stability probe (a count compare over the checkpointed frames,
-    falling through to ONE anti-join only when the counts tie —
-    exact for distinct sets, NOT the min-label variant's full-cluster
-    convergence count) and the loop exits at the first stable round:
-    shallow graphs (mutual-kNN components, near-dup clusters — the
-    common case) finish in 2-4 rounds instead of paying the full
-    log2(n) budget, and each SKIPPED round would have cost strictly
-    more than the probe (two star rounds = shuffles + a checkpoint
-    vs one count). With ``converge_check`` extra rounds
-    run after an exhausted budget in the (theoretically possible,
-    never observed) case the bound was short, keeping the result
-    unconditionally exact.
+    This is the "dedup groups" operator: feed it near-duplicate pairs
+    (MinHash/LSH, exact-Jaccard, cosine) and each component is one
+    duplicate cluster, whose canonical representative (min id) falls
+    out directly.
 
-    Returns (node, component) for every node in ``nodes`` (singletons
-    label themselves)."""
-    import math
+    Each round (one large-star then one small-star ``_star_round``)
+    shrinks the depth of every tree: large-star hooks strictly larger
+    neighbors onto the local minimum, small-star collapses the rest. At
+    the fixpoint the edge set is a star per component centered at its
+    minimum id, so labels read off directly. Rounds needed are
+    O(log n), observed ceil(log2 n) + 2 at most, even on adversarially
+    long chains (a 256-node chain reaches its fixpoint in 8 rounds),
+    where label propagation needs as many rounds as the diameter.
 
-    e = (
+    The loop runs until the edge set is stable, so the result is exact
+    whatever the round count. Every round's edge set is checkpointed
+    (iterative self-joins otherwise double the logical plan each round)
+    and counted by that same checkpoint job (``ops.checkpoint_rows``).
+    Both sets are distinct, so equal counts plus an empty one-sided
+    ``left_anti`` is set equality; rounds that change the count — nearly
+    all contracting rounds — skip the anti-join. The driver never sees
+    data, only one count per round. The round cap, O(log^2 n) in the
+    edge count, only guards against a logic bug looping forever:
+    hitting it raises rather than returning wrong labels."""
+    e, rows = checkpoint_rows(
         edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct()
     )
-    if max_rounds is None:
-        n = max(nodes.count(), 2)
-        max_rounds = max(2, int(math.ceil(math.log2(n))) + 2)
-    e = e.localCheckpoint(eager=True)
-
-    # Edge-set stability probe (optimization r17): both frames are
-    # DISTINCT by construction (the initial distinct / every round's
-    # final distinct), so set equality is |nxt| == |e| AND nxt \ e
-    # empty. Counts come off the just-checkpointed frames (a
-    # near-free job), so rounds that change the edge COUNT — almost
-    # every contracting round — skip the anti-join entirely, and the
-    # one confirming round pays a single left_anti over cached compact
-    # frames where the old probe ran TWO exceptAll subplans (four
-    # aggregates + their exchanges) every round. Exact, never
-    # probabilistic: count equality plus one-sided emptiness implies
-    # set equality for distinct sets.
-    e_cnt = e.count()
-
-    def _stable(nxt, nxt_cnt) -> bool:
-        return nxt_cnt == e_cnt and nxt.join(
-            e, ["u", "v"], "left_anti"
-        ).isEmpty()
-
-    stable = False
-    for _ in range(max_rounds):
-        # localCheckpoint per round: iterative self-joins otherwise double
-        # the logical plan every iteration (planning alone goes quadratic)
-        nxt = _star_round(_star_round(e, large=True, dedup=False), large=False)
-        nxt = nxt.localCheckpoint(eager=True)
-        nxt_cnt = nxt.count()
-        if _stable(nxt, nxt_cnt):
-            e = nxt
-            stable = True
+    cap = (rows.bit_length() + 2) ** 2
+    for _ in range(cap):
+        nxt, nxt_rows = checkpoint_rows(
+            _star_round(_star_round(e, large=True, dedup=False), large=False)
+        )
+        if nxt_rows == rows and nxt.join(e, ["u", "v"], "left_anti").isEmpty():
             break
-        e, e_cnt = nxt, nxt_cnt
-    if converge_check and not stable:
-        # run until the edge set is STABLE — this is what makes the
-        # result unconditionally exact even if the fixed budget was
-        # short (the proven worst case for alternating stars is
-        # O(log^2 n) rounds; log n + 2 is the observed-practice bound).
-        # The safety cap only guards against a logic bug looping
-        # forever; hitting it raises rather than returning wrong labels.
-        for attempt in range(16 * max_rounds + 16):
-            nxt = _star_round(_star_round(e, large=True, dedup=False), large=False)
-            nxt = nxt.localCheckpoint(eager=True)
-            nxt_cnt = nxt.count()
-            if _stable(nxt, nxt_cnt):
-                break
-            e, e_cnt = nxt, nxt_cnt
-        else:
-            raise RuntimeError(
-                "connected_components_star failed to reach an edge-set "
-                f"fixpoint within {16 * max_rounds + 16} extra rounds"
-            )
+        e, rows = nxt, nxt_rows
+    else:
+        raise RuntimeError(
+            f"connected_components: no edge-set fixpoint within {cap} rounds"
+        )
     centers = e.groupBy("u").agg(F.min("v").alias("center"))
-    out = (
+    return (
         nodes.select(F.col(id_col).alias("node"))
         .join(centers, F.col("node") == F.col("u"), "left")
         .select(
             "node", F.coalesce(F.col("center"), F.col("node")).alias("component")
         )
     )
-    return out
 
 
 def lsh_verified_candidates(

@@ -2402,6 +2402,8 @@ def _beam_walk(
     expansions; max hop per query = where it stopped). Returns
     (visited, activity) instead of visited.
     """
+    from blspark.ops import checkpoint_rows
+
     adaptive = early_exit_k is not None
     if adaptive:
         # Hop-tag the visited rows (seeds = -1): the still-active query
@@ -2429,9 +2431,10 @@ def _beam_walk(
             # per hop — once inside take(1)'s emptiness probe and
             # again inside the hop's own job via the vis_f join — with
             # a serial driver round trip between them. The eager
-            # checkpoint executes it once; the emptiness probe and the
-            # frontier join both read the cached rows.
-            active = (
+            # checkpoint executes it once and counts it in the same job
+            # (the emptiness test runs no job of its own); the frontier
+            # join reads the cached rows.
+            active, n_active = checkpoint_rows(
                 visited.filter(F.col("_hop") == i - 1)
                 .join(kth_prev, "query_id", "left")
                 .filter(
@@ -2440,9 +2443,8 @@ def _beam_walk(
                 )
                 .select("query_id")
                 .distinct()
-                .localCheckpoint(eager=True)
             )
-            if active.isEmpty():
+            if n_active == 0:
                 break  # every query converged — later hops are no-ops
             vis_f = visited.join(active, "query_id")
         else:

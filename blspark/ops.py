@@ -1,10 +1,15 @@
 """Scale utilities: ``fan_out`` widens a scan too narrow for CPU-heavy
-per-row work, and ``local_relation`` turns a metadata-sized frame into a
-JVM local relation. Skewed joins go through ``ext/skew.salted_join``."""
+per-row work, ``local_relation`` turns a metadata-sized frame into a
+JVM local relation, and ``checkpoint_rows`` materializes a driver
+loop's frame and counts it in the same job. Skewed joins go through
+``ext/skew.salted_join``."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
+from pyspark.sql import functions as F
+
+from blspark.io.readers import _conf_bytes
 
 
 def fan_out(df: DataFrame, min_parts: int | None = None) -> DataFrame:
@@ -28,11 +33,11 @@ def fan_out(df: DataFrame, min_parts: int | None = None) -> DataFrame:
 
     spark = df.sparkSession
     target = min_parts or spark.sparkContext.defaultParallelism
+    max_split = _conf_bytes(spark, "spark.sql.files.maxPartitionBytes")
     try:
         files = df.inputFiles()
         if not files:  # non-file source (range, shuffle output): leave as-is
             return df
-        max_split = int(spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728").rstrip("b"))
         total = 0
         for f in files:
             p = f[len("file:"):] if f.startswith("file:") else f
@@ -43,6 +48,17 @@ def fan_out(df: DataFrame, min_parts: int | None = None) -> DataFrame:
     if est_splits < target:
         return df.repartition(target)
     return df
+
+
+def checkpoint_rows(df: DataFrame) -> tuple[DataFrame, int]:
+    """Eagerly ``localCheckpoint`` ``df`` and return it with its row
+    count. The count is a ``df.observe`` metric gathered by the
+    checkpoint's own job, so a driver loop that materializes every
+    round (truncating a lineage that would otherwise grow each round)
+    learns its frame's size without a separate ``count()`` job."""
+    obs = Observation()
+    out = df.observe(obs, F.count(F.lit(1)).alias("rows")).localCheckpoint(eager=True)
+    return out, obs.get["rows"]
 
 
 def local_relation(df: DataFrame, schema: str, max_rows: int = 65536) -> DataFrame:

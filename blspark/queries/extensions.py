@@ -682,7 +682,7 @@ def x_retrieval_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    from blspark.ext.similarity import _dot, _norm, with_double_vec
+    from blspark.ext.similarity import _cos, _norm, with_double_vec
 
     emb = with_double_vec(
         load_table(spark, sf_dir, "embeddings"), "embedding"
@@ -703,10 +703,7 @@ def x_retrieval_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id",
             "neighbor_id",
-            (
-                _dot(F.col("cvec"), F.col("qvec"))
-                / (F.col("cnorm") * F.col("qnorm"))
-            ).alias("cos_raw"),
+            _cos("cvec", "qvec", "cnorm", "qnorm").alias("cos_raw"),
         )
     )
     from pyspark.sql import Window
@@ -770,13 +767,14 @@ SELECT node, component, node = component AS survivor FROM comp
     "(here the label assignment; x_kmeans_clusters is the learned "
     "path), so the quadratic term is bounded by cell size instead of "
     "corpus size — the lever that makes embedding dedup feasible at "
-    "100 TB. cosine >= 0.9 pairs -> connected components (min-label; "
-    "dup clusters are shallow) -> min-id survivor per cluster. Returns "
-    "(node, component, survivor) for every corpus vector.",
+    "100 TB. cosine >= 0.9 pairs (zero-norm guarded: a zero vector "
+    "pairs with nothing) -> connected components (star contraction) "
+    "-> min-id survivor per cluster. Returns (node, component, "
+    "survivor) for every corpus vector.",
 )
 def x_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     from blspark.ext.dedup import connected_components
-    from blspark.ext.similarity import _dot, _norm, with_double_vec
+    from blspark.ext.similarity import _cos, _norm, with_double_vec
 
     emb = with_double_vec(
         load_table(spark, sf_dir, "embeddings"), "embedding"
@@ -801,11 +799,7 @@ def x_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("a.label") == F.col("b.label"))
             & (F.col("a.vec_id") < F.col("b.vec_id")),
         )
-        .filter(
-            _dot(F.col("a.vec"), F.col("b.vec"))
-            / (F.col("a.nrm") * F.col("b.nrm"))
-            >= F.lit(0.9)
-        )
+        .filter(_cos("a.vec", "b.vec", "a.nrm", "b.nrm") >= F.lit(0.9))
         .select(
             F.col("a.vec_id").alias("id_a"), F.col("b.vec_id").alias("id_b")
         )
@@ -1252,15 +1246,25 @@ SELECT node, MIN(r) AS component FROM reach GROUP BY node
 
 
 @register(
+    "x_dedup_components_star",
+    oracle=COMPONENTS_ORACLE,
+    doc="Same query as x_dedup_components, kept under the name it had "
+    "while the star contraction was a second components operator next "
+    "to min-label propagation; both names now run the one operator "
+    "(blspark.ext.dedup.connected_components).",
+)
+@register(
     "x_dedup_components",
     oracle=COMPONENTS_ORACLE,
     doc="Duplicate-cluster extraction: exact-Jaccard near-dup pairs "
-    "(>= 0.6) grouped into connected components by iterative min-label "
-    "propagation (blspark.ext.dedup.connected_components); every corpus "
-    "doc gets a component id (its cluster's min doc_id), singletons "
-    "included. Per round: one node-keyed join + one partial-aggregatable "
-    "min — rounds = cluster diameter (shallow for dup clusters). Oracle: "
-    "DuckDB recursive-CTE transitive closure.",
+    "(>= 0.6) grouped into connected components "
+    "(blspark.ext.dedup.connected_components: alternating "
+    "large-star/small-star contraction, O(log n) rounds even on "
+    "adversarially long chains, run until the edge set is stable); "
+    "every corpus doc gets a component id (its cluster's min doc_id), "
+    "singletons included. Per round: two window-keyed star steps, one "
+    "checkpoint that also counts the edges. Oracle: DuckDB "
+    "recursive-CTE transitive closure.",
 )
 def x_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     from blspark.ext.dedup import connected_components, jaccard_pairs
@@ -1270,28 +1274,6 @@ def x_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = jaccard_pairs(sh, min_jaccard=0.6).select("id_a", "id_b")
     nodes = corpus.select("doc_id")
     return connected_components(pairs, nodes, id_col="doc_id")
-
-
-@register(
-    "x_dedup_components_star",
-    oracle=COMPONENTS_ORACLE,
-    doc="Duplicate clusters via alternating large-star/small-star "
-    "contraction (blspark.ext.dedup.connected_components_star) — the "
-    "O(log n)-round components variant for adversarially long chains "
-    "(spam template families), where min-label propagation needs "
-    "diameter rounds. Round budget is FIXED at ceil(log2(n)) + 2 (no "
-    "per-round driver convergence decision); a single post-budget "
-    "stability check keeps the result unconditionally exact. Same "
-    "near-dup graph and recursive-CTE oracle as x_dedup_components.",
-)
-def x_dedup_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from blspark.ext.dedup import connected_components_star, jaccard_pairs
-
-    corpus = _corpus(spark, sf_dir)
-    sh = word_shingles(corpus, "doc_id", "text", n=3)
-    pairs = jaccard_pairs(sh, min_jaccard=0.6).select("id_a", "id_b")
-    nodes = corpus.select("doc_id")
-    return connected_components_star(pairs, nodes, id_col="doc_id")
 
 
 # md5-derived 24-bit hash of the doc id (reuses the shingle hex-nibble

@@ -997,9 +997,9 @@ def _knn_mutual_pairs(spark: SparkSession, sf_dir: str):
 
 
 def _components_over(pairs, nodes) -> DataFrame:
-    from blspark.ext.dedup import connected_components_star
+    from blspark.ext.dedup import connected_components
 
-    comps = connected_components_star(pairs, nodes, id_col="vec_id")
+    comps = connected_components(pairs, nodes, id_col="vec_id")
     return comps.select(
         "node",
         "component",
@@ -1018,9 +1018,9 @@ def _components_over(pairs, nodes) -> DataFrame:
     "top-3 edges (the reciprocal filter kills the hub/asymmetric "
     "links a plain threshold keeps) -> connected components via the "
     "O(log n)-round large-star/small-star contraction "
-    "(connected_components_star — component diameter inside a cell "
-    "can approach cell size, so the diameter-round min-label variant "
-    "is the wrong tool) -> min-id survivor per cluster. Components "
+    "(connected_components — component diameter inside a cell can "
+    "approach cell size, so a diameter-round label propagation would "
+    "be the wrong tool) -> min-id survivor per cluster. Components "
     "are bounded by CELL membership by construction (edges never "
     "cross cells), which is what keeps both the closure and the "
     "contraction bounded at 100 TB. Returns (node, component, "

@@ -10,8 +10,7 @@ r15 verdict called out as the grid's thinnest spots.
   basis points. Pair precision and doc precision are STRUCTURAL
   (verified pairs are exact-checked at the truth threshold over the
   same shingle sets, so pipeline pairs are a subset of truth pairs;
-  min-label components over a sub-edge-set refine the truth
-  components, and the (quality, -id) argmax over a superset beats any
+  components over a sub-edge-set refine the truth components, and the (quality, -id) argmax over a superset beats any
   member a sub-component's argmax beats — so every pipeline-removed
   doc is truth-removed). Recall is the measurement: how much dedup
   the banding misses end-to-end — the number a 100 TB corpus run

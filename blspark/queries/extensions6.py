@@ -316,8 +316,8 @@ def _recursive_closure_oracle() -> str:
     "q_recursive_closure",
     oracle=_recursive_closure_oracle(),
     doc=f"Transitive closure via Spark 4 WITH RECURSIVE (SQL-native "
-    "iteration — the third implementation of duplicate clustering next "
-    "to min-label and star contraction): hop-bounded ({_MAX_HOPS}) "
+    "iteration — the SQL counterpart of duplicate clustering by the "
+    "star-contraction connected_components operator): hop-bounded ({_MAX_HOPS}) "
     "UNION ALL recursion, because cycles in the undirected dup graph "
     "would never exhaust under pure UNION ALL and Spark does not yet "
     "support the deduplicating UNION recursion DuckDB allows. The "
@@ -325,7 +325,7 @@ def _recursive_closure_oracle() -> str:
     "iterative components operator is asserted in tests); path "
     "enumeration within a cluster is bounded by cluster-size^hops, "
     "fine for shallow near-dup cliques, NOT for arbitrary graphs — "
-    "use connected_components(_star) there.",
+    "use connected_components there.",
 )
 def q_recursive_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
     from blspark.ext.dedup import jaccard_pairs, word_shingles

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from blspark.catalog import load_table, register
+from blspark.ops import checkpoint_rows
 
 # ---------------------------------------------------------------------------
 # Maximal-marginal-relevance diversified rerank
@@ -361,7 +362,6 @@ def x_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _ER_MAXDIST = 3
-_ER_HOPS = 6
 
 
 def _er_oracle() -> str:
@@ -378,12 +378,10 @@ def _er_oracle() -> str:
     ),
     sym AS (SELECT na AS a, nb AS b FROM pairs
             UNION ALL SELECT nb, na FROM pairs),
-    reach(node, r, hops) AS (
-      SELECT p_name, p_name, 0 FROM names
-      UNION ALL
-      SELECT reach.node, s.b, hops + 1
-      FROM reach JOIN sym s ON s.a = reach.r
-      WHERE hops < {_ER_HOPS}
+    reach(node, r) AS (
+      SELECT p_name, p_name FROM names
+      UNION
+      SELECT reach.node, s.b FROM reach JOIN sym s ON s.a = reach.r
     ),
     canon AS (SELECT node AS p_name, MIN(r) AS entity
               FROM reach GROUP BY node)
@@ -400,14 +398,15 @@ def _er_oracle() -> str:
     "candidate pairs by a cheap key (first name token) so the pairwise "
     "stage is block-bounded, never all-pairs; (2) VERIFY candidates "
     f"with Levenshtein <= {_ER_MAXDIST} (JVM-side, codegen'd); (3) "
-    "cluster matches into entities via connected components (min-name "
-    "label) and assign every record its entity's canonical name. Runs "
+    "cluster matches into entities via connected components (star "
+    "contraction; the entity is its smallest name) and assign every "
+    "record its entity's canonical name. Runs "
     "on the DISTINCT name domain (attribute-level dedup), then "
     "broadcast-joins the tiny canon map back to the full record set — "
     "at 100 TB the name domain is orders smaller than the fact table, "
     "which is exactly why ER pipelines resolve attributes first. "
-    "Oracle: same blocking/verify in SQL + hop-bounded recursive-CTE "
-    "closure.",
+    "Oracle: same blocking/verify in SQL + recursive-CTE transitive "
+    "closure (deduplicating UNION, as COMPONENTS_ORACLE).",
 )
 def x_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     from blspark.ext.dedup import connected_components
@@ -424,15 +423,8 @@ def x_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.levenshtein("na", "nb") <= _ER_MAXDIST)
         .select("na", "nb")
     )
-    # max_iters=_ER_HOPS bounds BOTH sides with the same budget: after
-    # r min-label rounds a node holds the min name within r hops —
-    # exactly the oracle's hops-bounded recursive closure — so the
-    # differential compares the same well-defined object even if a
-    # pathological name chain ever exceeded the budget (the q_recursive
-    # _closure device; the fixpoint-within-budget is tested).
     comp = connected_components(
-        pairs, names, src_col="na", dst_col="nb", id_col="p_name",
-        max_iters=_ER_HOPS,
+        pairs, names, src_col="na", dst_col="nb", id_col="p_name"
     ).select(F.col("node").alias("p_name"), F.col("component").alias("entity"))
     # No explicit broadcast hint: the canon map is usually tiny (distinct
     # name domain) but CAN exceed broadcast size at extreme scale, and a
@@ -531,12 +523,13 @@ def kcore_peel(edges: DataFrame, k: int, rounds: int) -> DataFrame:
     checkpoint block count as the frame shrinks. Early exit when the
     edge count stops shrinking — EXACT, because peeling only removes
     edges, so an unchanged count means an unchanged edge set means the
-    fixpoint; the check is one count on the already-materialized
-    checkpoint, and the result is identical to running the full budget
-    (what the fixed-round oracle computes). The seed edge frame is
-    persisted (cache keyed by canonical plan — repeated invocations on
-    the same graph skip the pair computation, the LSH-helper device)
-    and the materializing count doubles as round 0's baseline."""
+    fixpoint; the count is observed by the round's own checkpoint job
+    (``ops.checkpoint_rows``), and the result is identical to running
+    the full budget (what the fixed-round oracle computes). The seed
+    edge frame is persisted (cache keyed by canonical plan — repeated
+    invocations on the same graph skip the pair computation, the
+    LSH-helper device) and the materializing count doubles as round
+    0's baseline."""
     e = edges.select("a", "b").persist()
     prev = e.count()
     for _ in range(rounds):
@@ -547,14 +540,12 @@ def kcore_peel(edges: DataFrame, k: int, rounds: int) -> DataFrame:
             .agg(F.count("*").alias("c"))
         )
         keep = deg.filter(F.col("c") >= k).select("n")
-        e = (
+        e, cur = checkpoint_rows(
             e.join(keep.withColumnRenamed("n", "a"), "a", "leftsemi")
             .join(keep.withColumnRenamed("n", "b"), "b", "leftsemi")
             .select("a", "b")
             .coalesce(8)
-            .localCheckpoint(eager=True)
         )
-        cur = e.count()
         if cur == prev:
             break
         prev = cur

@@ -181,8 +181,9 @@ def bench_span_fraction(spark, factor: int) -> float:
 
 def bench_components_star(spark, factor: int) -> float:
     """Chain graph growing with factor — the adversarial-diameter case
-    the star variant exists for (min-label would scale rounds with n)."""
-    from blspark.ext.dedup import connected_components_star
+    star contraction exists for (label propagation would scale rounds
+    with n)."""
+    from blspark.ext.dedup import connected_components
 
     n_nodes = 4096 * factor
     nodes = spark.range(n_nodes).select(F.col("id"))
@@ -191,7 +192,7 @@ def bench_components_star(spark, factor: int) -> float:
     ).repartition(32)
     t0 = time.perf_counter()
     comps = (
-        connected_components_star(edges, nodes)
+        connected_components(edges, nodes)
         .agg(F.countDistinct("component").alias("n"))
         .collect()[0]["n"]
     )
@@ -293,9 +294,9 @@ def bench_mmr(spark, factor: int) -> float:
     emb = amplify(
         load_table(spark, SF_DIR, "embeddings"), "vec_id", factor, 10_000_000
     )
-    # same stages as x_mmr_rerank's candidate scoring, inlined over the
-    # amplified frame
-    from blspark.ext.similarity import _dot, _norm, with_double_vec
+    # same stages as x_mmr_rerank's candidate scoring, zero-norm
+    # guarded, inlined over the amplified frame
+    from blspark.ext.similarity import _cos, _norm, with_double_vec
     t0 = time.perf_counter()
     vecs = with_double_vec(emb, "embedding").select(
         F.col("vec_id").alias("id"), "vec", _norm(F.col("vec")).alias("nrm")
@@ -305,7 +306,7 @@ def bench_mmr(spark, factor: int) -> float:
     )
     scored = vecs.join(F.broadcast(q), F.col("id") != F.col("qid")).select(
         "qid", "id",
-        (_dot(F.col("vec"), F.col("qv")) / (F.col("nrm") * F.col("qn"))).alias("rel"),
+        _cos("vec", "qv", "nrm", "qn").alias("rel"),
     )
     from pyspark.sql import Window
     w = Window.partitionBy("qid").orderBy(F.desc("rel"), F.asc("id"))

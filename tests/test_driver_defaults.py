@@ -5,8 +5,10 @@ the driver's values for the duration of each case and compare against
 the DuckDB oracle with the exact-``repr`` canon of scripts/diffcheck.py
 (a last-ulp difference is a failure). Covered: the prefix-join family,
 the similarity rungs that run through the shared route, score, rank
-and rerank stages, and the paper's report (``report_job``) in both of
-its plans, against rows computed in plain Python."""
+and rerank stages, the two cosine queries scored through the shared
+zero-norm guard, the connected-components callers over doc ids and
+over names, and the paper's report (``report_job``) in both of its
+plans, against rows computed in plain Python."""
 
 from __future__ import annotations
 
@@ -31,6 +33,10 @@ QUERIES = [
     "x_similarity_ivfpq_residual",
     "x_similarity_ivf_binary",
     "x_similarity_pq_rerank",
+    "x_retrieval_hybrid",
+    "x_dedup_semantic",
+    "x_dedup_components",
+    "x_entity_resolution",
 ]
 
 

@@ -129,6 +129,39 @@ def test_zero_vector_scores_neg_inf_under_ansi(spark, op):
     assert sorted(r["rank"] for r in by_query[0]) == [1, 2]
 
 
+def _write_embeddings(path, vecs: dict) -> None:
+    """An ``embeddings.parquet`` under ``path``: one row per
+    ``vec_id: vector``, every row in label 0."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(
+        pa.table({
+            "vec_id": pa.array(list(vecs), pa.int64()),
+            "embedding": pa.array(list(vecs.values()), pa.list_(pa.float32())),
+            "label": pa.array([0] * len(vecs), pa.int32()),
+        }),
+        str(path / "embeddings.parquet"),
+    )
+
+
+def _collect_under_ansi(spark, name, sf_dir):
+    from blspark.catalog import registry
+
+    from tests.conftest import session_conf
+
+    with session_conf(spark, {"spark.sql.ansi.enabled": "true"}):
+        return registry()[name].spark_fn(spark, str(sf_dir)).collect()
+
+
+def _cosine(a, b):
+    import math
+
+    return sum(x * y for x, y in zip(a, b)) / math.sqrt(
+        sum(x * x for x in a) * sum(y * y for y in b)
+    )
+
+
 def test_dedup_embedding_cosine_zero_vector_under_ansi(spark, tmp_path):
     """x_dedup_embedding_cosine scores through the shared zero-norm
     guard: under ANSI mode an unguarded ``dot / (na * nb)`` aborts with
@@ -137,34 +170,51 @@ def test_dedup_embedding_cosine_zero_vector_under_ansi(spark, tmp_path):
     gives with ANSI off."""
     import math
 
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from blspark.catalog import registry
-
     vecs = {0: [0.0, 0.0, 0.0, 0.0], 1: [1.0, 1.0, 0.5, 0.5],
             2: [2.0, 1.0, 1.0, 0.5], 3: [-1.0, 0.0, 0.0, 0.0]}
-    pq.write_table(
-        pa.table({
-            "vec_id": pa.array(list(vecs), pa.int64()),
-            "embedding": pa.array(list(vecs.values()), pa.list_(pa.float32())),
-            "label": pa.array([0] * len(vecs), pa.int32()),
-        }),
-        str(tmp_path / "embeddings.parquet"),
-    )
-    q = registry()["x_dedup_embedding_cosine"]
-    prev = spark.conf.get("spark.sql.ansi.enabled")
-    spark.conf.set("spark.sql.ansi.enabled", "true")
-    try:
-        rows = q.spark_fn(spark, str(tmp_path)).collect()
-    finally:
-        spark.conf.set("spark.sql.ansi.enabled", prev)
-    a, b = vecs[1], vecs[2]
-    want = sum(x * y for x, y in zip(a, b)) / math.sqrt(
-        sum(x * x for x in a) * sum(y * y for y in b)
-    )
+    _write_embeddings(tmp_path, vecs)
+    rows = _collect_under_ansi(spark, "x_dedup_embedding_cosine", tmp_path)
     assert [(r["id_a"], r["id_b"]) for r in rows] == [(1, 2)]
-    assert math.isclose(rows[0]["cosine"], want, rel_tol=1e-12)
+    assert math.isclose(rows[0]["cosine"], _cosine(vecs[1], vecs[2]), rel_tol=1e-12)
+
+
+def test_dedup_semantic_zero_vector_under_ansi(spark, tmp_path):
+    """x_dedup_semantic's >= 0.9 pair filter scores through the shared
+    zero-norm guard: under ANSI mode a zero vector does not abort the
+    query with DIVIDE_BY_ZERO, it pairs with nothing and stays its own
+    survivor. The planted copy (id + 10000) of vector 5 still joins
+    vector 5's component."""
+    _write_embeddings(tmp_path, {
+        0: [0.0, 0.0, 0.0, 0.0], 5: [1.0, 1.0, 0.5, 0.5],
+        7: [-1.0, 0.0, 0.0, 0.0],
+    })
+    rows = _collect_under_ansi(spark, "x_dedup_semantic", tmp_path)
+    assert sorted(tuple(r) for r in rows) == [
+        (0, 0, True), (5, 5, True), (7, 7, True),
+        (10000, 10000, True), (10005, 5, False),
+    ]
+
+
+def test_retrieval_hybrid_zero_vector_under_ansi(spark, tmp_path):
+    """x_retrieval_hybrid reranks its lexical candidates through the
+    shared zero-norm guard: under ANSI mode a candidate with a zero
+    embedding does not abort the query with DIVIDE_BY_ZERO, it scores
+    -inf and ranks after every finite candidate."""
+    import math
+
+    spark.createDataFrame(
+        [(1, "red green blue yellow"), (6, "red green blue black"),
+         (8, "red green blue white")],
+        DOCS_SCHEMA,
+    ).coalesce(1).write.parquet(str(tmp_path / "documents.parquet"))
+    vecs = {1: [1.0, 1.0, 0.5, 0.5], 6: [0.0, 0.0, 0.0, 0.0],
+            8: [2.0, 1.0, 1.0, 0.5]}
+    _write_embeddings(tmp_path, vecs)
+    rows = _collect_under_ansi(spark, "x_retrieval_hybrid", tmp_path)
+    got = sorted((r["rank"], r["query_id"], r["neighbor_id"], r["cosine"]) for r in rows)
+    assert [g[:3] for g in got] == [(1, 1, 8), (2, 1, 6)]
+    assert math.isclose(got[0][3], round(_cosine(vecs[1], vecs[8]), 6), rel_tol=1e-12)
+    assert got[1][3] == float("-inf")
 
 
 def test_empty_corpus_text_ops(spark):

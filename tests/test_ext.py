@@ -342,65 +342,102 @@ def test_connected_components_chain_and_singletons(spark):
 
 
 def test_components_star_chain_and_singletons(spark):
-    from blspark.ext.dedup import connected_components_star
+    """Edges given in both directions, repeated and as self-loops
+    label the same components as the plain chain: the edge list is an
+    undirected graph, and a self-loop joins nothing."""
+    from blspark.ext.dedup import connected_components
 
     edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (10, 11)], "id_a long, id_b long"
+        [(2, 1), (2, 3), (3, 2), (4, 3), (3, 4), (10, 11), (11, 10), (99, 99)],
+        "id_a long, id_b long",
     )
     nodes = spark.createDataFrame(
         [(i,) for i in [1, 2, 3, 4, 10, 11, 99]], "id long"
     )
     got = {
         (r["node"], r["component"])
-        for r in connected_components_star(edges, nodes).collect()
+        for r in connected_components(edges, nodes).collect()
     }
     assert got == {(1, 1), (2, 1), (3, 1), (4, 1), (10, 10), (11, 10), (99, 99)}
 
 
-def test_components_star_long_chain_logn_rounds(spark):
-    """A 256-node chain (diameter 255 — min-label propagation would need
-    255 rounds) must fully converge inside the FIXED ceil(log2(n)) + 2
-    round budget with the post-budget convergence check disabled."""
+def test_components_star_long_chain_logn_rounds(spark, monkeypatch):
+    """A 256-node chain (diameter 255 — label propagation would need
+    255 rounds) reaches its fixpoint within ceil(log2(n)) + 2 star
+    rounds: every round but the last, which only confirms the edge
+    set is stable, changes it."""
     import math
 
-    from blspark.ext.dedup import connected_components_star
+    from blspark.ext import dedup
 
+    calls = []
+    star_round = dedup._star_round
+
+    def counted(e, large, dedup=True):
+        calls.append(large)
+        return star_round(e, large, dedup)
+
+    monkeypatch.setattr(dedup, "_star_round", counted)
     n = 256
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
     ).repartition(8)
     nodes = spark.createDataFrame([(i,) for i in range(n)], "id long")
-    budget = int(math.ceil(math.log2(n))) + 2
-    out = connected_components_star(
-        edges, nodes, max_rounds=budget, converge_check=False
-    )
+    out = dedup.connected_components(edges, nodes)
     comps = {r["component"] for r in out.collect()}
     assert comps == {0}  # every node labeled with the chain minimum
+    rounds = len(calls) // 2  # one large-star + one small-star each
+    assert calls == [True, False] * rounds
+    assert rounds - 1 <= int(math.ceil(math.log2(n))) + 2, rounds
 
 
-def test_components_star_matches_minlabel_on_random_graph(spark):
-    """Star contraction and min-label propagation must agree on an
-    arbitrary (seeded) random graph, components and singletons alike."""
+def _union_find_components(edges, nodes):
+    parent = {v: v for v in nodes}
+
+    def find(v):
+        while parent[v] != v:
+            parent[v] = parent[parent[v]]
+            v = parent[v]
+        return v
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {(v, find(v)) for v in nodes}
+
+
+def test_components_match_union_find_on_random_graphs(spark):
+    """Star contraction labels every node of an arbitrary (seeded)
+    random graph with the minimum id of its union-find component,
+    components and singletons alike, over several seeds and densities;
+    string ids are the entity-resolution case (names, ordered as
+    strings)."""
+    import itertools
     import random
 
-    from blspark.ext.dedup import connected_components, connected_components_star
+    from blspark.ext.dedup import connected_components
 
-    rng = random.Random(42)
     n = 120
-    edges = [
-        (rng.randrange(n), rng.randrange(n)) for _ in range(90)
-    ]
-    edf = spark.createDataFrame(edges, "id_a long, id_b long")
-    ndf = spark.createDataFrame([(i,) for i in range(n)], "id long")
-    a = {
-        (r["node"], r["component"])
-        for r in connected_components_star(edf, ndf).collect()
-    }
-    b = {
-        (r["node"], r["component"])
-        for r in connected_components(edf, ndf).collect()
-    }
-    assert a == b
+    cases = ((42, 90), (7, 40), (2024, 150))
+    for (seed, n_edges), ids in itertools.product(cases, ("long", "string")):
+        rng = random.Random(seed)
+        if ids == "long":
+            names = rng.sample(range(10**12), n)
+        else:
+            names = [
+                "".join(rng.choice("abc ") for _ in range(rng.randint(1, 6)))
+                + str(i)
+                for i in range(n)
+            ]
+        edges = [(rng.choice(names), rng.choice(names)) for _ in range(n_edges)]
+        edf = spark.createDataFrame(edges, f"id_a {ids}, id_b {ids}")
+        ndf = spark.createDataFrame([(v,) for v in names], f"id {ids}")
+        got = {
+            (r["node"], r["component"])
+            for r in connected_components(edf, ndf).collect()
+        }
+        assert got == _union_find_components(edges, names), (seed, ids)
 
 
 def test_resize_byte_contract_and_partition_invariance(spark):

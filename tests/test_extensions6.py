@@ -82,8 +82,8 @@ def test_incremental_lsh_orientation_and_threshold(spark):
 
 def test_recursive_closure_equals_iterative_components(spark):
     """The hop-bounded SQL recursion reaches the same fixpoint as the
-    iterative min-label operator on the real dup graph (diameter <<
-    hop bound)."""
+    iterative star-contraction operator on the real dup graph
+    (diameter << hop bound)."""
     rec = {
         (r.node, r.component)
         for r in REG["q_recursive_closure"].spark_fn(spark, SF_SMOKE).collect()

@@ -242,7 +242,7 @@ def test_knn_graph_components_consistent_with_mutual_edges(spark):
     """Every mutual edge's endpoints share a component; every
     component label is the minimum node id of its members; nodes with
     no mutual edge are their own singleton component (survivor)."""
-    from blspark.ext.dedup import connected_components_star
+    from blspark.ext.dedup import connected_components
     from blspark.ext.similarity import knn_graph
 
     emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
@@ -259,7 +259,7 @@ def test_knn_graph_components_consistent_with_mutual_edges(spark):
     )
     comps = {
         r["node"]: r["component"]
-        for r in connected_components_star(
+        for r in connected_components(
             pairs_df, emb.select("vec_id"), id_col="vec_id"
         ).collect()
     }

@@ -696,6 +696,45 @@ def _jobs_in_group(spark, group, fn):
     return out, sc.statusTracker().getJobIdsForGroup(group)
 
 
+def test_components_round_job_budget(spark, monkeypatch):
+    """Each components round is one large-star plus one small-star step
+    and ONE eager checkpoint that also counts the round's edges (an
+    observed metric), so no round runs a ``count()`` job: building the
+    components of a 16-node chain (5 rounds) stays within 8 jobs a
+    round plus the first checkpoint and the stability probe. A count
+    after every checkpoint adds 2 jobs a round (10 a round, 57 jobs in
+    all), and a diameter-bounded label propagation needs 15 rounds."""
+    from blspark.ext import dedup
+
+    n = 16
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
+    ).repartition(8)
+    nodes = spark.createDataFrame([(i,) for i in range(n)], "id long")
+    calls = {"round": 0, "count": 0}
+    star_round, count = dedup._star_round, type(edges).count
+
+    def counted_round(e, large, dedup=True):
+        calls["round"] += large
+        return star_round(e, large, dedup)
+
+    def counted_count(df):
+        calls["count"] += 1
+        return count(df)
+
+    monkeypatch.setattr(dedup, "_star_round", counted_round)
+    monkeypatch.setattr(type(edges), "count", counted_count)
+    out, jobs = _jobs_in_group(
+        spark,
+        "test-components-round-budget",
+        lambda: dedup.connected_components(edges, nodes),
+    )
+    assert calls == {"round": 5, "count": 0}, calls
+    assert len(jobs) <= 8 * calls["round"] + 4, sorted(jobs)
+    monkeypatch.undo()
+    assert {r["component"] for r in out.collect()} == {0}
+
+
 def test_mirror_sync_job_budget(spark, tmp_path):
     """One action applies the plan and counts its actions through
     accumulators. A sync into an empty mirror is that one job (the

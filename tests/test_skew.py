@@ -125,6 +125,21 @@ def test_fan_out_widens_small_scan_and_preserves_results(spark):
     assert fan_out(rng) is rng
 
 
+def test_fan_out_reads_split_size_with_unit(spark):
+    """Spark hands ``spark.sql.files.maxPartitionBytes`` back as it was
+    set, so a value with a unit ("128MB") must parse to its bytes:
+    fan_out still widens the under-split scan instead of silently
+    passing it through."""
+    from blspark.ops import fan_out
+    from tests.conftest import SF_SMOKE, session_conf
+
+    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
+    with session_conf(spark, {"spark.sql.files.maxPartitionBytes": "128MB"}):
+        wide = fan_out(docs)
+    assert wide is not docs
+    assert wide.rdd.getNumPartitions() >= spark.sparkContext.defaultParallelism
+
+
 def test_fan_out_over_union_adds_one_exchange(spark):
     """A union of scans of one small file is a scan-level frame:
     fan_out over the dedup corpus's three-branch union adds exactly one
