@@ -36,10 +36,15 @@ Entry points by composition:
 - score + rank + rerank: ``mrl_topk`` (prefix cosine shortlist),
   ``pq_rerank_topk`` (ADC shortlist), ``binaryq.binary_topk``
   (Hamming shortlist), and routed first: ``binaryq.ivf_binary_topk``;
-- the graph family routes the corpus once (``assign_corpus``), pairs
-  within cells and ranks with the same score and rank stages
-  (``knn_graph``, ``knn_graph_sq8``, the beam walks of
-  ``graph_expand_topk``).
+- the graph family routes the corpus once, pairs within cells through
+  one self-join shape (``_cell_knn``: ``knn_graph``, ``knn_graph_sq8``,
+  ``knn_graph_split``) and ranks with the same score and rank stages.
+  Navigation graphs are built once, then walked:
+  ``nav_graph_build`` runs one checkpointed ``assign_corpus`` pass for
+  the prototypes and the edge core (``graph_adjacency``: within-cell
+  kNN edges plus an optional prototype backbone, cells on every edge),
+  and the beam walks (``graph_expand_topk``, the persisted-table
+  ``graph_expand_topk_indexed``) take the built graph.
 
 Numeric determinism: embeddings are cast float->double (exact), each
 elementwise product of two floats is exactly representable in a double,
@@ -91,7 +96,7 @@ def _dot_unrolled(a: Column, b: Column) -> Column:
     """64-term unrolled dot with a size guard falling back to the HOF
     fold — bitwise identical to _dot (same left fold from the same 0.0
     init). Used ONLY at the quadratic pairing hot spot
-    (_graph_edges_float's scored projection), where the |corpus| x
+    (``_float_pairing``'s scored projection), where the |corpus| x
     cell_size evaluation volume amortizes the bigger expression tree
     and whole-stage codegen turns it into straight-line arithmetic
     (the HOF fold is CodegenFallback — interpreted per element with a
@@ -1183,7 +1188,7 @@ def _blocked_cell_join(
         "cell_id", "cell_id_b"
     )
     # merge hint: both sides are the replicated corpus — keyed join
-    # at any scale (see _graph_edges_float's hint rationale)
+    # at any scale (see _cell_knn's hint rationale)
     return (
         aa.join(
             bb.hint("merge"),
@@ -1223,8 +1228,6 @@ def knn_graph(
     k: int = 3,
     mutual: bool = True,
     max_block: int | None = None,
-    assigned: DataFrame | None = None,
-    keep_cell: bool = False,
 ) -> DataFrame:
     """Cell-blocked k-nearest-neighbor GRAPH: every corpus vector's
     exact-cosine top-``k`` among its own IVF cell's members, plus a
@@ -1238,21 +1241,15 @@ def knn_graph(
     query frame against the corpus scan. Here BOTH sides are the
     corpus, so neither is broadcastable at 100 TB and a broadcast-NLJ
     (or worse, a cross product) is off the table. The feasible plan is
-    the cell-bucketed self-equi-join: one cell-assignment pass per
-    side (map-side hash-agg argmin, centroids broadcast — the
-    ``_cell_assign`` probes=1 shape), then a shuffle on cell_id where
-    the quadratic pairing term is bounded by CELL size, never corpus
-    size — the same lever that makes embedding dedup feasible
-    (x_dedup_semantic's docstring). The assignment subtree is
-    recomputed for each self-join branch rather than persisted (the
-    residual IVF-PQ convention: never materialize a corpus-sized
-    cache; recompute is one extra scan of a columnar source). The
-    mutual flag is a COUNT over the canonical (least, greatest) pair
-    key of the edge list (|corpus| x k rows, id/float columns only —
-    optimization r17): each node lives in exactly one cell, so every
-    ordered pair appears at most once and an edge is mutual iff its
-    unordered pair occurs twice — one window exchange on the compact
-    frame, no self-join, no further corpus scan.
+    the cell-bucketed self-equi-join (``_cell_knn``): one
+    cell-assignment pass (map-side hash-agg argmin, centroids
+    broadcast — the ``_cell_assign`` probes=1 shape), then a shuffle
+    on cell_id where the quadratic pairing term is bounded by CELL
+    size, never corpus size — the same lever that makes embedding
+    dedup feasible (x_dedup_semantic's docstring). The mutual flag is
+    a COUNT over the canonical (least, greatest) pair key of the edge
+    list — one window exchange on the compact frame, no self-join, no
+    further corpus scan.
 
     Returns (src_id, dst_id, cosine, rank, mutual); nodes in a cell
     of size < k + 1 emit cell_size - 1 edges. ``mutual=False`` skips
@@ -1261,11 +1258,8 @@ def knn_graph(
     rather than discard it.
     ``max_block`` caps the per-task pairing block against a hot cell
     (``_blocked_cell_join`` — exact, result-identical); None keeps
-    the plain cell join. ``assigned``: optional precomputed
-    ``assign_corpus`` output — build paths that also need prototypes
-    pass the one shared pass instead of paying a fresh argmin scan
-    per self-join branch (cell_id is identical by construction:
-    ``keep_sim`` only appends a column).
+    the plain cell join. Navigation graphs for the beam walks are
+    built by ``nav_graph_build`` over the same float pairing.
 
     Deployment caveat (ADVICE r16): the build materializes the
     assignment via ``localCheckpoint`` — non-reliable storage, so
@@ -1275,55 +1269,81 @@ def knn_graph(
     assignment to reliable storage (``spark.checkpoint`` or a table
     write) instead; the trade is build-time only, never serving-path.
     """
-    if assigned is not None:
-        src = assigned.select(
-            F.col("aid").alias("src_id"), "vec", "vnorm", "cell_id"
-        )
-        return _graph_edges_float(src, k, mutual, max_block, keep_cell)
-    src = _cell_assign(corpus, centroids, id_col, vec_col, 1, "src_id")
     # materialize the one assignment pass for BOTH self-join sides
-    # (optimization r16): the pairing reads this frame twice, and a
-    # graph construction is BUILD-time work — the same
-    # index-materialization trade the blocked path, nav_graph_build
-    # and the persisted-index build already make (callers passing
-    # ``assigned`` already checkpoint it themselves; this closes the
-    # self-contained path, which re-ran the scan+assign per branch).
-    src = src.localCheckpoint(eager=True)
-    return _graph_edges_float(src, k, mutual, max_block, keep_cell)
+    # (optimization r16): the pairing reads this frame twice (three
+    # times on the blocked path), and a graph construction is
+    # BUILD-time work — the index-materialization trade
+    # nav_graph_build and the persisted-index build also make
+    src = _cell_assign(corpus, centroids, id_col, vec_col, 1, "src_id")
+    return _cell_knn(
+        *_float_pairing(src.localCheckpoint(eager=True), k), mutual, max_block
+    )
 
 
-def _graph_edges_float(
-    assigned: DataFrame,
-    k: int,
+def _cell_knn(
+    a: DataFrame,
+    b: DataFrame,
+    rank,
+    cols: list,
     mutual: bool,
     max_block: int | None,
-    keep_cell: bool = False,
 ) -> DataFrame:
-    """The float-rung graph pairing tail over any (src_id, vec, vnorm,
-    cell_id) assignment frame — the ONE copy ``knn_graph`` (primary
-    IVF cells) and ``knn_graph_split`` (recursively refined cells)
-    share, so the two can never diverge on scoring, ranking, tie-break
-    or the mutual-flag device. ``keep_cell`` threads the (shared)
-    cell_id of each within-cell pair into the output — it is the
-    self-join key, so the edge's cell is already in hand and a caller
-    that needs per-edge cells (the persisted edge-table build) avoids
-    re-joining the corpus-sized node->cell map afterwards; plain-path
-    only (the blocked join's replicated sides drop the column)."""
-    if keep_cell and (max_block is not None or mutual):
-        raise ValueError(
-            "keep_cell supports the plain non-mutual pairing only"
-        )
-    if max_block is not None:
-        # the blocked join reads the assigned frame THREE times (the
-        # per-cell size count plus both replicated sides) — without a
-        # materialization each read re-runs the assign subtree and the
-        # recompute swamps the redistribution win (measured: the skew
-        # probe's scoring drops 25 s -> 5 s only once the input is
-        # concrete). One eager checkpoint of the compact frame is the
-        # index-materialization trade the warm-IVFPQ convention
-        # already blesses; the max_block=None path keeps the
-        # recompute-per-branch shape (one extra scan for two reads).
-        assigned = assigned.localCheckpoint(eager=True)
+    """The graph family's ONE within-cell pairing shape, shared by the
+    float rung (``_float_pairing``: ``knn_graph``, ``knn_graph_split``,
+    the navigation core ``graph_adjacency``) and the SQ8 rung
+    (``knn_graph_sq8``), so the join, the window partitioning and the
+    mutual flag cannot diverge between them. ``a``/``b`` are the two
+    sides of the corpus self-join, node id first, ``cell_id`` present;
+    the frame they project must be materialized (every caller
+    checkpoints it: the blocked path reads it three times).
+
+    The plain path is a merge-hinted join on ``cell_id``: with the
+    centroid frame a true LocalTableScan, Catalyst can estimate the
+    assigned sides and would broadcast one at TEST scale — at 100 TB
+    the estimate exceeds any threshold and SMJ returns, so the hint
+    only keeps the demonstrated plan honest (the bucketed-join
+    convention). ``max_block`` swaps in ``_blocked_cell_join``. Self
+    pairs drop, then ``rank(paired, part)`` scores and keeps each
+    node's top-k, with ``part`` prepended to its window partition:
+    ('cell_id',) on the plain path — the node id determines cell_id
+    (each node lives in one cell), so the ranking is identical, but
+    hash(cell_id), the join's output partitioning, already satisfies
+    the window and the pair list's Exchange disappears (optimization
+    r16, guide §2.4: the largest intermediate of the whole build loses
+    its only corpus-sized shuffle); () on the blocked path, whose
+    replicated rows drop cell_id.
+
+    ``mutual`` appends the flag by COUNT over the canonical
+    (least, greatest) pair key (optimization r17): the self-join emits
+    every ordered pair exactly once, so an edge is mutual iff its
+    unordered pair occurs twice in the ranked list — one window over
+    one read of the edge list, in place of an eager edge checkpoint
+    plus a reversed-pair self-join that exchanged the list twice.
+    Returns ``cols`` of the ranked edges (+ mutual)."""
+    a_id, b_id = a.columns[0], b.columns[0]
+    plain = max_block is None
+    paired = (
+        a.join(b.hint("merge"), "cell_id")
+        if plain
+        else _blocked_cell_join(a, b, a_id, b_id, max_block)
+    ).filter(F.col(a_id) != F.col(b_id))
+    edges = rank(paired, ("cell_id",) if plain else ())
+    if mutual:
+        wm = Window.partitionBy(F.least(a_id, b_id), F.greatest(a_id, b_id))
+        cols = [*cols, (F.count(F.lit(1)).over(wm) == 2).alias("mutual")]
+    return edges.select(*cols)
+
+
+def _float_pairing(assigned: DataFrame, k: int) -> tuple:
+    """The float rung's ``_cell_knn`` inputs over any materialized
+    (src_id, vec, vnorm, cell_id) assignment frame: the two self-join
+    sides, the ranker (guarded exact cosine over the unrolled fold,
+    top-``k`` per src_id, tie-break lowest dst_id) and the edge
+    columns (src_id, dst_id, cosine, rank). ONE copy for ``knn_graph``
+    (primary IVF cells), ``knn_graph_split`` (refined cells) and the
+    navigation core (``graph_adjacency``, which keeps the pair's
+    shared cell instead of the score), so they can never diverge on
+    scoring, ranking or tie-break."""
     a = assigned.select(
         "src_id",
         F.col("vec").alias("avec"),
@@ -1336,65 +1356,20 @@ def _graph_edges_float(
         F.col("vnorm").alias("bnorm"),
         "cell_id",
     )
-    # the merge hint pins the CORPUS-vs-CORPUS join shape: with the
-    # centroid frame now a true LocalTableScan, Catalyst can estimate
-    # the assigned sides and would broadcast one at TEST scale — at
-    # 100 TB the estimate exceeds any threshold and SMJ returns, so
-    # the hint only keeps the demonstrated plan honest (the bucketed-
-    # join convention)
-    paired = (
-        a.join(b.hint("merge"), "cell_id")
-        if max_block is None
-        else _blocked_cell_join(a, b, "src_id", "dst_id", max_block)
-    )
-    # the plain path keeps cell_id on the scored pairs so the top-k
-    # window can partition by (cell_id, src_id): src_id functionally
-    # determines cell_id (each node lives in exactly one cell), so the
-    # ranking is identical — but hash(cell_id), the self-join's output
-    # partitioning, already SATISFIES the window's clustering, and the
-    # full-pair-list Exchange the src_id-only window forced disappears
-    # (optimization r16, guide §2.4: the pair list is the largest
-    # intermediate of the whole build — at 100 TB this removes its
-    # only corpus-sized shuffle). The blocked path replicates rows
-    # across block keys and drops cell_id, so it keeps the plain
-    # src_id window.
-    plain = max_block is None
-    scored = paired.filter(F.col("src_id") != F.col("dst_id")).select(
-        "src_id",
-        "dst_id",
-        *(["cell_id"] if (keep_cell or plain) else []),
-        _cos("avec", "bvec", "anorm", "bnorm", _dot_unrolled).alias("cos_raw"),
-    )
-    wpart = ("cell_id", "src_id") if plain else ("src_id",)
-    edges = _top(scored, "cos_raw", "dst_id", k, by=wpart)
-    if not mutual:
-        return edges.select(
+
+    def rank(paired: DataFrame, part: tuple) -> DataFrame:
+        scored = paired.select(
             "src_id",
             "dst_id",
-            *(["cell_id"] if keep_cell else []),
-            F.round("cos_raw", 6).alias("cosine"),
-            "rank",
+            *part,
+            _cos("avec", "bvec", "anorm", "bnorm", _dot_unrolled).alias(
+                "cos_raw"
+            ),
         )
-    # mutual flag by COUNT over the canonical (lo, hi) pair key
-    # (optimization r17, guide §2.4): each (src, dst) pair appears in
-    # the ranked edge list at most once per direction (the cell
-    # self-join emits every ordered pair exactly once), so the edge is
-    # mutual iff its unordered pair occurs twice. One window over ONE
-    # read of the edge list replaces the r16 shape — an eager
-    # localCheckpoint (a serial build-time materialization job, the
-    # cold-path charge VERDICT r16 flagged) plus a reversed-pair
-    # self-join that exchanged the edge list TWICE. The window
-    # exchanges it once and the checkpoint disappears entirely.
-    wm = Window.partitionBy(
-        F.least("src_id", "dst_id"), F.greatest("src_id", "dst_id")
-    )
-    return edges.select(
-        "src_id",
-        "dst_id",
-        F.round("cos_raw", 6).alias("cosine"),
-        "rank",
-        (F.count(F.lit(1)).over(wm) == 2).alias("mutual"),
-    )
+        return _top(scored, "cos_raw", "dst_id", k, by=(*part, "src_id"))
+
+    cols = ["src_id", "dst_id", F.round("cos_raw", 6).alias("cosine"), "rank"]
+    return a, b, rank, cols
 
 
 def split_oversized_cells(
@@ -1437,7 +1412,7 @@ def split_oversized_cells(
     hash agg -> 2 x |oversized| sub-centroids, broadcast), one
     broadcast-join reassign. No self-join anywhere. Returns
     (src_id, vec, vnorm, cell_id) with cell_id = the REFINED id —
-    the exact frame ``_graph_edges_float`` consumes."""
+    the exact frame ``_float_pairing`` consumes."""
     from blspark.ext.dedup import md5_prefix_int
 
     assigned = _cell_assign(corpus, centroids, id_col, vec_col, 1, "src_id")
@@ -1521,13 +1496,13 @@ def knn_graph_split(
 ) -> DataFrame:
     """``knn_graph`` over recursively REFINED cells — the semantic
     hot-cell escape composed end-to-end: ``split_oversized_cells``
-    bounds the expected cell size, then the ONE shared pairing tail
-    (``_graph_edges_float``) builds the exact top-k graph within the
-    refined cells. Not result-identical to ``knn_graph`` by design —
-    a split member's neighbor universe shrinks to its sub-cell; the
-    trade is ~s^2/2 pairing per split level, chosen explicitly.
-    Composes with ``max_block`` (the physical cap) for cells that
-    remain hot after splitting."""
+    bounds the expected cell size, then the ONE shared float pairing
+    (``_float_pairing`` through ``_cell_knn``) builds the exact top-k
+    graph within the refined cells. Not result-identical to
+    ``knn_graph`` by design — a split member's neighbor universe
+    shrinks to its sub-cell; the trade is ~s^2/2 pairing per split
+    level, chosen explicitly. Composes with ``max_block`` (the
+    physical cap) for cells that remain hot after splitting."""
     # one materialization of the refined assignment for both self-join
     # sides (optimization r16): the multi-stage split subtree
     # (assign + size census + sub-centroid training + reassign) was
@@ -1536,7 +1511,7 @@ def knn_graph_split(
     refined = split_oversized_cells(
         corpus, centroids, id_col, vec_col, max_cell
     ).localCheckpoint(eager=True)
-    return _graph_edges_float(refined, k, mutual, max_block)
+    return _cell_knn(*_float_pairing(refined, k), mutual, max_block)
 
 
 def knn_graph_sq8(
@@ -1559,9 +1534,9 @@ def knn_graph_sq8(
     Quantization rides the cell-assigned frame (``sq8_quantize`` with
     ``keep=('cell_id',)``) — one corpus pass produces (codes, scale,
     cell), and only that compact frame enters the self-join; the raw
-    vectors never shuffle. Mutual flag as in ``knn_graph``: a count
-    over the canonical pair key of the edge list. ``max_block`` caps
-    the per-task pairing block against a hot cell
+    vectors never shuffle. Join, window partitioning and mutual flag
+    are the float rung's (``_cell_knn``). ``max_block`` caps the
+    per-task pairing block against a hot cell
     (``_blocked_cell_join`` — exact, result-identical; the int8 codes
     make the replicated rows 4x cheaper than the float rung's);
     None keeps the plain cell join.
@@ -1570,11 +1545,8 @@ def knn_graph_sq8(
     """
     qz = _quantized_cells(corpus, centroids, id_col, vec_col)
     # materialize the compact int8-code frame once for both self-join
-    # sides (optimization r16 — previously blocked-path only, where
-    # the three reads made it unavoidable; the plain path's two reads
-    # each re-ran the scan + assign + quantize subtree): graph
-    # construction is build-time work, the established
-    # index-materialization trade.
+    # sides (optimization r16): graph construction is build-time work,
+    # the established index-materialization trade.
     qz = qz.localCheckpoint(eager=True)
     a = qz.select(
         F.col("vid").alias("query_id"),
@@ -1588,46 +1560,22 @@ def knn_graph_sq8(
         F.col("scale").alias("nscale"),
         "cell_id",
     )
-    # merge hint: see _graph_edges_float — pins the corpus-vs-corpus
-    # keyed shape against small-scale broadcast estimates
-    paired = (
-        a.join(b.hint("merge"), "cell_id")
-        if max_block is None
-        else _blocked_cell_join(a, b, "query_id", "neighbor_id", max_block)
-    ).filter(F.col("query_id") != F.col("neighbor_id"))
-    # cell-keyed window partitioning on the plain path — see
-    # _graph_edges_float (optimization r16): the window's pair-list
-    # Exchange disappears because hash(cell_id), the self-join's
-    # output partitioning, already satisfies the (cell_id, query_id)
-    # clustering.
+
     # unroll only on the plain path: the blocked join A/B-measured the
     # HOF core ~0.4 s faster (in-session probe) — the block-replicated
     # rows re-pay the bigger expression without the plain path's fused
     # join->project pipeline
-    edges = _sq8_rank(
-        paired,
-        k,
-        part_extra=(() if max_block is not None else ("cell_id",)),
-        unroll=max_block is None,
-    )
-    # mutual flag by COUNT over the canonical pair key — see
-    # _graph_edges_float (optimization r17): one window over one read
-    # of the ranked edge list replaces the plain path's eager edge
-    # checkpoint + reversed-pair join (two edge-list exchanges -> one)
-    # and, on the blocked path, the rev side's full re-execution of
-    # the pairing subtree.
-    wm = Window.partitionBy(
-        F.least("query_id", "neighbor_id"),
-        F.greatest("query_id", "neighbor_id"),
-    )
-    return edges.select(
+    def rank(paired: DataFrame, part: tuple) -> DataFrame:
+        return _sq8_rank(paired, k, part_extra=part, unroll=max_block is None)
+
+    cols = [
         F.col("query_id").alias("src_id"),
         F.col("neighbor_id").alias("dst_id"),
         "score",
         "iprod",
         "rank",
-        (F.count(F.lit(1)).over(wm) == 2).alias("mutual"),
-    )
+    ]
+    return _cell_knn(a, b, rank, cols, True, max_block)
 
 
 def _quantized_cells(
@@ -1936,89 +1884,75 @@ def negatives_stateless(
 
 
 def graph_adjacency(
-    corpus: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    assigned: DataFrame,
+    protos: DataFrame,
     knn_k: int = 3,
-    assigned: DataFrame | None = None,
+    m_cross: int = 0,
 ) -> DataFrame:
-    """Undirected navigation adjacency for the beam search: the
-    top-``knn_k`` edges union their reversals, deduplicated, eagerly
-    localCheckpointed (the iterative-loop convention: edge inputs
-    checkpoint once at entry — and THE artifact a deployment
-    amortizes across query batches; the warm retrieval variant
-    memoizes exactly this frame). (cand_id, nbr) id pairs only.
-    ``assigned``: optional shared ``assign_corpus`` pass (the
-    build-constant device — see graph_adjacency_xcell)."""
-    edges = knn_graph(
-        corpus, centroids, id_col, vec_col, k=knn_k, mutual=False,
-        assigned=assigned,
+    """The ONE navigation-graph edge builder, un-materialized: directed
+    (src_id, dst_id, src_cell, dst_cell) over a materialized
+    ``assign_corpus`` pass and its ``cell_prototypes`` frame. Edges are
+    each node's top-``knn_k`` within-cell neighbors (the float kNN
+    pairing, ``_float_pairing``) plus, for ``m_cross`` > 0, the
+    prototype backbone (``proto_cross_edges``) — the
+    navigable-small-world edge set: dense local links within each
+    cell, sparse long-range links between the |cells| prototypes
+    (``m_cross=0``: within-cell edges only).
+
+    Endpoint cells ride the edges FROM CONSTRUCTION: a within-cell
+    edge's endpoints share the self-join's own cell key, and a
+    backbone edge's endpoints carry their cells from the shared pass —
+    so no consumer joins the corpus-sized node->cell map. Two
+    consumers: ``nav_graph_build`` (the walk adjacency: undirected
+    ids, distinct, one eager checkpoint) and the persisted edge table
+    (``extensions12.graph_edge_table``: undirected with cells,
+    deduplicated on its write's own repartition)."""
+    cell = F.col("cell_id")
+    a, b, rank, _ = _float_pairing(
+        assigned.select(F.col("aid").alias("src_id"), "vec", "vnorm", "cell_id"),
+        knn_k,
     )
-    return _undirect(
-        edges.select("src_id", "dst_id")
-    ).localCheckpoint(eager=True)
+    cols = ["src_id", "dst_id", cell.alias("src_cell"), cell.alias("dst_cell")]
+    edges = _cell_knn(a, b, rank, cols, False, None)
+    if m_cross:
+        edges = edges.union(proto_cross_edges(assigned, protos, m_cross))
+    return edges
 
 
-def _undirect(
-    edges: DataFrame, dedup: bool = True, cells: bool = False
-) -> DataFrame:
-    """(src_id, dst_id) -> deduplicated undirected (cand_id, nbr):
-    each edge EXPLODES into itself + its reversal in one pass over
-    the input, instead of a union of two branches — a union's
-    branches each re-evaluate the edge subtree (the kNN self-join, a
-    corpus-pairing shuffle), so the old shape paid the graph build
-    TWICE inside one job. Result-identical (same pair set, then
-    distinct); ONE copy shared by the plain and xcell adjacencies
-    (r15: the persist-graph build-constant item).
+def _undirect(edges: DataFrame) -> DataFrame:
+    """(src_id, dst_id[, src_cell, dst_cell]) -> undirected
+    (cand_id, nbr[, src_cell, nbr_cell]): each edge EXPLODES into
+    itself + its reversal in one pass over the input, instead of a
+    union of two branches — a union's branches each re-evaluate the
+    edge subtree (the kNN self-join, a corpus-pairing shuffle), so
+    that shape paid the graph build TWICE inside one job. The cell
+    pair, when present, swaps along with the id pair.
 
-    ``dedup=False`` defers the distinct to the caller — the edge-table
-    build dedups AFTER its repartition on the partition column, where
-    the duplicate key (cand_id, nbr) functionally determines src_cell,
-    so hash(src_cell) partitioning already satisfies the distinct's
-    clustering and the dedup runs partition-local on the write's OWN
-    shuffle (one exchange total, plan-verified).
+    Not deduplicated: the walk adjacency takes ``distinct()`` right
+    after; the edge-table build dedups AFTER its repartition on the
+    partition column, where the duplicate key (cand_id, nbr)
+    functionally determines src_cell, so hash(src_cell) partitioning
+    already satisfies the distinct's clustering and the dedup runs
+    partition-local on the write's OWN shuffle (one exchange total,
+    plan-verified)."""
+    cells = "src_cell" in edges.columns
 
-    ``cells=True`` expects (src_id, dst_id, src_cell, dst_cell) and
-    swaps the cell pair along with the id pair, emitting
-    (cand_id, nbr, src_cell, nbr_cell) — the edge-table build's
-    carry-the-cells shape (r16): each endpoint's cell rides the edge
-    from construction, so the build never joins the corpus-sized
-    node->cell map."""
-    fwd = [
-        F.col("src_id").alias("cand_id"),
-        F.col("dst_id").alias("nbr"),
-    ]
-    rev = [
-        F.col("dst_id").alias("cand_id"),
-        F.col("src_id").alias("nbr"),
-    ]
-    if cells:
-        fwd += [
-            F.col("src_cell").alias("src_cell"),
-            F.col("dst_cell").alias("nbr_cell"),
-        ]
-        rev += [
-            F.col("dst_cell").alias("src_cell"),
-            F.col("src_cell").alias("nbr_cell"),
-        ]
-    exploded = (
-        edges.select(
-            F.explode(F.array(F.struct(*fwd), F.struct(*rev))).alias("e")
-        )
-        .select("e.*")
-    )
-    return exploded.distinct() if dedup else exploded
+    def end(u: str, v: str) -> Column:
+        cols = [F.col(f"{u}_id").alias("cand_id"), F.col(f"{v}_id").alias("nbr")]
+        if cells:
+            cols += [
+                F.col(f"{u}_cell").alias("src_cell"),
+                F.col(f"{v}_cell").alias("nbr_cell"),
+            ]
+        return F.struct(*cols)
+
+    return edges.select(
+        F.explode(F.array(end("src", "dst"), end("dst", "src"))).alias("e")
+    ).select("e.*")
 
 
 def proto_cross_edges(
-    corpus: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    m_cross: int = 2,
-    assigned: DataFrame | None = None,
-    protos: DataFrame | None = None,
+    assigned: DataFrame, protos: DataFrame, m_cross: int = 2
 ) -> DataFrame:
     """LONG-RANGE navigation edges between cell prototypes — the
     HNSW-style upper-layer links the within-cell kNN graph lacks:
@@ -2030,160 +1964,57 @@ def proto_cross_edges(
     backbone — without these, reachability (and therefore recall) is
     capped at the full-scan ceiling of the <= n_seeds entry cells.
 
-    Scale shape: ``cell_prototypes`` is one corpus aggregation pass
-    (map-side argmin/argmax, centroids broadcast); fetching the
-    |cells| prototype vectors is one broadcast semi-join against the
-    scan; the pairing is a |cells| x |cells| broadcast product of a
-    METADATA-sized frame (nlist ~ sqrt(N) keeps this trivially small
-    next to the corpus — at nlist = 10^4 it is 10^8 cheap float ops
-    on compact rows, still centroid-training scale, never
-    corpus-scale). Returns (src_id, dst_id) prototype id pairs.
-    ``assigned``: optional precomputed ``assign_corpus`` output —
-    supplies BOTH the prototype selection (no fresh argmin scan) and
-    the prototype-vector fetch (no second corpus scan). ``protos``:
-    optional precomputed ``cell_prototypes`` output (any frame
-    carrying ``prototype_id``) — a build that already memoized the
-    serving-path prototype frame passes it so the argmax aggregation
-    is not re-run here (r15)."""
+    Inputs are the build's shared pass: ``assigned`` (a materialized
+    ``assign_corpus`` output) supplies the prototype vectors and
+    cells, ``protos`` (any frame carrying ``prototype_id``) the
+    prototype ids. Scale shape: fetching the |cells| prototype
+    vectors is one join against the shared pass; the pairing is a
+    |cells| x |cells| broadcast product of a METADATA-sized frame
+    (nlist ~ sqrt(N) keeps this trivially small next to the corpus —
+    at nlist = 10^4 it is 10^8 cheap float ops on compact rows, still
+    centroid-training scale, never corpus-scale). Returns
+    (src_id, dst_id, src_cell, dst_cell) prototype pairs."""
     from blspark.ops import local_relation
 
-    if protos is None:
-        protos = cell_prototypes(
-            corpus, centroids, id_col, vec_col, assigned=assigned
-        )
-    protos = protos.select(F.col("prototype_id").alias("pid"))
-    if assigned is not None:
-        vecs = assigned.select(
-            F.col("aid").alias("pid"),
-            "vec",
-            F.col("vnorm").alias("nrm"),
-        )
-    else:
-        vecs = _vecs(corpus, id_col, vec_col, "pid", "vec", "nrm")
     # |cells| rows used on BOTH sides of the crossJoin: materialize
-    # once as a local relation or the cell_prototypes corpus
-    # aggregation (and the vector fetch join) executes per branch
+    # once as a local relation or the prototype aggregation (and the
+    # vector fetch join) executes per branch
     pv = local_relation(
-        protos.join(vecs, "pid"),
-        "pid bigint, vec array<double>, nrm double",
+        protos.select(F.col("prototype_id").alias("pid")).join(
+            assigned.select(
+                F.col("aid").alias("pid"),
+                F.col("cell_id").alias("cell"),
+                "vec",
+                F.col("vnorm").alias("nrm"),
+            ),
+            "pid",
+        ),
+        "pid bigint, cell int, vec array<double>, nrm double",
     )
-    a = pv.select(
-        F.col("pid").alias("src_id"),
-        F.col("vec").alias("avec"),
-        F.col("nrm").alias("anorm"),
-    )
-    b = pv.select(
-        F.col("pid").alias("dst_id"),
-        F.col("vec").alias("bvec"),
-        F.col("nrm").alias("bnorm"),
-    )
+
+    def side(end: str, v: str) -> DataFrame:
+        return pv.select(
+            F.col("pid").alias(f"{end}_id"),
+            F.col("cell").alias(f"{end}_cell"),
+            F.col("vec").alias(f"{v}vec"),
+            F.col("nrm").alias(f"{v}norm"),
+        )
+
     scored = (
-        a.crossJoin(F.broadcast(b))
+        side("src", "a")
+        .crossJoin(F.broadcast(side("dst", "b")))
         .filter(F.col("src_id") != F.col("dst_id"))
         .select(
             "src_id",
             "dst_id",
+            "src_cell",
+            "dst_cell",
             _cos("avec", "bvec", "anorm", "bnorm").alias("cos_raw"),
         )
     )
     return _top(
         scored, "cos_raw", "dst_id", m_cross, by=("src_id",), rank="r"
-    ).select("src_id", "dst_id")
-
-
-def graph_adjacency_xcell(
-    corpus: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    knn_k: int = 3,
-    m_cross: int = 2,
-    assigned: DataFrame | None = None,
-    checkpoint: bool = True,
-    protos: DataFrame | None = None,
-    dedup: bool = True,
-    with_cells: bool = False,
-) -> DataFrame:
-    """``graph_adjacency`` plus the prototype-backbone long-range
-    edges (``proto_cross_edges``) — the navigable-small-world edge
-    set: dense local links within each cell, sparse cross-cell links
-    between the |cells| prototypes. Undirected (``_undirect`` —
-    explode-reversal, one pass over the edge subtree), deduplicated,
-    eagerly localCheckpointed — the same amortize-across-query-batches
-    artifact as the within-cell adjacency, bigger by only
-    2 * m_cross * |cells| rows.
-    ``assigned``: optional shared ``assign_corpus`` pass, threaded to
-    both edge families (the edge-table build's one-scan shape).
-    ``protos``: optional precomputed ``cell_prototypes`` output,
-    threaded to the backbone (``proto_cross_edges``) so a build that
-    already memoized it skips the argmax re-aggregation.
-    ``checkpoint=False``: skip the materialization for a caller that
-    consumes the adjacency exactly ONCE in its own sink job (the
-    persisted edge-table build) — a walk probes the frame per hop and
-    must keep the default. ``dedup=False`` (build path) additionally
-    defers the undirected-edge distinct to the caller's own shuffle
-    (see ``_undirect``).
-
-    ``with_cells=True`` (build path, r16) returns
-    (cand_id, nbr, src_cell, nbr_cell) with the endpoint cells carried
-    FROM CONSTRUCTION instead of joined on afterwards: a within-cell
-    kNN edge's endpoints share the self-join's own cell key
-    (``knn_graph(keep_cell=)``), and a backbone edge's endpoints are
-    prototypes whose cells are the METADATA-sized ``protos`` frame —
-    so the persisted edge-table build needs zero joins against the
-    corpus-sized node->cell map (previously two shuffle joins of the
-    |corpus| x k edge list). Cell values are identical by
-    construction: the map the old joins consulted was derived from
-    exactly this assignment, and a cell's prototype is one of its own
-    members."""
-    if with_cells:
-        if protos is None:
-            protos = cell_prototypes(
-                corpus, centroids, id_col, vec_col, assigned=assigned
-            )
-        kedges = knn_graph(
-            corpus, centroids, id_col, vec_col, k=knn_k, mutual=False,
-            assigned=assigned, keep_cell=True,
-        ).select(
-            "src_id",
-            "dst_id",
-            F.col("cell_id").alias("src_cell"),
-            F.col("cell_id").alias("dst_cell"),
-        )
-        pmap = protos.select("prototype_id", "cell_id")
-        backbone = (
-            proto_cross_edges(
-                corpus, centroids, id_col, vec_col, m_cross,
-                assigned=assigned, protos=protos,
-            )
-            .join(
-                F.broadcast(pmap.select(
-                    F.col("prototype_id").alias("src_id"),
-                    F.col("cell_id").alias("src_cell"),
-                )),
-                "src_id",
-            )
-            .join(
-                F.broadcast(pmap.select(
-                    F.col("prototype_id").alias("dst_id"),
-                    F.col("cell_id").alias("dst_cell"),
-                )),
-                "dst_id",
-            )
-            .select("src_id", "dst_id", "src_cell", "dst_cell")
-        )
-        adj = _undirect(kedges.union(backbone), dedup=dedup, cells=True)
-        return adj.localCheckpoint(eager=True) if checkpoint else adj
-    edges = knn_graph(
-        corpus, centroids, id_col, vec_col, k=knn_k, mutual=False,
-        assigned=assigned,
-    ).select("src_id", "dst_id")
-    both = edges.union(proto_cross_edges(
-        corpus, centroids, id_col, vec_col, m_cross, assigned=assigned,
-        protos=protos,
-    ))
-    adj = _undirect(both, dedup=dedup)
-    return adj.localCheckpoint(eager=True) if checkpoint else adj
+    ).select("src_id", "dst_id", "src_cell", "dst_cell")
 
 
 def nav_graph_build(
@@ -2192,57 +2023,40 @@ def nav_graph_build(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     knn_k: int = 3,
-    m_cross: int | None = None,
+    m_cross: int = 0,
 ) -> tuple[DataFrame, DataFrame]:
-    """ONE copy of the shared-pass navigation-graph build recipe
-    (the r14 build-constant device): one checkpointed ``assign_corpus``
-    pass feeds the adjacency (plain ``graph_adjacency`` when
-    ``m_cross`` is None, NSW ``graph_adjacency_xcell`` otherwise) AND
-    the seeds' prototype frame. Returns (adj, protos) — callers that
-    memoize across calls wrap ``protos`` in a ``local_relation``
-    themselves (|cells| rows). Extracted so a checkpoint/recipe edit
-    reaches every walk body at once instead of six call sites
-    (the one-copy convention; /code-review r14)."""
+    """THE navigation-graph build every beam walk takes: one
+    checkpointed ``assign_corpus`` pass (the r14 build-constant
+    device) feeds the prototype frame (``cell_prototypes``) AND the
+    edges (``graph_adjacency``: top-``knn_k`` within-cell edges plus
+    an ``m_cross`` prototype backbone; 0 = none). The walk adjacency
+    is those edges made undirected (cand_id, nbr), deduplicated and
+    eagerly localCheckpointed — the iterative-loop convention (edge
+    inputs checkpoint once at entry; the walk probes the frame per
+    hop) and THE artifact a deployment amortizes across query
+    batches. Returns (adj, protos) — callers that memoize across calls
+    wrap ``protos`` in a ``local_relation`` themselves (|cells|
+    rows)."""
     assigned = assign_corpus(corpus, centroids, id_col, vec_col)
     assigned = assigned.localCheckpoint(eager=True)
-    if m_cross is None:
-        adj = graph_adjacency(
-            corpus, centroids, id_col, vec_col, knn_k, assigned=assigned
-        )
-    else:
-        adj = graph_adjacency_xcell(
-            corpus, centroids, id_col, vec_col, knn_k, m_cross,
-            assigned=assigned,
-        )
     protos = cell_prototypes(
         corpus, centroids, id_col, vec_col, assigned=assigned
     )
-    return adj, protos
+    edges = graph_adjacency(assigned, protos, knn_k, m_cross)
+    adj = _undirect(edges.select("src_id", "dst_id")).distinct()
+    return adj.localCheckpoint(eager=True), protos
 
 
 def _proto_seeds(
-    q: DataFrame,
-    vecs: DataFrame,
-    corpus: DataFrame,
-    centroids: DataFrame,
-    id_col: str,
-    vec_col: str,
-    n_seeds: int,
-    protos: DataFrame | None = None,
+    q: DataFrame, vecs: DataFrame, protos: DataFrame, n_seeds: int
 ) -> DataFrame:
     """The beam search's ENTRY step, extracted so the recall contracts
     can name each query's seed prototypes (and their cells) with the
     exact scoring/tie-break the walk itself uses: score every cell
-    prototype against every query (metadata-sized broadcast product),
-    keep the top-``n_seeds`` per query. Returns (query_id, cand_id,
-    cos_raw) — the walk's initial visited set.
-
-    ``protos``: optional precomputed ``cell_prototypes`` output (any
-    frame carrying ``prototype_id``) — the persisted-index walk
-    derives it once for seeding AND the seed-cell map, so passing it
-    here avoids a second corpus aggregation pass."""
-    if protos is None:
-        protos = cell_prototypes(corpus, centroids, id_col, vec_col)
+    prototype (``protos``: any frame carrying ``prototype_id``, the
+    build's ``cell_prototypes``) against every query (metadata-sized
+    broadcast product), keep the top-``n_seeds`` per query. Returns
+    (query_id, cand_id, cos_raw) — the walk's initial visited set."""
     protos = protos.select(F.col("prototype_id").alias("cand_id"))
     pvec = F.broadcast(protos.join(vecs, "cand_id"))
     scored = q.crossJoin(pvec).select(
@@ -2255,50 +2069,45 @@ def _proto_seeds(
 
 def graph_expand_topk(
     corpus: DataFrame,
-    centroids: DataFrame,
     queries: DataFrame,
+    adj: DataFrame,
+    protos: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 5,
-    knn_k: int = 3,
     hops: int = 3,
     beam: int = 3,
     n_seeds: int = 2,
-    adj: DataFrame | None = None,
     allowed: DataFrame | None = None,
     early_exit_k: int | None = None,
     with_activity: bool = False,
-    protos: DataFrame | None = None,
 ):
-    """Graph-based retrieval by GREEDY BEAM SEARCH over the kNN graph
-    — the HNSW/NSW search step re-expressed in batch DataFrame terms,
-    composing ``cell_prototypes`` (entry points) and ``knn_graph``
-    (the navigable edges) verbatim: each query enters at its
-    ``n_seeds`` best prototypes (exact cosine against the |cells|
-    prototype vectors — the metadata-sized top-layer pick HNSW
-    makes), then for ``hops`` rounds expands the current ``beam``
-    best-scoring visited nodes along the UNDIRECTED top-``knn_k``
-    edges, scoring every newly reached node against the query — the
-    walk moves toward the query's neighborhood because each round's
-    frontier is chosen by query similarity, not graph position
-    (a fixed blind expansion from the prototype was measured at 4%
-    recall@5; the greedy walk is what makes graph retrieval work).
-    Final answer: exact-cosine top-``k`` of everything visited.
+    """Graph-based retrieval by GREEDY BEAM SEARCH over a built
+    navigation graph — the HNSW/NSW search step re-expressed in batch
+    DataFrame terms. ``adj``/``protos`` are ``nav_graph_build``'s
+    (adj, protos): each query enters at its ``n_seeds`` best
+    prototypes (exact cosine against the |cells| prototype vectors —
+    the metadata-sized top-layer pick HNSW makes), then for ``hops``
+    rounds expands the current ``beam`` best-scoring visited nodes
+    along the undirected edges, scoring every newly reached node
+    against the query — the walk moves toward the query's
+    neighborhood because each round's frontier is chosen by query
+    similarity, not graph position (a fixed blind expansion from the
+    prototype was measured at 4% recall@5; the greedy walk is what
+    makes graph retrieval work). Final answer: exact-cosine top-``k``
+    of everything visited.
 
     Scale shape: per query the walk touches O(n_seeds + hops * beam
-    * knn_k) nodes — INDEPENDENT of cell size (a hot cell costs a
+    * degree) nodes — INDEPENDENT of cell size (a hot cell costs a
     query nothing; contrast ``ivf_topk``, which scans whole probed
     cells) — so every per-round frame is (|queries| x dozens) rows.
     The per-round corpus work is one equi-join of that candidate
-    frame against the vector table to fetch/score new nodes (at
-    deployment, a point-lookup store or the checkpointed codes
-    frame; here a broadcast-hash semi-join against the scan). The
-    edge list is built once per call and localCheckpointed
-    (``graph_adjacency`` — the iterative-loop convention: edge
-    inputs checkpoint once at entry, accumulators checkpoint per
-    round) — and is THE artifact a deployment amortizes across query
-    batches: pass a prebuilt ``adj`` to pay only the walk (the warm
-    registered variant memoizes it per dataset). Recall is priced by
+    frame against the vector table (``corpus``) to fetch/score new
+    nodes (at deployment, a point-lookup store or the checkpointed
+    codes frame; here a broadcast-hash semi-join against the scan).
+    The graph is built once, outside the walk, and is THE artifact a
+    deployment amortizes across query batches (the warm registered
+    variants memoize it per dataset). Recall is priced by
     x_graph_expand_eval against brute force.
 
     ``allowed``: optional single-column (``cand_id``) frame of result-
@@ -2312,29 +2121,18 @@ def graph_expand_topk(
     silently returns fewer than k and strictly lower recall
     (x_graph_filtered_eval prices the difference).
 
-    ``early_exit_k`` / ``with_activity`` pass through to the shared
-    ``_beam_walk`` loop: per-query early termination (hops becomes a
-    ceiling — the adaptive-ANN knob at the graph rung) and the
-    expansion ledger (hop, query_id, cand_id) for budget pricing;
-    with ``with_activity`` the return is (result, activity).
-
-    ``protos``: optional precomputed ``cell_prototypes`` output (any
-    frame carrying ``prototype_id``) for seeding — callers that
-    already paid the prototype pass (the shared ``assign_corpus``
-    build, or a warm memo) pass it so seeding costs zero corpus
-    scans; None keeps the self-contained shape.
+    ``early_exit_k`` passes through to the shared ``_beam_walk`` loop:
+    per-query early termination (hops becomes a ceiling — the
+    adaptive-ANN knob at the graph rung). ``with_activity`` also
+    returns the expansion ledger (hop, query_id, cand_id) for budget
+    pricing: the return is then (result, activity).
 
     Returns (query_id, neighbor_id, cosine, rank); the query's own
     node navigates (its out-edges are the best possible moves) but
     is never a result."""
     vecs = _vecs(corpus, id_col, vec_col, "cand_id", "cvec", "cnorm")
     q = _vecs(queries, id_col, vec_col, "query_id", "qvec", "qnorm")
-    visited = _proto_seeds(
-        q, vecs, corpus, centroids, id_col, vec_col, n_seeds,
-        protos=protos,
-    )
-    if adj is None:
-        adj = graph_adjacency(corpus, centroids, id_col, vec_col, knn_k)
+    visited = _proto_seeds(q, vecs, protos, n_seeds)
 
     def expand(frontier: DataFrame) -> DataFrame:
         return (
@@ -2343,20 +2141,11 @@ def graph_expand_topk(
             .distinct()
         )
 
-    walked = _beam_walk(
-        visited,
-        vecs,
-        q,
-        hops,
-        beam,
-        expand,
-        early_exit_k=early_exit_k,
-        with_activity=with_activity,
+    visited, activity = _beam_walk(
+        visited, vecs, q, hops, beam, expand, early_exit_k=early_exit_k
     )
-    if with_activity:
-        visited, activity = walked
-        return _visited_rank(visited, k, allowed), activity
-    return _visited_rank(walked, k, allowed)
+    result = _visited_rank(visited, k, allowed)
+    return (result, activity) if with_activity else result
 
 
 def _beam_walk(
@@ -2368,8 +2157,7 @@ def _beam_walk(
     expand,
     extra: tuple = (),
     early_exit_k: int | None = None,
-    with_activity: bool = False,
-):
+) -> tuple[DataFrame, DataFrame]:
     """ONE copy of the greedy hop loop shared by the in-memory and
     persisted-index walks (the `_visited_rank` rationale applied to
     the loop itself: an edit to the walk semantics — frontier
@@ -2396,11 +2184,12 @@ def _beam_walk(
     and mirrored hop-for-hop by the adaptive oracle chain
     (extensions10._gx_chain(adaptive_k=...)).
 
-    ``with_activity``: also return the expansion ledger — one row
-    (hop, query_id, cand_id) per frontier node actually expanded —
-    the frame the adaptive eval prices budgets from (COUNT(*) = total
-    expansions; max hop per query = where it stopped). Returns
-    (visited, activity) instead of visited.
+    Returns (visited, activity): ``activity`` is the expansion ledger
+    — one row (hop, query_id, cand_id) per frontier node actually
+    expanded — the frame the adaptive eval prices budgets from
+    (COUNT(*) = total expansions; max hop per query = where it
+    stopped). It is a lazy union of the per-hop frontiers, so a walk
+    that never reads it runs no job for it.
     """
     from blspark.ops import checkpoint_rows
 
@@ -2452,11 +2241,8 @@ def _beam_walk(
         frontier = _top(vis_f, "cos_raw", "cand_id", beam, rank="r").select(
             "query_id", "cand_id", *extra
         )
-        if with_activity:
-            fa = frontier.select(
-                F.lit(i).alias("hop"), "query_id", "cand_id"
-            )
-            activity = fa if activity is None else activity.unionByName(fa)
+        fa = frontier.select(F.lit(i).alias("hop"), "query_id", "cand_id")
+        activity = fa if activity is None else activity.unionByName(fa)
         new = expand(frontier).join(
             visited.select("query_id", "cand_id"),
             ["query_id", "cand_id"],
@@ -2493,27 +2279,25 @@ def _beam_walk(
         )
     if adaptive:
         visited = visited.drop("_hop")
-    if with_activity:
-        if activity is None:  # hops == 0
-            # Derive the id types from the visited frame (they inherit
-            # the corpus id type) so a hops=0 call returns the same
-            # schema a hops>=1 call would — a literal DDL here would
-            # pin long ids even when the corpus uses int ids.
-            from pyspark.sql.types import IntegerType, StructField, StructType
+    if activity is None:  # hops == 0
+        # Derive the id types from the visited frame (they inherit the
+        # corpus id type) so a hops=0 call returns the same schema a
+        # hops>=1 call would — a literal DDL here would pin long ids
+        # even when the corpus uses int ids.
+        from pyspark.sql.types import IntegerType, StructField, StructType
 
-            vf = {f.name: f for f in visited.schema.fields}
-            activity = visited.sparkSession.createDataFrame(
-                [],
-                StructType(
-                    [
-                        StructField("hop", IntegerType(), False),
-                        vf["query_id"],
-                        vf["cand_id"],
-                    ]
-                ),
-            )
-        return visited, activity
-    return visited
+        vf = {f.name: f for f in visited.schema.fields}
+        activity = visited.sparkSession.createDataFrame(
+            [],
+            StructType(
+                [
+                    StructField("hop", IntegerType(), False),
+                    vf["query_id"],
+                    vf["cand_id"],
+                ]
+            ),
+        )
+    return visited, activity
 
 
 def _visited_rank(
@@ -2577,8 +2361,8 @@ def graph_expand_topk_indexed(
     spark,
     edge_table: str,
     corpus: DataFrame,
-    centroids: DataFrame,
     queries: DataFrame,
+    protos: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 5,
@@ -2587,7 +2371,6 @@ def graph_expand_topk_indexed(
     n_seeds: int = 2,
     allowed: DataFrame | None = None,
     early_exit_k: int | None = None,
-    protos: DataFrame | None = None,
 ) -> DataFrame:
     """The greedy beam search of ``graph_expand_topk`` walked against
     a PERSISTED cell-partitioned edge table instead of an in-memory
@@ -2601,44 +2384,27 @@ def graph_expand_topk_indexed(
 
     The frontier's cells are known WITHOUT touching a corpus-sized
     node->cell map: seeds are cell prototypes (their cells come with
-    the |cells|-sized prototype frame), and every node a hop reaches
-    carries ``nbr_cell`` in from the edge row that reached it — the
-    visited frame threads (query_id, cand_id, cell, cos_raw), so the
-    per-hop cell set is a metadata-bounded (<= |queries| x beam rows)
-    broadcast that never leaves the executors: each hop is ONE job —
-    no per-hop driver round-trip (the r13 verdict's watch item).
+    ``protos``, the build's (cell_id, prototype_id) frame — the warm
+    registered entries memoize it with the edge table, so a probe pays
+    ZERO corpus aggregations before the walk), and every node a hop
+    reaches carries ``nbr_cell`` in from the edge row that reached it
+    — the visited frame threads (query_id, cand_id, cell, cos_raw), so
+    the per-hop cell set is a metadata-bounded (<= |queries| x beam
+    rows) broadcast that never leaves the executors: each hop is ONE
+    job — no per-hop driver round-trip (the r13 verdict's watch item).
 
     Everything semantic is shared with the in-memory walk verbatim —
-    ``_proto_seeds`` entry (one ``cell_prototypes`` pass reused for
-    the seed-cell map), per-hop greedy frontier by query similarity,
-    the family's zero-norm cosine guard, ``_visited_rank``'s final
-    exact rerank and tie-break — so the result is bit-identical to
-    ``graph_expand_topk`` over the same edge set (parity-pinned in
+    ``_proto_seeds`` entry, per-hop greedy frontier by query
+    similarity, the family's zero-norm cosine guard, ``_visited_rank``'s
+    final exact rerank and tie-break — so the result is bit-identical
+    to ``graph_expand_topk`` over the same edge set (parity-pinned in
     tests/test_graph_index.py). At 100 TB the edge table is the
     amortized artifact: built once (the one-time kNN-graph cost),
     probed per batch at IO = |frontier cells| / |cells| of the edge
     bytes per hop."""
-    from blspark.ops import local_relation
-
     vecs = _vecs(corpus, id_col, vec_col, "cand_id", "cvec", "cnorm")
     q = _vecs(queries, id_col, vec_col, "query_id", "qvec", "qnorm")
-    # |cells| rows, used twice (seed scoring + seed-cell map):
-    # materialize once so the prototype corpus aggregation runs once.
-    # ``protos`` (a pre-materialized (cell_id, prototype_id) frame)
-    # skips even that one pass — the serving-path memo device: the
-    # warm registered entries memoize it with the edge table, so a
-    # warm probe pays ZERO corpus aggregations before the walk.
-    if protos is None:
-        protos = local_relation(
-            cell_prototypes(corpus, centroids, id_col, vec_col).select(
-                "cell_id", "prototype_id"
-            ),
-            "cell_id int, prototype_id bigint",
-        )
-    seeds = _proto_seeds(
-        q, vecs, corpus, centroids, id_col, vec_col, n_seeds,
-        protos=protos,
-    )
+    seeds = _proto_seeds(q, vecs, protos, n_seeds)
     visited = seeds.join(
         F.broadcast(
             protos.select(
@@ -2668,7 +2434,7 @@ def graph_expand_topk_indexed(
             .distinct()
         )
 
-    visited = _beam_walk(
+    visited, _ = _beam_walk(
         visited,
         vecs,
         q,

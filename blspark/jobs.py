@@ -34,7 +34,7 @@ from blspark.io.readers import (
     read_padded_tsv,
 )
 from blspark.io.sinks import timestamped_name
-from blspark.queries.bls import best_years, combined_report_safe, population_stats
+from blspark.queries.bls import best_years, combined_report, population_stats
 from blspark.sync import apply_mirror_local, classify_mirror
 
 
@@ -143,7 +143,7 @@ def report_job(spark: SparkSession, data_dir: str) -> dict:
         "population_stats": population_stats(df_pop) if df_pop is not None else None,
         "best_years": best_years(df_bls) if df_bls is not None else None,
         "combined_report": (
-            combined_report_safe(df_bls, df_pop) if df_bls is not None else None
+            combined_report(df_bls, df_pop) if df_bls is not None else None
         ),
     }
     return out

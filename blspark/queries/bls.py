@@ -92,39 +92,9 @@ def best_years(bls: DataFrame) -> DataFrame:
     )
 
 
-def combined_report_safe(
-    bls: DataFrame,
-    population: DataFrame | None,
-    **kwargs,
-) -> DataFrame:
-    """Graceful-degradation wrapper (reference report_processor.py:269-281):
-    when the population side is unavailable, emit the report slice with a
-    null Population column instead of failing."""
-    from pyspark.sql import functions as F
-
-    if population is not None:
-        return combined_report(bls, population, **kwargs)
-    series_id = kwargs.get("series_id", "PRS30006032")
-    period = kwargs.get("period", "Q01")
-    return (
-        bls.filter(
-            (F.trim(F.col("series_id")) == series_id)
-            & (F.trim(F.col("period")) == period)
-        )
-        .select(
-            F.trim(F.col("series_id")).alias("series_id"),
-            F.col("year").cast("int").alias("year"),
-            F.trim(F.col("period")).alias("period"),
-            F.col("value"),
-            F.lit(None).cast("double").alias("Population"),
-        )
-        .orderBy("year")
-    )
-
-
 def combined_report(
     bls: DataFrame,
-    population: DataFrame,
+    population: DataFrame | None = None,
     series_id: str = "PRS30006032",
     period: str = "Q01",
     year_col: str = "Year",
@@ -135,7 +105,9 @@ def combined_report(
     Returns (series_id, year, period, value, Population) sorted by year.
 
     The population side is tiny (≤ tens of rows) — broadcast it so the
-    fact slice never shuffles."""
+    fact slice never shuffles. Without a population frame the slice is
+    returned with a null Population column instead of failing (the
+    reference's graceful degradation, report_processor.py:269-281)."""
     slice_df = bls.filter(
         (F.trim(F.col("series_id")) == series_id) & (F.trim(F.col("period")) == period)
     ).select(
@@ -144,6 +116,10 @@ def combined_report(
         F.trim(F.col("period")).alias("period"),
         F.col("value"),
     )
+    if population is None:
+        return slice_df.withColumn(
+            "Population", F.lit(None).cast("double")
+        ).orderBy("year")
     pop = (
         population.filter(F.col(year_col).isNotNull() & F.col(pop_col).isNotNull())
         .select(

@@ -1369,25 +1369,21 @@ def x_retrieval_graph_expand(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     cents = _det_centroids(emb)
     queries = emb.filter((F.col("vec_id") >= 10) & (F.col("vec_id") < 15))
-    # one shared assignment pass for edges + seeds (r14 — the xcell
-    # body's build-constant device applied to the plain rung)
     adj, protos = nav_graph_build(emb, cents, knn_k=_KNN_K)
     return graph_expand_topk(
         emb,
-        cents,
         queries,
+        adj,
+        protos,
         k=_GX_K,
-        knn_k=_KNN_K,
         hops=_GX_HOPS,
         beam=_GX_BEAM,
         n_seeds=_GX_SEEDS,
-        adj=adj,
-        protos=protos,
     )
 
 
 # session-keyed memo of the navigation adjacency (compact id pairs,
-# already localCheckpointed by graph_adjacency — the _WARM_KNN_EDGES
+# already localCheckpointed by nav_graph_build — the _WARM_KNN_EDGES
 # convention including dead-session eviction)
 _WARM_GX_ADJ: dict[tuple[str, str], object] = {}
 
@@ -1400,7 +1396,7 @@ _WARM_GX_ADJ: dict[tuple[str, str], object] = {}
     "adjacency — result-identical to x_retrieval_graph_expand (same "
     "oracle), the warm-variant convention applied to graph search: "
     "the first call per dataset builds and localCheckpoints the "
-    "undirected edge list (graph_adjacency); every later call pays "
+    "undirected edge list (nav_graph_build); every later call pays "
     "ONLY prototype seeding + the greedy walk + the exact rerank — "
     "the steady-state per-batch cost of graph retrieval, with index "
     "construction amortized out exactly as in x_similarity_ivfpq_warm "
@@ -1414,15 +1410,11 @@ def x_retrieval_graph_expand_warm(
     from blspark.ops import local_relation
 
     emb = load_table(spark, sf_dir, "embeddings")
-    # one centroid derivation for build AND seeding — _det_centroids
-    # is EAGER (corpus aggregation + collect at call time), so a
-    # second call would run the whole aggregation job again
-    cents = _det_centroids(emb)
 
     def build():
         # shared assignment pass + memoized |cells|-row prototype
         # frame (r14): warm calls pay zero prototype scans
-        adj, protos = nav_graph_build(emb, cents, knn_k=_KNN_K)
+        adj, protos = nav_graph_build(emb, _det_centroids(emb), knn_k=_KNN_K)
         return adj, local_relation(
             protos.select("prototype_id"), "prototype_id bigint"
         )
@@ -1431,15 +1423,13 @@ def x_retrieval_graph_expand_warm(
     queries = emb.filter((F.col("vec_id") >= 10) & (F.col("vec_id") < 15))
     return graph_expand_topk(
         emb,
-        cents,
         queries,
+        adj,
+        protos,
         k=_GX_K,
-        knn_k=_KNN_K,
         hops=_GX_HOPS,
         beam=_GX_BEAM,
         n_seeds=_GX_SEEDS,
-        adj=adj,
-        protos=protos,
     )
 
 
@@ -1504,18 +1494,23 @@ SELECT
     "(the fixed-universe x_pq_eval device).",
 )
 def x_graph_expand_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from blspark.ext.similarity import cosine_topk, graph_expand_topk
+    from blspark.ext.similarity import (
+        cosine_topk,
+        graph_expand_topk,
+        nav_graph_build,
+    )
 
     emb = load_table(spark, sf_dir, "embeddings").filter(
         F.col("vec_id") < _SQ8_EVAL_N
     )
     queries = emb.filter((F.col("vec_id") >= 10) & (F.col("vec_id") < 15))
+    adj, protos = nav_graph_build(emb, _det_centroids(emb), knn_k=_KNN_K)
     gx = graph_expand_topk(
         emb,
-        _det_centroids(emb),
         queries,
+        adj,
+        protos,
         k=_GX_K,
-        knn_k=_KNN_K,
         hops=_GX_HOPS,
         beam=_GX_BEAM,
         n_seeds=_GX_SEEDS,
@@ -1574,17 +1569,15 @@ def _xcell_gx(spark: SparkSession, sf_dir: str, eval_sample: bool):
     )
     gx = graph_expand_topk(
         emb,
-        cents,
         queries,
+        adj,
+        protos,
         k=_GX_K,
-        knn_k=_KNN_K,
         hops=_GXX_HOPS,
         beam=_GXX_BEAM,
         n_seeds=_GX_SEEDS,
-        adj=adj,
-        protos=protos,
     )
-    return emb, cents, queries, gx
+    return emb, cents, queries, protos, gx
 
 
 @register(
@@ -1605,17 +1598,17 @@ def _xcell_gx(spark: SparkSession, sf_dir: str, eval_sample: bool):
     "x_retrieval_graph_expand structurally cannot. Full hash-checked "
     "oracle: the shared beam chain with the prototype-pair edge CTE "
     "unioned into the adjacency, 10 hops unrolled. "
-    "ext/similarity.graph_adjacency_xcell / proto_cross_edges.",
+    "ext/similarity.nav_graph_build / proto_cross_edges.",
 )
 def x_retrieval_graph_expand_xcell(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    return _xcell_gx(spark, sf_dir, eval_sample=False)[3]
+    return _xcell_gx(spark, sf_dir, eval_sample=False)[4]
 
 
 # session-keyed memo of the NSW adjacency (within-cell kNN edges +
 # prototype backbone, compact id pairs, already localCheckpointed by
-# graph_adjacency_xcell — the _WARM_GX_ADJ convention including
+# nav_graph_build — the _WARM_GX_ADJ convention including
 # dead-session eviction)
 _WARM_GXX_ADJ: dict[tuple[str, str], object] = {}
 
@@ -1629,7 +1622,7 @@ _WARM_GXX_ADJ: dict[tuple[str, str], object] = {}
     "(same oracle), the warm-variant convention applied to the "
     "navigable-small-world rung: the first call per dataset builds "
     "and localCheckpoints the within-cell kNN edges + prototype "
-    "backbone (graph_adjacency_xcell); every later call pays ONLY "
+    "backbone (nav_graph_build); every later call pays ONLY "
     "prototype seeding + the deep greedy walk (hops=10, beam=20) + "
     "the exact rerank — the steady-state per-batch cost of NSW "
     "retrieval with graph construction amortized out. Attribution "
@@ -1646,9 +1639,6 @@ def x_retrieval_graph_expand_xcell_warm(
     from blspark.ops import local_relation
 
     emb = load_table(spark, sf_dir, "embeddings")
-    # one centroid derivation for build AND seeding (_det_centroids
-    # is eager — a second call re-runs the corpus aggregation)
-    cents = _det_centroids(emb)
 
     def build():
         # one shared assignment pass for edges + backbone + the
@@ -1656,7 +1646,7 @@ def x_retrieval_graph_expand_xcell_warm(
         # a fresh prototype argmin scan per call for seeding — the
         # |cells|-row local_relation amortizes it with the adjacency
         adj, protos = nav_graph_build(
-            emb, cents, knn_k=_KNN_K, m_cross=_GXX_M
+            emb, _det_centroids(emb), knn_k=_KNN_K, m_cross=_GXX_M
         )
         return adj, local_relation(
             protos.select("prototype_id"), "prototype_id bigint"
@@ -1666,15 +1656,13 @@ def x_retrieval_graph_expand_xcell_warm(
     queries = emb.filter((F.col("vec_id") >= 10) & (F.col("vec_id") < 15))
     return graph_expand_topk(
         emb,
-        cents,
         queries,
+        adj,
+        protos,
         k=_GX_K,
-        knn_k=_KNN_K,
         hops=_GXX_HOPS,
         beam=_GXX_BEAM,
         n_seeds=_GX_SEEDS,
-        adj=adj,
-        protos=protos,
     )
 
 
@@ -1757,15 +1745,15 @@ def x_graph_expand_xcell_eval(
         cosine_topk,
     )
 
-    emb, cents, queries, gx = _xcell_gx(spark, sf_dir, eval_sample=True)
+    emb, cents, queries, protos, gx = _xcell_gx(
+        spark, sf_dir, eval_sample=True
+    )
     exact = cosine_topk(emb, queries, k=_GX_K).select(
         "query_id", "neighbor_id"
     )
     vecs = _vecs(emb, "vec_id", "embedding", "cand_id", "cvec", "cnorm")
     q = _vecs(queries, "vec_id", "embedding", "query_id", "qvec", "qnorm")
-    seeds = _proto_seeds(
-        q, vecs, emb, cents, "vec_id", "embedding", _GX_SEEDS
-    )
+    seeds = _proto_seeds(q, vecs, protos, _GX_SEEDS)
     assigned = _cell_assign(
         emb, cents, "vec_id", "embedding", 1, "nid"
     ).select("nid", "cell_id")
@@ -2009,7 +1997,7 @@ FROM edges e LEFT JOIN edges m
     doc="The kNN graph over recursively REFINED cells — the semantic "
     "hot-cell escape composed end-to-end: split_oversized_cells "
     f"(max_cell={_SPLIT_MAX}) bounds expected cell size, then the ONE "
-    "shared pairing tail (_graph_edges_float — scoring, ranking, "
+    "shared pairing (_float_pairing + _cell_knn — scoring, ranking, "
     "tie-break and mutual-flag device shared verbatim with "
     "x_knn_graph) builds the exact top-3 graph within refined cells. "
     "Deliberately NOT result-identical to x_knn_graph: a split "

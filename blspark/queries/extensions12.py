@@ -366,8 +366,8 @@ _GXIDX_TABLES: dict[tuple[str, str], tuple[str, ...]] = {}
 
 
 def graph_edge_table(spark: SparkSession, sf_dir: str) -> str:
-    """The NSW navigation adjacency (within-cell kNN edges + prototype
-    backbone, ``graph_adjacency_xcell``) written ONCE as a warehouse
+    """The NSW navigation edges (within-cell kNN edges + prototype
+    backbone, ``graph_adjacency``) written ONCE as a warehouse
     table PARTITIONED by the source node's IVF cell — the storage-
     layout lever applied to graph retrieval's build artifact, closing
     the gap with the IVF family (whose index has had the persisted
@@ -381,7 +381,11 @@ def graph_edge_table(spark: SparkSession, sf_dir: str) -> str:
     memo/pid-name/GC machinery as every layout demo
     (``_layout_tables``); one file per partition (repartition on the
     partition column first, gotcha 34)."""
-    from blspark.ext.similarity import assign_corpus, graph_adjacency_xcell
+    from blspark.ext.similarity import (
+        _undirect,
+        assign_corpus,
+        graph_adjacency,
+    )
 
     def build(it):
         emb = load_table(spark, sf_dir, "embeddings")
@@ -401,22 +405,18 @@ def graph_edge_table(spark: SparkSession, sf_dir: str) -> str:
         # memoized frame into the backbone so its argmax never re-runs.
         protos = graph_index_protos(spark, sf_dir, emb, cents,
                                     assigned=assigned)
-        # checkpoint=False: the adjacency is consumed exactly once by
-        # the table write below — materializing it first just runs a
-        # second job over the same edges. dedup=False: the undirected
-        # distinct is deferred to AFTER the repartition on src_cell —
-        # (cand_id, nbr) functionally determines src_cell, so the
-        # write's own shuffle already clusters the duplicate key and
-        # the distinct runs partition-local (one exchange total, r15).
-        # with_cells=True (r16): endpoint cells ride the edges from
-        # construction (the kNN self-join's own cell key; prototype
-        # cells from the metadata protos frame), so the two shuffle
-        # joins of the |corpus| x k edge list against the node->cell
-        # map that used to follow are gone — the write's repartition
-        # is the build's only edge-list exchange.
-        adj = graph_adjacency_xcell(
-            emb, cents, knn_k=_KNN_K, m_cross=_GXX_M, assigned=assigned,
-            checkpoint=False, protos=protos, dedup=False, with_cells=True,
+        # The navigation core un-materialized: the edges are consumed
+        # exactly once by the table write below, so no checkpoint. The
+        # undirected distinct is deferred to AFTER the repartition on
+        # src_cell — (cand_id, nbr) functionally determines src_cell,
+        # so the write's own shuffle already clusters the duplicate key
+        # and the distinct runs partition-local (one exchange total,
+        # r15). Endpoint cells ride the edges from construction (r16),
+        # so no join of the |corpus| x k edge list against the
+        # node->cell map follows — the write's repartition is the
+        # build's only edge-list exchange.
+        adj = _undirect(
+            graph_adjacency(assigned, protos, knn_k=_KNN_K, m_cross=_GXX_M)
         )
         edges = adj.select(
             F.col("cand_id").alias("node"), "nbr", "nbr_cell", "src_cell"
@@ -477,19 +477,17 @@ def _indexed_xcell_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     it = graph_edge_table(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
-    cents = _det_centroids(emb)
     queries = emb.filter((F.col("vec_id") >= 10) & (F.col("vec_id") < 15))
     return graph_expand_topk_indexed(
         spark,
         it,
         emb,
-        cents,
         queries,
+        graph_index_protos(spark, sf_dir, emb, _det_centroids(emb)),
         k=_GX_K,
         hops=_GXX_HOPS,
         beam=_GXX_BEAM,
         n_seeds=_GX_SEEDS,
-        protos=graph_index_protos(spark, sf_dir, emb, cents),
     )
 
 
@@ -593,16 +591,14 @@ def x_retrieval_graph_filtered(
     )
     return graph_expand_topk(
         emb,
-        cents,
         queries,
+        adj,
+        protos,
         k=_GX_K,
-        knn_k=_KNN_K,
         hops=_GXX_HOPS,
         beam=_GXX_BEAM,
         n_seeds=_GX_SEEDS,
-        adj=adj,
         allowed=allowed,
-        protos=protos,
     )
 
 
@@ -693,30 +689,26 @@ SELECT
 def x_graph_filtered_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from blspark.ext.similarity import (
         cosine_topk,
-        graph_adjacency_xcell,
         graph_expand_topk,
+        nav_graph_build,
     )
 
     emb = load_table(spark, sf_dir, "embeddings").filter(
         F.col("vec_id") < _SQ8_EVAL_N
     )
-    cents = _det_centroids(emb)
     queries = emb.filter((F.col("vec_id") >= 10) & (F.col("vec_id") < 15))
-    adj = graph_adjacency_xcell(emb, cents, knn_k=_KNN_K, m_cross=_GXX_M)
+    adj, protos = nav_graph_build(
+        emb, _det_centroids(emb), knn_k=_KNN_K, m_cross=_GXX_M
+    )
     allowed = emb.filter(F.col("label") < _FILTER_MAX_LABEL).select(
         F.col("vec_id").alias("cand_id")
     )
     allowed_universe = emb.filter(F.col("label") < _FILTER_MAX_LABEL)
-    pre = graph_expand_topk(
-        emb, cents, queries,
-        k=_GX_K, knn_k=_KNN_K, hops=_GXX_HOPS, beam=_GXX_BEAM,
-        n_seeds=_GX_SEEDS, adj=adj, allowed=allowed,
+    walk = dict(k=_GX_K, hops=_GXX_HOPS, beam=_GXX_BEAM, n_seeds=_GX_SEEDS)
+    pre = graph_expand_topk(emb, queries, adj, protos, allowed=allowed, **walk)
+    post = graph_expand_topk(emb, queries, adj, protos, **walk).join(
+        allowed, F.col("neighbor_id") == F.col("cand_id"), "semi"
     )
-    post = graph_expand_topk(
-        emb, cents, queries,
-        k=_GX_K, knn_k=_KNN_K, hops=_GXX_HOPS, beam=_GXX_BEAM,
-        n_seeds=_GX_SEEDS, adj=adj,
-    ).join(allowed, F.col("neighbor_id") == F.col("cand_id"), "semi")
     exact = cosine_topk(allowed_universe, queries, k=_GX_K).select(
         "query_id", "neighbor_id"
     )

@@ -370,27 +370,23 @@ def _adaptive_gx(spark: SparkSession, sf_dir: str, eval_sample: bool):
     emb = load_table(spark, sf_dir, "embeddings")
     if eval_sample:
         emb = emb.filter(F.col("vec_id") < _SQ8_EVAL_N)
-    cents = _det_centroids(emb)
     queries = emb.filter((F.col("vec_id") >= 10) & (F.col("vec_id") < 15))
-    # one shared assignment pass for edges + backbone + seeds (r14)
     adj, protos = nav_graph_build(
-        emb, cents, knn_k=_KNN_K, m_cross=_GXX_M
+        emb, _det_centroids(emb), knn_k=_KNN_K, m_cross=_GXX_M
     )
     gx, activity = graph_expand_topk(
         emb,
-        cents,
         queries,
+        adj,
+        protos,
         k=_GX_K,
-        knn_k=_KNN_K,
         hops=_GXX_HOPS,
         beam=_GXX_BEAM,
         n_seeds=_GX_SEEDS,
-        adj=adj,
         early_exit_k=_GX_K,
         with_activity=True,
-        protos=protos,
     )
-    return emb, cents, queries, adj, gx, activity
+    return emb, queries, adj, protos, gx, activity
 
 
 @register(
@@ -520,19 +516,18 @@ SELECT
 def x_graph_adaptive_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from blspark.ext.similarity import cosine_topk, graph_expand_topk
 
-    emb, cents, queries, adj, gx, activity = _adaptive_gx(
+    emb, queries, adj, protos, gx, activity = _adaptive_gx(
         spark, sf_dir, eval_sample=True
     )
     full, factivity = graph_expand_topk(
         emb,
-        cents,
         queries,
+        adj,
+        protos,
         k=_GX_K,
-        knn_k=_KNN_K,
         hops=_GXX_HOPS,
         beam=_GXX_BEAM,
         n_seeds=_GX_SEEDS,
-        adj=adj,
         with_activity=True,
     )
     exact = cosine_topk(emb, queries, k=_GX_K).select(
@@ -814,17 +809,15 @@ def x_index_persist_graph_adaptive(
 
     it = graph_edge_table(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
-    cents = _det_centroids(emb)
     queries = emb.filter((F.col("vec_id") >= 10) & (F.col("vec_id") < 15))
     return graph_expand_topk_indexed(
         spark,
         it,
         emb,
-        cents,
         queries,
+        graph_index_protos(spark, sf_dir, emb, _det_centroids(emb)),
         k=_GX_K,
         hops=_GXX_HOPS,
-        protos=graph_index_protos(spark, sf_dir, emb, cents),
         beam=_GXX_BEAM,
         n_seeds=_GX_SEEDS,
         early_exit_k=_GX_K,

@@ -41,9 +41,20 @@ _COS = (
 )
 
 
+def _mmr_cos(a: str, b: str, zero: str) -> str:
+    """``_COS`` behind x_mmr_rerank's zero-norm guards: ``zero`` is
+    the score of a pair with a zero vector ('-infinity' for relevance,
+    0 for the pairwise similarity)."""
+    nrm = "sqrt(list_sum(list_transform({v}, x -> x * x)))"
+    return (
+        f"CASE WHEN {nrm.format(v=a)} * {nrm.format(v=b)} > 0 "
+        f"THEN {_COS.format(a=a, b=b)} ELSE {zero} END"
+    )
+
+
 def _mmr_oracle() -> str:
-    cos_cq = _COS.format(a="c.v", b="q.qv")
-    cos_ab = _COS.format(a="a.v", b="b.v")
+    cos_cq = _mmr_cos("c.v", "q.qv", "'-infinity'::DOUBLE")
+    cos_ab = _mmr_cos("a.v", "b.v", "0.0::DOUBLE")
     steps = []
     prev_sel = "sel1"
     for k in range(2, _MMR_K + 1):
@@ -124,7 +135,7 @@ def _mmr_oracle() -> str:
 def x_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
-    from blspark.ext.similarity import _dot, _norm, with_double_vec
+    from blspark.ext.similarity import _cos, _dot, _norm, with_double_vec
 
     emb = load_table(spark, sf_dir, "embeddings")
     vecs = with_double_vec(emb, "embedding").select(
@@ -140,9 +151,7 @@ def x_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         "id",
         "vec",
         "nrm",
-        (_dot(F.col("vec"), F.col("qv")) / (F.col("nrm") * F.col("qn"))).alias(
-            "rel"
-        ),
+        _cos("vec", "qv", "nrm", "qn").alias("rel"),
     )
     w = Window.partitionBy("qid").orderBy(F.desc("rel"), F.asc("id"))
     cands = (
@@ -156,7 +165,13 @@ def x_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                      F.col("id").alias("ib"), F.col("vec").alias("vb"),
                      F.col("nrm").alias("nb"))
     # LEFT join: a pool-of-one candidate keeps a (ib=null) row so its
-    # query still reaches the grouped greedy instead of vanishing
+    # query still reaches the grouped greedy instead of vanishing.
+    # The pairwise score is guarded to 0, not _cos's -inf: it feeds
+    # max() in the greedy, where a -inf similarity would make the MMR
+    # score rel/2 - (-inf)/2 = +inf and pick a zero vector first. A
+    # zero vector has no direction, so it neither repels nor attracts;
+    # its own relevance is -inf, which ranks it last.
+    den = F.col("na") * F.col("nb")
     pairs = a.join(
         b,
         (F.col("qid") == F.col("qid2")) & (F.col("ia") != F.col("ib")),
@@ -166,9 +181,9 @@ def x_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ia",
         "ib",
         "rel_a",
-        (_dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))).alias(
-            "s"
-        ),
+        F.when(den > 0, _dot(F.col("va"), F.col("vb")) / den)
+        .otherwise(0.0)
+        .alias("s"),
     )
 
     out_schema = (

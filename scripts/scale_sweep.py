@@ -879,7 +879,11 @@ def bench_graph_adaptive(spark, factor: int) -> float:
     scaling as bench_knn_graph); the walk adds hops x (beam x degree)
     per query with per-query early termination — the hop loop's cost
     must stay bounded by the budget ceiling, never corpus size."""
-    from blspark.ext.similarity import graph_expand_topk, label_centroids
+    from blspark.ext.similarity import (
+        graph_expand_topk,
+        label_centroids,
+        nav_graph_build,
+    )
 
     emb = amplify(
         load_table(spark, SF_DIR, "embeddings"), "vec_id", factor, 10_000_000
@@ -892,9 +896,10 @@ def bench_graph_adaptive(spark, factor: int) -> float:
     )
     queries = vecs.filter(F.col("vec_id") < 5)
     t0 = time.perf_counter()
+    adj, protos = nav_graph_build(vecs, cents, vec_col="vec", knn_k=3)
     n = graph_expand_topk(
-        vecs, cents, queries, vec_col="vec",
-        k=5, knn_k=3, hops=10, beam=6, n_seeds=3, early_exit_k=5,
+        vecs, queries, adj, protos, vec_col="vec",
+        k=5, hops=10, beam=6, n_seeds=3, early_exit_k=5,
     ).count()
     dt = time.perf_counter() - t0
     print(f"  graph_adaptive x{factor}: {dt:.2f}s ({n} rows)", flush=True)
@@ -916,7 +921,7 @@ def bench_graph_adaptive_nlist(spark, factor: int) -> float:
     budget-bounded. The ratio column this emits is the evidence the
     r14 verdict asked for — the fixed-nlist super-linear point
     dropping toward the N^1.5 envelope."""
-    from blspark.ext.similarity import graph_expand_topk
+    from blspark.ext.similarity import graph_expand_topk, nav_graph_build
 
     emb, cents = _amplify_cells_sqrt(spark, factor)
     vecs = emb.select(
@@ -924,9 +929,10 @@ def bench_graph_adaptive_nlist(spark, factor: int) -> float:
     )
     queries = vecs.filter(F.col("vec_id") < 5)
     t0 = time.perf_counter()
+    adj, protos = nav_graph_build(vecs, cents, vec_col="vec", knn_k=3)
     n = graph_expand_topk(
-        vecs, cents, queries, vec_col="vec",
-        k=5, knn_k=3, hops=10, beam=6, n_seeds=3, early_exit_k=5,
+        vecs, queries, adj, protos, vec_col="vec",
+        k=5, hops=10, beam=6, n_seeds=3, early_exit_k=5,
     ).count()
     dt = time.perf_counter() - t0
     print(f"  graph_adaptive_nlist x{factor}: {dt:.2f}s ({n} rows)", flush=True)

@@ -127,13 +127,11 @@ def test_cleaning_trim_and_coerce(spark):
 
 
 def test_q3_fallback_without_population(spark):
-    from blspark.queries.bls import combined_report_safe
-
     bls = spark.createDataFrame(
         [("PRS30006032", 2013, "Q01", 2.0), ("PRS30006032", 2014, "Q01", 3.0)],
         "series_id string, year int, period string, value double",
     )
-    out = combined_report_safe(bls, None).collect()
+    out = combined_report(bls, None).collect()
     assert [r["year"] for r in out] == [2013, 2014]
     assert all(r["Population"] is None for r in out)
     assert out[0]["value"] == 2.0

@@ -7,7 +7,8 @@ the DuckDB oracle with the exact-``repr`` canon of scripts/diffcheck.py
 the similarity rungs that run through the shared route, score, rank
 and rerank stages, the two cosine queries scored through the shared
 zero-norm guard, the connected-components callers over doc ids and
-over names, and the paper's report (``report_job``) in both of its
+over names, the graph beam walks over a navigation graph built once
+(within-cell, cross-cell, filtered), and the paper's report (``report_job``) in both of its
 plans, against rows computed in plain Python."""
 
 from __future__ import annotations
@@ -37,6 +38,9 @@ QUERIES = [
     "x_dedup_semantic",
     "x_dedup_components",
     "x_entity_resolution",
+    "x_retrieval_graph_expand",
+    "x_retrieval_graph_expand_xcell",
+    "x_graph_filtered_eval",
 ]
 
 

@@ -217,6 +217,37 @@ def test_retrieval_hybrid_zero_vector_under_ansi(spark, tmp_path):
     assert got[1][3] == float("-inf")
 
 
+def test_mmr_rerank_zero_vector_under_ansi(spark, tmp_path):
+    """x_mmr_rerank scores relevance through the shared zero-norm guard
+    and guards its pairwise similarity to 0: under ANSI mode a zero
+    candidate does not abort the query with DIVIDE_BY_ZERO, its
+    relevance is -inf and it is picked last by every query, and the
+    finite picks keep their exact cosine relevance."""
+    import math
+
+    vecs = {0: [1.0, 0.0, 0.0, 0.0], 1: [0.0, 1.0, 0.0, 0.0],
+            2: [1.0, 1.0, 0.0, 0.0], 3: [0.0, 0.0, 0.0, 0.0],
+            4: [1.0, 0.5, 0.0, 0.0], 5: [0.0, 0.0, 1.0, 0.5]}
+    _write_embeddings(tmp_path, vecs)
+    rows = _collect_under_ansi(spark, "x_mmr_rerank", tmp_path)
+    by_query = {}
+    for r in rows:
+        by_query.setdefault(r["query_id"], []).append(r)
+    assert sorted(by_query) == [0, 1, 2]
+    for q, picks in by_query.items():
+        picks.sort(key=lambda r: r["rank"])
+        assert [r["rank"] for r in picks] == [1, 2, 3, 4, 5]
+        assert picks[-1]["vec_id"] == 3, picks
+        assert picks[-1]["relevance"] == float("-inf")
+        assert picks[-1]["mmr_score"] == float("-inf")
+        for r in picks[:-1]:
+            assert math.isclose(
+                r["relevance"], round(_cosine(vecs[q], vecs[r["vec_id"]]), 6),
+                rel_tol=1e-12,
+            ), r
+            assert math.isfinite(r["mmr_score"]), r
+
+
 def test_empty_corpus_text_ops(spark):
     from blspark.ext.text import fingerprint, lang_id, quality_score, token_stats
 

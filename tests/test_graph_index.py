@@ -31,30 +31,34 @@ def _keyed(rows):
 def test_indexed_walk_parity_with_in_memory(spark):
     """graph_expand_topk_indexed over the persisted edge table must be
     bit-identical to graph_expand_topk over the in-memory xcell
-    adjacency — same edge set, same seeds, same greedy rule, same
+    adjacency (nav_graph_build) — same edge set, same seeds, same
+    greedy rule, same
     rerank — at a walk budget DIFFERENT from the registered one (the
     oracle already pins hops=10/beam=20; this pins the library pair
     at another operating point, so the parity is structural, not one
     tuned configuration)."""
     from blspark.ext.similarity import (
-        graph_adjacency_xcell,
         graph_expand_topk,
         graph_expand_topk_indexed,
+        nav_graph_build,
     )
     from blspark.queries.extensions10 import _GXX_M, _KNN_K
-    from blspark.queries.extensions12 import graph_edge_table
+    from blspark.queries.extensions12 import (
+        graph_edge_table,
+        graph_index_protos,
+    )
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
     cents = _det_centroids(emb)
     queries = emb.filter((F.col("vec_id") >= 10) & (F.col("vec_id") < 15))
-    adj = graph_adjacency_xcell(emb, cents, knn_k=_KNN_K, m_cross=_GXX_M)
+    adj, protos = nav_graph_build(emb, cents, knn_k=_KNN_K, m_cross=_GXX_M)
     mem = graph_expand_topk(
-        emb, cents, queries, k=5, knn_k=_KNN_K,
-        hops=4, beam=6, n_seeds=3, adj=adj,
+        emb, queries, adj, protos, k=5, hops=4, beam=6, n_seeds=3,
     ).collect()
     it = graph_edge_table(spark, SF_SMOKE)
     idx = graph_expand_topk_indexed(
-        spark, it, emb, cents, queries, k=5, hops=4, beam=6, n_seeds=3,
+        spark, it, emb, queries, graph_index_protos(spark, SF_SMOKE, emb, cents),
+        k=5, hops=4, beam=6, n_seeds=3,
     ).collect()
     assert _keyed(mem) == _keyed(idx)
     assert {(r["query_id"], r["rank"]): r["cosine"] for r in mem} == {
@@ -428,34 +432,50 @@ def test_snapshot_rollback_manifest_and_phases(spark):
 
 
 def test_assigned_threading_bit_identical(spark):
-    """The shared-assignment forms (assign_corpus threaded through
-    knn_graph / cell_prototypes / proto_cross_edges, the r14
-    build-constant device) must be BIT-IDENTICAL to the
-    self-contained forms — keep_sim only appends a column, so the
-    cell assignment, prototype argmax and edge sets cannot differ."""
+    """The shared-pass build (one checkpointed assign_corpus pass
+    feeding cell_prototypes and the navigation core graph_adjacency,
+    the r14 build-constant device) must be BIT-IDENTICAL to the
+    self-contained forms: keep_sim only appends a column, so the cell
+    assignment, prototype argmax and within-cell edge set cannot
+    differ. The core's within-cell edges equal knn_graph's, every
+    endpoint cell it carries equals the self-contained assignment's
+    (the cell-map join it replaces), and the backbone links
+    prototypes of distinct cells only."""
     from blspark.ext.similarity import (
+        _cell_assign,
         assign_corpus,
         cell_prototypes,
+        graph_adjacency,
         knn_graph,
-        proto_cross_edges,
     )
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
     cents = _det_centroids(emb)
     assigned = assign_corpus(emb, cents).localCheckpoint(eager=True)
+    protos = cell_prototypes(emb, cents, assigned=assigned)
 
     def rows(df):
         return sorted(map(tuple, df.collect()))
 
-    assert rows(
-        knn_graph(emb, cents, k=3, mutual=False, assigned=assigned)
-    ) == rows(knn_graph(emb, cents, k=3, mutual=False))
-    assert rows(
-        cell_prototypes(emb, cents, assigned=assigned)
-    ) == rows(cell_prototypes(emb, cents))
-    assert rows(
-        proto_cross_edges(emb, cents, m_cross=2, assigned=assigned)
-    ) == rows(proto_cross_edges(emb, cents, m_cross=2))
+    assert rows(protos) == rows(cell_prototypes(emb, cents))
+    within = graph_adjacency(assigned, protos, knn_k=3)
+    assert rows(within.select("src_id", "dst_id")) == rows(
+        knn_graph(emb, cents, k=3, mutual=False).select("src_id", "dst_id")
+    )
+    cell_of = dict(
+        _cell_assign(emb, cents, "vec_id", "embedding", 1, "nid")
+        .select("nid", "cell_id")
+        .collect()
+    )
+    nsw = rows(graph_adjacency(assigned, protos, knn_k=3, m_cross=2))
+    assert len(nsw) > len(rows(within))
+    for src, dst, src_cell, dst_cell in nsw:
+        assert (src_cell, dst_cell) == (cell_of[src], cell_of[dst])
+    proto_ids = {r["prototype_id"] for r in protos.collect()}
+    backbone = set(nsw) - set(rows(within))
+    assert backbone
+    for src, dst, src_cell, dst_cell in backbone:
+        assert src in proto_ids and dst in proto_ids and src_cell != dst_cell
 
 
 def test_real_walk_frontier_lineage_is_dpp_pruned(spark):
@@ -503,10 +523,7 @@ def test_real_walk_frontier_lineage_is_dpp_pruned(spark):
         F.col("vec").alias("qvec"),
         _norm(F.col("vec")).alias("qnorm"),
     )
-    seeds = _proto_seeds(
-        q, vecs, emb, cents, "vec_id", "embedding", _GX_SEEDS,
-        protos=protos,
-    )
+    seeds = _proto_seeds(q, vecs, protos, _GX_SEEDS)
     visited = seeds.join(
         F.broadcast(
             protos.select(

@@ -379,14 +379,15 @@ def test_graph_expand_finds_true_neighbors_in_cell(spark):
     within-cell ranking: seeds cover both prototypes, one hop reaches
     every cell member (k covers the cells), and the rerank is exact —
     so top-k equals brute force within the query's cell."""
-    from blspark.ext.similarity import graph_expand_topk
+    from blspark.ext.similarity import graph_expand_topk, nav_graph_build
 
     emb, cents = _tiny(spark)
     queries = emb.filter(F.col("vec_id") == 0)
+    adj, protos = nav_graph_build(emb, cents, knn_k=2)
     out = [
         (r["neighbor_id"], r["rank"])
         for r in graph_expand_topk(
-            emb, cents, queries, k=2, knn_k=2, hops=2, beam=2, n_seeds=2
+            emb, queries, adj, protos, k=2, hops=2, beam=2, n_seeds=2
         )
         .orderBy("rank")
         .collect()
@@ -397,16 +398,20 @@ def test_graph_expand_finds_true_neighbors_in_cell(spark):
 
 
 def test_graph_expand_no_self_and_k_bound(spark):
-    from blspark.ext.similarity import graph_expand_topk
-    from blspark.ext.similarity import label_centroids
+    from blspark.ext.similarity import (
+        graph_expand_topk,
+        label_centroids,
+        nav_graph_build,
+    )
 
     emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
     cents = label_centroids(emb).withColumn(
         "cell_id", F.col("cell_id").cast("int")
     )
     queries = emb.filter(F.col("vec_id") < 5)
+    adj, protos = nav_graph_build(emb, cents, knn_k=3)
     rows = graph_expand_topk(
-        emb, cents, queries, k=5, knn_k=3, hops=3, beam=3, n_seeds=2
+        emb, queries, adj, protos, k=5, hops=3, beam=3, n_seeds=2
     ).collect()
     per_q = {}
     for r in rows:
@@ -418,7 +423,7 @@ def test_graph_expand_no_self_and_k_bound(spark):
 
 
 # ---------------------------------------------------------------------------
-# Cross-cell long-range edges (proto_cross_edges / graph_adjacency_xcell)
+# Cross-cell long-range edges (proto_cross_edges, nav_graph_build m_cross)
 # ---------------------------------------------------------------------------
 
 
@@ -426,16 +431,22 @@ def test_proto_cross_edges_tiny_connects_prototypes(spark):
     """On the two-cell frame each cell's prototype links to the OTHER
     cell's prototype (m_cross=1, only one other cell exists), and the
     endpoints really are the per-cell most-central members."""
-    from blspark.ext.similarity import cell_prototypes, proto_cross_edges
+    from blspark.ext.similarity import (
+        assign_corpus,
+        cell_prototypes,
+        proto_cross_edges,
+    )
 
     emb, cents = _tiny(spark)
     protos = {
         r["cell_id"]: r["prototype_id"]
         for r in cell_prototypes(emb, cents).collect()
     }
+    assigned = assign_corpus(emb, cents).localCheckpoint(eager=True)
+    shared = cell_prototypes(emb, cents, assigned=assigned)
     edges = {
         (r["src_id"], r["dst_id"])
-        for r in proto_cross_edges(emb, cents, m_cross=1).collect()
+        for r in proto_cross_edges(assigned, shared, m_cross=1).collect()
     }
     assert edges == {
         (protos[0], protos[1]),
@@ -448,9 +459,8 @@ def test_xcell_adjacency_superset_and_symmetric(spark):
     symmetric, and its EXTRA edges connect prototypes only."""
     from blspark.ext.similarity import (
         cell_prototypes,
-        graph_adjacency,
-        graph_adjacency_xcell,
         label_centroids,
+        nav_graph_build,
     )
 
     emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
@@ -459,13 +469,11 @@ def test_xcell_adjacency_superset_and_symmetric(spark):
     )
     within = {
         (r["cand_id"], r["nbr"])
-        for r in graph_adjacency(emb, cents, knn_k=3).collect()
+        for r in nav_graph_build(emb, cents, knn_k=3)[0].collect()
     }
     xcell = {
         (r["cand_id"], r["nbr"])
-        for r in graph_adjacency_xcell(
-            emb, cents, knn_k=3, m_cross=2
-        ).collect()
+        for r in nav_graph_build(emb, cents, knn_k=3, m_cross=2)[0].collect()
     }
     assert within <= xcell
     assert {(b, a) for a, b in xcell} == xcell
@@ -485,9 +493,8 @@ def test_xcell_recall_beats_within_at_same_budget(spark):
     sf0.01, 3200 vs 2000 bp at sf0.1 — both SFs hold, gotcha 17)."""
     from blspark.ext.similarity import (
         cosine_topk,
-        graph_adjacency,
-        graph_adjacency_xcell,
         graph_expand_topk,
+        nav_graph_build,
     )
     from blspark.queries.extensions10 import _det_centroids
     from tests.conftest import SF_ORACLE
@@ -505,15 +512,13 @@ def test_xcell_recall_beats_within_at_same_budget(spark):
         .collect()
     }
     tps = {}
-    for tag, adj in (
-        ("within", graph_adjacency(emb, cents, knn_k=3)),
-        ("xcell", graph_adjacency_xcell(emb, cents, knn_k=3, m_cross=3)),
-    ):
+    for tag, m_cross in (("within", 0), ("xcell", 3)):
+        adj, protos = nav_graph_build(emb, cents, knn_k=3, m_cross=m_cross)
         got = {
             (r["query_id"], r["neighbor_id"])
             for r in graph_expand_topk(
-                emb, cents, queries,
-                k=5, knn_k=3, hops=10, beam=20, n_seeds=3, adj=adj,
+                emb, queries, adj, protos,
+                k=5, hops=10, beam=20, n_seeds=3,
             ).select("query_id", "neighbor_id").collect()
         }
         tps[tag] = len(got & exact)
@@ -569,7 +574,7 @@ def test_split_preserves_membership_and_bounds(spark):
 
 
 def test_knn_graph_split_edges_stay_within_refined_cells(spark):
-    """knn_graph_split == _graph_edges_float over the refined
+    """knn_graph_split == the float pairing over the refined
     assignment: every edge joins two members of the SAME refined
     cell, and for an unsplit cell its edges match plain knn_graph's
     restricted to that cell."""
@@ -660,21 +665,21 @@ def test_adaptive_walk_prefix_containment_and_budget(spark):
     expansion ledger is smaller-or-equal hop by hop, and a query's
     activity stops at its convergence hop and never resumes."""
     from blspark.ext.similarity import (
-        graph_adjacency_xcell,
         graph_expand_topk,
         label_centroids,
+        nav_graph_build,
     )
 
     emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
     cents = label_centroids(emb)
     queries = emb.filter(F.col("vec_id") < 3)
-    adj = graph_adjacency_xcell(emb, cents, knn_k=3, m_cross=2)
-    kw = dict(k=4, knn_k=3, hops=6, beam=4, n_seeds=2, adj=adj)
+    adj, protos = nav_graph_build(emb, cents, knn_k=3, m_cross=2)
+    kw = dict(k=4, hops=6, beam=4, n_seeds=2)
     fixed, fact = graph_expand_topk(
-        emb, cents, queries, with_activity=True, **kw
+        emb, queries, adj, protos, with_activity=True, **kw
     )
     adapt, aact = graph_expand_topk(
-        emb, cents, queries, early_exit_k=4, with_activity=True, **kw
+        emb, queries, adj, protos, early_exit_k=4, with_activity=True, **kw
     )
     arows = aact.collect()
     frows = fact.collect()
@@ -699,9 +704,9 @@ def test_adaptive_walk_noop_when_never_converging(spark):
     adds 'improving' candidates (kth best undefined = unbounded), so
     the adaptive walk IS the fixed walk — results bit-identical."""
     from blspark.ext.similarity import (
-        graph_adjacency_xcell,
         graph_expand_topk,
         label_centroids,
+        nav_graph_build,
     )
 
     emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet").filter(
@@ -709,11 +714,11 @@ def test_adaptive_walk_noop_when_never_converging(spark):
     )
     cents = label_centroids(emb)
     queries = emb.filter(F.col("vec_id") < 2)
-    adj = graph_adjacency_xcell(emb, cents, knn_k=3, m_cross=2)
-    kw = dict(k=3, knn_k=3, hops=3, beam=3, n_seeds=2, adj=adj)
-    fixed = graph_expand_topk(emb, cents, queries, **kw)
+    adj, protos = nav_graph_build(emb, cents, knn_k=3, m_cross=2)
+    kw = dict(k=3, hops=3, beam=3, n_seeds=2)
+    fixed = graph_expand_topk(emb, queries, adj, protos, **kw)
     adapt = graph_expand_topk(
-        emb, cents, queries, early_exit_k=10_000, **kw
+        emb, queries, adj, protos, early_exit_k=10_000, **kw
     )
     assert sorted(map(tuple, fixed.collect())) == sorted(
         map(tuple, adapt.collect())

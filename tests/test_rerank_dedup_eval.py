@@ -219,14 +219,17 @@ def test_dedup_eval_pipeline_decisions_subset_of_truth(spark):
 
 
 def test_with_cells_adjacency_equals_cellmap_join(spark):
-    """The r16 cells-on-edges build shape (cells ride the edges from
-    construction) must produce EXACTLY the row set of the old shape
-    (undirected adjacency then two joins against the node->cell map) —
-    the equality the edge-table A/B checked once, pinned as CI."""
+    """The navigation core's cells-on-edges shape (cells ride the
+    edges from construction: the persisted edge-table build) must
+    produce EXACTLY the row set of the cell-map shape (the walk's
+    undirected id adjacency, then two joins against the node->cell
+    map) — the equality the edge-table A/B checked once, pinned as
+    CI."""
     from blspark.ext.similarity import (
+        _undirect,
         assign_corpus,
         cell_prototypes,
-        graph_adjacency_xcell,
+        graph_adjacency,
     )
 
     emb = _fixture(spark, n=40, dim=6)
@@ -241,14 +244,9 @@ def test_with_cells_adjacency_equals_cellmap_join(spark):
     protos = cell_prototypes(emb, cents, assigned=assigned).select(
         "cell_id", "prototype_id"
     )
-    new = graph_adjacency_xcell(
-        emb, cents, knn_k=3, m_cross=2, assigned=assigned,
-        checkpoint=False, protos=protos, dedup=True, with_cells=True,
-    )
-    old_adj = graph_adjacency_xcell(
-        emb, cents, knn_k=3, m_cross=2, assigned=assigned,
-        checkpoint=False, protos=protos, dedup=True,
-    )
+    edges = graph_adjacency(assigned, protos, knn_k=3, m_cross=2)
+    new = _undirect(edges).distinct()
+    old_adj = _undirect(edges.select("src_id", "dst_id")).distinct()
     cell_map = assigned.select(F.col("aid").alias("nid"), "cell_id")
     old = (
         old_adj.join(
