@@ -1,8 +1,27 @@
-"""Deduplication operators: exact, MinHash+LSH, SimHash, n-gram Jaccard.
+"""Deduplication operators: exact, MinHash+LSH, SimHash, n-gram Jaccard
+and containment, prefix-filtered Jaccard joins, connected components.
 
 All deterministic and engine-portable by construction: hashing uses MD5
 (identical everywhere) rather than engine-private hash functions, so the
 DuckDB oracle can mirror every step.
+
+The set-similarity joins are candidates -> verify over the shingle sets
+``(id, shset)`` of ``shingle_sets``, built from four stages, each
+written once:
+- Overlap (``_overlap``): the inverted-index self-join on shingle with
+  id_a < id_b plus both sizes -> (id_a, id_b, n_a, n_b, n_common).
+  ``jaccard_pairs`` and ``containment_pairs`` read it (exact, full
+  index); at scale ``containment_pairs`` drops ultra-frequent shingles
+  before the join, exposed via ``max_doc_freq``.
+- Prefix (``_prefix_table`` + ``prefix_candidates``): each document's
+  rarest-first prefix, one candidate join with the integer length
+  filter. Self form (id_a < id_b inside the join) and base form
+  (``base=``: arrivals against a corpus under its frozen token order).
+- Verify (``_set_verify``): candidate pairs joined to both shingle sets,
+  n_common = the size of the arrays' intersection, map-side. The prefix join and
+  ``lsh_verified_candidates`` read it.
+- Bucket (``_bucket_pairs``): one bucket self-join (band or block key,
+  id_a < id_b) for ``lsh_candidate_pairs`` and ``simhash_hamming_pairs``.
 
 Scale design (100 TB corpora):
 - exact dedup: one hash-aggregate shuffle on the content digest; the
@@ -12,9 +31,9 @@ Scale design (100 TB corpora):
   controlled by band width (wider bands -> fewer, higher-precision
   candidates). Hot buckets are bounded because a full band match already
   implies high similarity; AQE skew-join handles stragglers.
-- n-gram Jaccard: inverted-index self-join on shingle; at scale, drop
-  ultra-frequent shingles (document-frequency cap) before the join —
-  exposed via ``max_doc_freq``.
+- prefix join: the self-join runs on the prefix tables only, so the
+  candidate volume is the PPJoin bound, not the full index's
+  sum-of-df^2.
 """
 
 from __future__ import annotations
@@ -49,7 +68,7 @@ def shingle_sets(
     oracle-portable).
 
     The set form lets consumers that need whole-document set operations
-    (exact Jaccard verification via ``array_intersect``) skip the
+    (exact Jaccard verification by array intersection) skip the
     explode/re-aggregate round trip entirely."""
     # Tokenize into a real column first: referencing `split(text)` from
     # inside the shingle lambda would re-split the document for every
@@ -89,9 +108,7 @@ def word_shingles(
 ) -> DataFrame:
     """Distinct n-word shingles per document, exploded: (id, shingle).
     See ``shingle_sets`` for the array-per-document form."""
-    return shingle_sets(df, id_col, text_col, n).select(
-        "id", F.explode("shset").alias("shingle")
-    )
+    return _explode(shingle_sets(df, id_col, text_col, n))
 
 
 def positional_ngrams(
@@ -212,11 +229,136 @@ def minhash_signatures(shingles: DataFrame, n_hashes: int = 8) -> DataFrame:
     return hashed.groupBy("id").agg(*aggs)
 
 
+# ---------------------------------------------------------------------------
+# The set-similarity joins: candidates -> verify, one stage each.
+# ---------------------------------------------------------------------------
+
+
+def _explode(sets: DataFrame) -> DataFrame:
+    """A shingle-set frame ``(id, shset)`` as one row per shingle:
+    ``(id, shingle)``."""
+    return sets.select("id", F.explode("shset").alias("shingle"))
+
+
+def _overlap(shingles: DataFrame) -> DataFrame:
+    """Overlap stage: the inverted-index self-join of an exploded
+    ``(id, shingle)`` frame on ``shingle`` with id_a < id_b, counted per
+    pair, plus both set sizes: ``(id_a, id_b, n_a, n_b, n_common)`` for
+    every pair that shares a shingle (column order aside).
+
+    ``shingles`` is read three times (sizes and both join sides) but
+    deliberately NOT persisted: the exploded table is far larger than
+    the documents, so re-running its map-side scan is cheaper at scale
+    than pinning it, and any exchange below it is deduplicated by
+    ReusedExchange because all three readers live in one plan."""
+    sizes = shingles.groupBy("id").agg(F.count("*").alias("n_shingles"))
+    a = shingles.alias("a")
+    b = shingles.alias("b")
+    inter = (
+        a.join(
+            b,
+            (F.col("a.shingle") == F.col("b.shingle"))
+            & (F.col("a.id") < F.col("b.id")),
+        )
+        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        .agg(F.count("*").alias("n_common"))
+    )
+    sa = sizes.select(F.col("id").alias("id_a"), F.col("n_shingles").alias("n_a"))
+    sb = sizes.select(F.col("id").alias("id_b"), F.col("n_shingles").alias("n_b"))
+    return inter.join(sa, "id_a").join(sb, "id_b")
+
+
+def _union_n():
+    """|A ∪ B| = n_a + n_b - n_common, the Jaccard denominator."""
+    return F.col("n_a") + F.col("n_b") - F.col("n_common")
+
+
+def _prefix_table(
+    sets: DataFrame, dfreq: DataFrame, t_num: int, t_den: int, frozen: bool
+) -> DataFrame:
+    """Prefix stage, one side: each document's first
+    |d| - ceil(t|d|) + 1 shingles in the global rarest-first order
+    (``dfreq``'s df ASC, shingle ASC), as ``(id, shingle, n)``.
+    ``frozen``: ``dfreq`` counts another (base) corpus, so shingles it
+    never saw get df = 0, i.e. rank rarest."""
+    ranked = _explode(sets).join(dfreq, "shingle", "left" if frozen else "inner")
+    if frozen:
+        ranked = ranked.withColumn("df", F.coalesce(F.col("df"), F.lit(0)))
+    w = Window.partitionBy("id").orderBy(F.asc("df"), F.asc("shingle"))
+    plen = (
+        F.col("n")
+        - F.expr(f"({t_num} * n + {t_den - 1}) div {t_den}")
+        + F.lit(1)
+    )
+    # sizes come map-side from the distinct-shingle sets (r16: one fewer
+    # shuffle than a COUNT(*) over the exploded frame, same integers)
+    return (
+        ranked.join(sets.select("id", F.size("shset").alias("n")), "id")
+        .withColumn("pos", F.row_number().over(w))
+        .filter(F.col("pos") <= plen)
+        .select("id", "shingle", "n")
+    )
+
+
+def _set_verify(cand: DataFrame, sets: DataFrame, base: DataFrame) -> DataFrame:
+    """Verify stage: each candidate pair ``(id_a, id_b, ...)`` with its
+    two shingle sets (``sha`` from ``sets``, ``shb`` from ``base``) and
+    their exact overlap ``n_common`` (the size of the arrays'
+    intersection), computed map-side after two joins keyed on the
+    candidate ids.
+
+    Optimization r16 (guide §2.3/§8): the older verify attached every
+    shingle of id_a to each pair (a |cand| x |doc| explosion), shuffle-
+    joined that on (id_b, shingle) and re-aggregated. n_common is the
+    same integer (the sets are distinct per document), and a pair with
+    an empty intersection shows up in neither shape once thresholded."""
+    a = sets.select(F.col("id").alias("id_a"), F.col("shset").alias("sha"))
+    b = base.select(F.col("id").alias("id_b"), F.col("shset").alias("shb"))
+    return (
+        cand.join(a, "id_a")
+        .join(b, "id_b")
+        .select(
+            *cand.columns,
+            "sha",
+            "shb",
+            F.size(F.array_intersect("sha", "shb")).alias("n_common"),
+        )
+    )
+
+
+def _bucket_pairs(
+    df: DataFrame, keys: list, cols: tuple[str, ...] = ("id",)
+) -> DataFrame:
+    """Bucket stage: explode each row of ``df`` into one bucket per key
+    (``band_idx`` = the key's index, ``band_key`` = its value) and self-
+    join on the bucket with a.id < b.id. Returns the joined frame with
+    sides ``a`` / ``b`` carrying ``cols``; the caller projects and
+    dedupes (a pair can share several buckets)."""
+    buckets = F.array(
+        *[
+            F.struct(F.lit(i).alias("band_idx"), k.alias("band_key"))
+            for i, k in enumerate(keys)
+        ]
+    )
+    banded = df.select(*cols, F.explode(buckets).alias("band")).select(
+        *cols, "band.band_idx", "band.band_key"
+    )
+    a = banded.alias("a")
+    b = banded.alias("b")
+    return a.join(
+        b,
+        (F.col("a.band_idx") == F.col("b.band_idx"))
+        & (F.col("a.band_key") == F.col("b.band_key"))
+        & (F.col("a.id") < F.col("b.id")),
+    )
+
+
 def lsh_candidate_pairs(
     signatures: DataFrame, n_hashes: int = 8, bands: int = 2
 ) -> DataFrame:
     """Band the signature (rows_per_band = n_hashes / bands), self-join
-    per (band_idx, band-key) bucket -> candidate pairs (id_a < id_b).
+    per (band_idx, band-key) bucket -> candidate pairs (id_a, id_b),
+    id_a < id_b.
 
     The band key is the raw minhash tuple as a STRUCT, not a digest of
     it: joining on struct equality shuffles 4 bigints instead of
@@ -225,127 +367,52 @@ def lsh_candidate_pairs(
     (Oracle twins keep hashing the concatenated minhashes; the band key
     is internal to candidate generation, so only the pair set must
     agree.)"""
-    rows_per_band = n_hashes // bands
-    band_cols = []
-    for b in range(bands):
-        key = F.struct(
-            *[
-                F.col(f"mh{b * rows_per_band + r}").alias(f"k{r}")
-                for r in range(rows_per_band)
-            ]
-        )
-        band_cols.append(
-            F.struct(F.lit(b).alias("band_idx"), key.alias("band_key"))
-        )
-    banded = signatures.select(
-        "id", F.explode(F.array(*band_cols)).alias("band")
-    ).select("id", "band.band_idx", "band.band_key")
-    a = banded.alias("a")
-    b = banded.alias("b")
+    r = n_hashes // bands
+    keys = [
+        F.struct(*[F.col(f"mh{b * r + j}").alias(f"k{j}") for j in range(r)])
+        for b in range(bands)
+    ]
     return (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
+        _bucket_pairs(signatures, keys)
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .distinct()
     )
 
 
-def jaccard_pairs(
-    shingles: DataFrame,
-    min_jaccard: float = 0.0,
-    max_doc_freq: int | None = None,
-) -> DataFrame:
-    """Exact pairwise Jaccard over shingle sets via inverted-index
-    self-join. Returns (id_a, id_b, jaccard) with id_a < id_b and
-    jaccard >= min_jaccard. ``max_doc_freq`` drops shingles appearing in
-    more than that many documents (the scale lever — stopword shingles
-    otherwise quadratically blow up the join)."""
-    sh = shingles
-    if max_doc_freq is not None:
-        freq = sh.groupBy("shingle").agg(F.count("*").alias("df_"))
-        sh = sh.join(
-            freq.filter(F.col("df_") <= max_doc_freq).select("shingle"), "shingle"
-        )
-    # sh is consumed three times below (sizes + both sides of the
-    # self-join) but deliberately NOT persisted: the exploded shingle
-    # table is far larger than the source documents, so re-running the
-    # map-side scan+explode three times is cheaper at scale than pinning
-    # it in storage for the session lifetime — and the freq-filter
-    # join's exchange is deduplicated by ReusedExchange because all
-    # three consumers live in the single returned plan.
-    sizes = sh.groupBy("id").agg(F.count("*").alias("n_shingles"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    inter = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.id") < F.col("b.id")))
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count("*").alias("n_common"))
-    )
-    sa = sizes.select(F.col("id").alias("id_a"), F.col("n_shingles").alias("n_a"))
-    sb = sizes.select(F.col("id").alias("id_b"), F.col("n_shingles").alias("n_b"))
+def jaccard_pairs(shingles: DataFrame, min_jaccard: float = 0.0) -> DataFrame:
+    """Exact pairwise Jaccard over an exploded ``(id, shingle)`` frame
+    via the overlap stage (inverted-index self-join). Returns
+    (id_a, id_b, jaccard) with id_a < id_b and jaccard >= min_jaccard.
+    The jaccard is one unrounded integer-ratio division (rounding exact
+    decimal halves diverges across engines). At scale, prefer
+    ``prefix_filter_pairs`` (exact, pruned) or the MinHash path."""
     return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            # unrounded: integer-ratio division is deterministic; rounding
-            # exact decimal halves diverges across engines
-            (
-                F.col("n_common")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
-            ).alias("jaccard"),
-        )
+        _overlap(shingles)
+        .select("id_a", "id_b", (F.col("n_common") / _union_n()).alias("jaccard"))
         .filter(F.col("jaccard") >= min_jaccard)
     )
 
 
 def prefix_candidates(
-    shingles: DataFrame,
+    sets: DataFrame,
     t_num: int = 3,
     t_den: int = 5,
-    sets: DataFrame | None = None,
+    base: DataFrame | None = None,
 ) -> DataFrame:
-    """The prefix-filter CANDIDATE stage of ``prefix_filter_pairs``
-    (split out so the eval query can price candidate volume): global
-    rarest-first shingle order (df ASC, shingle ASC tie-break), keep
-    each document's first |d| - ceil(t*|d|) + 1 shingles, self-join
-    prefixes on shingle, integer length filter. Returns distinct
-    (id_a, id_b, n_a, n_b), id_a < id_b — a provable superset of the
-    Jaccard >= t pair set (see ``prefix_filter_pairs``).
+    """The CANDIDATE stage of ``prefix_filter_pairs`` (split out so the
+    eval query can price candidate volume) over shingle-set frames
+    ``(id, shset)``: both sides' prefix tables (``_prefix_table``)
+    joined on shingle, with the integer length filter
+    t*max(n_a, n_b) <= min(n_a, n_b). Returns distinct
+    (id_a, id_b, n_a, n_b) — a provable superset of the Jaccard >= t
+    pair set (see ``prefix_filter_pairs``).
 
-    ``sets``: optional ``shingle_sets`` frame for the same corpus
-    (id, shset) — when given, each document's size comes MAP-SIDE from
-    ``size(shset)`` (identical to the old COUNT(*) by construction:
-    shsets are distinct per document) instead of a corpus-wide
-    aggregation plus a join (optimization r16, guide §2.3: one fewer
-    shuffle + one fewer aggregation pass over the exploded shingles)."""
-    sh = shingles
-    sizes = (
-        sets.select("id", F.size("shset").alias("n"))
-        if sets is not None
-        else sh.groupBy("id").agg(F.count("*").alias("n"))
-    )
-    dfreq = sh.groupBy("shingle").agg(F.count("*").alias("df"))
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("id").orderBy(F.asc("df"), F.asc("shingle"))
-    plen = (
-        F.col("n")
-        - F.expr(f"({t_num} * n + {t_den - 1}) div {t_den}")
-        + F.lit(1)
-    )
-    pre = (
-        sh.join(dfreq, "shingle")
-        .join(sizes, "id")
-        .withColumn("pos", F.row_number().over(w))
-        .filter(F.col("pos") <= plen)
-        .select("id", "shingle", "n")
-    )
+    Self form (``base`` None): the rarest-first order counts df over
+    ``sets`` and pairs have id_a < id_b, pruned inside the prefix self-
+    join, before the distinct. Base form: id_a runs over ``sets`` (the
+    arrivals), id_b over ``base``, and the order is FROZEN on the base
+    side (df over ``base`` only; arrival tokens the base never saw get
+    df = 0)."""
     # Two measured results pin WHERE this operator's input is
     # materialized; do not retry or undo either.
     # - REJECTED (r17): an eager localCheckpoint of the prefix table
@@ -357,25 +424,32 @@ def prefix_candidates(
     #   more than the recompute, the direction the r16 graph family
     #   measured for its blocked path's edge list.
     # - KEPT: one eager localCheckpoint of the caller's shingle SETS,
-    #   upstream of the df pass, with ``shingles`` their explode
-    #   (extensions16._shingled). That is the subtree every consumer
-    #   recomputed: x_dedup_prefix_join's final plan scanned the
-    #   parquet 9 times and evaluated the split/zip_with shingle
-    #   expression ~26 times over 17 jobs; now 0 scans and 0 shingle
-    #   evaluations outside the one materialization job, 10 jobs, and
-    #   the perfbench ``queries`` workload's warm CPU fell 36-49%
-    #   (medians 11.7 -> 6.0 s and 19.0 -> 12.2 s in two sets of 10
-    #   interleaved pairs, better in every pair, shared 4-vCPU VM).
-    a = pre.select(
+    #   upstream of the df pass (extensions16._shingled). That is the
+    #   subtree every consumer recomputed: x_dedup_prefix_join's final
+    #   plan scanned the parquet 9 times and evaluated the split/
+    #   zip_with shingle expression ~26 times over 17 jobs; now 0 scans
+    #   and 0 shingle evaluations outside the one materialization job,
+    #   10 jobs, and the perfbench ``queries`` workload's warm CPU fell
+    #   36-49% (medians 11.7 -> 6.0 s and 19.0 -> 12.2 s in two sets of
+    #   10 interleaved pairs, better in every pair, shared 4-vCPU VM).
+    frozen = base is not None
+    dfreq = (
+        _explode(base if frozen else sets)
+        .groupBy("shingle")
+        .agg(F.count("*").alias("df"))
+    )
+    pa = _prefix_table(sets, dfreq, t_num, t_den, frozen)
+    pb = _prefix_table(base, dfreq, t_num, t_den, frozen) if frozen else pa
+    pairs = pa.select(
         F.col("id").alias("id_a"), "shingle", F.col("n").alias("n_a")
+    ).join(
+        pb.select(F.col("id").alias("id_b"), "shingle", F.col("n").alias("n_b")),
+        "shingle",
     )
-    b = pre.select(
-        F.col("id").alias("id_b"), "shingle", F.col("n").alias("n_b")
-    )
+    if not frozen:
+        pairs = pairs.filter(F.col("id_a") < F.col("id_b"))
     return (
-        a.join(b, "shingle")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .filter(
+        pairs.filter(
             F.lit(t_den) * F.least("n_a", "n_b")
             >= F.lit(t_num) * F.greatest("n_a", "n_b")
         )
@@ -385,23 +459,31 @@ def prefix_candidates(
 
 
 def prefix_filter_pairs(
-    shingles: DataFrame,
+    sets: DataFrame,
     t_num: int = 3,
     t_den: int = 5,
-    sets: DataFrame | None = None,
+    base: DataFrame | None = None,
 ) -> DataFrame:
-    """EXACT Jaccard-threshold similarity join via prefix filtering —
-    (``sets``: optional ``shingle_sets`` frame of the same corpus —
-    supplies map-side document sizes to the candidate stage and the
-    per-document arrays for the set-intersection verify; when None
-    both are reconstructed from ``shingles``, result-identically) —
-    the AllPairs/PPJoin candidate-generation bound (Bayardo et al.
-    WWW'07; Chaudhuri et al. ICDE'06; Xiao et al. WWW'08) expressed
-    declaratively. Returns every pair with Jaccard >= t_num/t_den:
-    (id_a, id_b, n_a, n_b, n_common, jaccard), id_a < id_b — the same
-    result set as ``jaccard_pairs(min_jaccard=t)``, at a fraction of
-    the candidate volume and with NO approximation (unlike MinHash
-    banding, which trades recall for pruning).
+    """EXACT Jaccard-threshold similarity join via prefix filtering over
+    shingle-set frames ``(id, shset)`` — the AllPairs/PPJoin candidate-
+    generation bound (Bayardo et al. WWW'07; Chaudhuri et al. ICDE'06;
+    Xiao et al. WWW'08) expressed declaratively. Returns every pair with
+    Jaccard >= t_num/t_den: (id_a, id_b, n_a, n_b, n_common, jaccard) —
+    the same result set as ``jaccard_pairs(min_jaccard=t)``, at a
+    fraction of the candidate volume and with NO approximation (unlike
+    MinHash banding, which trades recall for pruning).
+
+    Self form (``base`` None): pairs within ``sets``, id_a < id_b.
+    Base form: every (arrival, base) pair, id_a from ``sets`` and id_b
+    from ``base`` — the incremental join, where arrivals are joined
+    against an indexed corpus without re-pairing the corpus with itself.
+    Its token order is FROZEN on the base side (see
+    ``prefix_candidates``), the production shape where the index stores
+    its prefixes and df snapshot once; the theorem needs only one
+    consistent total order on both sides, so exactness is unaffected
+    (a stale order only shifts which tokens land in prefixes, i.e.
+    candidate volume drifts with vocabulary; the snapshot rebuilds on
+    the refresh cadence).
 
     The bound: order every document's shingles by a global total order
     (ascending document frequency, shingle string tie-break — rarest
@@ -413,8 +495,8 @@ def prefix_filter_pairs(
     joining prefixes on shingle loses no qualifying pair. A length
     filter (t*|b| <= |a| for |a| <= |b|, in exact integer cross-
     multiplication) prunes further; survivors are verified EXACTLY
-    against the full shingle index, so precision is structural and
-    recall is the theorem's.
+    (``_set_verify``), so precision is structural and recall is the
+    theorem's.
 
     All threshold math is integer (ceil(t*n) = (t_num*n + t_den - 1)
     div t_den; the verify is t_den*o >= t_num*(n_a + n_b - o)), so no
@@ -431,178 +513,18 @@ def prefix_filter_pairs(
     exact-join path of the dedup grid; when the threshold drops or the
     corpus is adversarially self-similar, fall back to the LSH
     pipeline (approximate) or raise the threshold."""
-    sh = shingles
-    cand = prefix_candidates(sh, t_num, t_den, sets=sets)
-    # EXACT verification over per-document shingle SETS (optimization
-    # r16, guide §2.3/§8): the old verify attached every shingle of
-    # id_a to each candidate pair (a |cand| x |doc| explosion), then
-    # shuffle-joined that on (id_b, shingle) and re-aggregated — the
-    # most expensive exchange of the whole operator. Each document's
-    # distinct-shingle ARRAY (the shingle_sets contract) makes
-    # n_common = size(array_intersect(sha, shb)) — computed MAP-SIDE
-    # per candidate pair after two joins keyed on the candidate ids
-    # (broadcast under threshold at test scale; candidate-volume-sized
-    # shuffles at 100 TB, never |cand| x |doc|). n_common is the same
-    # integer (set intersection of the same distinct sets), so every
-    # output row — including the one exact integer-ratio jaccard
-    # division — is unchanged; a pair with empty intersection appears
-    # in neither shape (old: no join match; new: the threshold filter
-    # kills n_common = 0).
-    if sets is None:
-        sets = sh.groupBy("id").agg(F.collect_list("shingle").alias("shset"))
-    inter = (
-        cand.join(
-            sets.select(
-                F.col("id").alias("id_a"), F.col("shset").alias("sha")
-            ),
-            "id_a",
-        )
-        .join(
-            sets.select(
-                F.col("id").alias("id_b"), F.col("shset").alias("shb")
-            ),
-            "id_b",
-        )
+    cand = prefix_candidates(sets, t_num, t_den, base)
+    return (
+        _set_verify(cand, sets, sets if base is None else base)
+        .filter(F.lit(t_den) * F.col("n_common") >= F.lit(t_num) * _union_n())
         .select(
             "id_a",
             "id_b",
             "n_a",
             "n_b",
-            F.size(F.array_intersect("sha", "shb")).alias("n_common"),
+            "n_common",
+            (F.col("n_common") / _union_n()).alias("jaccard"),
         )
-    )
-    union_n = F.col("n_a") + F.col("n_b") - F.col("n_common")
-    return inter.filter(
-        F.lit(t_den) * F.col("n_common") >= F.lit(t_num) * union_n
-    ).select(
-        "id_a",
-        "id_b",
-        "n_a",
-        "n_b",
-        "n_common",
-        (F.col("n_common") / union_n).alias("jaccard"),
-    )
-
-
-def prefix_filter_pairs_incremental(
-    sh_base: DataFrame,
-    sh_new: DataFrame,
-    t_num: int = 3,
-    t_den: int = 5,
-    sets_base: DataFrame | None = None,
-    sets_new: DataFrame | None = None,
-) -> DataFrame:
-    """Incremental EXACT similarity join: every (new, base) pair with
-    Jaccard >= t_num/t_den, via asymmetric prefix filtering — the
-    exact-path counterpart of the LSH incremental dedup
-    (x_dedup_incremental_lsh): arriving documents are joined against
-    an indexed corpus without re-pairing the corpus with itself.
-
-    The global token order is FROZEN on the base side (df over
-    ``sh_base`` only; tokens unseen in the base get df = 0, i.e.
-    rarest) — the production shape, where the corpus index stores its
-    prefixes once and arrivals are ranked under the index's order.
-    The prefix theorem needs only that BOTH sides use one consistent
-    total order, so exactness is unaffected by the freeze (the order
-    being stale merely shifts WHICH tokens land in prefixes —
-    candidate volume drifts with vocabulary drift, which is why
-    production rebuilds the df snapshot on the refresh cadence, the
-    index-refresh-delta convention).
-
-    Returns (id_new, id_base, n_new, n_base, n_common, jaccard); same
-    integer threshold math as ``prefix_filter_pairs``. One base-df
-    pass (amortized: the index stores it), per-side prefix windows,
-    a prefix-on-prefix join whose left side is ONLY the arrival
-    batch, and exact verification of candidates — at 100 TB the
-    corpus-sized work is the (prunable, bucketed-by-token) index
-    probe, never a corpus self-join."""
-    from pyspark.sql import Window
-
-    dfreq = sh_base.groupBy("shingle").agg(F.count("*").alias("df"))
-
-    def prefixed(
-        sh: DataFrame, id_alias: str, n_alias: str, sets: DataFrame | None
-    ) -> DataFrame:
-        # map-side sizes from the distinct-shingle sets when available
-        # (optimization r16) — identical to COUNT(*) by construction
-        sizes = (
-            sets.select("id", F.size("shset").alias("n"))
-            if sets is not None
-            else sh.groupBy("id").agg(F.count("*").alias("n"))
-        )
-        w = Window.partitionBy("id").orderBy(F.asc("df"), F.asc("shingle"))
-        plen = (
-            F.col("n")
-            - F.expr(f"({t_num} * n + {t_den - 1}) div {t_den}")
-            + F.lit(1)
-        )
-        return (
-            sh.join(dfreq, "shingle", "left")
-            .withColumn("df", F.coalesce(F.col("df"), F.lit(0)))
-            .join(sizes, "id")
-            .withColumn("pos", F.row_number().over(w))
-            .filter(F.col("pos") <= plen)
-            .select(
-                F.col("id").alias(id_alias),
-                "shingle",
-                F.col("n").alias(n_alias),
-            )
-        )
-
-    pn = prefixed(sh_new, "id_new", "n_new", sets_new)
-    pb = prefixed(sh_base, "id_base", "n_base", sets_base)
-    cand = (
-        pn.join(pb, "shingle")
-        .filter(
-            F.lit(t_den) * F.least("n_new", "n_base")
-            >= F.lit(t_num) * F.greatest("n_new", "n_base")
-        )
-        .select("id_new", "id_base", "n_new", "n_base")
-        .distinct()
-    )
-    # set-intersection verify (optimization r16) — see
-    # prefix_filter_pairs: candidate-keyed joins + map-side
-    # array_intersect replace the |cand| x |doc| explode/re-aggregate;
-    # n_common is the same integer, so outputs are unchanged
-    if sets_new is None:
-        sets_new = sh_new.groupBy("id").agg(
-            F.collect_list("shingle").alias("shset")
-        )
-    if sets_base is None:
-        sets_base = sh_base.groupBy("id").agg(
-            F.collect_list("shingle").alias("shset")
-        )
-    inter = (
-        cand.join(
-            sets_new.select(
-                F.col("id").alias("id_new"), F.col("shset").alias("sha")
-            ),
-            "id_new",
-        )
-        .join(
-            sets_base.select(
-                F.col("id").alias("id_base"), F.col("shset").alias("shb")
-            ),
-            "id_base",
-        )
-        .select(
-            "id_new",
-            "id_base",
-            "n_new",
-            "n_base",
-            F.size(F.array_intersect("sha", "shb")).alias("n_common"),
-        )
-    )
-    union_n = F.col("n_new") + F.col("n_base") - F.col("n_common")
-    return inter.filter(
-        F.lit(t_den) * F.col("n_common") >= F.lit(t_num) * union_n
-    ).select(
-        "id_new",
-        "id_base",
-        "n_new",
-        "n_base",
-        "n_common",
-        (F.col("n_common") / union_n).alias("jaccard"),
     )
 
 
@@ -611,22 +533,18 @@ def containment_pairs(
     min_containment: float = 0.0,
     max_doc_freq: int | None = None,
 ) -> DataFrame:
-    """Exact pairwise n-gram CONTAINMENT via inverted-index self-join —
-    the asymmetric near-dup measure Jaccard structurally misses: a
-    short document quoted whole inside a much longer one has
-    containment |A∩B| / min(|A|, |B|) ~ 1 while its Jaccard
-    |A∩B| / |A∪B| is tiny (bounded by the size ratio), so a
+    """Exact pairwise n-gram CONTAINMENT via the overlap stage
+    (inverted-index self-join) — the asymmetric near-dup measure
+    Jaccard structurally misses: a short document quoted whole inside a
+    much longer one has containment |A∩B| / min(|A|, |B|) ~ 1 while its
+    Jaccard |A∩B| / |A∪B| is tiny (bounded by the size ratio), so a
     Jaccard-thresholded dedup (MinHash/LSH included — banding
     approximates Jaccard) never pairs them. Containment is the
     standard detector for quote/aggregator/boilerplate-wrapped
-    subsets (Broder's original resemblance/containment pair).
-
-    Same skeleton and scale lever as ``jaccard_pairs`` (one shuffle on
-    the shingle key; the quadratic term bounded per shingle, with
-    ``max_doc_freq`` dropping stopword shingles before the join) — and
-    the SAME reason LSH is deliberately NOT the candidate stage here:
-    a banding scheme tuned for Jaccard drops exactly the asymmetric
-    pairs this operator exists to find.
+    subsets (Broder's original resemblance/containment pair). LSH is
+    deliberately NOT the candidate stage here: a banding scheme tuned
+    for Jaccard drops exactly the asymmetric pairs this operator exists
+    to find.
 
     Returns (id_a, id_b, containment, jaccard) with id_a < id_b and
     containment >= min_containment — jaccard rides along so a consumer
@@ -634,17 +552,18 @@ def containment_pairs(
     both high = near-identical). Integer-ratio division, unrounded
     (the cross-engine determinism convention).
 
-    PRUNED-SET SEMANTICS with ``max_doc_freq``: document sizes are
-    counted AFTER the stopword-shingle prune, so both denominators
-    are over the PRUNED shingle sets — a heavily pruned pair can
-    score higher containment than its true-set value (the pruned
-    shingles it shared no longer dilute min(|A|,|B|)). This is the
-    standard stopword-removal reading (score the distinctive
+    Scale lever: ``max_doc_freq`` drops shingles appearing in more than
+    that many documents before the join (stopword shingles otherwise
+    blow the per-shingle pairing up quadratically). PRUNED-SET
+    SEMANTICS: document sizes are counted AFTER the prune, so both
+    denominators are over the PRUNED shingle sets — a heavily pruned
+    pair can score higher containment than its true-set value (the
+    pruned shingles it shared no longer dilute min(|A|,|B|)). This is
+    the standard stopword-removal reading (score the distinctive
     content) and keeps the operator one-shuffle; callers that need
-    true-set denominators must compute ``sizes`` before the prune,
-    at the cost of a second aggregate over the unpruned frame. The
-    registered oracle query passes no ``max_doc_freq``, so its
-    scores are true-set exact."""
+    true-set denominators must compute sizes before the prune. The
+    registered oracle query passes no ``max_doc_freq``, so its scores
+    are true-set exact."""
     sh = shingles
     if max_doc_freq is not None:
         freq = sh.groupBy("shingle").agg(F.count("*").alias("df_"))
@@ -652,33 +571,13 @@ def containment_pairs(
             freq.filter(F.col("df_") <= max_doc_freq).select("shingle"),
             "shingle",
         )
-    sizes = sh.groupBy("id").agg(F.count("*").alias("n_shingles"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count("*").alias("n_common"))
-    )
-    sa = sizes.select(F.col("id").alias("id_a"), F.col("n_shingles").alias("n_a"))
-    sb = sizes.select(F.col("id").alias("id_b"), F.col("n_shingles").alias("n_b"))
     return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
+        _overlap(sh)
         .select(
             "id_a",
             "id_b",
-            (F.col("n_common") / F.least(F.col("n_a"), F.col("n_b"))).alias(
-                "containment"
-            ),
-            (
-                F.col("n_common")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
-            ).alias("jaccard"),
+            (F.col("n_common") / F.least("n_a", "n_b")).alias("containment"),
+            (F.col("n_common") / _union_n()).alias("jaccard"),
         )
         .filter(F.col("containment") >= min_containment)
     )
@@ -780,8 +679,8 @@ def simhash_hamming_pairs(
     ``(id, sh_hi, sh_lo)`` with Hamming distance <= ``max_hamming``
     (default 3), WITHOUT an all-pairs join: split the 64 bits into 4
     16-bit blocks — by pigeonhole, any pair within Hamming 3 agrees
-    exactly on at least one block — and self-join per (block_idx,
-    block_value) bucket, then verify the exact distance with
+    exactly on at least one block — and self-join per block bucket
+    (``_bucket_pairs``: block index, block value), then verify the exact distance with
     xor + bit_count on the two halves. Returns (id_a, id_b, hamming),
     id_a < id_b.
 
@@ -798,37 +697,14 @@ def simhash_hamming_pairs(
             "scheme's pigeonhole guarantee (<= 3); use more, narrower "
             "blocks for larger radii"
         )
-    fp = fingerprints
-    blocks = F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("block_idx"), expr.alias("block_val")
-            )
-            for i, expr in enumerate(
-                [
-                    F.expr("sh_hi div 65536"),
-                    F.expr("sh_hi % 65536"),
-                    F.expr("sh_lo div 65536"),
-                    F.expr("sh_lo % 65536"),
-                ]
-            )
-        ]
-    )
-    banded = fp.select(
-        "id", "sh_hi", "sh_lo", F.explode(blocks).alias("blk")
-    ).select("id", "sh_hi", "sh_lo", "blk.block_idx", "blk.block_val")
-    a = banded.alias("a")
-    b = banded.alias("b")
+    blocks = [
+        F.expr(f"sh_{h} {op} 65536") for h in ("hi", "lo") for op in ("div", "%")
+    ]
     ham = F.bit_count(
         F.col("a.sh_hi").bitwiseXOR(F.col("b.sh_hi"))
     ) + F.bit_count(F.col("a.sh_lo").bitwiseXOR(F.col("b.sh_lo")))
     return (
-        a.join(
-            b,
-            (F.col("a.block_idx") == F.col("b.block_idx"))
-            & (F.col("a.block_val") == F.col("b.block_val"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
+        _bucket_pairs(fingerprints, blocks, ("id", "sh_hi", "sh_lo"))
         .select(
             F.col("a.id").alias("id_a"),
             F.col("b.id").alias("id_b"),
@@ -977,16 +853,12 @@ def lsh_verified_candidates(
     recomputes from the corpus scan if a caller still needs the raw
     shingle sets."""
     arrs = shingle_sets(corpus, id_col, text_col, n=n).persist()
-    sh = arrs.select("id", F.explode("shset").alias("shingle"))
-    sig = minhash_signatures(sh, n_hashes=n_hashes).persist()
+    sig = minhash_signatures(_explode(arrs), n_hashes=n_hashes).persist()
     cand = lsh_candidate_pairs(sig, n_hashes=n_hashes, bands=bands)
-    a = arrs.select(F.col("id").alias("id_a"), F.col("shset").alias("sa"))
-    b = arrs.select(F.col("id").alias("id_b"), F.col("shset").alias("sb"))
-    n_common = F.size(F.array_intersect("sa", "sb"))
-    jac = n_common / (F.size("sa") + F.size("sb") - n_common)
+    n_common = F.col("n_common")
+    jac = n_common / (F.size("sha") + F.size("shb") - n_common)
     verified = (
-        cand.join(a, "id_a")
-        .join(b, "id_b")
+        _set_verify(cand, arrs, arrs)
         .select("id_a", "id_b", jac.alias("jaccard"))
         .persist()
     )

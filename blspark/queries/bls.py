@@ -14,8 +14,11 @@ Semantic traps encoded here (SURVEY.md §7.2):
   ``ORDER BY value DESC, year ASC`` in the window.
 - Q2's yearly sum includes period Q05 (annual average) — do NOT filter
   to quarters, reference report_processor.py:161.
-- Q3 trims inside the predicate (padded cells) and preserves unmatched
-  left rows (null Population), reference report_processor.py:204-243.
+- Q3 slices the CLEANED frame: the reference trims padded cells inside
+  its predicate, here ``jobs.report_job``'s ``trim_string_columns`` is
+  the one trim, so the slice filters and projects the columns as given.
+  It preserves unmatched left rows (null Population), reference
+  report_processor.py:204-243.
 
 At scale: Q2 is one hash-aggregate shuffle on (series_id, year) plus a
 second partial-aggregatable argmax agg on series_id — both partition
@@ -103,18 +106,18 @@ def combined_report(
     """Q3 — one series/period slice LEFT JOIN population by year; unmatched
     years keep null Population (reference report_processor.py:204-251).
     Returns (series_id, year, period, value, Population) sorted by year.
+    ``bls`` is the cleaned frame (string cells already trimmed, as
+    ``jobs.report_job`` hands it over), so ``series_id`` and ``period``
+    are compared and projected as given, as ``best_years`` does.
 
     The population side is tiny (≤ tens of rows) — broadcast it so the
     fact slice never shuffles. Without a population frame the slice is
     returned with a null Population column instead of failing (the
     reference's graceful degradation, report_processor.py:269-281)."""
     slice_df = bls.filter(
-        (F.trim(F.col("series_id")) == series_id) & (F.trim(F.col("period")) == period)
+        (F.col("series_id") == series_id) & (F.col("period") == period)
     ).select(
-        F.trim(F.col("series_id")).alias("series_id"),
-        F.col("year").cast("int").alias("year"),
-        F.trim(F.col("period")).alias("period"),
-        F.col("value"),
+        "series_id", F.col("year").cast("int").alias("year"), "period", "value"
     )
     if population is None:
         return slice_df.withColumn(

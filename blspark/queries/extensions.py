@@ -210,8 +210,8 @@ WHERE i.n_common / (sa.n + sb.n - i.n_common) >= 0.6
     "x_dedup_ngram_jaccard",
     oracle=NGRAM_ORACLE,
     doc="Exact n-gram Jaccard near-dup pairs via inverted-index self-join "
-    "(threshold 0.6). The quadratic fallback — at scale use "
-    "max_doc_freq shingle pruning or the MinHash path.",
+    "(threshold 0.6). The quadratic fallback — at scale use the "
+    "exact prefix join (x_dedup_prefix_join) or the MinHash path.",
 )
 def x_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     from blspark.ext.dedup import jaccard_pairs
@@ -657,7 +657,7 @@ SELECT query_id, neighbor_id, ROUND(cos_raw, 6) AS cosine, rank FROM (
     "recall-then-rerank shape: dense scoring cost scales with "
     "|candidates|, not |corpus| (vs the brute-force "
     "x_similarity_cosine_topk cross product); the df cap is the same "
-    "stopword-fanout lever as n-gram Jaccard's max_doc_freq.",
+    "stopword-fanout lever as n-gram containment's max_doc_freq.",
 )
 def x_retrieval_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")

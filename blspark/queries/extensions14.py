@@ -377,9 +377,9 @@ WHERE containment >= {_CONT_MIN}
     "stage, because Jaccard-tuned bands drop exactly these "
     "asymmetric pairs. Jaccard rides along so a consumer classifies "
     "pair type (high-containment/low-jaccard = subset; both high = "
-    "near-identical). Scale lever: the same max_doc_freq stopword-"
-    "shingle pruning as jaccard_pairs bounds the per-shingle "
-    "quadratic term. ext/dedup.containment_pairs.",
+    "near-identical). Scale lever: max_doc_freq stopword-shingle "
+    "pruning bounds the per-shingle quadratic term. "
+    "ext/dedup.containment_pairs.",
 )
 def x_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     from blspark.ext.dedup import containment_pairs, word_shingles

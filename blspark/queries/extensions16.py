@@ -99,13 +99,10 @@ FROM truth
 """
 
 
-def _shingled(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    """The prefix family's two shingle views of the planted-dup corpus,
-    from ONE shingling pass: (sh, ss) = the exploded (id, shingle) frame
-    and the per-document distinct-shingle sets (id, shset).
-
-    The sets are materialized with one eager localCheckpoint and ``sh``
-    is their explode. Left lazy, each consumer (the df pass, both prefix
+def _shingled(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The prefix family's shingle sets ``(id, shset)`` of the planted-dup
+    corpus, from ONE shingling pass materialized by one eager
+    localCheckpoint. Left lazy, each consumer (the df pass, both prefix
     self-join sides, the sizes, both verify sides) gets different
     filters pushed below its exchange — the ones inferred from explode
     repeat the whole split/zip_with shingle expression — so AQE can
@@ -114,10 +111,9 @@ def _shingled(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     outlives the call: each call re-reads the parquet."""
     from blspark.ext.dedup import shingle_sets
 
-    ss = shingle_sets(
+    return shingle_sets(
         _corpus(spark, sf_dir, wide=True), "doc_id", "text"
     ).localCheckpoint(eager=True)
-    return ss.select("id", F.explode("shset").alias("shingle")), ss
 
 
 @register(
@@ -146,11 +142,7 @@ def _shingled(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
 def x_dedup_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from blspark.ext.dedup import prefix_filter_pairs
 
-    # sets: map-side sizes for the candidate stage + array-intersect
-    # verify (optimization r16) — the exploded frame is derived from
-    # the same distinct-shingle sets, so results are identical
-    sh, ss = _shingled(spark, sf_dir)
-    return prefix_filter_pairs(sh, _PF_NUM, _PF_DEN, sets=ss)
+    return prefix_filter_pairs(_shingled(spark, sf_dir), _PF_NUM, _PF_DEN)
 
 
 # ---------------------------------------------------------------------------
@@ -253,44 +245,25 @@ SELECT
     "shingled once per call).",
 )
 def x_prefix_join_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from blspark.ext.dedup import prefix_candidates, prefix_filter_pairs
-
-    sh, ss = _shingled(spark, sf_dir)
-    sizes = sh.groupBy("id").agg(F.count("*").alias("n"))
-
-    # brute-force truth with the same integer-exact threshold
-    a = sh.alias("a")
-    b = sh.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count("*").alias("n_common"))
-    )
-    sa = sizes.select(F.col("id").alias("id_a"), F.col("n").alias("n_a"))
-    sb = sizes.select(F.col("id").alias("id_b"), F.col("n").alias("n_b"))
-    truth = (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .filter(
-            F.lit(_PF_DEN) * F.col("n_common")
-            >= F.lit(_PF_NUM)
-            * (F.col("n_a") + F.col("n_b") - F.col("n_common"))
-        )
-        .select("id_a", "id_b")
-    )
-    fcand = inter.select("id_a", "id_b")
-    pcand = prefix_candidates(sh, _PF_NUM, _PF_DEN, sets=ss).select(
-        "id_a", "id_b"
-    )
-    pver = prefix_filter_pairs(sh, _PF_NUM, _PF_DEN, sets=ss).select(
-        "id_a", "id_b"
+    from blspark.ext.dedup import (
+        _explode,
+        _overlap,
+        _union_n,
+        prefix_candidates,
+        prefix_filter_pairs,
     )
 
-    n_docs = sizes.agg(F.count("*").cast("int").alias("n_docs"))
+    ss = _shingled(spark, sf_dir)
+    # brute-force truth: the full inverted index, same integer threshold
+    full = _overlap(_explode(ss))
+    truth = full.filter(
+        F.lit(_PF_DEN) * F.col("n_common") >= F.lit(_PF_NUM) * _union_n()
+    ).select("id_a", "id_b")
+    fcand = full.select("id_a", "id_b")
+    pcand = prefix_candidates(ss, _PF_NUM, _PF_DEN).select("id_a", "id_b")
+    pver = prefix_filter_pairs(ss, _PF_NUM, _PF_DEN).select("id_a", "id_b")
+
+    n_docs = ss.agg(F.count("*").cast("int").alias("n_docs"))
     n_cf = fcand.agg(F.count("*").cast("int").alias("n_cand_full"))
     n_cp = pcand.agg(F.count("*").cast("int").alias("n_cand_prefix"))
     n_pt = truth.agg(F.count("*").cast("int").alias("n_pairs_truth"))
@@ -907,21 +880,24 @@ WHERE {_PF_DEN} * i.n_common
     "df snapshot rebuilds on the refresh cadence as vocabulary "
     "drifts. Both sides are filtered views of one checkpointed "
     "shingle-set frame (the corpus is shingled once per call). "
-    "ext/dedup.prefix_filter_pairs_incremental.",
+    "ext/dedup.prefix_filter_pairs(base=).",
 )
 def x_dedup_prefix_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from blspark.ext.dedup import prefix_filter_pairs_incremental
+    from blspark.ext.dedup import prefix_filter_pairs
 
-    sh, ss = _shingled(spark, sf_dir)
-    sh_base = sh.filter(F.col("id") % 3 == 0)
-    sh_new = sh.filter(F.col("id") % 3 != 0)
-    return prefix_filter_pairs_incremental(
-        sh_base,
-        sh_new,
+    ss = _shingled(spark, sf_dir)
+    return prefix_filter_pairs(
+        ss.filter(F.col("id") % 3 != 0),
         _PF_NUM,
         _PF_DEN,
-        sets_base=ss.filter(F.col("id") % 3 == 0),
-        sets_new=ss.filter(F.col("id") % 3 != 0),
+        base=ss.filter(F.col("id") % 3 == 0),
+    ).select(
+        F.col("id_a").alias("id_new"),
+        F.col("id_b").alias("id_base"),
+        F.col("n_a").alias("n_new"),
+        F.col("n_b").alias("n_base"),
+        "n_common",
+        "jaccard",
     )
 
 

@@ -10,7 +10,7 @@ Scale design notes (100 TB lens):
   reference's source inventory, cluster-distributed).
 - Co-occurrence lift: the pairwise stage is bounded per document by
   its DISTINCT token count, and globally by doc-frequency support
-  pruning (the same stopword/fan-out lever as n-gram Jaccard's
+  pruning (the same stopword/fan-out lever as n-gram containment's
   max_doc_freq). Lift (N*c_xy / (c_x*c_y)) is PMI without the log —
   the monotone transform keeps ranking identical while staying in
   exact rational arithmetic (log is 1-ulp engine-varying).

@@ -58,7 +58,13 @@ def amplify(
 
 
 def bench_minhash(spark, factor: int) -> float:
-    from blspark.ext.dedup import shingle_sets, minhash_signatures, lsh_candidate_pairs
+    from blspark.ext.dedup import (
+        _explode,
+        _set_verify,
+        lsh_candidate_pairs,
+        minhash_signatures,
+        shingle_sets,
+    )
 
     docs = amplify(
         load_table(spark, SF_DIR, "documents").select("doc_id", "text"),
@@ -69,16 +75,11 @@ def bench_minhash(spark, factor: int) -> float:
     )
     t0 = time.perf_counter()
     arrs = shingle_sets(docs, "doc_id", "text", n=3).persist()
-    sh = arrs.select("id", F.explode("shset").alias("shingle"))
-    sig = minhash_signatures(sh, n_hashes=8)
+    sig = minhash_signatures(_explode(arrs), n_hashes=8)
     cand = lsh_candidate_pairs(sig, n_hashes=8, bands=2)
-    a = arrs.select(F.col("id").alias("id_a"), F.col("shset").alias("sa"))
-    b = arrs.select(F.col("id").alias("id_b"), F.col("shset").alias("sb"))
-    n_common = F.size(F.array_intersect("sa", "sb"))
-    jac = n_common / (F.size("sa") + F.size("sb") - n_common)
-    n = (
-        cand.join(a, "id_a").join(b, "id_b").filter(jac >= 0.5).count()
-    )
+    n_common = F.col("n_common")
+    jac = n_common / (F.size("sha") + F.size("shb") - n_common)
+    n = _set_verify(cand, arrs, arrs).filter(jac >= 0.5).count()
     dt = time.perf_counter() - t0
     arrs.unpersist()
     print(f"  minhash x{factor}: {dt:.2f}s ({n} pairs)", flush=True)
@@ -982,7 +983,7 @@ def bench_dsir(spark, factor: int) -> float:
 
 def bench_containment(spark, factor: int) -> float:
     """Containment dedup at growing corpus size WITH the max_doc_freq
-    lever engaged (the jaccard_pairs scale story): replicas get
+    lever engaged (the operator's scale story): replicas get
     distinct suffix tokens, so cross-replica shingle overlap stays
     put while the shingle table grows linearly; the doc-freq prune
     bounds the per-shingle quadratic term."""
@@ -1048,7 +1049,7 @@ def bench_prefix_join(spark, factor: int) -> float:
     axis — new content, not clones: qualifying pairs scale ~linearly,
     df-per-shingle stays flat, and the wall measures the df pass +
     prefix window + prefix self-join + bounded verify."""
-    from blspark.ext.dedup import prefix_filter_pairs, word_shingles
+    from blspark.ext.dedup import prefix_filter_pairs, shingle_sets
 
     docs = (
         amplify(
@@ -1074,8 +1075,7 @@ def bench_prefix_join(spark, factor: int) -> float:
         )
     )
     t0 = time.perf_counter()
-    sh = word_shingles(docs, "doc_id", "text")
-    n = prefix_filter_pairs(sh).count()
+    n = prefix_filter_pairs(shingle_sets(docs, "doc_id", "text")).count()
     dt = time.perf_counter() - t0
     print(f"  prefix_join x{factor}: {dt:.2f}s ({n} pairs)", flush=True)
     return dt

@@ -93,7 +93,9 @@ def test_q2_output_sorted_by_series(spark, bls_df):
 
 
 def test_q3_left_join_preserves_unmatched_years(spark, pop_df):
-    bls = spark.createDataFrame(
+    # combined_report takes the cleaned frame: padded cells survive the
+    # report's one trim (trim_string_columns in jobs.report_job)
+    bls = trim_string_columns(spark.createDataFrame(
         [
             ("PRS30006032  ", 2012, " Q01 ", 1.0),  # padded cells, year w/o pop
             ("PRS30006032", 2013, "Q01", 2.0),
@@ -102,7 +104,7 @@ def test_q3_left_join_preserves_unmatched_years(spark, pop_df):
             ("PRSXXXXXXXX", 2013, "Q01", 9.0),  # wrong series -> excluded
         ],
         "series_id string, year int, period string, value double",
-    )
+    ))
     out = combined_report(bls, pop_df).collect()
     assert [r["year"] for r in out] == [2012, 2013, 2020]
     by_year = {r["year"]: r for r in out}

@@ -3,7 +3,8 @@ mode on and 200 shuffle partitions, while the suite's own session turns
 ANSI off and uses 8 partitions. These tests switch the shared session to
 the driver's values for the duration of each case and compare against
 the DuckDB oracle with the exact-``repr`` canon of scripts/diffcheck.py
-(a last-ulp difference is a failure). Covered: the prefix-join family,
+(a last-ulp difference is a failure). Covered: the set-similarity joins
+(prefix join, overlap, bucket and verify stages),
 the similarity rungs that run through the shared route, score, rank
 and rerank stages, the two cosine queries scored through the shared
 zero-norm guard, the connected-components callers over doc ids and
@@ -28,6 +29,10 @@ QUERIES = [
     "x_dedup_prefix_join",
     "x_prefix_join_eval",
     "x_dedup_prefix_incremental",
+    "x_dedup_ngram_jaccard",
+    "x_dedup_containment",
+    "x_dedup_simhash_hamming",
+    "x_lsh_eval",
     "x_similarity_mrl",
     "x_similarity_ann_lsh",
     "x_similarity_ivf_sq8",

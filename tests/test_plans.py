@@ -832,7 +832,8 @@ def test_report_job_budget_and_single_partition_plans(spark, bls_mirror):
     it 2 + 11). With split sizes small enough that the
     file spans several splits, the distributed plan and its exchanges
     come back and the rows stay identical. The split decision agrees
-    with the partition count of the planned scan in both settings."""
+    with the partition count of the planned scan in both settings. Q3
+    does not trim again what the report's cleaning already trimmed."""
     from blspark.io.readers import _one_split
 
     mirror, _ = bls_mirror
@@ -845,6 +846,9 @@ def test_report_job_budget_and_single_partition_plans(spark, bls_mirror):
     assert "Exchange" not in plans["best_years"], plans["best_years"]
     exchanges = set(re.findall(r"\w*Exchange\b", plans["combined_report"]))
     assert exchanges == {"BroadcastExchange"}, plans["combined_report"]
+    # the report trims the BLS cells once (trim_string_columns); Q3
+    # compares and projects them as given
+    assert "trim(trim(" not in plans["combined_report"], plans["combined_report"]
 
     with session_conf(spark, MULTI_SPLIT):
         assert not _one_split(spark, path) and _scan_partitions(spark, path) > 1

@@ -18,9 +18,10 @@ from pyspark.sql import functions as F
 from tests.conftest import SF_SMOKE
 
 
-def _sh_frame(spark, sets: dict[int, list[str]]):
-    rows = [(i, s) for i, shs in sets.items() for s in shs]
-    return spark.createDataFrame(rows, "id long, shingle string")
+def _sets_frame(spark, sets: dict[int, list[str]]):
+    """The ``shingle_sets`` shape: one distinct-shingle array per id."""
+    rows = [(i, list(dict.fromkeys(shs))) for i, shs in sets.items()]
+    return spark.createDataFrame(rows, "id long, shset array<string>")
 
 
 def _brute_pairs(sets: dict[int, list[str]], t_num=3, t_den=5):
@@ -48,10 +49,10 @@ FIXTURE = {
 def test_prefix_join_equals_brute_force_fixture(spark):
     from blspark.ext.dedup import prefix_filter_pairs
 
-    sh = _sh_frame(spark, FIXTURE)
+    ss = _sets_frame(spark, FIXTURE)
     got = {
         (r.id_a, r.id_b): r.n_common
-        for r in prefix_filter_pairs(sh).collect()
+        for r in prefix_filter_pairs(ss).collect()
     }
     assert got == _brute_pairs(FIXTURE)
     # the boundary pair (jaccard exactly 3/5) is present
@@ -63,15 +64,14 @@ def test_prefix_join_boundary_excluded_below(spark):
 
     # J = 2/4 = 0.5 < 0.6: must not appear
     sets = {1: ["a", "b", "c"], 2: ["a", "b", "d"]}
-    sh = _sh_frame(spark, sets)
-    assert prefix_filter_pairs(sh).count() == 0
+    assert prefix_filter_pairs(_sets_frame(spark, sets)).count() == 0
 
 
 def test_prefix_candidates_superset_of_truth(spark):
     from blspark.ext.dedup import prefix_candidates
 
-    sh = _sh_frame(spark, FIXTURE)
-    cand = {(r.id_a, r.id_b) for r in prefix_candidates(sh).collect()}
+    ss = _sets_frame(spark, FIXTURE)
+    cand = {(r.id_a, r.id_b) for r in prefix_candidates(ss).collect()}
     assert set(_brute_pairs(FIXTURE)) <= cand
 
 
@@ -79,20 +79,15 @@ def test_prefix_join_equals_brute_force_corpus(spark):
     """On the sf0.001 planted-dup corpus, the prefix-filtered join and
     the full inverted-index join (same integer threshold) produce the
     identical pair set — the theorem end-to-end."""
-    from blspark.ext.dedup import prefix_filter_pairs, word_shingles
+    from blspark.ext.dedup import prefix_filter_pairs, shingle_sets
     from blspark.queries.extensions import _corpus
 
-    sh = word_shingles(_corpus(spark, SF_SMOKE), "doc_id", "text")
+    ss = shingle_sets(_corpus(spark, SF_SMOKE), "doc_id", "text")
     got = {
         (r.id_a, r.id_b): (r.n_common, r.n_a, r.n_b)
-        for r in prefix_filter_pairs(sh).collect()
+        for r in prefix_filter_pairs(ss).collect()
     }
-    sets = {
-        r.id: set(r.shset)
-        for r in sh.groupBy("id")
-        .agg(F.collect_set("shingle").alias("shset"))
-        .collect()
-    }
+    sets = {r.id: set(r.shset) for r in ss.collect()}
     want = {}
     for a, b in itertools.combinations(sorted(sets), 2):
         o = len(sets[a] & sets[b])
@@ -383,26 +378,18 @@ def test_prefix_incremental_equals_brute_force_corpus(spark):
     """Asymmetric prefix join under the FROZEN base-side order equals
     brute-force cross-boundary Jaccard at sf0.001 (same split as
     x_dedup_incremental_lsh: base = id%3==0, new = rest)."""
-    from blspark.ext.dedup import (
-        prefix_filter_pairs_incremental,
-        word_shingles,
-    )
+    from blspark.ext.dedup import prefix_filter_pairs, shingle_sets
     from blspark.queries.extensions import _corpus
 
-    sh = word_shingles(_corpus(spark, SF_SMOKE), "doc_id", "text")
+    ss = shingle_sets(_corpus(spark, SF_SMOKE), "doc_id", "text")
     got = {
-        (r.id_new, r.id_base): r.n_common
-        for r in prefix_filter_pairs_incremental(
-            sh.filter(F.col("id") % 3 == 0),
-            sh.filter(F.col("id") % 3 != 0),
+        (r.id_a, r.id_b): r.n_common
+        for r in prefix_filter_pairs(
+            ss.filter(F.col("id") % 3 != 0),
+            base=ss.filter(F.col("id") % 3 == 0),
         ).collect()
     }
-    sets = {
-        r.id: set(r.shset)
-        for r in sh.groupBy("id")
-        .agg(F.collect_set("shingle").alias("shset"))
-        .collect()
-    }
+    sets = {r.id: set(r.shset) for r in ss.collect()}
     want = {}
     for a in sets:
         if a % 3 == 0:
@@ -422,10 +409,10 @@ def test_prefix_incremental_unseen_tokens(spark):
     vocabulary (frozen df = 0) still join exactly: an identical
     new/base pair over base-known tokens is found, and an all-unseen
     new doc pairs with nothing."""
-    from blspark.ext.dedup import prefix_filter_pairs_incremental
+    from blspark.ext.dedup import prefix_filter_pairs
 
-    base = _sh_frame(spark, {10: ["s1", "s2", "s3", "s4", "s5"]})
-    new = _sh_frame(
+    base = _sets_frame(spark, {10: ["s1", "s2", "s3", "s4", "s5"]})
+    new = _sets_frame(
         spark,
         {
             1: ["s1", "s2", "s3", "s4", "x9"],  # J = 4/6 >= 0.6
@@ -433,8 +420,8 @@ def test_prefix_incremental_unseen_tokens(spark):
         },
     )
     got = {
-        (r.id_new, r.id_base): r.n_common
-        for r in prefix_filter_pairs_incremental(base, new).collect()
+        (r.id_a, r.id_b): r.n_common
+        for r in prefix_filter_pairs(new, base=base).collect()
     }
     assert got == {(1, 10): 4}
 

@@ -640,6 +640,78 @@ def test_containment_matches_bruteforce(spark, texts):
         assert math.isclose(got[k][1], j, rel_tol=1e-12), k
 
 
+# (shingle set, is_base) per document, over a 7-token alphabet so random
+# families overlap often and hit threshold ties
+set_families = st.lists(
+    st.tuples(
+        st.lists(st.sampled_from("abcdefg"), min_size=1, max_size=6, unique=True),
+        st.booleans(),
+    ),
+    max_size=8,
+)
+
+
+@SLOW
+@given(family=set_families, t=st.sampled_from([(3, 5), (1, 2), (2, 3), (4, 5)]))
+def test_prefix_join_matches_bruteforce_threshold(spark, family, t):
+    """prefix_filter_pairs, self form and base form, == the brute-force
+    integer-threshold truth t_den*o >= t_num*(n_a + n_b - o) over every
+    pair (self: id_a < id_b; base: arrival x base). Planted in every
+    example: a pair exactly at J = t (B a subset of A, |B| = t_num,
+    |A| = t_den), identical sets, a set overlapping nothing, and an
+    arrival whose tokens the base never saw (frozen df = 0)."""
+    import itertools
+
+    from blspark.ext.dedup import prefix_filter_pairs
+
+    t_num, t_den = t
+    p = [f"p{i}" for i in range(t_num)]
+    x = [f"x{i}" for i in range(t_den - t_num)]
+    docs = [
+        (p + x, False),  # 0 and 1: J = t exactly
+        (p, True),
+        (["a", "b", "c"], False),  # 2 and 3: identical
+        (["a", "b", "c"], True),
+        (["z1", "z2"], True),  # 4: overlaps nothing
+        (["u1", "u2", "a"], False),  # 5: tokens unseen in any base set
+    ] + family
+    df = spark.createDataFrame(
+        [(i, shs, is_base) for i, (shs, is_base) in enumerate(docs)],
+        "id long, shset array<string>, is_base boolean",
+    )
+
+    def side(is_base):
+        return df.filter(F.col("is_base") == is_base).select("id", "shset")
+
+    def got(frame):
+        return {
+            (r.id_a, r.id_b): (r.n_a, r.n_b, r.n_common, r.jaccard)
+            for r in frame.collect()
+        }
+
+    def truth(pairs):
+        out = {}
+        for a, b in pairs:
+            sa, sb = set(docs[a][0]), set(docs[b][0])
+            o = len(sa & sb)
+            u = len(sa) + len(sb) - o
+            if o and t_den * o >= t_num * u:
+                out[(a, b)] = (len(sa), len(sb), o, o / u)
+        return out
+
+    ids = range(len(docs))
+    want = truth(itertools.combinations(ids, 2))
+    assert {(0, 1), (2, 3)} <= set(want)
+    assert got(prefix_filter_pairs(df.select("id", "shset"), t_num, t_den)) == want
+    new = [i for i in ids if not docs[i][1]]
+    base = [i for i in ids if docs[i][1]]
+    want = truth(itertools.product(new, base))
+    assert {(0, 1), (2, 3)} <= set(want)
+    assert got(
+        prefix_filter_pairs(side(False), t_num, t_den, base=side(True))
+    ) == want
+
+
 vec_lists = st.lists(
     st.lists(values, min_size=6, max_size=6),
     min_size=8,
