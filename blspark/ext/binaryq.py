@@ -42,7 +42,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from blspark.catalog import davg
-from blspark.ext.similarity import _cell_assign, _dot, _pair_fetch, _top
+from blspark.ext.similarity import _cell_assign, _pair, _ranked, _rescore, _route, _top
 
 WORD_BITS = 32  # bits packed per BIGINT word — 32, not 64, so the
 # packed value stays in [0, 2^32) and never touches the sign bit of
@@ -213,9 +213,9 @@ def binary_topk(
     window over (hamming, neighbor_id); the float vectors are touched
     ONLY for the |queries| x shortlist rerank pairs — at a billion
     corpus rows that is the difference between streaming 8 GB of codes
-    and 256 GB of floats. Rerank fetch joins corpus floats on
-    neighbor_id with the tiny pair list broadcast (same device as
-    pq_rerank_topk's fetch).
+    and 256 GB of floats. The rerank is the family's ``_rescore``
+    (the fetch and exact score ``mrl_topk`` and ``pq_rerank_topk``
+    share) with the inner product as the score.
 
     Returns (query_id, neighbor_id, score, hamming, rank) — score the
     exact inner product (6 dp), hamming the integer code distance.
@@ -230,42 +230,12 @@ def binary_topk(
         corpus, queries, dim, id_col=id_col, vec_col=vec_col,
         thresholds=thresholds,
     )
-    return _shortlist_rerank(
-        corpus, queries, ranked, k, shortlist, id_col, vec_col
-    )
-
-
-def _shortlist_rerank(
-    corpus: DataFrame,
-    queries: DataFrame,
-    ranked: DataFrame,
-    k: int,
-    shortlist: int,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """The shared TAIL of ``binary_topk`` and ``ivf_binary_topk``, over
-    any Hamming-ranked pairing frame (query_id, neighbor_id, hamming,
-    hrank): cut the shortlist at ``hrank <= shortlist`` (hrank already
-    encodes the (hamming ASC, neighbor_id ASC) tie-break), exact-dot
-    rerank the surviving pairs, final rank by (score DESC, neighbor_id
-    ASC), keep top-``k``. ONE copy of the cut + rerank + output shape
-    (the module's one-copy convention — a tie-break or output edit can
-    never reach one rung and not the other; ADVICE r13). The rungs
-    differ only in the pairing frame they rank: full-corpus vs
-    probed-cells."""
     pairs = ranked.filter(F.col("hrank") <= shortlist).select(
         "query_id", "neighbor_id", "hamming"
     )
-    scored = rerank_pairs(
-        corpus, queries, pairs, id_col=id_col, vec_col=vec_col
-    )
-    return _top(scored, "score_raw", "neighbor_id", k).select(
-        "query_id",
-        "neighbor_id",
-        F.round("score_raw", 6).alias("score"),
-        "hamming",
-        "rank",
+    return _ranked(
+        _rescore(corpus, queries, pairs, id_col, vec_col, dot=True),
+        "score_raw", k, ("score_raw", "score"), "hamming",
     )
 
 
@@ -282,57 +252,44 @@ def hamming_ranked(
     can cut BOTH its shortlist and its raw-Hamming baseline from the
     one copy of the pairing/tie-break rule. Returns (query_id,
     neighbor_id, hamming, hrank) with hrank by (hamming ASC,
-    neighbor_id ASC); self-matches excluded.
-
-    The dim-sized thresholds frame is checkpointed once: both pack
-    calls crossJoin it, and without the checkpoint each would re-run
-    the per-dimension aggregation — a second full corpus scan for 64
-    doubles. ``thresholds``: optional precomputed frame skipping even
-    the first pass; a lazy frame is defensively materialized
-    (``_materialized``) so the contract holds for any caller."""
-    if thresholds is None:
-        thr = binary_thresholds(corpus, vec_col=vec_col).localCheckpoint(
-            eager=True
-        )
-    else:
-        thr = _materialized(thresholds)
+    neighbor_id ASC); self-matches excluded (``_thresholds``
+    materializes the thresholds both packs read)."""
+    thr = _thresholds(corpus, vec_col, thresholds)
     c = binary_pack(corpus, thr, dim, id_col=id_col, vec_col=vec_col).select(
         F.col(id_col).alias("neighbor_id"), F.col("words").alias("nwords")
     )
     q = binary_pack(queries, thr, dim, id_col=id_col, vec_col=vec_col).select(
         F.col(id_col).alias("query_id"), F.col("words").alias("qwords")
     )
-    paired = c.join(
-        F.broadcast(q), F.col("neighbor_id") != F.col("query_id")
-    ).select(
+    return _hamming_rank(c, q)
+
+
+def _thresholds(
+    corpus: DataFrame, vec_col: str, thresholds: DataFrame | None
+) -> DataFrame:
+    """The thresholds both packs crossJoin, materialized once: computed
+    from ``corpus`` and checkpointed when ``thresholds`` is None
+    (without the checkpoint each pack would re-run the per-dimension
+    aggregation — a second full corpus scan for 64 doubles), else the
+    caller's frame, defensively materialized (``_materialized``)."""
+    if thresholds is None:
+        return binary_thresholds(corpus, vec_col=vec_col).localCheckpoint(
+            eager=True
+        )
+    return _materialized(thresholds)
+
+
+def _hamming_rank(c: DataFrame, q: DataFrame, on=None) -> DataFrame:
+    """Pair the packed corpus ``c`` (neighbor_id, nwords[, cell_id])
+    with the packed queries ``q`` (query_id, qwords[, cell_id]) and
+    rank each query's pairs by (hamming ASC, neighbor_id ASC) as
+    ``hrank``."""
+    paired = _pair(c, q, on).select(
         "query_id",
         "neighbor_id",
         hamming(F.col("nwords"), F.col("qwords")).alias("hamming"),
     )
     return _top(paired, "hamming", "neighbor_id", rank="hrank", asc=True)
-
-
-def rerank_pairs(
-    corpus: DataFrame,
-    queries: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "vec",
-) -> DataFrame:
-    """Exact-dot rerank scoring over shortlist-many (query_id,
-    neighbor_id, ...) pairs — the family's Rerank stage
-    (``similarity._pair_fetch``: corpus floats fetched by broadcast
-    pair join, query floats broadcast whole, the fetch
-    ``mrl_topk``/``pq_rerank_topk`` share). All of ``pairs``' columns
-    pass through (binary_topk carries ``hamming``; a caller scoring
-    bare id pairs carries nothing extra) plus ``score_raw``, the
-    ordered ``_dot`` fold; the caller ranks (binary_topk) or joins
-    ground truth (the eval)."""
-    return _pair_fetch(
-        corpus, queries, pairs, id_col, vec_col, cvec="nvec"
-    ).select(
-        *pairs.columns, _dot(F.col("nvec"), F.col("qvec")).alias("score_raw")
-    )
 
 
 def ivf_binary_topk(
@@ -349,24 +306,20 @@ def ivf_binary_topk(
 ) -> DataFrame:
     """IVF x binary — the compression-x-pruning grid's cheapest cell:
     the shared IVF stage (``_cell_assign``, the one rule the whole
-    family uses) restricts pairing to each query's ``nprobe`` cells,
-    and WITHIN them candidates rank by packed-word Hamming before the
-    exact rescore of the ``shortlist``. The realistic big-corpus
-    serving stack: cell pruning cuts the scan to nprobe/nlist of the
-    corpus, the 1-bit codes cut the scanned bytes 32x, and floats are
-    touched only for |queries| x shortlist pairs — multiplicative
-    savings, same plan skeleton as ivf_sq8_topk (broadcast probe
-    list, equi-join on cell_id, one per-query top-k window).
+    family uses; ``_route`` on the query side) restricts pairing to
+    each query's ``nprobe`` cells, and WITHIN them candidates rank by
+    packed-word Hamming before the exact rescore of the
+    ``shortlist``. The realistic big-corpus serving stack: cell
+    pruning cuts the scan to nprobe/nlist of the corpus, the 1-bit
+    codes cut the scanned bytes 32x, and floats are touched only for
+    |queries| x shortlist pairs — multiplicative savings, same plan
+    skeleton as ivf_sq8_topk (broadcast probe list, equi-join on
+    cell_id, one per-query top-k window).
 
     Returns (query_id, neighbor_id, score, hamming, rank); ties and
     determinism identical to ``binary_topk`` (the probed-cell
     restriction changes WHICH pairs are ranked, never how)."""
-    if thresholds is None:
-        thr = binary_thresholds(corpus, vec_col=vec_col).localCheckpoint(
-            eager=True
-        )
-    else:
-        thr = _materialized(thresholds)
+    thr = _thresholds(corpus, vec_col, thresholds)
     assigned = _cell_assign(corpus, centroids, id_col, vec_col, 1)
     c = binary_pack(
         assigned, thr, dim, id_col=id_col, vec_col="vec", keep=("cell_id",)
@@ -375,23 +328,15 @@ def ivf_binary_topk(
         "cell_id",
         F.col("words").alias("nwords"),
     )
-    qprobe = _cell_assign(
-        queries, centroids, id_col, vec_col, nprobe, local_par=False
-    ).select(F.col(id_col).alias("query_id"), "cell_id")
     qp = binary_pack(queries, thr, dim, id_col=id_col, vec_col=vec_col).select(
         F.col(id_col).alias("query_id"), F.col("words").alias("qwords")
     )
-    probe_q = qprobe.join(qp, "query_id")
-    paired = (
-        c.join(F.broadcast(probe_q), "cell_id")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            hamming(F.col("nwords"), F.col("qwords")).alias("hamming"),
-        )
+    probe_q = _route(queries, centroids, id_col, vec_col, nprobe).join(qp, "query_id")
+    ranked = _hamming_rank(c, probe_q, "cell_id")
+    pairs = ranked.filter(F.col("hrank") <= shortlist).select(
+        "query_id", "neighbor_id", "hamming"
     )
-    ranked = _top(paired, "hamming", "neighbor_id", rank="hrank", asc=True)
-    return _shortlist_rerank(
-        corpus, queries, ranked, k, shortlist, id_col, vec_col
+    return _ranked(
+        _rescore(corpus, queries, pairs, id_col, vec_col, dot=True),
+        "score_raw", k, ("score_raw", "score"), "hamming",
     )

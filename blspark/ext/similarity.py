@@ -1,41 +1,53 @@
 """Similarity search over embedding columns (array<float>).
 
 Every search entry point here and in ``ext/binaryq.py`` is one
-prune -> refine pipeline over a swappable score, built from four
-shared stages. Each stage is written once, so a guard or tie-break fix
-reaches every rung:
+prune -> refine pipeline over a swappable score. The stages and the
+glue between them are each written once, so a guard, tie-break or
+broadcast fix reaches every rung:
 
-- **Route** (``_cell_assign``): projects a raw frame to (id, vec,
-  vnorm) (``_vecs`` — the double cast and the hoisted norm) and sends
-  each row to its nearest ``probes`` IVF cells by guarded cosine
-  (lowest cell_id on ties). Corpus sides route at probes=1 (a map-side
-  argmin), query sides at ``nprobe``. ``adaptive_probes`` is the
-  per-query adaptive probe list, ``_frozen_cells`` the streaming form
-  against a frozen centroid list; LSH routes by ``hyperplane_buckets``.
-- **Score** (``_cos``): the zero-norm-guarded cosine over ``_dot``'s
+- **Route**: ``_cell_assign`` projects a raw frame to (id, vec, vnorm)
+  (``_vecs`` — the double cast and the hoisted norm) and sends each row
+  to its nearest ``probes`` IVF cells by guarded cosine (lowest
+  cell_id on ties). Corpus sides route at probes=1 (a map-side
+  argmin). Query sides go through one of two routers, both returning
+  (query_id, qvec, qnorm, cell_id): ``_route`` (a fixed ``nprobe``) or
+  ``ivf_adaptive_probe_frame`` (``probe_lo`` or ``probe_hi`` cells per
+  query by the top-1/top-2 margin, plus ``nprobe_used``).
+  ``_frozen_cells`` is the streaming form against a frozen centroid
+  list; LSH routes by ``hyperplane_buckets``.
+- **Pair** (``_pair``): the corpus side meets the broadcast query side
+  on a probe key (cell, bucket, PQ code) or on nothing, minus self
+  pairs.
+- **Score**: ``_cos``, the zero-norm-guarded cosine over ``_dot``'s
   ordered fold — a degenerate vector scores -inf, never NaN or an ANSI
   ``DIVIDE_BY_ZERO``. The compressed rungs swap in their own exact
-  scorers: ``_idot`` (SQ8), the ordered ADC fold (``_adc_rank``, PQ),
+  scorers: ``_sq8_rank``'s int64 ``_idot`` (SQ8, sides built by
+  ``_sq8_side``), ``_adc``'s ordered LUT fold (PQ),
   ``binaryq.hamming`` (1-bit codes), MaxSim's token maxima.
-- **Rank** (``_top``): the one per-query top-k tail — ``row_number``
-  over (score DESC, id ASC), keep rank <= k.
-- **Rerank** (``_pair_fetch``): full vectors are fetched only for a
+- **Ranked tail** (``_ranked``): ``_top``'s per-query ``row_number``
+  over (score DESC, neighbor_id ASC), keep rank <= k, then the output
+  columns with the scores rounded to 6 dp.
+- **Rerank** (``_rescore``): full vectors are fetched only for a
   shortlist of (query_id, neighbor_id) pairs, by broadcast pair join
-  against the corpus scan, then scored exactly and ranked again.
+  against the corpus scan, and scored exactly (cosine, or the inner
+  product); ``_ranked`` ranks them again.
 
 Entry points by composition:
 
-- score + rank: ``cosine_topk`` (the brute-force correctness
+- pair + score + tail: ``cosine_topk`` (the brute-force correctness
   baseline), ``sq8_topk``, ``maxsim_topk`` / ``maxsim_tokens_topk``,
   ``pq_adc_topk``;
-- route + score + rank: ``ivf_topk``, ``ivf_adaptive_topk``,
-  ``ivf_sq8_topk``, ``maxsim_pruned_topk``, ``ivfpq_topk`` /
-  ``ivfpq_query``, ``ivfpq_adaptive_topk``, ``ivfpq_residual_topk``
-  (the three IVF-PQ rungs share the probed ADC scan ``_probed_adc``),
-  ``hyperplane_lsh_topk`` (LSH buckets, optionally multi-probe);
-- score + rank + rerank: ``mrl_topk`` (prefix cosine shortlist),
-  ``pq_rerank_topk`` (ADC shortlist), ``binaryq.binary_topk``
-  (Hamming shortlist), and routed first: ``binaryq.ivf_binary_topk``;
+- route + pair + score + tail: ``ivf_topk`` and ``ivf_adaptive_topk``
+  (the same pairing, score and tail behind the two routers),
+  ``ivf_sq8_topk``, ``maxsim_pruned_topk`` (routed candidate pairs),
+  ``ivfpq_query`` / ``ivfpq_adaptive_query`` over
+  ``ivfpq_build_index``'s codes and ``ivfpq_residual_topk`` (all three
+  the probed ``_adc`` scan), ``hyperplane_lsh_topk`` (LSH buckets,
+  optionally multi-probe);
+- pair + score + rank + rerank: ``mrl_topk`` (prefix cosine
+  shortlist), ``pq_rerank_topk`` (ADC shortlist),
+  ``binaryq.binary_topk`` (Hamming shortlist, inner-product rerank),
+  and routed first: ``binaryq.ivf_binary_topk``;
 - the graph family routes the corpus once, pairs within cells through
   one self-join shape (``_cell_knn``: ``knn_graph``, ``knn_graph_sq8``,
   ``knn_graph_split``) and ranks with the same score and rank stages.
@@ -175,25 +187,84 @@ def _top(
     return out if k is None else out.filter(F.col(rank) <= k)
 
 
-def _pair_fetch(
+def _route(
+    queries: DataFrame, centroids: DataFrame, id_col: str, vec_col: str, nprobe: int
+) -> DataFrame:
+    """The fixed query-side Route: each query's ``nprobe`` nearest cells
+    by ``_cell_assign``'s rule, as (query_id, qvec, qnorm, cell_id)
+    rows. The probe list is Q x nprobe rows, metadata-sized, so it
+    skips the corpus side's local-parallelism repartition
+    (``local_par``): the round-robin exchange was pure serve-path
+    overhead there. The margin-adaptive router is
+    ``ivf_adaptive_probe_frame``, which returns the same columns plus
+    ``nprobe_used``."""
+    return _cell_assign(
+        queries, centroids, id_col, vec_col, nprobe, local_par=False
+    ).select(
+        F.col(id_col).alias("query_id"),
+        F.col("vec").alias("qvec"),
+        F.col("vnorm").alias("qnorm"),
+        "cell_id",
+    )
+
+
+def _pair(c: DataFrame, q: DataFrame, on=None) -> DataFrame:
+    """The Pairing step: corpus rows ``c`` (neighbor_id, ...) meet the
+    BROADCAST query side ``q`` (query_id, ...) on the probe key ``on``
+    (a cell, an LSH bucket, a PQ (m, code) key; a name or a list), or
+    every query when ``on`` is None; self pairs drop. The query side is
+    Q x probes rows, metadata-sized by contract, and is broadcast
+    explicitly: a probe list's window-over-crossJoin lineage defeats
+    Catalyst's size estimate, which would otherwise plan a
+    SortMergeJoin that shuffles the corpus on the key. Each neighbor
+    lives in one cell (one bucket) and a query's probes are distinct,
+    so (query, neighbor) pairs stay unique without a distinct."""
+    ne = F.col("neighbor_id") != F.col("query_id")
+    if on is None:
+        return c.join(F.broadcast(q), ne)
+    return c.join(F.broadcast(q), on).filter(ne)
+
+
+def _ranked(
+    scored: DataFrame, score, k: int, *cols, by: tuple = ("query_id",)
+) -> DataFrame:
+    """The Ranked tail: ``_top`` (``score`` DESC, neighbor_id ASC within
+    ``by``, rank <= ``k``), then (query_id, neighbor_id, *cols, rank).
+    A ``(column, name)`` pair in ``cols`` is that column rounded to
+    6 dp as ``name``: the family ranks on the raw score and rounds only
+    its output."""
+    out = [F.round(c[0], 6).alias(c[1]) if isinstance(c, tuple) else c for c in cols]
+    return _top(scored, score, "neighbor_id", k, by).select(
+        "query_id", "neighbor_id", *out, "rank"
+    )
+
+
+def _rescore(
     corpus: DataFrame,
     queries: DataFrame,
     pairs: DataFrame,
     id_col: str,
     vec_col: str,
-    cvec: str = "cvec",
+    dot: bool = False,
 ) -> DataFrame:
-    """The rerank stage's fetch: full vectors and norms for only the
-    shortlisted (query_id, neighbor_id, ...) ``pairs`` — corpus rows by
+    """The Rerank stage: full vectors are fetched only for the
+    shortlisted (query_id, neighbor_id, ...) ``pairs``, corpus rows by
     a broadcast pair join against the corpus scan (at 100 TB on a
-    sorted/bucketed layout, a point lookup), query rows broadcast
-    whole. Carries every ``pairs`` column plus (``cvec``, cnorm, qvec,
-    qnorm)."""
-    cf = _vecs(corpus, id_col, vec_col, "neighbor_id", cvec, "cnorm")
+    sorted/bucketed layout, a point lookup) and query rows broadcast
+    whole, then scored exactly: the guarded cosine as ``cos_raw``, or
+    with ``dot`` the ordered inner product as ``score_raw``. Returns
+    (query_id, neighbor_id, the other ``pairs`` columns, score);
+    ``_ranked`` ranks it."""
+    cf = _vecs(corpus, id_col, vec_col, "neighbor_id", "cvec", "cnorm")
     qf = _vecs(queries, id_col, vec_col, "query_id", "qvec", "qnorm")
-    return cf.join(F.broadcast(pairs), "neighbor_id").join(
+    fetched = cf.join(F.broadcast(pairs), "neighbor_id").join(
         F.broadcast(qf), "query_id"
     )
+    if dot:
+        raw, score = "score_raw", _dot(F.col("cvec"), F.col("qvec"))
+    else:
+        raw, score = "cos_raw", _cos("cvec", "qvec", "cnorm", "qnorm")
+    return fetched.withColumn(raw, score).drop("cvec", "cnorm", "qvec", "qnorm")
 
 
 def cosine_topk(
@@ -209,14 +280,12 @@ def cosine_topk(
     shuffle until the final per-query top-k (tiny)."""
     c = _vecs(corpus, id_col, vec_col, "neighbor_id", "vec", "cnorm")
     q = _vecs(queries, id_col, vec_col, "query_id", "qvec", "qnorm")
-    scored = c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id")).select(
+    scored = _pair(c, q).select(
         "query_id",
         "neighbor_id",
         _cos("vec", "qvec", "cnorm", "qnorm").alias("cos_raw"),
     )
-    return _top(scored, "cos_raw", "neighbor_id", k).select(
-        "query_id", "neighbor_id", F.round("cos_raw", 6).alias("cosine"), "rank"
-    )
+    return _ranked(scored, "cos_raw", k, ("cos_raw", "cosine"))
 
 
 def mrl_prefix_ranked(
@@ -236,16 +305,16 @@ def mrl_prefix_ranked(
     map-side in the corpus scan stage — at deployment the truncated
     index is the stored artifact (prefix_dim/dim of the float
     bytes)."""
-    cp = with_double_vec(corpus, vec_col).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.slice(F.col("vec"), 1, prefix_dim).alias("pvec"),
-    ).withColumn("pnorm", _norm(F.col("pvec")))
-    qp = with_double_vec(queries, vec_col).select(
-        F.col(id_col).alias("query_id"),
-        F.slice(F.col("vec"), 1, prefix_dim).alias("qpvec"),
-    ).withColumn("qpnorm", _norm(F.col("qpvec")))
-    pscored = cp.join(
-        F.broadcast(qp), F.col("neighbor_id") != F.col("query_id")
+
+    def prefix(df: DataFrame, id_out: str, v: str, n: str) -> DataFrame:
+        return with_double_vec(df, vec_col).select(
+            F.col(id_col).alias(id_out),
+            F.slice(F.col("vec"), 1, prefix_dim).alias(v),
+        ).withColumn(n, _norm(F.col(v)))
+
+    pscored = _pair(
+        prefix(corpus, "neighbor_id", "pvec", "pnorm"),
+        prefix(queries, "query_id", "qpvec", "qpnorm"),
     ).select(
         "query_id",
         "neighbor_id",
@@ -281,8 +350,8 @@ def mrl_topk(
     training, quantization or cell routing); the truncated QUERY
     frame is broadcast; the shortlist cut is one per-query window
     over (prefix_cos, neighbor_id); full vectors are touched ONLY to
-    fetch the |queries| x shortlist rerank pairs (broadcast pair
-    join, the pq_rerank/binary fetch device). Composes below the
+    fetch the |queries| x shortlist rerank pairs (``_rescore``, the
+    rerank the PQ and binary rungs share). Composes below the
     other rungs: MRL truncation is orthogonal to SQ8/PQ/binary — a
     deployment quantizes the PREFIX.
 
@@ -302,18 +371,12 @@ def mrl_topk(
         .filter(F.col("prank") <= shortlist)
         .select("query_id", "neighbor_id", "pcos")
     )
-    rescored = _pair_fetch(corpus, queries, pairs, id_col, vec_col).select(
-        "query_id",
-        "neighbor_id",
-        "pcos",
-        _cos("cvec", "qvec", "cnorm", "qnorm").alias("cos_raw"),
-    )
-    return _top(rescored, "cos_raw", "neighbor_id", k).select(
-        "query_id",
-        "neighbor_id",
-        F.round("cos_raw", 6).alias("cosine"),
-        F.round("pcos", 6).alias("prefix_cosine"),
-        "rank",
+    return _ranked(
+        _rescore(corpus, queries, pairs, id_col, vec_col),
+        "cos_raw",
+        k,
+        ("cos_raw", "cosine"),
+        ("pcos", "prefix_cosine"),
     )
 
 
@@ -385,7 +448,6 @@ def sq8_topk(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "vec",
-    candidates: DataFrame | None = None,
 ) -> DataFrame:
     """Approximate top-k by inner product over SQ8 codes — the scalar-
     quantization rung of the compression ladder (PQ quantizes
@@ -400,71 +462,57 @@ def sq8_topk(
     double multiply per (query, neighbor) pair at the end. Plan shape
     mirrors cosine_topk: quantization is map-side in the same stage as
     the scan, queries broadcast, no shuffle until the per-query top-k.
-    ``candidates``: optional (query_id, neighbor_id) frame restricting
-    which pairs are scored — with candidates, the quantized corpus
-    joins them on neighbor_id (an equi-join that prunes before any
-    query pairing); without, every (corpus, query) pair is scored.
-    PRECONDITION: candidate pairs must be UNIQUE — a duplicated
-    (query, neighbor) row scores twice and occupies two top-k ranks
-    (multi-band LSH candidate sets must be distinct()ed first; IVF
-    cell joins are unique by construction, one cell per neighbor).
-    Note ``ivf_sq8_topk`` no longer routes through this path — it
-    joins the probe list on cell_id directly, which avoids a
-    corpus-sized candidates shuffle at scale.
     Returns (query_id, neighbor_id, score, iprod, rank); score is the
     reconstructed inner product (6 dp), iprod the exact integer dot.
     """
-    c = sq8_quantize(corpus, id_col=id_col, vec_col=vec_col).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col("qvec").alias("nq"),
-        F.col("scale").alias("nscale"),
+    return _sq8_rank(
+        _pair(
+            _sq8_side(corpus, id_col, vec_col, "n"),
+            _sq8_side(queries, id_col, vec_col, "q"),
+        ),
+        k,
     )
-    q = sq8_quantize(queries, id_col=id_col, vec_col=vec_col).select(
-        F.col(id_col).alias("query_id"),
-        F.col("qvec").alias("qq"),
-        F.col("scale").alias("qscale"),
+
+
+def _sq8_side(
+    df: DataFrame, id_col: str, vec_col: str, side: str, keep: tuple = ()
+) -> DataFrame:
+    """One side of an SQ8 pairing: ``sq8_quantize``'s codes under the
+    names ``_sq8_rank`` reads — side "q" gives (query_id, qq, qscale),
+    side "n" gives (neighbor_id, *keep, nq, nscale)."""
+    return sq8_quantize(df, id_col=id_col, vec_col=vec_col, keep=keep).select(
+        F.col(id_col).alias("query_id" if side == "q" else "neighbor_id"),
+        *keep,
+        F.col("qvec").alias(side + "q"),
+        F.col("scale").alias(side + "scale"),
     )
-    if candidates is not None:
-        paired = (
-            c.join(candidates.select("query_id", "neighbor_id"), "neighbor_id")
-            .join(F.broadcast(q), "query_id")
-            .filter(F.col("neighbor_id") != F.col("query_id"))
-        )
-    else:
-        paired = c.join(
-            F.broadcast(q), F.col("neighbor_id") != F.col("query_id")
-        )
-    return _sq8_rank(paired, k)
 
 
 def _sq8_rank(
-    paired: DataFrame,
-    k: int,
-    keep: tuple = (),
-    part_extra: tuple = (),
-    unroll: bool = False,
+    paired: DataFrame, k: int, keep: tuple = (), part_extra: tuple = ()
 ) -> DataFrame:
-    """The SQ8 scoring + top-k tail shared by ``sq8_topk`` and
-    ``ivf_sq8_topk`` (one copy, so the exact int64 core and the
-    rank/tie-break rules can never diverge between the plain and the
-    cell-pruned paths). ``paired`` must carry (query_id, neighbor_id,
-    nq, nscale, qq, qscale); ``keep`` names extra ``paired`` columns
-    to carry through to the output unchanged (the filtered-index
-    query rides the neighbor's attribute along). ``part_extra`` names
-    ``paired`` columns PREPENDED to the window's partition spec and
-    dropped from the output — the graph self-join passes its cell key
+    """The SQ8 score + ranked tail shared by ``sq8_topk``,
+    ``ivf_sq8_topk``, the persisted-index probes and the graph's SQ8
+    rung (one copy, so the exact int64 core and the rank/tie-break
+    rules can never diverge between the plain and the cell-pruned
+    paths). ``paired`` must carry (query_id, neighbor_id, nq, nscale,
+    qq, qscale); ``keep`` names extra ``paired`` columns to carry
+    through to the output unchanged (the filtered-index query rides
+    the neighbor's attribute along). ``part_extra`` names ``paired``
+    columns PREPENDED to the window's partition spec and dropped from
+    the output — the graph self-join's plain path passes its cell key
     (functionally determined by query_id, so ranking is identical)
-    because hash(cell_id) from the join already satisfies the
-    widened clustering and the pair-list Exchange before the window
-    disappears (optimization r16, guide §2.4). ``unroll`` switches the
-    int64 core to the unrolled codegen branch — the graph SELF-JOIN
-    passes True (quadratic pair volume amortizes the bigger
-    expression; -35% A/B on x_knn_graph_sq8); the query-set serve
-    paths keep the HOF fold (their probe volumes are small and the
-    bigger per-plan codegen cost measured as a regression on the
-    persisted-index scans — the _dot/_dot_unrolled split's rationale,
-    identical sums either way)."""
-    idot = _idot if unroll else _idot_hof
+    because hash(cell_id) from the join already satisfies the widened
+    clustering and the pair-list Exchange before the window disappears
+    (optimization r16, guide §2.4). That quadratic self-join is also
+    the one caller whose pair volume amortizes the unrolled int64
+    core (-35% A/B on x_knn_graph_sq8), so a non-empty ``part_extra``
+    switches it on; the query-set serve paths keep the HOF fold (their
+    probe volumes are small and the bigger per-plan codegen cost
+    measured as a regression on the persisted-index scans — the
+    _dot/_dot_unrolled split's rationale, identical sums either
+    way)."""
+    idot = _idot if part_extra else _idot_hof
     scored = paired.select(
         "query_id",
         "neighbor_id",
@@ -474,15 +522,9 @@ def _sq8_rank(
         (F.col("nscale") * F.col("qscale")).alias("ss"),
     )
     score = F.col("iprod") * F.col("ss")
-    return _top(
-        scored, score, "neighbor_id", k, by=(*part_extra, "query_id")
-    ).select(
-        "query_id",
-        "neighbor_id",
-        *keep,
-        F.round(score, 6).alias("score"),
-        "iprod",
-        "rank",
+    return _ranked(
+        scored, score, k, *keep, (score, "score"), "iprod",
+        by=(*part_extra, "query_id"),
     )
 
 
@@ -509,60 +551,18 @@ def ivf_sq8_topk(
     quantization rides the cell-assigned frame (``sq8_quantize`` with
     cell_id carried through), and the (probe, quantized-query) list —
     Q x nprobe rows — joins it as a BROADCAST on cell_id, so the
-    corpus side never exchanges for the pairing (an earlier draft
-    routed a (query, neighbor) candidates frame through ``sq8_topk``,
-    which shuffled the corpus on neighbor_id — at 100 TB that shuffle
-    IS the query cost). Scoring and ranking are ``_sq8_rank``, shared
-    verbatim with ``sq8_topk``; pairs are unique by construction
-    (each neighbor lives in exactly one cell)."""
-    c_cells = _cell_assign(corpus, centroids, id_col, vec_col, 1)
-    cq = sq8_quantize(c_cells, id_col=id_col, vec_col="vec", keep=("cell_id",)).select(
-        F.col(id_col).alias("neighbor_id"),
-        "cell_id",
-        F.col("qvec").alias("nq"),
-        F.col("scale").alias("nscale"),
+    corpus side never exchanges for the pairing (at 100 TB a
+    corpus-sized shuffle IS the query cost). Scoring and ranking are
+    ``_sq8_rank``, shared verbatim with ``sq8_topk``; pairs are unique
+    by construction (each neighbor lives in exactly one cell)."""
+    cq = _sq8_side(
+        _cell_assign(corpus, centroids, id_col, vec_col, 1),
+        id_col, "vec", "n", ("cell_id",),
     )
-    probes = _cell_assign(
-        queries, centroids, id_col, vec_col, nprobe, local_par=False
-    ).select(F.col(id_col).alias("query_id"), "cell_id")
-    qz = sq8_quantize(queries, id_col=id_col, vec_col=vec_col).select(
-        F.col(id_col).alias("query_id"),
-        F.col("qvec").alias("qq"),
-        F.col("scale").alias("qscale"),
+    probe_q = _route(queries, centroids, id_col, vec_col, nprobe).join(
+        _sq8_side(queries, id_col, vec_col, "q"), "query_id"
     )
-    probe_q = probes.join(qz, "query_id")
-    paired = cq.join(F.broadcast(probe_q), "cell_id").filter(
-        F.col("neighbor_id") != F.col("query_id")
-    )
-    return _sq8_rank(paired, k)
-
-
-def _ivf_candidates(
-    corpus: DataFrame,
-    queries: DataFrame,
-    centroids: DataFrame,
-    nprobe: int,
-    id_col: str = "vec_id",
-    vec_col: str = "vec",
-) -> DataFrame:
-    """(query_id, neighbor_id) candidate pairs from the shared IVF
-    rule: corpus cell-assigned at probes=1, queries at ``nprobe``,
-    equi-joined on cell_id with the probe list broadcast. Pairs are
-    UNIQUE by construction (each neighbor lives in exactly one cell).
-    The ONE copy of candidate construction for consumers that score
-    arbitrary pair sets (``maxsim_pruned_topk``); operators whose
-    scoring frame can carry cell_id directly (``ivf_sq8_topk``,
-    ``ivfpq_query``) skip the pair frame and broadcast-join their
-    probe list on cell_id instead."""
-    c_cells = _cell_assign(corpus, centroids, id_col, vec_col, 1).select(
-        F.col(id_col).alias("neighbor_id"), "cell_id"
-    )
-    probes = _cell_assign(
-        queries, centroids, id_col, vec_col, nprobe, local_par=False
-    ).select(F.col(id_col).alias("query_id"), "cell_id")
-    return c_cells.join(F.broadcast(probes), "cell_id").select(
-        "query_id", "neighbor_id"
-    )
+    return _sq8_rank(_pair(cq, probe_q, "cell_id"), k)
 
 
 def maxsim_topk(
@@ -598,9 +598,7 @@ def maxsim_topk(
     corpus token explode is map-side in the scan's stage; the
     (query, doc, query_token) MAX and the (query, doc) ordered sum are
     both hash aggregates with map-side partials — the only shuffle of
-    corpus-sized data is (query, doc)-keyed rows of one double. At
-    100 TB, compose with an IVF/LSH candidate filter in front (score
-    only shortlisted docs) exactly like pq_rerank_topk's fetch stage.
+    corpus-sized data is (query, doc)-keyed rows of one double.
     ``candidates``: optional (query_id, neighbor_id) frame restricting
     which pairs are scored — the 100 TB shape: an IVF/LSH stage
     produces the candidate set, MaxSim scores ONLY those pairs instead
@@ -686,19 +684,15 @@ def maxsim_tokens_topk(
     semantics, and the scale shape are exactly ``maxsim_topk``'s —
     the per-(query, doc, qtoken) MAX is cardinality-agnostic, and the
     final sum folds the query's OWN token maxima in qm order, however
-    many there are."""
+    many there are. With ``candidates`` the query tokens pair on
+    query_id with the candidate-restricted document tokens."""
+    on = None
     if candidates is not None:
-        paired = d_tok.join(
-            candidates.select("query_id", "neighbor_id"), "neighbor_id"
-        ).join(
-            F.broadcast(q_tok), "query_id"
-        ).filter(F.col("neighbor_id") != F.col("query_id"))
-    else:
-        paired = d_tok.join(
-            F.broadcast(q_tok), F.col("neighbor_id") != F.col("query_id")
-        )
+        d_tok = d_tok.join(candidates.select("query_id", "neighbor_id"), "neighbor_id")
+        on = "query_id"
     best = (
-        paired.select(
+        _pair(d_tok, q_tok, on)
+        .select(
             "query_id", "neighbor_id", "qm",
             _dot(F.col("sv"), F.col("qsv")).alias("dp"),
         )
@@ -715,9 +709,7 @@ def maxsim_tokens_topk(
             lambda acc, x: acc + x,
         ).alias("score_raw")
     )
-    return _top(scored, "score_raw", "neighbor_id", k).select(
-        "query_id", "neighbor_id", F.round("score_raw", 6).alias("score"), "rank"
-    )
+    return _ranked(scored, "score_raw", k, ("score_raw", "score"))
 
 
 def maxsim_pruned_topk(
@@ -738,16 +730,18 @@ def maxsim_pruned_topk(
     expensive O(n_tokens^2) interaction runs on |probed cells|/|cells|
     of the corpus, and with ``nprobe == |cells|`` the restriction is
     vacuous — results equal plain ``maxsim_topk`` (property-tested).
-    Candidates are (query, doc) pairs from an equi-join on cell_id —
-    broadcast probe list against the cell-assigned corpus, no cross
-    product anywhere (``_ivf_candidates`` — the shared construction,
-    pairs unique by one-cell-per-neighbor)."""
-    candidates = _ivf_candidates(
-        corpus, queries, centroids, nprobe, id_col=id_col, vec_col=vec_col
+    Candidates are (query, doc) pairs from the cell-assigned corpus
+    paired with the routed probe list on cell_id (``_route`` +
+    ``_pair``) — no cross product anywhere, pairs unique by
+    one-cell-per-neighbor."""
+    cells = _cell_assign(corpus, centroids, id_col, vec_col, 1).select(
+        F.col(id_col).alias("neighbor_id"), "cell_id"
     )
+    probes = _route(queries, centroids, id_col, vec_col, nprobe)
     return maxsim_topk(
-        corpus, queries, n_tokens, token_dim, k=k,
-        id_col=id_col, vec_col=vec_col, candidates=candidates,
+        corpus, queries, n_tokens, token_dim, k=k, id_col=id_col,
+        vec_col=vec_col,
+        candidates=_pair(cells, probes, "cell_id").select("query_id", "neighbor_id"),
     )
 
 
@@ -852,11 +846,12 @@ def _cell_assign(
         # one task. The local default repartitions the compact
         # (id, vec, norm) projection across the cores; production
         # leaves it unset and pays ZERO shuffle for the assignment.
-        # ``local_par=False`` skips it even locally — QUERY-side
-        # assigns are metadata-sized, so the round-robin exchange was
-        # pure serve-path overhead (the r16 A/B's +14-18% on the
-        # IVF/PQ serve family; VERDICT r16 item 4): only CORPUS-side
-        # callers ask for the parallelism restore.
+        # The query router ``_route`` turns ``local_par`` off even
+        # locally — QUERY-side assigns are metadata-sized, so the
+        # round-robin exchange was pure serve-path overhead (the r16
+        # A/B's +14-18% on the IVF/PQ serve family; VERDICT r16 item
+        # 4): only CORPUS-side callers ask for the parallelism
+        # restore.
         par = df.sparkSession.conf.get("blspark.assign.localParallelism", "")
         if local_par and par and int(par) > 0:
             df = df.repartition(int(par))
@@ -942,68 +937,39 @@ def ivf_topk(
     (the correctness property tests assert); with nprobe=1 the bucketed
     equi-join on cell_id replaces the cross product — the same shuffle
     shape as the LSH variant but with learned, data-adaptive cells.
-    Returns (query_id, neighbor_id, cosine, rank)."""
+    Scores are the family's zero-norm-guarded cosine (a degenerate
+    vector ranks LAST as -inf). Returns (query_id, neighbor_id,
+    cosine, rank)."""
     c = _cell_assign(corpus, centroids, id_col, vec_col, 1, "neighbor_id")
-    q = _cell_assign(
-        queries, centroids, id_col, vec_col, nprobe, "query_id", local_par=False
-    ).select(
-        "query_id", F.col("vec").alias("qvec"), F.col("vnorm").alias("qnorm"), "cell_id"
-    )
-    return _ivf_float_rank(c, q, k)
-
-
-def _ivf_float_rank(c: DataFrame, q: DataFrame, k: int, keep: tuple = ()) -> DataFrame:
-    """The ONE exact-cosine IVF scoring tail shared by ``ivf_topk`` and
-    ``ivf_adaptive_topk``: equi-join the cell-assigned corpus ``c``
-    (neighbor_id, vec, vnorm, cell_id) with the probe list ``q``
-    (query_id, qvec, qnorm, cell_id), score with the family's zero-norm
-    guard (a degenerate vector ranks LAST as -inf instead of an ANSI
-    0/0 abort; finite sims are untouched), and take the per-query
-    top-k. Each neighbor lives in exactly one cell, so (query,
-    neighbor) pairs are unique even with multiple probes — no distinct
-    needed. ``keep`` carries extra ``q``-side columns through to the
-    output (the _sq8_rank device — the adaptive query rides
-    nprobe_used along instead of re-running the probe subtree for a
-    second join).
-
-    The probe list is Q x nprobe rows — metadata-sized by contract —
-    and is BROADCAST explicitly (the ivf_sq8_topk/_ivf_candidates
-    convention): its window-over-crossJoin lineage defeats Catalyst's
-    size estimate, which otherwise plans a SortMergeJoin that
-    shuffles the whole cell-assigned corpus on cell_id — at 100 TB
-    that shuffle IS the query cost."""
-    scored = c.join(
-        F.broadcast(q),
-        (c.cell_id == q.cell_id) & (F.col("neighbor_id") != F.col("query_id")),
-    ).select(
+    q = _route(queries, centroids, id_col, vec_col, nprobe)
+    scored = _pair(c, q, "cell_id").select(
         "query_id",
         "neighbor_id",
-        *keep,
         _cos("vec", "qvec", "vnorm", "qnorm").alias("cos_raw"),
     )
-    return _top(scored, "cos_raw", "neighbor_id", k).select(
-        "query_id", "neighbor_id", *keep,
-        F.round("cos_raw", 6).alias("cosine"), "rank",
-    )
+    return _ranked(scored, "cos_raw", k, ("cos_raw", "cosine"))
 
 
-def adaptive_probes(
+def ivf_adaptive_probe_frame(
     queries: DataFrame,
-    cent: DataFrame,
-    idc: str,
-    probe_lo: int,
-    probe_hi: int,
-    margin_threshold: float,
+    centroids: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    probe_lo: int = 2,
+    probe_hi: int = 4,
+    margin_threshold: float = 0.05,
 ) -> DataFrame:
-    """Query-adaptive probe list — the recall/latency knob a fixed
-    ``nprobe`` lacks: a query whose top-1 cell wins by a CLEAR margin
-    (top1 - top2 cosine >= ``margin_threshold``) scans only its
-    ``probe_lo`` nearest cells; an AMBIGUOUS query (small margin — it
-    sits near a cell boundary, where true neighbors spill into the
-    runner-up cells) widens to ``probe_hi``. ``cent`` is a
-    ``_centroid_frame`` output (broadcast). Returns (idc, vec → qvec
-    caller-side, vnorm, cell_id, nprobe_used) rows, ``probe_lo`` or
-    ``probe_hi`` per query.
+    """The margin-adaptive query-side Route — the recall/latency knob a
+    fixed ``nprobe`` (``_route``) lacks: a query whose top-1 cell wins
+    by a CLEAR margin (top1 - top2 cosine >= ``margin_threshold``)
+    scans only its ``probe_lo`` nearest cells; an AMBIGUOUS query
+    (small margin — it sits near a cell boundary, where true neighbors
+    spill into the runner-up cells) widens to ``probe_hi``. Returns
+    (query_id, qvec, qnorm, cell_id, nprobe_used) rows, ``probe_lo``
+    or ``probe_hi`` per query — what eval contracts count
+    scanned-cell budgets from. With ``probe_lo == probe_hi == n`` the
+    cells are exactly the fixed-``nprobe`` probe list (the margin
+    branch is vacuous).
 
     The margin guards the family's degenerate cases: with fewer than
     two cells, or a zero-norm query/centroid (cell_sim pinned to -inf
@@ -1025,15 +991,19 @@ def adaptive_probes(
         # routing paths must agree; a silent 0-probe confident query
         # would vanish from results instead of erroring
         raise ValueError("probe_lo must be >= 1")
-    scored = queries.crossJoin(F.broadcast(cent)).select(
-        F.col(idc),
-        "vec",
-        "vnorm",
-        "cell_id",
-        _cos("vec", "cvec", "vnorm", "centnorm").alias("cell_sim"),
+    scored = (
+        _vecs(queries, id_col, vec_col, "query_id")
+        .crossJoin(F.broadcast(_centroid_frame(centroids)))
+        .select(
+            "query_id",
+            "vec",
+            "vnorm",
+            "cell_id",
+            _cos("vec", "cvec", "vnorm", "centnorm").alias("cell_sim"),
+        )
     )
-    wq = Window.partitionBy(idc)
-    ranked = _top(scored, "cell_sim", "cell_id", by=(idc,), rank="crank")
+    wq = Window.partitionBy("query_id")
+    ranked = _top(scored, "cell_sim", "cell_id", by=("query_id",), rank="crank")
     s1 = F.max(F.when(F.col("crank") == 1, F.col("cell_sim"))).over(wq)
     s2 = F.max(F.when(F.col("crank") == 2, F.col("cell_sim"))).over(wq)
     neg_inf = F.lit(float("-inf"))
@@ -1046,32 +1016,14 @@ def adaptive_probes(
     return (
         ranked.withColumn("nprobe_used", nprobe_used)
         .filter(F.col("crank") <= F.col("nprobe_used"))
-        .drop("cell_sim", "crank")
+        .select(
+            "query_id",
+            F.col("vec").alias("qvec"),
+            F.col("vnorm").alias("qnorm"),
+            "cell_id",
+            "nprobe_used",
+        )
     )
-
-
-def ivf_adaptive_probe_frame(
-    queries: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    probe_lo: int = 2,
-    probe_hi: int = 4,
-    margin_threshold: float = 0.05,
-) -> DataFrame:
-    """Public (query_id, cell_id, nprobe_used) probe-list view of
-    ``adaptive_probes`` — what eval contracts count scanned-cell
-    budgets from. With ``probe_lo == probe_hi == n`` this is exactly
-    the fixed-``nprobe`` probe list (the margin branch is vacuous), so
-    fixed-budget comparators come from the same single code path."""
-    return adaptive_probes(
-        _vecs(queries, id_col, vec_col, "query_id"),
-        _centroid_frame(centroids),
-        "query_id",
-        probe_lo,
-        probe_hi,
-        margin_threshold,
-    ).select("query_id", "cell_id", "nprobe_used")
 
 
 def ivf_adaptive_topk(
@@ -1086,38 +1038,37 @@ def ivf_adaptive_topk(
     margin_threshold: float = 0.05,
 ) -> DataFrame:
     """IVF ANN with QUERY-ADAPTIVE probing: per-query ``nprobe`` chosen
-    from the query <-> centroid similarity margin (``adaptive_probes``)
-    instead of one fixed fan-out — confident queries pay ``probe_lo``
-    cells, boundary queries widen to ``probe_hi``. At 100 TB this is
-    the standard serving knob: the scan budget concentrates on the
-    queries whose recall actually needs it, so the fleet-wide
-    cells-scanned budget drops below fixed-``probe_hi`` while recall
-    holds above fixed-``probe_lo`` (the x_ivf_adaptive_eval contract
-    measures both against exact ground truth).
+    from the query <-> centroid similarity margin
+    (``ivf_adaptive_probe_frame``) instead of one fixed fan-out —
+    confident queries pay ``probe_lo`` cells, boundary queries widen
+    to ``probe_hi``. At 100 TB this is the standard serving knob: the
+    scan budget concentrates on the queries whose recall actually
+    needs it, so the fleet-wide cells-scanned budget drops below
+    fixed-``probe_hi`` while recall holds above fixed-``probe_lo``
+    (the x_ivf_adaptive_eval contract measures both against exact
+    ground truth).
 
-    Corpus side is the shared ``_cell_assign`` probes=1 rule (map-side
-    hash-agg argmin — identical cell geometry to the whole IVF
-    family); scoring/ranking is ``_ivf_float_rank``, shared verbatim
-    with ``ivf_topk``, so with ``probe_lo == probe_hi == n`` results
-    equal ``ivf_topk(nprobe=n)`` exactly (property-tested). Returns
-    (query_id, neighbor_id, cosine, rank, nprobe_used)."""
+    Corpus side, pairing, score and tail are ``ivf_topk``'s
+    (``_cell_assign`` probes=1, ``_pair`` on cell_id, ``_cos``,
+    ``_ranked``), so with ``probe_lo == probe_hi == n`` results equal
+    ``ivf_topk(nprobe=n)`` exactly (property-tested). ``nprobe_used``
+    rides the scoring join — re-joining the probe frame for it would
+    execute the probe subtree twice. Returns (query_id, neighbor_id,
+    cosine, rank, nprobe_used)."""
     c = _cell_assign(corpus, centroids, id_col, vec_col, 1, "neighbor_id")
-    q = adaptive_probes(
-        _vecs(queries, id_col, vec_col, "query_id"),
-        _centroid_frame(centroids),
-        "query_id",
-        probe_lo,
-        probe_hi,
+    q = ivf_adaptive_probe_frame(
+        queries, centroids, id_col, vec_col, probe_lo, probe_hi,
         margin_threshold,
-    ).select(
-        "query_id", F.col("vec").alias("qvec"),
-        F.col("vnorm").alias("qnorm"), "cell_id", "nprobe_used",
     )
-    # nprobe_used rides the scoring join (keep=) — re-joining the probe
-    # frame for it would execute the adaptive_probes subtree twice
-    return _ivf_float_rank(c, q, k, keep=("nprobe_used",)).select(
-        "query_id", "neighbor_id", "cosine", "rank", "nprobe_used"
+    scored = _pair(c, q, "cell_id").select(
+        "query_id",
+        "neighbor_id",
+        "nprobe_used",
+        _cos("vec", "qvec", "vnorm", "qnorm").alias("cos_raw"),
     )
+    return _ranked(
+        scored, "cos_raw", k, ("cos_raw", "cosine"), "nprobe_used"
+    ).select("query_id", "neighbor_id", "cosine", "rank", "nprobe_used")
 
 
 def _blocked_cell_join(
@@ -1566,7 +1517,7 @@ def knn_graph_sq8(
     # rows re-pay the bigger expression without the plain path's fused
     # join->project pipeline
     def rank(paired: DataFrame, part: tuple) -> DataFrame:
-        return _sq8_rank(paired, k, part_extra=part, unroll=max_block is None)
+        return _sq8_rank(paired, k, part_extra=part)
 
     cols = [
         F.col("query_id").alias("src_id"),
@@ -2650,69 +2601,61 @@ def pq_adc_topk(
     values, broadcast — turns scoring into a sum of M table lookups per
     corpus vector: join codes to the LUT on (m, code), then one
     (query, neighbor)-keyed sum with map-side partial aggregation.
-    No raw vector is touched during scanning.
-
-    Determinism: per-pair scores fold the M per-subspace values in
-    subspace order (collect, sort by m, sequential aggregate) — the
-    same left-to-right order DuckDB's ``list_sum(list(val ORDER BY
-    m))`` uses — never an unordered double SUM.
+    No raw vector is touched during scanning (``_adc``).
 
     At 100 TB, compose with IVF: keep cell_id on the codes frame and
     restrict the LUT join to the query's probed cells, which prunes the
-    scan the same way ivf_topk does (FAISS IVF-PQ — ``ivfpq_topk``,
-    which shares this function's LUT and fold helpers). Returns
+    scan the same way ivf_topk does (FAISS IVF-PQ — ``ivfpq_query``
+    over ``ivfpq_build_index``'s codes, the same ``_adc`` scan). Returns
     (query_id, neighbor_id, score, rank); score is the approximate
     inner product, rounded to 6 dp for display after ranking."""
     qsv = pq_subvectors(queries, n_subspaces, subdim, id_col=id_col).select(
         F.col(id_col).alias("query_id"), "m", "sv"
     )
-    lut = _pq_lut(qsv, codebooks)
-    scored = (
-        corpus_codes.withColumnRenamed(id_col, "neighbor_id")
-        .join(
-            F.broadcast(lut),
-            ["m", "code"],
-        )
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-    )
-    return _adc_rank(scored, k)
+    codes = corpus_codes.withColumnRenamed(id_col, "neighbor_id")
+    return _adc(codes, qsv, codebooks, k)
 
 
-def _pq_lut(qsv: DataFrame, codebooks: DataFrame) -> DataFrame:
-    """Per-query ADC lookup table: dot(query_subvector, codeword) for
-    every (m, code) — Q x M x ks rows, broadcast-sized. ``qsv`` must
-    carry (query_id, m, sv)."""
-    return qsv.join(F.broadcast(codebooks), "m").select(
-        "query_id", "m", "code", _dot(F.col("sv"), F.col("cw")).alias("val")
-    )
-
-
-def _adc_rank(
-    scored: DataFrame,
+def _adc(
+    codes: DataFrame,
+    qsv: DataFrame,
+    codebooks: DataFrame,
     k: int,
+    probes: DataFrame | None = None,
     base_col: str | None = None,
     keep: tuple = (),
 ) -> DataFrame:
-    """Per-pair ordered ADC fold + top-k rank — the determinism-critical
-    device shared by ``pq_adc_topk``, ``ivfpq_topk`` and
-    ``ivfpq_residual_topk`` (one copy, so a numeric-policy fix can
-    never diverge them): the M per-subspace values fold in subspace
-    order (collect, sort by m, sequential aggregate), matching DuckDB's
-    ``list_sum(list(val ORDER BY m))`` — never an unordered double SUM.
-    ``scored`` must carry (query_id, neighbor_id, m, val).
+    """The PQ rungs' scan, score and tail — one copy, so a numeric-policy
+    or tie-break fix can never diverge ``pq_adc_topk`` and the IVF-PQ
+    rungs. The LUT is dot(query subvector, codeword) for every (m,
+    code): Q x M x ks rows from ``qsv`` (query_id, m, sv) and the
+    codebooks, broadcast. ``codes`` (neighbor_id, m, code[, cell_id])
+    pair with it on (m, code); with ``probes`` (query_id, cell_id, ...)
+    they pair with the probe list on cell_id first and then meet the
+    LUT on (query_id, m, code) — the probed-cell scan.
 
-    ``base_col``: optional column holding a per-(query, neighbor)
-    CONSTANT additive term (residual IVF-PQ's dot(query, centroid) —
-    each neighbor lives in exactly one cell, so the value is constant
-    within the group). It is added AFTER the fold completes
-    (``fold + base``, one commutative addition — the same association
-    DuckDB's ``list_sum(...) + min(base)`` evaluates), never folded in,
-    which would change the association and drift last-ulp.
-
-    ``keep``: extra ``scored`` columns, CONSTANT per query, to carry
-    through to the output unchanged (the adaptive rung rides each
-    query's ``nprobe_used`` decision along — the ``_sq8_rank`` keep
-    convention; per-query-constant, so ``min`` is exact)."""
+    The M per-subspace values fold in subspace order (collect, sort by
+    m, sequential aggregate), matching DuckDB's ``list_sum(list(val
+    ORDER BY m))`` — never an unordered double SUM. ``base_col``: an
+    optional probe column holding a per-(query, neighbor) CONSTANT
+    additive term (residual IVF-PQ's dot(query, centroid) — each
+    neighbor lives in exactly one cell, so the value is constant
+    within the group). It is added AFTER the fold completes (``fold +
+    base``, one commutative addition — the same association DuckDB's
+    ``list_sum(...) + min(base)`` evaluates), never folded in, which
+    would change the association and drift last-ulp. ``keep``: extra
+    probe columns, CONSTANT per query, carried to the output (the
+    adaptive rung rides each query's ``nprobe_used`` along; ``min`` is
+    exact)."""
+    lut = qsv.join(F.broadcast(codebooks), "m").select(
+        "query_id", "m", "code", _dot(F.col("sv"), F.col("cw")).alias("val")
+    )
+    if probes is None:
+        scored = _pair(codes, lut, ["m", "code"])
+    else:
+        scored = _pair(codes, probes, "cell_id").join(
+            F.broadcast(lut), ["query_id", "m", "code"]
+        )
     fold = F.aggregate(
         F.transform(
             F.array_sort(F.collect_list(F.struct("m", "val"))),
@@ -2725,13 +2668,7 @@ def _adc_rank(
     per_pair = scored.groupBy("query_id", "neighbor_id").agg(
         score.alias("score_raw"), *[F.min(c).alias(c) for c in keep]
     )
-    return _top(per_pair, "score_raw", "neighbor_id", k).select(
-        "query_id",
-        "neighbor_id",
-        *keep,
-        F.round("score_raw", 6).alias("score"),
-        "rank",
-    )
+    return _ranked(per_pair, "score_raw", k, *keep, ("score_raw", "score"))
 
 
 def pq_encode_stateless(
@@ -2804,73 +2741,17 @@ def pq_rerank_topk(
 
     Scale shape: the candidate frame is Q x shortlist rows — broadcast;
     the corpus raw-vector fetch is a broadcast-hash semi-join prune of
-    one scan (at 100 TB with a sorted/bucketed corpus layout this is a
-    point-lookup pattern). Returns (query_id, neighbor_id, cosine,
-    rank) with exact cosines; a zero-norm vector's pairs score -inf
-    and rank last (the ``_cos`` guard)."""
+    one scan (``_rescore``; at 100 TB with a sorted/bucketed corpus
+    layout this is a point-lookup pattern). Returns (query_id,
+    neighbor_id, cosine, rank) with exact cosines; a zero-norm
+    vector's pairs score -inf and rank last (the ``_cos`` guard)."""
     cand = pq_adc_topk(
         corpus_codes, queries, codebooks, n_subspaces, subdim,
         k=shortlist, id_col=id_col,
     ).select("query_id", "neighbor_id")
-    exact = _pair_fetch(
-        corpus, queries, cand, id_col, vec_col, cvec="nvec"
-    ).select(
-        "query_id",
-        "neighbor_id",
-        _cos("nvec", "qvec", "cnorm", "qnorm").alias("cos_raw"),
-    )
-    return _top(exact, "cos_raw", "neighbor_id", k).select(
-        "query_id", "neighbor_id", F.round("cos_raw", 6).alias("cosine"), "rank"
-    )
-
-
-def ivfpq_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    centroids: DataFrame,
-    codebooks: DataFrame,
-    n_subspaces: int,
-    subdim: int,
-    k: int = 3,
-    nprobe: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "vec",
-) -> DataFrame:
-    """FAISS-style IVF-PQ: IVF cells prune WHICH vectors a query scores
-    (only ``nprobe`` cells are scanned) while PQ codes shrink WHAT is
-    scored (ADC over codes; no raw corpus vector is touched during
-    scanning). This composition is the 100 TB configuration — plain
-    ``pq_adc_topk`` scans every code row per query batch, plain
-    ``ivf_topk`` reads raw vectors in probed cells; together the scan
-    is |probed cells| x M one-byte codes.
-
-    ``centroids``: (cell_id int, centroid array<double>) — tiny,
-    broadcast. ``codebooks``: (m, code, cw) from pq_train_codebooks —
-    tiny, broadcast. Corpus vectors are cell-assigned by max cosine
-    (ivf_topk's rule) and PQ-encoded once; at scale both frames would
-    be written once and reused across query batches. Returns
-    (query_id, neighbor_id, score, rank) where score is the
-    approximate inner product from the ADC fold.
-
-    With ``nprobe == |centroids|`` the cell restriction is vacuous and
-    results equal ``pq_adc_topk`` on the same codes (property-tested).
-
-    Cell assignment, the LUT build, and the ordered ADC fold are the
-    SAME helpers ivf_topk/pq_adc_topk use (``_cell_assign``,
-    ``_pq_lut``, ``_adc_rank``) — one copy each, so IVF and IVF-PQ can
-    never silently diverge on tie-breaks or fold order.
-
-    Split into ``ivfpq_build_index`` (the write-once corpus side) +
-    ``ivfpq_query`` (the per-batch query side) so production callers —
-    and the warm bench variant — can persist the codes frame and pay
-    the corpus scan once across query batches."""
-    codes = ivfpq_build_index(
-        corpus, centroids, codebooks, n_subspaces, subdim,
-        id_col=id_col, vec_col=vec_col,
-    )
-    return ivfpq_query(
-        codes, queries, centroids, codebooks, n_subspaces, subdim,
-        k=k, nprobe=nprobe, id_col=id_col, vec_col=vec_col,
+    return _ranked(
+        _rescore(corpus, queries, cand, id_col, vec_col),
+        "cos_raw", k, ("cos_raw", "cosine"),
     )
 
 
@@ -2883,12 +2764,17 @@ def ivfpq_build_index(
     id_col: str = "vec_id",
     vec_col: str = "vec",
 ) -> DataFrame:
-    """The write-once corpus side of IVF-PQ: cell-assign every vector
-    (max cosine, the shared ``_cell_assign`` rule) and PQ-encode it —
-    (id, m, code, cell_id), M rows of one-byte codes per vector. This
-    frame IS the index a 100 TB deployment persists (partitioned by
-    cell_id for probe pruning — ``x_pq_index_layout`` demonstrates);
-    every query batch after that pays only ``ivfpq_query``."""
+    """The write-once corpus side of FAISS-style IVF-PQ: IVF cells
+    prune WHICH vectors a query scores while PQ codes shrink WHAT is
+    scored (ADC over codes; no raw corpus vector is touched during
+    scanning) — together the scan is |probed cells| x M one-byte
+    codes. Cell-assign every vector (max cosine, the shared
+    ``_cell_assign`` rule) and PQ-encode it — (id, m, code, cell_id),
+    M rows of one-byte codes per vector. This frame IS the index a
+    100 TB deployment persists (partitioned by cell_id for probe
+    pruning — ``x_pq_index_layout`` demonstrates); every query batch
+    after that pays only ``ivfpq_query`` (fixed ``nprobe``) or
+    ``ivfpq_adaptive_query`` (margin-adaptive probes)."""
     c_cells = _cell_assign(corpus, centroids, id_col, vec_col, 1)
     return pq_encode(
         corpus.select(id_col, F.col(vec_col).alias("vec")),
@@ -2909,38 +2795,21 @@ def ivfpq_query(
     vec_col: str = "vec",
 ) -> DataFrame:
     """The per-batch query side of IVF-PQ over a pre-built codes frame
-    (``ivfpq_build_index``'s output): probe the query's nprobe nearest
-    cells, build the broadcast LUT, and run the ADC join restricted to
-    (query, probed cell) pairs. No corpus vector — and no corpus-sized
-    computation besides the probed-cell code scan — is touched."""
-    q_cells = _cell_assign(
-        queries, centroids, id_col, vec_col, nprobe, local_par=False
-    ).select(F.col(id_col).alias("query_id"), "vec", "cell_id")
-
+    (``ivfpq_build_index``'s output): route each query to its
+    ``nprobe`` nearest cells (``_route``), build the broadcast LUT,
+    and run the ADC scan restricted to (query, probed cell) pairs
+    (``_adc``). No corpus vector — and no corpus-sized computation
+    besides the probed-cell code scan — is touched. With ``nprobe ==
+    |centroids|`` the cell restriction is vacuous and results equal
+    ``pq_adc_topk`` on the same codes (property-tested). Returns
+    (query_id, neighbor_id, score, rank) where score is the
+    approximate inner product from the ADC fold."""
+    q = _route(queries, centroids, id_col, vec_col, nprobe)
     qsv = pq_subvectors(
-        q_cells.select("query_id", "vec").distinct(),
+        q.select("query_id", F.col("qvec").alias("vec")).distinct(),
         n_subspaces, subdim, id_col="query_id",
     )
-    lut = _pq_lut(qsv, codebooks)
-    probes = q_cells.select("query_id", "cell_id")
-    return _adc_rank(_probed_adc(codes, probes, lut, id_col), k)
-
-
-def _probed_adc(
-    codes: DataFrame, probes: DataFrame, lut: DataFrame, id_col: str
-) -> DataFrame:
-    """The IVF-PQ candidate scan: the ADC join restricted to (query,
-    probed cell) pairs — codes carry cell_id, the probe list and the
-    LUT are tiny and join broadcast. Shared by ``ivfpq_query``,
-    ``ivfpq_adaptive_query`` and ``ivfpq_residual_topk``; returns
-    (neighbor_id, query_id, m, code, val, *probe columns) rows for
-    ``_adc_rank``."""
-    return (
-        codes.withColumnRenamed(id_col, "neighbor_id")
-        .join(F.broadcast(probes), "cell_id")
-        .join(F.broadcast(lut), ["query_id", "m", "code"])
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-    )
+    return _adc(codes.withColumnRenamed(id_col, "neighbor_id"), qsv, codebooks, k, q)
 
 
 def ivfpq_adaptive_query(
@@ -2958,66 +2827,33 @@ def ivfpq_adaptive_query(
     vec_col: str = "vec",
 ) -> DataFrame:
     """``ivfpq_query`` with QUERY-ADAPTIVE probing — the margin knob
-    (``adaptive_probes``: top1 - top2 centroid-cosine margin picks
-    ``probe_lo`` or ``probe_hi`` cells per query) threaded through the
-    compressed-domain ADC pipeline, the rung a 100 TB deployment
-    actually serves: the probed-cell restriction AND the one-byte ADC
-    scan compose, so a confident query's scan budget is probe_lo
-    cells of M one-byte codes while only boundary queries widen.
+    (``ivf_adaptive_probe_frame``: top1 - top2 centroid-cosine margin
+    picks ``probe_lo`` or ``probe_hi`` cells per query) threaded
+    through the compressed-domain ADC pipeline, the rung a 100 TB
+    deployment actually serves: the probed-cell restriction AND the
+    one-byte ADC scan compose, so a confident query's scan budget is
+    probe_lo cells of M one-byte codes while only boundary queries
+    widen. Callers build the codes once with ``ivfpq_build_index``.
 
-    The probe decision, the LUT build, and the ordered ADC fold are
-    the SAME helpers the fixed-nprobe family uses (``adaptive_probes``
-    shared with ``ivf_adaptive_topk``; ``_pq_lut`` / ``_adc_rank``
-    shared with ``ivfpq_topk``) — with ``probe_lo == probe_hi == n``
-    results equal ``ivfpq_query(nprobe=n)`` exactly (property-tested).
-    Returns (query_id, neighbor_id, nprobe_used, score, rank);
-    ``nprobe_used`` rides the scoring join (``_adc_rank`` keep=) so
-    the per-query decision is visible without re-running the probe
-    subtree."""
-    q = _vecs(queries, id_col, vec_col, "query_id")
-    q_probe = adaptive_probes(
-        q, _centroid_frame(centroids), "query_id", probe_lo, probe_hi,
+    The probe decision and the ADC scan are the SAME helpers the
+    fixed-nprobe family uses (the adaptive router shared with
+    ``ivf_adaptive_topk``; ``_adc`` shared with ``ivfpq_query``) —
+    with ``probe_lo == probe_hi == n`` results equal
+    ``ivfpq_query(nprobe=n)`` exactly (property-tested). Returns
+    (query_id, neighbor_id, nprobe_used, score, rank); ``nprobe_used``
+    rides the scoring join (``_adc`` keep=) so the per-query decision
+    is visible without re-running the probe subtree."""
+    probes = ivf_adaptive_probe_frame(
+        queries, centroids, id_col, vec_col, probe_lo, probe_hi,
         margin_threshold,
     )
     qsv = pq_subvectors(
-        q.select("query_id", "vec"), n_subspaces, subdim,
-        id_col="query_id",
+        _vecs(queries, id_col, vec_col, "query_id").select("query_id", "vec"),
+        n_subspaces, subdim, id_col="query_id",
     )
-    lut = _pq_lut(qsv, codebooks)
-    probes = q_probe.select("query_id", "cell_id", "nprobe_used")
-    return _adc_rank(
-        _probed_adc(codes, probes, lut, id_col), k, keep=("nprobe_used",)
-    )
-
-
-def ivfpq_adaptive_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    centroids: DataFrame,
-    codebooks: DataFrame,
-    n_subspaces: int,
-    subdim: int,
-    k: int = 3,
-    probe_lo: int = 2,
-    probe_hi: int = 4,
-    margin_threshold: float = 0.05,
-    id_col: str = "vec_id",
-    vec_col: str = "vec",
-) -> DataFrame:
-    """``ivfpq_topk`` with query-adaptive probing: the write-once
-    corpus side is ``ivfpq_build_index`` verbatim; the per-batch query
-    side is ``ivfpq_adaptive_query``. Kept as the same build/query
-    split so production callers persist the codes frame once and pay
-    only the adaptive probe + ADC scan per batch."""
-    codes = ivfpq_build_index(
-        corpus, centroids, codebooks, n_subspaces, subdim,
-        id_col=id_col, vec_col=vec_col,
-    )
-    return ivfpq_adaptive_query(
-        codes, queries, centroids, codebooks, n_subspaces, subdim,
-        k=k, probe_lo=probe_lo, probe_hi=probe_hi,
-        margin_threshold=margin_threshold, id_col=id_col,
-        vec_col=vec_col,
+    return _adc(
+        codes.withColumnRenamed(id_col, "neighbor_id"), qsv, codebooks, k,
+        probes, keep=("nprobe_used",),
     )
 
 
@@ -3046,21 +2882,21 @@ def ivfpq_residual_topk(
     the broadcast centroid frame; the second is the standard ADC fold
     over the residual-trained LUT (raw query subvectors against
     residual codewords — no query-side residual needed for the fold).
-    Cell assignment, codebook training, the LUT build, and the ordered
-    fold are the SAME helpers the whole IVF/PQ family shares
-    (``_cell_assign`` / ``pq_train_codebooks`` / ``_pq_lut`` /
-    ``_adc_rank``); the centroid term rides ``_adc_rank``'s
-    ``base_col``.
+    Cell assignment, codebook training, the query router and the ADC
+    scan are the SAME helpers the whole IVF/PQ family shares
+    (``_cell_assign`` / ``pq_train_codebooks`` / ``_route`` /
+    ``_adc``); the centroid term rides ``_adc``'s ``base_col``.
 
-    Scale shape: identical to ``ivfpq_topk`` — centroids, codebooks,
+    Scale shape: identical to ``ivfpq_query`` — centroids, codebooks,
     probe list, and LUT broadcast; the only corpus-sized frames are the
     residual encode (one scan + (id, m)-keyed argmin) and the ADC scan
     over |probed cells| x M one-byte codes. Because training happens
     here, this function re-scans the corpus for encode exactly as
-    ``ivfpq_topk`` does; production trains once and persists codes.
+    ``ivfpq_build_index`` does; production trains once and persists
+    codes.
 
     Returns (query_id, neighbor_id, score, rank) — score is the
-    approximate inner product, comparable to ``ivfpq_topk``'s."""
+    approximate inner product, comparable to ``ivfpq_query``'s."""
     cent = _centroid_frame(centroids)
     # Recompute-over-persist, deliberately: the cell assignment feeds
     # three corpus-sized consumers (the residual projection inside the
@@ -3089,27 +2925,24 @@ def ivfpq_residual_topk(
     # cell_id comes from c_cells, not resid: re-deriving it through the
     # residual projection would re-execute the centroid join + zip_with
     # subtraction a third time just to read back a column c_cells
-    # already carries (ivfpq_topk's shape, kept identical).
+    # already carries (ivfpq_build_index's shape, kept identical).
     codes = pq_encode(resid, cb, n_subspaces, subdim, id_col=id_col).join(
         c_cells.select(id_col, "cell_id"), id_col
     )
 
-    q_cells = _cell_assign(
-        queries, centroids, id_col, vec_col, nprobe, local_par=False
-    )
     # per (query, probed cell): the coarse term dot(q, centroid)
-    probes = q_cells.join(F.broadcast(cent), "cell_id").select(
-        F.col(id_col).alias("query_id"),
-        "cell_id",
-        _dot(F.col("vec"), F.col("cvec")).alias("cell_dot"),
+    probes = _route(queries, centroids, id_col, vec_col, nprobe).join(
+        F.broadcast(cent), "cell_id"
+    ).select(
+        "query_id", "cell_id", _dot(F.col("qvec"), F.col("cvec")).alias("cell_dot")
     )
     qsv = pq_subvectors(
         queries.select(id_col, F.col(vec_col).alias("vec")),
         n_subspaces, subdim, id_col=id_col,
     ).select(F.col(id_col).alias("query_id"), "m", "sv")
-    lut = _pq_lut(qsv, cb)
-    return _adc_rank(
-        _probed_adc(codes, probes, lut, id_col), k, base_col="cell_dot"
+    return _adc(
+        codes.withColumnRenamed(id_col, "neighbor_id"), qsv, cb, k, probes,
+        base_col="cell_dot",
     )
 
 
@@ -3241,7 +3074,7 @@ def probe_cells_stateless(
     (probe_lo or probe_hi from the margin rule) and ``probe_cells``
     (the decided cells as an array<int> in rank order).
 
-    Bit-identical to ``adaptive_probes``: the candidate structs are
+    Bit-identical to ``ivf_adaptive_probe_frame``: the candidate structs are
     ``cell_assign_stateless``'s (-sim, cell_id) with the same -inf
     zero-norm guard and driver-side centroid norms (same fold
     association), ``array_sort`` on them IS the rank window's total
@@ -3343,12 +3176,12 @@ def hyperplane_lsh_topk(
     (``probes`` = 1) or its bucket plus the nearest 1-bit-flip buckets
     (multi-probe, ``probes`` > 1 — the recall lever that costs probe
     fan-out on the tiny query side only).
-    Returns (query_id, neighbor_id, cosine, rank). At scale the bucketed
-    equi-join shuffles each side once on the bucket id instead of a full
-    cross product; each corpus vector lives in exactly one bucket and a
-    query's probe buckets are distinct, so (query, neighbor) pairs stay
-    unique without a distinct."""
-    # Norms hoisted out of the bucketed join (see cosine_topk).
+    Returns (query_id, neighbor_id, cosine, rank). The corpus pairs
+    with the broadcast query probes on the bucket id (``_pair``)
+    instead of a full cross product; each corpus vector lives in
+    exactly one bucket and a query's probe buckets are distinct, so
+    (query, neighbor) pairs stay unique without a distinct."""
+    # Norms hoisted out of the bucketed join (see _vecs).
     c = hyperplane_buckets(
         with_double_vec(corpus, vec_col), hyperplanes
     ).select(
@@ -3367,20 +3200,12 @@ def hyperplane_lsh_topk(
             probe_sequence(F.col("bucket"), len(hyperplanes), probes)
         ).alias("bucket"),
     )
-    ca = c.alias("c")
-    qa = q.alias("q")
-    scored = ca.join(
-        F.broadcast(qa),
-        (F.col("c.bucket") == F.col("q.bucket"))
-        & (F.col("c.neighbor_id") != F.col("q.query_id")),
-    ).select(
-        F.col("q.query_id").alias("query_id"),
-        F.col("c.neighbor_id").alias("neighbor_id"),
-        _cos("c.vec", "q.qvec", "c.cnorm", "q.qnorm").alias("cos_raw"),
+    scored = _pair(c, q, "bucket").select(
+        "query_id",
+        "neighbor_id",
+        _cos("vec", "qvec", "cnorm", "qnorm").alias("cos_raw"),
     )
-    return _top(scored, "cos_raw", "neighbor_id", k).select(
-        "query_id", "neighbor_id", F.round("cos_raw", 6).alias("cosine"), "rank"
-    )
+    return _ranked(scored, "cos_raw", k, ("cos_raw", "cosine"))
 
 
 def cell_cover_radii(assigned: DataFrame, cent: DataFrame) -> DataFrame:

@@ -2577,7 +2577,7 @@ def persist_probe_prep(spark: SparkSession, sf_dir: str):
     the quantized query codes, and the literal probed-cell set.
     Independent of WHICH index table is probed — the rollback query
     computes it once and probes three versions with it."""
-    from blspark.ext.similarity import _cell_assign, sq8_quantize
+    from blspark.ext.similarity import _cell_assign, _sq8_side
     from blspark.ops import local_relation
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -2596,12 +2596,7 @@ def persist_probe_prep(spark: SparkSession, sf_dir: str):
         ).select(F.col("vec_id").alias("query_id"), "cell_id"),
         "query_id bigint, cell_id int",
     )
-    qz = sq8_quantize(queries, id_col="vec_id", vec_col="vec").select(
-        F.col("vec_id").alias("query_id"),
-        F.col("qvec").alias("qq"),
-        F.col("scale").alias("qscale"),
-    )
-    probe_q = probes.join(qz, "query_id")
+    probe_q = probes.join(_sq8_side(queries, "vec_id", "vec", "q"), "query_id")
     # literal probed-cell set (metadata-bounded — the codebook
     # convention): a LITERAL partition predicate is what guarantees
     # PartitionFilters pruning; a join alone would rely on runtime DPP

@@ -68,7 +68,7 @@ def _cos_sql(a: str, b: str) -> str:
 
 def _adaptive_probe_sql(id_filter: str) -> str:
     """qsim / qmargin / probe CTE chain — the SQL mirror of
-    ``adaptive_probes``: rank all cells per query by guarded cosine,
+    ``ivf_adaptive_probe_frame``: rank all cells per query by guarded cosine,
     margin = top1 - top2 (forced to 0.0 — ambiguous — when either is
     -inf or the second cell is missing, exactly the library's NaN
     guard), per-query nprobe from the margin CASE."""
@@ -144,10 +144,10 @@ WHERE rank <= {_SQ8_K}
     "hash-agg argmin, identical cell geometry to the whole family); "
     "the margin decision is metadata-sized (queries x |cells|, "
     "centroids broadcast); scoring/ranking is shared verbatim with "
-    "ivf_topk (_ivf_float_rank), so probe_lo == probe_hi == n equals "
+    "ivf_topk (_pair, _cos, _ranked), so probe_lo == probe_hi == n equals "
     "fixed nprobe=n exactly (property-tested). nprobe_used rides the "
     "output so the per-query decision is visible and hash-checked. "
-    "ext/similarity.ivf_adaptive_topk / adaptive_probes.",
+    "ext/similarity.ivf_adaptive_topk / ivf_adaptive_probe_frame.",
 )
 def x_similarity_ivf_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
     from blspark.ext.similarity import ivf_adaptive_topk
@@ -407,7 +407,7 @@ WHERE rank <= {_SQ8_K}
     "amortized to zero by the layout, and the recall/latency knob "
     "expressed as pure partition pruning — hard queries read more "
     "bytes, easy queries fewer, nobody full-scans. The probe frame "
-    "is the ONE adaptive_probes rule (shared with "
+    "is the ONE ivf_adaptive_probe_frame rule (shared with "
     "x_similarity_ivf_adaptive); scoring is the shared _sq8_rank "
     "int64 tail over the table's codes; nprobe_used rides the "
     "output so the per-query IO decision is hash-checked.",
@@ -435,8 +435,8 @@ def _persist_adaptive_rank(
     subtree re-execution)."""
     from blspark.ext.similarity import (
         ivf_adaptive_probe_frame,
-        sq8_quantize,
         _sq8_rank,
+        _sq8_side,
     )
     from blspark.ops import local_relation
     from blspark.queries.extensions10 import sq8_index_table
@@ -453,15 +453,10 @@ def _persist_adaptive_rank(
             queries, _det_centroids(emb), vec_col="vec",
             probe_lo=_ADAPT_LO, probe_hi=_ADAPT_HI,
             margin_threshold=_ADAPT_THR,
-        ),
+        ).select("query_id", "cell_id", "nprobe_used"),
         "query_id bigint, cell_id int, nprobe_used int",
     )
-    qz = sq8_quantize(queries, id_col="vec_id", vec_col="vec").select(
-        F.col("vec_id").alias("query_id"),
-        F.col("qvec").alias("qq"),
-        F.col("scale").alias("qscale"),
-    )
-    probe_q = probes.join(qz, "query_id")
+    probe_q = probes.join(_sq8_side(queries, "vec_id", "vec", "q"), "query_id")
     cells = sorted(
         {r["cell_id"] for r in probes.select("cell_id").collect()}
     )
@@ -543,7 +538,7 @@ WHERE rank <= {_SQ8_K}
     "neighbor — post-filtering an unfiltered shortlist instead would "
     "silently return < k (or zero) survivors for selective "
     "predicates, the classic filtered-ANN failure. Probing is the "
-    "adaptive margin rule (shared adaptive_probes); scoring the "
+    "adaptive margin rule (shared ivf_adaptive_probe_frame); scoring the "
     "shared _sq8_rank int64 tail; n_label rides the output so the "
     "predicate's effect is hash-checked row-by-row. At 100 TB: "
     "per-batch IO = probed directories x filter selectivity, "

@@ -3,7 +3,7 @@ and compressed-domain rungs.
 
 - ``x_similarity_ivfpq_adaptive`` / ``x_ivfpq_adaptive_eval``: the
   query-adaptive probing knob (round 12's margin rule, shared
-  ``adaptive_probes``) threaded through the IVF-PQ ADC pipeline — the
+  ``ivf_adaptive_probe_frame``) threaded through the IVF-PQ ADC pipeline — the
   compressed-domain rung a 100 TB deployment actually serves now has
   the same recall/latency dial as the float and SQ8 rungs, priced
   against exact ground truth and both fixed budgets.
@@ -127,19 +127,21 @@ WHERE rank <= {_PQ_K}
     "ADC codes COMPOSE, so a confident query's scan is probe_lo "
     "cells x M one-byte codes while only boundary queries pay the "
     "wide fan-out. One copy of every device: the probe decision is "
-    "the shared adaptive_probes rule (bit-identical to the float/SQ8 "
+    "the shared ivf_adaptive_probe_frame rule (bit-identical to the float/SQ8 "
     "rungs — same centroids, same margins), the LUT build and the "
-    "ordered ADC fold are ivfpq_topk's _pq_lut/_adc_rank verbatim, "
+    "ordered ADC fold are ivfpq_query's _adc scan verbatim, "
     "so probe_lo == probe_hi == n equals fixed ivfpq nprobe=n "
     "exactly (property-tested in tests/test_graph_index.py). "
-    "nprobe_used rides the scoring join (_adc_rank keep=) and is "
-    "hash-checked. ext/similarity.ivfpq_adaptive_topk.",
+    "nprobe_used rides the scoring join (_adc keep=) and is "
+    "hash-checked. ext/similarity.ivfpq_build_index + "
+    "ivfpq_adaptive_query.",
 )
 def x_similarity_ivfpq_adaptive(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     from blspark.ext.similarity import (
-        ivfpq_adaptive_topk,
+        ivfpq_adaptive_query,
+        ivfpq_build_index,
         pq_train_codebooks,
     )
 
@@ -150,8 +152,9 @@ def x_similarity_ivfpq_adaptive(
     cents = _det_centroids(emb)
     cb = pq_train_codebooks(vecs, _PQ_M, _PQ_SUBDIM, _PQ_KS)
     queries = vecs.filter((F.col("vec_id") >= 10) & (F.col("vec_id") < 15))
-    return ivfpq_adaptive_topk(
-        vecs, queries, cents, cb, _PQ_M, _PQ_SUBDIM, k=_PQ_K,
+    codes = ivfpq_build_index(vecs, cents, cb, _PQ_M, _PQ_SUBDIM)
+    return ivfpq_adaptive_query(
+        codes, queries, cents, cb, _PQ_M, _PQ_SUBDIM, k=_PQ_K,
         probe_lo=_ADAPT_LO, probe_hi=_ADAPT_HI,
         margin_threshold=_ADAPT_THR,
     )

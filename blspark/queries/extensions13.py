@@ -268,8 +268,8 @@ SELECT
     "ships at 100 TB is the packed-word scan + 50-pair rerank.",
 )
 def x_binary_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from blspark.ext.binaryq import hamming_ranked, rerank_pairs
-    from blspark.ext.similarity import _top
+    from blspark.ext.binaryq import hamming_ranked
+    from blspark.ext.similarity import _rescore, _top
 
     emb = load_table(spark, sf_dir, "embeddings").filter(
         F.col("vec_id") < _SQ8_EVAL_N
@@ -291,7 +291,8 @@ def x_binary_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     reranked = _top(
-        rerank_pairs(vecs, queries, short), "score_raw", "neighbor_id", _BQ_K
+        _rescore(vecs, queries, short, "vec_id", "vec", dot=True),
+        "score_raw", "neighbor_id", _BQ_K,
     )
     # Exact ground truth under the SAME metric and tie-break as the
     # rerank (raw inner product DESC, id ASC) — this is what makes
@@ -306,7 +307,8 @@ def x_binary_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("neighbor_id") != F.col("query_id"))
     )
     exact = _top(
-        rerank_pairs(vecs, queries, all_pairs), "score_raw", "neighbor_id",
+        _rescore(vecs, queries, all_pairs, "vec_id", "vec", dot=True),
+        "score_raw", "neighbor_id",
         _BQ_K, rank="r",
     ).select("query_id", "neighbor_id")
 

@@ -223,12 +223,7 @@ SELECT
     "work (the same division of labor as the binary rung).",
 )
 def x_mrl_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from blspark.ext.similarity import (
-        _cos,
-        _pair_fetch,
-        _top,
-        mrl_prefix_ranked,
-    )
+    from blspark.ext.similarity import _rescore, _top, mrl_prefix_ranked
 
     emb = load_table(spark, sf_dir, "embeddings").filter(
         F.col("vec_id") < _SQ8_EVAL_N
@@ -247,11 +242,7 @@ def x_mrl_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # truth (same metric, same tie-break) — the all-pairs frame rides
     # it with a degenerate "shortlist" of every non-self pair.
     def rescore(pairs: DataFrame) -> DataFrame:
-        return _pair_fetch(emb, queries, pairs, "vec_id", "embedding").select(
-            "query_id",
-            "neighbor_id",
-            _cos("cvec", "qvec", "cnorm", "qnorm").alias("cos_raw"),
-        )
+        return _rescore(emb, queries, pairs, "vec_id", "embedding")
 
     mrl5 = _top(
         rescore(short), "cos_raw", "neighbor_id", _MRL_K, rank="r"

@@ -377,14 +377,10 @@ def _blend_cols(df: DataFrame) -> DataFrame:
 
 def _rescored_pairs(emb, queries, pairs: DataFrame) -> DataFrame:
     """Exact full-dim cosine over a broadcastable pair list (the
-    pq/binary fetch device): (query_id, neighbor_id, cos_raw)."""
-    from blspark.ext.similarity import _cos, _pair_fetch
+    family's rerank, ``_rescore``): (query_id, neighbor_id, cos_raw)."""
+    from blspark.ext.similarity import _rescore
 
-    return _pair_fetch(emb, queries, pairs, "vec_id", "embedding").select(
-        "query_id",
-        "neighbor_id",
-        _cos("cvec", "qvec", "cnorm", "qnorm").alias("cos_raw"),
-    )
+    return _rescore(emb, queries, pairs, "vec_id", "embedding")
 
 
 @register(

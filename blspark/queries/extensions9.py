@@ -371,11 +371,16 @@ def _det_centroids(emb: DataFrame) -> DataFrame:
     "LUT + probe list all broadcast; the codes frame is the only "
     "corpus-sized input and it joins map-side; one "
     "(query, neighbor)-keyed shuffle with map-side partial sums. "
-    "ext/similarity.ivfpq_topk; tests/test_pq.py proves full-probe "
+    "ext/similarity.ivfpq_build_index + ivfpq_query; tests/test_pq.py "
+    "proves full-probe "
     "IVF-PQ == plain ADC (the cell restriction is exact bookkeeping).",
 )
 def x_similarity_ivfpq_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from blspark.ext.similarity import ivfpq_topk, pq_train_codebooks
+    from blspark.ext.similarity import (
+        ivfpq_build_index,
+        ivfpq_query,
+        pq_train_codebooks,
+    )
 
     emb = load_table(spark, sf_dir, "embeddings")
     vecs = emb.select(
@@ -384,8 +389,9 @@ def x_similarity_ivfpq_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = _det_centroids(emb)
     cb = pq_train_codebooks(vecs, _PQ_M, _PQ_SUBDIM, _PQ_KS)
     queries = vecs.filter((F.col("vec_id") >= 10) & (F.col("vec_id") < 15))
-    return ivfpq_topk(
-        vecs, queries, cents, cb, _PQ_M, _PQ_SUBDIM, k=_PQ_K, nprobe=2
+    codes = ivfpq_build_index(vecs, cents, cb, _PQ_M, _PQ_SUBDIM)
+    return ivfpq_query(
+        codes, queries, cents, cb, _PQ_M, _PQ_SUBDIM, k=_PQ_K, nprobe=2
     )
 
 

@@ -1179,7 +1179,7 @@ SELECT query_id, probe_rank, cell_id, nprobe_used FROM probe
     "array_sort + margin CASE + rank-prefix slice, all pure per-row "
     "expressions over inlined frozen-centroid literals — no window, "
     "no aggregation, no state store, append mode). Bit-identical to "
-    "the batch adaptive_probes rule (property-tested parity; the "
+    "the batch ivf_adaptive_probe_frame rule (property-tested parity; the "
     "array_sort struct order IS the rank window's total order, the "
     "same -inf guard and 0.0-margin degeneracy), and hash-checked "
     "against the SAME oracle CTE chain the batch adaptive queries "

@@ -82,7 +82,9 @@ def parse_s3_event(body: str | dict) -> list[tuple[str, str]]:
     the stream source's job, so no registered query needs this), but
     the literal parse is part of the reference's operator surface;
     a caller bridging real S3 notifications into a custom source
-    would use it verbatim. Missing/malformed records are skipped —
+    would use it verbatim. Missing/malformed records are skipped (a
+    record counts only when ``s3``, its ``bucket`` and its ``object``
+    are objects and the bucket name and the key are strings) —
     the reference iterates only over what's present and guards with
     ``if 'Records' in body``; a body with no Records (or a body that
     isn't a JSON object — including a string that isn't valid JSON at
@@ -108,11 +110,13 @@ def parse_s3_event(body: str | dict) -> list[tuple[str, str]]:
     if not isinstance(records, list):
         return []
     for rec in records:
-        if not isinstance(rec, dict):
+        s3 = rec.get("s3") if isinstance(rec, dict) else None
+        if not isinstance(s3, dict):
             continue
-        s3 = rec.get("s3") or {}
-        bucket = (s3.get("bucket") or {}).get("name")
-        key = (s3.get("object") or {}).get("key")
-        if bucket is not None and key is not None:
-            out.append((bucket, unquote_plus(key)))
+        bucket, obj = s3.get("bucket"), s3.get("object")
+        if not (isinstance(bucket, dict) and isinstance(obj, dict)):
+            continue
+        name, key = bucket.get("name"), obj.get("key")
+        if isinstance(name, str) and isinstance(key, str):
+            out.append((name, unquote_plus(key)))
     return out

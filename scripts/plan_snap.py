@@ -27,7 +27,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 # lambda built earlier in the session), expression ids (``#123``),
 # exchange ``plan_id``s and ``localCheckpoint`` RDD ids (session
 # counters), the ``_p<pid>`` suffix of session-scoped warehouse tables,
-# and the checkout's warehouse path.
+# the checkout's warehouse path, and the call site a ``localCheckpoint``
+# RDD records (``<unknown>:0`` or ``NativeMethodAccessorImpl.java:0``,
+# depending on the run).
 _VOLATILE = (
     (re.compile(r"\b([A-Za-z]+)_[0-9]+#"), r"\1_#"),
     (re.compile(r"#[0-9]+"), "#"),
@@ -35,6 +37,7 @@ _VOLATILE = (
     (re.compile(r"RDD\[[0-9]+\]"), "RDD[]"),
     (re.compile(r"_p[0-9]+\b"), "_p"),
     (re.compile(r"file:[^ ]*/spark-warehouse/"), "file:WH/"),
+    (re.compile(r"(at localCheckpoint) at [^ ,]+:[0-9]+"), r"\1 at CALLSITE"),
 )
 
 
@@ -67,6 +70,23 @@ def compare(before_dir: str, after_dir: str) -> list[str]:
     )
 
 
+def write_plans(spark, fns, sf: str, outdir: str, suffix: str, explain) -> None:
+    """Build each query of ``fns`` (name -> ``spark_fn``) and write
+    ``explain(df)`` to ``<outdir>/<name>_<suffix>.txt``. The session's
+    cache is cleared before each build, so a frame another query
+    cached (``lsh_verified_candidates``' ``sig``/``verified``) cannot
+    enter this query's plan as an ``InMemoryRelation``: a query's plan
+    then does not depend on which queries ran before it. The warm
+    memos are ``localCheckpoint``s and survive the clear."""
+    for name, fn in fns.items():
+        spark.catalog.clearCache()
+        df = fn(spark, sf)
+        path = os.path.join(outdir, f"{name}_{suffix}.txt")
+        with open(path, "w") as f:
+            f.write(explain(df))
+        print(f"wrote {path}")
+
+
 def snapshot(suffix: str, names: list[str]) -> None:
     from blspark.catalog import registry
     from blspark.session import get_spark
@@ -81,13 +101,14 @@ def snapshot(suffix: str, names: list[str]) -> None:
         "formatted"
     )
     reg = registry()
-    for name in names:
-        df = reg[name].spark_fn(spark, sf)
-        plan = df._jdf.queryExecution().explainString(mode)
-        path = os.path.join(outdir, f"{name}_{suffix}.txt")
-        with open(path, "w") as f:
-            f.write(plan)
-        print(f"wrote {path}")
+    write_plans(
+        spark,
+        {name: reg[name].spark_fn for name in names},
+        sf,
+        outdir,
+        suffix,
+        lambda df: df._jdf.queryExecution().explainString(mode),
+    )
     spark.stop()
 
 

@@ -440,7 +440,7 @@ def bench_ivfpq(spark, factor: int) -> float:
     """Full IVF-PQ pipeline at growing corpus size: cells + codebooks
     trained, corpus cell-assigned + encoded, 5 queries probe 2 cells."""
     from blspark.ext.similarity import (
-        ivfpq_topk, label_centroids, pq_train_codebooks,
+        ivfpq_build_index, ivfpq_query, label_centroids, pq_train_codebooks,
     )
 
     emb = amplify(
@@ -455,7 +455,8 @@ def bench_ivfpq(spark, factor: int) -> float:
         F.col("cell_id").cast("int").alias("cell_id"), "centroid"
     )
     cb = pq_train_codebooks(vecs, 8, 8, 4)
-    n = ivfpq_topk(vecs, queries, cents, cb, 8, 8, k=3, nprobe=2).count()
+    codes = ivfpq_build_index(vecs, cents, cb, 8, 8)
+    n = ivfpq_query(codes, queries, cents, cb, 8, 8, k=3, nprobe=2).count()
     dt = time.perf_counter() - t0
     print(f"  ivfpq x{factor}: {dt:.2f}s ({n} rows)", flush=True)
     return dt

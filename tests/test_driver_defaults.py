@@ -39,6 +39,13 @@ QUERIES = [
     "x_similarity_ivfpq_residual",
     "x_similarity_ivf_binary",
     "x_similarity_pq_rerank",
+    "x_similarity_cosine_topk",
+    "x_similarity_ivf",
+    "x_similarity_ivf_adaptive",
+    "x_similarity_ivfpq_adaptive",
+    "x_similarity_binary_rerank",
+    "x_retrieval_maxsim_pruned",
+    "x_similarity_ann_multiprobe",
     "x_retrieval_hybrid",
     "x_dedup_semantic",
     "x_dedup_components",

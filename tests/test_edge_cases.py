@@ -80,15 +80,68 @@ def test_empty_corpus_similarity(spark):
     rows = out.collect()
     assert len(rows) == 1 and rows[0]["neighbor_id"] == 2
 
+    # an empty corpus yields zero neighbors, not an error, through
+    # every rung of the search family under ANSI mode
+    from blspark.ext import similarity as S
+    from blspark.ext.binaryq import binary_topk, ivf_binary_topk
 
-@pytest.mark.parametrize("op", ["hyperplane_lsh_topk", "pq_rerank_topk"])
+    vec_schema = "vec_id long, vec array<double>"
+    corpus = spark.createDataFrame([], vec_schema)
+    queries = spark.createDataFrame(
+        [(1, [1.0, 0.0, 0.5, 0.5]), (2, [0.0, 1.0, 0.5, 0.0])], vec_schema
+    )
+    cents = spark.createDataFrame(
+        [(0, [1.0, 0.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0, 0.0])],
+        "cell_id int, centroid array<double>",
+    )
+    planes = [[1.0, 0.0, 0.0, 0.0], [0.0, 1.0, 0.0, 0.0]]
+    rungs = {
+        "cosine_topk": lambda: S.cosine_topk(corpus, queries, vec_col="vec"),
+        "ivf_topk": lambda: S.ivf_topk(
+            corpus, queries, cents, vec_col="vec", nprobe=2
+        ),
+        "sq8_topk": lambda: S.sq8_topk(corpus, queries),
+        "ivf_sq8_topk": lambda: S.ivf_sq8_topk(corpus, queries, cents, nprobe=2),
+        "mrl_topk": lambda: S.mrl_topk(corpus, queries, 2, vec_col="vec"),
+        "binary_topk": lambda: binary_topk(corpus, queries, 4),
+        "ivf_binary_topk": lambda: ivf_binary_topk(corpus, queries, cents, 4),
+        "hyperplane_lsh_topk": lambda: S.hyperplane_lsh_topk(
+            corpus, queries, planes, vec_col="vec"
+        ),
+        "maxsim_topk": lambda: S.maxsim_topk(corpus, queries, 2, 2),
+    }
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        got = {name: run().collect() for name, run in rungs.items()}
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+    assert got == {name: [] for name in rungs}
+
+
+@pytest.mark.parametrize(
+    "op",
+    [
+        "hyperplane_lsh_topk",
+        "pq_rerank_topk",
+        "cosine_topk",
+        "ivf_topk",
+        "ivf_adaptive_topk",
+        "mrl_topk",
+    ],
+)
 def test_zero_vector_scores_neg_inf_under_ansi(spark, op):
     """A zero vector has no direction: under ANSI mode (Spark 4's
     default) the cosine rerank must not abort with DIVIDE_BY_ZERO, and
     every pair it is part of scores -inf and ranks after every finite
-    pair (the family's zero-norm guard)."""
+    pair (the family's zero-norm guard). The IVF rungs probe every
+    cell, so the zero vector is paired with every query."""
     from blspark.ext.similarity import (
+        cosine_topk,
         hyperplane_lsh_topk,
+        ivf_adaptive_topk,
+        ivf_topk,
+        mrl_topk,
         pq_encode,
         pq_rerank_topk,
         pq_train_codebooks,
@@ -99,6 +152,10 @@ def test_zero_vector_scores_neg_inf_under_ansi(spark, op):
          (2, [2.0, 1.0, 1.0, 0.5])],
         "vec_id long, vec array<double>",
     )
+    cents = spark.createDataFrame(
+        [(0, [1.0, 0.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0, 0.0])],
+        "cell_id int, centroid array<double>",
+    )
     prev = spark.conf.get("spark.sql.ansi.enabled")
     spark.conf.set("spark.sql.ansi.enabled", "true")
     try:
@@ -108,10 +165,20 @@ def test_zero_vector_scores_neg_inf_under_ansi(spark, op):
                 vecs, vecs, [[1.0, 0.0, 0.0, 0.0], [0.0, 1.0, 0.0, 0.0]],
                 vec_col="vec", k=3,
             )
-        else:
+        elif op == "pq_rerank_topk":
             cb = pq_train_codebooks(vecs, 2, 2, 2)
             codes = pq_encode(vecs, cb, 2, 2)
             out = pq_rerank_topk(vecs, codes, vecs, cb, 2, 2, k=3, shortlist=3)
+        elif op == "cosine_topk":
+            out = cosine_topk(vecs, vecs, vec_col="vec", k=3)
+        elif op == "ivf_topk":
+            out = ivf_topk(vecs, vecs, cents, vec_col="vec", k=3, nprobe=2)
+        elif op == "ivf_adaptive_topk":
+            out = ivf_adaptive_topk(
+                vecs, vecs, cents, vec_col="vec", k=3, probe_lo=2, probe_hi=2
+            )
+        else:
+            out = mrl_topk(vecs, vecs, 2, k=3, shortlist=3, vec_col="vec")
         rows = out.collect()
     finally:
         spark.conf.set("spark.sql.ansi.enabled", prev)

@@ -36,7 +36,7 @@ def _keyed(rows):
 def test_adaptive_lo_eq_hi_equals_fixed(spark):
     """probe_lo == probe_hi == n short-circuits the margin entirely:
     results must equal ivf_topk(nprobe=n) bit-for-bit (shared
-    _ivf_float_rank tail)."""
+    pairing, score and ranked tail)."""
     emb, queries, cents = _load(spark)
     for n in (1, 2):
         fixed = _keyed(
@@ -156,27 +156,13 @@ def test_adaptive_rejects_inverted_budget(spark):
 
 def test_probe_cells_stateless_matches_batch_rule(spark):
     """The streaming routing expression (probe_cells_stateless) must
-    be bit-identical to the batch adaptive_probes rule: same decided
+    be bit-identical to the batch ivf_adaptive_probe_frame rule: same decided
     nprobe per query, same cells in the same rank order."""
-    from blspark.ext.similarity import (
-        _centroid_frame,
-        _norm,
-        adaptive_probes,
-        probe_cells_stateless,
-        with_double_vec,
-    )
+    from blspark.ext.similarity import probe_cells_stateless
 
     emb, queries, cents = _load(spark)
-    batch = adaptive_probes(
-        with_double_vec(queries, "embedding").select(
-            F.col("vec_id").alias("query_id"), "vec",
-            _norm(F.col("vec")).alias("vnorm"),
-        ),
-        _centroid_frame(cents),
-        "query_id",
-        1,
-        3,
-        0.05,
+    batch = ivf_adaptive_probe_frame(
+        queries, cents, "vec_id", "embedding", 1, 3, 0.05
     ).collect()
     # batch collect() order is not guaranteed — compare as
     # (query -> decided n, cell set); the stateless side's explicit

@@ -107,7 +107,11 @@ def test_ivfpq_full_probe_equals_plain_adc(spark):
     """With nprobe == |cells| the IVF restriction is vacuous: IVF-PQ
     must return exactly the plain-ADC result on the same codes —
     proving the cell bookkeeping prunes candidates and nothing else."""
-    from blspark.ext.similarity import ivfpq_topk, label_centroids
+    from blspark.ext.similarity import (
+        ivfpq_build_index,
+        ivfpq_query,
+        label_centroids,
+    )
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     vecs = emb.select(
@@ -121,8 +125,9 @@ def test_ivfpq_full_probe_equals_plain_adc(spark):
     codes = pq_encode(vecs, cb, 8, 8)
     queries = vecs.filter(F.col("vec_id") < 5)
 
-    full = ivfpq_topk(
-        vecs, queries, cents, cb, 8, 8, k=3, nprobe=n_cells
+    full = ivfpq_query(
+        ivfpq_build_index(vecs, cents, cb, 8, 8), queries, cents, cb, 8, 8,
+        k=3, nprobe=n_cells,
     )
     plain = pq_adc_topk(codes, queries, cb, 8, 8, k=3)
     got = {tuple(r) for r in full.collect()}
@@ -133,7 +138,11 @@ def test_ivfpq_full_probe_equals_plain_adc(spark):
 def test_ivfpq_probed_results_subset_of_probed_cells(spark):
     """Every IVF-PQ neighbor at nprobe=1 must live in its query's
     single probed cell (the pruning is real, not cosmetic)."""
-    from blspark.ext.similarity import ivfpq_topk, label_centroids
+    from blspark.ext.similarity import (
+        ivfpq_build_index,
+        ivfpq_query,
+        label_centroids,
+    )
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     vecs = emb.select(
@@ -144,7 +153,10 @@ def test_ivfpq_probed_results_subset_of_probed_cells(spark):
     )
     cb = pq_train_codebooks(vecs, 8, 8, 4)
     queries = vecs.filter(F.col("vec_id") < 5)
-    out = ivfpq_topk(vecs, queries, cents, cb, 8, 8, k=3, nprobe=1)
+    out = ivfpq_query(
+        ivfpq_build_index(vecs, cents, cb, 8, 8), queries, cents, cb, 8, 8,
+        k=3, nprobe=1,
+    )
 
     # reconstruct each vector's cell by brute force in the test
     import math
@@ -306,7 +318,7 @@ def test_pq_index_layout_partition_prunes(spark, tmp_path):
     mean a query probing 2 cells reads ONLY those partitions — the scan
     shows PartitionFilters on cell_id and lists just the probed
     directories. This is the on-disk half of the IVF-PQ scale story."""
-    from blspark.ext.similarity import label_centroids, ivfpq_topk
+    from blspark.ext.similarity import label_centroids
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     vecs = emb.select(
@@ -481,7 +493,11 @@ def test_ivfpq_residual_beats_raw_on_clustered_data(spark):
     synthetic embeddings the margin is inside noise at test scale;
     clusters are where the refinement pays, so that is what the test
     plants.)"""
-    from blspark.ext.similarity import ivfpq_residual_topk, ivfpq_topk
+    from blspark.ext.similarity import (
+        ivfpq_build_index,
+        ivfpq_query,
+        ivfpq_residual_topk,
+    )
 
     rows, centers = _clustered_vecs()
     corpus = spark.createDataFrame(rows, "vec_id long, vec array<double>")
@@ -493,7 +509,10 @@ def test_ivfpq_residual_beats_raw_on_clustered_data(spark):
     qids = [r["vec_id"] for r in queries.collect()]
 
     cb = pq_train_codebooks(corpus, 2, 8, 4)
-    plain = ivfpq_topk(corpus, queries, cents, cb, 2, 8, k=3, nprobe=1)
+    plain = ivfpq_query(
+        ivfpq_build_index(corpus, cents, cb, 2, 8), queries, cents, cb, 2, 8,
+        k=3, nprobe=1,
+    )
     res = ivfpq_residual_topk(corpus, queries, cents, 2, 8, 4, k=3, nprobe=1)
 
     def exact_top3(q):
@@ -944,34 +963,3 @@ def test_ragged_subvectors_zero_tokens_yields_no_rows(spark):
     assert sorted(by_id) == [1]          # doc 2 contributes nothing
     assert sorted(m for m, _ in by_id[1]) == [0, 1, 2, 3]
     assert not any(m < 0 for m, _ in by_id[1])
-
-
-def test_sq8_candidates_restriction_and_parity(spark):
-    """The sq8_topk candidates branch (generic pair restriction, the
-    maxsim-style API): with the FULL unique pair set results equal the
-    plain path exactly, and with a restricted set only listed pairs
-    are scored."""
-    from blspark.ext.similarity import sq8_topk
-
-    vecs = _vecs(spark)
-    queries = vecs.filter(F.col("vec_id") < 3)
-    ids = [r["vec_id"] for r in vecs.select("vec_id").collect()]
-    qids = [i for i in ids if i < 3]
-
-    full_pairs = spark.createDataFrame(
-        [(q, n) for q in qids for n in ids if n != q],
-        "query_id long, neighbor_id long",
-    )
-    via_cand = sq8_topk(vecs, queries, k=3, candidates=full_pairs)
-    plain = sq8_topk(vecs, queries, k=3)
-    assert sorted(map(tuple, via_cand.collect())) == sorted(
-        map(tuple, plain.collect())
-    )
-
-    allowed = sorted(i for i in ids if i % 2 == 0)[:5]
-    sub = spark.createDataFrame(
-        [(q, n) for q in qids for n in allowed if n != q],
-        "query_id long, neighbor_id long",
-    )
-    got = sq8_topk(vecs, queries, k=3, candidates=sub).collect()
-    assert got and all(r["neighbor_id"] in allowed for r in got)

@@ -520,6 +520,16 @@ def test_parse_s3_event_envelope():
     assert parse_s3_event({"Records": ["nope", body["Records"][0]]}) == [
         ("bls-data", "reports/population.json")
     ]
+    # records whose s3/bucket/object are not objects, or whose key is
+    # not a string, skip instead of raising
+    bad = [
+        {"s3": "oops"},
+        {"s3": {"bucket": "b", "object": {"key": "k"}}},
+        {"s3": {"bucket": {"name": "b"}, "object": {"key": 5}}},
+    ]
+    assert parse_s3_event({"Records": bad + [body["Records"][0]]}) == [
+        ("bls-data", "reports/population.json")
+    ]
     # real envelopes URL-encode keys; the parser decodes them
     assert parse_s3_event(
         {"Records": [{"s3": {"bucket": {"name": "b"},
